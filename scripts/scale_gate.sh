@@ -1,102 +1,22 @@
 #!/usr/bin/env bash
 # The repeatable SCALE gate — one command, run every round, numbers go in
-# docs/ROUND{N}.md. Covers the three scale paths whose regressions sf0.01
-# correctness cannot catch:
-#   1. zarr-sf10      — 1.07e9-cell f4 store: write, full-agg (exact
-#                       closed-form sum), pushed-slab chunk pruning
-#   2. zarr-zonemap   — 1.07e9-cell chunk-banded store with per-chunk
-#                       [min,max] stats: metadata-only min/max/count (zero
-#                       chunk reads) + value-band predicate pruning
-#                       4096 -> 64 chunks, both exact closed-form
-#   2b. zarr-hier     — 2^20-inner-chunk sharded store via the SINK:
-#                       hierarchical zone maps at DEFAULT caps (256 block
-#                       rollups + executor-written side docs), metadata-
-#                       only aggregates, value bands pruning through two
-#                       stats levels, closed-form exact
-#   3. zarr-deferred-str — a 10^7-label STRING axis written through the
-#                       sink's distributed-ordinal path, read deferred with
-#                       lexicographic chunk-stats pruning (range + prefix,
-#                       closed-form counts)
-#   4. x41-planted    — near-dup clustering at 100x docs (500k) against a
-#                       closed-form planted-component oracle (engine-
-#                       independent; DuckDB spills on this at sf10)
-#   4a2. pagerank-planted — PageRank on a 10M-edge hub-skewed multigraph
-#                       with dangling sinks + a planted 2-cycle, against an
-#                       exact driver-side array reference from the same
-#                       edge formulas (per-node maxDiff ~4e-17, mass = 1)
-#   4a3. media-planted — the x81/x83/x84 image/audio/video near-dup trio at
-#                       100k payloads (200x the sf corpus) against a
-#                       BOUNDED-cluster planted oracle (40-member patterns,
-#                       linear pair set): 1.95M pairs per modality, exact
-#                       recovery, anti-join verified both directions
-#   4b. x60-planted   — embedding near-dup at 1M vectors against planted
-#                       scaled duplicates (exact float semantics -> same
-#                       LSH bucket, cosine 1.0): exact pair match required,
-#                       plus the bucket-join candidate volume (the quantity
-#                       that explodes if hyperplane bucketing degrades)
-#   4c. sq8-planted   — SQ8 quantized ANN at 202k vectors: planted exact
-#                       duplicates must come back at rank 1 through int8
-#                       scoring + exact rerank (ivfTopKSq); also reports
-#                       the measured float-vs-codes wall/shuffle/storage
-#                       trade-off (storage is where SQ8 wins: 3.6x)
-#   4d2. keyword-scale — Aho-Corasick tagging with a 10k-term dictionary
-#                       over the sf0.1 corpus: one-pass tag (1.3s; the
-#                       per-term contains formulation is the cliff being
-#                       avoided), full-corpus blocklist-verdict equality
-#                       vs a 64-term contains-reduce, 200-doc tag-set
-#                       equality vs per-term contains
-#   4d. pq-planted    — product-quantized ANN (IVFADC, pqTopK) at 202k
-#                       vectors: planted duplicates must survive the
-#                       APPROXIMATE ADC top-50 cut and come back rank 1 /
-#                       sim 1.0 after exact rerank; reports ADC-vs-float
-#                       wall/shuffle and the codes-vs-float index bytes
-#   4d3. mrl-planted  — matryoshkaIvfTopK through the ACTUAL IVF path at
-#                       2M vectors: planted scaled duplicates must survive
-#                       the prefix-dim cut AND the truncated-vector cell
-#                       routing AND the full-dim rerank (rank 1 / sim 1.0);
-#                       reports prefix-vs-full wall/shuffle honestly
-#   4g. sgd-planted   — trainLinearSgd (sharded local-SGD, 32 shards x
-#                       2 rounds) at 1M planted-separability docs:
-#                       bit-identical weights across input partitionings
-#                       (the pure-hash shard contract) + sign-accuracy
-#                       > 0.8 on the planted signal
-#   4i. lm-planted    — bigram-LM train/score at 1M docs with a WIDE
-#                       (250k-token) vocabulary against a closed-form
-#                       integer oracle: cyclic-window corpus gives every
-#                       model count an exact formula, so 5000 natural +
-#                       5000 garble probes must land EXACT FixedLog2 NLL
-#                       integers (model 500k rows — past broadcast, the
-#                       joins genuinely shuffle; the sf vocab is 31 words
-#                       and never exercises that)
-#   4h. sparse-dim-scale — trainLinearSparse at its fasttext ceiling
-#                       (dim 2^21) on a 500k-doc wide-vocab corpus:
-#                       bit-identical weights vs the INDEPENDENT
-#                       in-memory GD implementation (single-shard
-#                       trainLinearSgd), ~84k buckets moved
-#   4f. curate-incr-planted — the COMPOSED Pipeline.curateIncremental
-#                       recipe at 2M batch docs + 200k-doc history indexes:
-#                       id-modulo planted truth per drop reason (quality,
-#                       domain, minhash-index, sem-index), exact survivor
-#                       set, delta row counts, and round-2 loop closure
-#                       (survivor copies vs updated indexes -> 0 survivors)
-#   4e. incr-planted  — incremental near-dup dedup against a 2M-signature
-#                       persisted index with a 200k batch: planted
-#                       exact-copy truth (index hits + within-batch d2)
-#                       must be recovered exactly at 8/8 agreement; the
-#                       gate that exposed the degenerate minhash family
-#                       (see Dedup.MinhashAs scaladoc)
-#   5. cc-telemetry   — per-round connected-components job telemetry on the
-#                       sf0.1 documents table (round count + shuffle sizes)
-# Each step FAILS LOUDLY (require/assert inside the Spike mains) — a silent
-# pass is impossible. ~6-8 min total on local[32].
+# the round record. It runs every leg of the registry in
+# src/main/scala/graft/tools/Spike.scala (`Spike --list` prints one
+# `name driverMem args…` line per leg, in order), each in its own JVM under
+# the leg's driver-heap pin. The legs cover the scale paths whose
+# regressions sf0.01 correctness cannot catch: 10^9-cell Zarr stores with
+# exact closed-form aggregates and chunk pruning, and planted-truth operator
+# gates at 100x+ the fixture sizes; each leg's scaladoc says what it checks.
+# Each leg FAILS LOUDLY (require inside the leg) — a silent pass is
+# impossible. ~6-8 min total on local[32].
 set -euo pipefail
 cd "$(dirname "$0")/.."
 export SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
 
 # Machine-readable sweep record (VERDICT r17 Next #7): per-leg wall
 # seconds, driver-mem pin and pass/fail land in SCALEGATE_LAST.json,
-# FLUSHED after every leg — gate-runtime drift (like r17's curate-incr
-# heap-floor move) surfaces as a diffable artifact instead of an anecdote,
+# FLUSHED after every leg — gate-runtime drift (like r17's heap-floor
+# move) surfaces as a diffable artifact instead of an anecdote,
 # and a killed sweep still leaves every completed leg's timing.
 ART="${SCALEGATE_OUT:-SCALEGATE_LAST.json}"
 LEGS=""
@@ -109,9 +29,9 @@ run_leg() { # run_leg <name> <driver_mem|-> <spike args...>
   local t0 t1 status="pass"
   t0=$(date +%s)
   if [ "$mem" = "-" ]; then
-    sbt -batch "runMain graft.tools.Spike $*" 2>&1 | grep -E '\[spike\]' || status="fail"
+    sbt -batch "runMain graft.tools.Spike $*" </dev/null 2>&1 | grep -E '\[spike\]' || status="fail"
   else
-    SPARK_DRIVER_MEM="$mem" sbt -batch "runMain graft.tools.Spike $*" 2>&1 \
+    SPARK_DRIVER_MEM="$mem" sbt -batch "runMain graft.tools.Spike $*" </dev/null 2>&1 \
       | grep -E '\[spike\]' || status="fail"
   fi
   t1=$(date +%s)
@@ -121,58 +41,13 @@ run_leg() { # run_leg <name> <driver_mem|-> <spike args...>
   [ "$status" = "pass" ] || { echo "[scale_gate] LEG FAILED: $name"; flush false; exit 1; }
 }
 
-run_leg zarr-sf10          - zarr-sf10
-run_leg zarr-zonemap       - zarr-zonemap
-run_leg zarr-hier          - zarr-hier
-run_leg zarr-deferred-str  - zarr-deferred-str
-run_leg x41-planted        - x41-planted 500000
-run_leg incr-planted       - incr-planted 2000000 200000
-run_leg pagerank-planted   - pagerank-planted
-run_leg media-planted      - media-planted 100000
-run_leg x60-planted        - x60-planted 1000000
-run_leg sq8-planted        - sq8-planted 200000
-run_leg pq-planted         - pq-planted 200000
-run_leg mrl-planted        24g mrl-planted 1000000
-# 16g pin, adjudicated r18 (ROUND18.md): NOT a code regression — r16's
-# code OOMs at 8g on this box in the same stage 110. Measured at OOM
-# (GC log): 6.4-7.0 GiB live of 8 GiB with ~730 humongous regions
-# (~2.9 GiB of columnar cache batches for the two persisted indexes +
-# survivors, plus 64 MiB unsafe shuffle pages), Full-GC storm, final
-# allocations dying in 32 concurrent tasks' spill read-ahead buffers.
-# Neither GCLockerRetryAllocationCount=64, halved threads (16), nor
-# 16 MiB G1 regions rescues 8g — the live set is real. A cluster gives
-# each executor its own heap; local-harness constraint, pin inherent.
-run_leg curate-incr-planted 16g curate-incr-planted 2000000
-run_leg sgd-planted        - sgd-planted 1000000
-run_leg sparse-dim-scale   24g sparse-dim-scale 500000
-run_leg lm-planted         - lm-planted 1000000
-run_leg curriculum-planted - curriculum-planted 20000000
-# 4j. epoch-planted — curriculumEpochs (x165) at 8M docs / 20M (doc, epoch)
-#     assignments: closed-form positions + two-level hash-bucket budget cut
-#     vs the naive per-epoch single-partition definition at 2M, then full
-#     per-epoch permutation invariants + a window-free budget-cut
-#     MAXIMALITY proof (first excluded doc in walk order cannot fit)
-run_leg epoch-planted      - epoch-planted 8000000
-# 4k. overlap-planted — sourceOverlap (x168) + incrementalSourceOverlap at
-#     2M docs + 2000 planted cross-source copies: closed-form per-cell
-#     counts (4 cells x nDocs/4000 pairs) for the one-shot matrix AND the
-#     streaming decomposition (within-batch self evidence vs cross-batch
-#     index evidence land in disjoint, known cells; summed deltas == matrix)
-run_leg overlap-planted    - overlap-planted 2000000
-# 4l. unimax-planted — unimaxMix + unimaxSelect (x170/x171) at 2M docs:
-#     7 residue-class sources with constant per-source tokens make the
-#     whole waterfill AND the per-(source, epoch) selection counts
-#     closed forms of nDocs alone (equal-token prefix => partial count
-#     is exactly rem div tok); allocation table field-exact, selection
-#     cell-exact, partial cuts maximal, no duplicate (doc, epoch)
-run_leg unimax-planted     - unimax-planted 2000000
-# 4m. bitext-planted — ivfSearch∘marginMine (x175) at 200k x 202k
-#     vectors: 2000 planted 2.0f-scaled cross-language copies (cosine
-#     1.0, same probed cell by construction) must all surface at forward
-#     rank 1 / sim 1.0 / margin > 1 AND survive the mutual intersection;
-#     candidate volume stays cell-join bounded, never |src|x|tgt|
-run_leg bitext-planted     - bitext-planted 200000
-run_leg keyword-scale      - keyword-scale 10000
-run_leg cc-telemetry       - cc-telemetry
+listing="$(sbt -batch "runMain graft.tools.Spike --list" </dev/null | sed 's/^\[info\] //' \
+  | grep -E '^[a-z0-9-]+ (-|[0-9]+g)( [0-9]+)*$')" || { echo "[scale_gate] could not list the legs"; exit 1; }
+mapfile -t lines <<< "$listing"
+for line in "${lines[@]}"; do
+  read -r name mem args <<< "$line"
+  # shellcheck disable=SC2086 # args are whitespace-separated sizes
+  run_leg "$name" "$mem" "$name" $args
+done
 flush false
 echo "[scale_gate] all scale gates passed"

@@ -4,13 +4,13 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extension installing graft's native functions — the deploy-time
-  * registration path: `--conf spark.sql.extensions=graft.GraftExtensions`
-  * makes `vec_dot` / `sorted_intersect_count` available in every session of
-  * a cluster (including pure-SQL users via Thrift/Connect) without any
-  * driver-side `register` call. `Sessions.local` still registers the same
-  * functions imperatively for embedded use; both routes resolve to the same
-  * codegen'd expressions. */
+/** Session extension installing graft's native functions (`vec_dot`,
+  * `byte_dot`, `sorted_intersect_count`) — the one registration path.
+  * `Sessions.local` builds its session `.withExtensions(new GraftExtensions)`;
+  * at deploy time `--conf spark.sql.extensions=graft.GraftExtensions` does
+  * the same for every session of a cluster (including pure-SQL users via
+  * Thrift/Connect). Extensions apply when a session is BUILT, so a session
+  * that already exists when `Sessions.local` runs keeps its registry. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions.binary
 

@@ -38,10 +38,10 @@ object Sessions {
       // volume that the heap exists to avoid sorting.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+      // SQL-callable vec_dot / byte_dot / sorted_intersect_count
+      .withExtensions(new GraftExtensions)
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.VecFunctions.register(spark) // SQL-callable vec_dot
-    graft.functions.ArrayFunctions.register(spark) // SQL-callable sorted_intersect_count
     spark
   }
 }

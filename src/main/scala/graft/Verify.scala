@@ -9,6 +9,9 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(s, o) => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
+      case _ =>
+        System.err.println("usage: Verify <sfDir> <outDir> [q1,q2,…]")
+        sys.exit(2)
     }
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()

@@ -85,14 +85,6 @@ case class SortedIntersectCount(left: Expression, right: Expression) extends Bin
 }
 
 object ArrayFunctions {
-  /** Register SQL-callable graft array functions on a session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      graft.GraftExtensions.binary("sorted_intersect_count", SortedIntersectCount.apply),
-      "built-in"
-    )
-
   def sortedIntersectCount(a: Column, b: Column): Column =
     GraftBridge.column(
       SortedIntersectCount(GraftBridge.expression(a), GraftBridge.expression(b))

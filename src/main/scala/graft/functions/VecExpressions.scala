@@ -238,20 +238,6 @@ case class LshBucketBits(child: Expression, dim: Int, nBits: Int)
 }
 
 object VecFunctions {
-  /** Register SQL-callable graft functions on a session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot",
-      graft.GraftExtensions.binary("vec_dot", FloatVecDot.apply),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "byte_dot",
-      graft.GraftExtensions.binary("byte_dot", ByteVecDot.apply),
-      "built-in"
-    )
-  }
-
   def vecDot(a: Column, b: Column): Column =
     GraftBridge.column(FloatVecDot(GraftBridge.expression(a), GraftBridge.expression(b)))
 

@@ -255,7 +255,7 @@ object Dedup {
     * `maxBucketSize` (off by default — parity with the pinned oracle) drops
     * buckets larger than the cap: the hot-bucket mitigation for
     * boilerplate-dominated corpora where one bucket's m² pairs swamp the
-    * join (see Spike `skew` for the measurement that motivates it). */
+    * join (docs/ROUND4.md §3 has the measurement that motivates it). */
   def minhashCandidates(
       docs: DataFrame,
       idCol: String,
@@ -556,7 +556,7 @@ object Dedup {
     * hot-bucket cap for DOWNSTREAM consumers, mirroring
     * [[minhashCandidates]]' `maxBucketSize`: a boilerplate span shared by
     * millions of docs turns any join-back on `span_hash` into one
-    * megabucket. (Spike `skew` at sf1: this synthetic corpus is mild —
+    * megabucket. (docs/ROUND6.md, sf1: this synthetic corpus is mild —
     * max/median span bucket = 4.0, max 40 docs/span — but the amplifier
     * preserves spans across copies, so the ratio GROWS linearly with every
     * further 10x; real boilerplate-heavy corpora start far above it.)

@@ -359,7 +359,7 @@ object Similarity {
     * work. The standard IVF prescription nCells ≈ √N keeps cells at √N
     * vectors (pair volume N^1.5); measured at the 100x set, nCells=8
     * exceeds a 420 s cap while nCells=√N finishes in seconds
-    * (ROUND12.md, `Spike ivf-scale`). [[ivfTopKAuto]] derives the √N
+    * (ROUND12.md). [[ivfTopKAuto]] derives the √N
     * cell count and fits the centroids for you — reach for it unless you
     * already have a fitted index. */
   def ivfTopK(
@@ -557,7 +557,7 @@ object Similarity {
     *
     * 100 TB shape: the derivation is what keeps scaled-up corpora safe —
     * scored pairs stay N^1.5/√N-per-cell as N grows instead of N²/const
-    * (measured blow-up and the √N fix: ROUND12.md, `Spike ivf-scale`).
+    * (measured blow-up and the √N fix: ROUND12.md).
     * kmeansFit's per-iteration cost is the same N·√N broadcast-assignment
     * volume as the final scoring pass. NOTE: [[farthestPointSeeds]] is
     * NOT used here by design — its k−1 sequential corpus passes are fine
@@ -1805,7 +1805,7 @@ object Similarity {
     * path), so the maps never re-shuffle and bit-equality holds by
     * construction — pinned both directions in MrlFetchSpec.
     *
-    * Measured at the 202k-vector A/B (`Spike mrl-fetch-ab`, this
+    * Measured at the 202k-vector A/B (ROUND16.md, this
     * implementation): 4.2× less shuffle (276 MB vs 1159 MB), 1.4× slower
     * wall on local[32] where exchange is memory-speed and the per-cell
     * map aggregation is pure overhead — the reason `fetch = "cell"` is

@@ -28,7 +28,7 @@ object ZarrCodec {
           require(sz >= 0 && sz <= Int.MaxValue, s"zstd frame with unknown/huge content size $sz")
           com.github.luben.zstd.Zstd.decompress(bytes, sz.toInt)
         }
-      case Some("blosc") => Blosc.decompress(bytes)
+      case Some("blosc") => Blosc.decompress(bytes, rawLen)
       case Some(other) =>
         throw new UnsupportedOperationException(
           s"zarr codec '$other' not supported on JVM (supported: blosc, zlib, gzip, zstd, uncompressed)"
@@ -105,7 +105,7 @@ object ZarrCodecV3 {
         require(sz >= 0 && sz <= Int.MaxValue, s"zstd frame with unknown/huge content size $sz")
         com.github.luben.zstd.Zstd.decompress(bytes, sz.toInt)
       }
-    case "blosc" => Blosc.decompress(bytes)
+    case "blosc" => Blosc.decompress(bytes, rawLenHint)
     case "crc32c" =>
       require(bytes.length >= 4, "crc32c codec: payload shorter than its checksum")
       val c = new java.util.zip.CRC32C
@@ -192,7 +192,10 @@ object Blosc {
 
   private val lz4 = net.jpountz.lz4.LZ4Factory.fastestInstance()
 
-  def decompress(frame: Array[Byte]): Array[Byte] = {
+  /** `rawLen` is the decoded length the caller expects (`-1` = unknown,
+    * e.g. variable-length chunks); a header declaring more is rejected
+    * before anything is allocated. */
+  def decompress(frame: Array[Byte], rawLen: Int = -1): Array[Byte] = {
     require(frame.length >= 16, s"truncated blosc frame (${frame.length} bytes)")
     val bb = ByteBuffer.wrap(frame).order(ByteOrder.LITTLE_ENDIAN)
     val flags = bb.get(2) & 0xff
@@ -200,9 +203,14 @@ object Blosc {
     val nbytes = bb.getInt(4)
     val blocksize = bb.getInt(8)
     require(nbytes >= 0 && blocksize > 0 || nbytes == 0, s"bad blosc frame: nbytes=$nbytes blocksize=$blocksize")
+    require(rawLen < 0 || nbytes <= rawLen, s"blosc frame declares $nbytes bytes, chunk holds $rawLen")
+    val memcpy = (flags & FlagMemcpy) != 0
+    val nblocks = if (nbytes == 0) 0 else ((nbytes.toLong + blocksize - 1) / blocksize).toInt
+    val need = if (memcpy) 16L + nbytes else 16L + 4L * nblocks
+    require(need <= frame.length, s"truncated blosc frame: ${frame.length} bytes, header needs $need")
     val out = new Array[Byte](nbytes)
     if (nbytes == 0) return out
-    if ((flags & FlagMemcpy) != 0) {
+    if (memcpy) {
       System.arraycopy(frame, 16, out, 0, nbytes)
       return out
     }
@@ -213,9 +221,8 @@ object Blosc {
     val codec = (flags >> 5) & 0x7
     val shuffled = (flags & FlagShuffle) != 0 && typesize > 1
     val bitShuffled = (flags & FlagBitShuffle) != 0
-    val nblocks = ((nbytes.toLong + blocksize - 1) / blocksize).toInt
     val bstarts = Array.tabulate(nblocks)(i => bb.getInt(16 + 4 * i))
-    val tmp = if (shuffled || bitShuffled) new Array[Byte](blocksize) else null
+    val tmp = if (shuffled || bitShuffled) new Array[Byte](math.min(blocksize, nbytes)) else null
     var b = 0
     while (b < nblocks) {
       val bsize = math.min(blocksize.toLong, nbytes.toLong - b.toLong * blocksize).toInt

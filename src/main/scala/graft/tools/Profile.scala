@@ -76,8 +76,8 @@ object Profile {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val secs = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.setJobDescription(null)
-      // let straggler stage-completed events drain before snapshotting
-      Thread.sleep(300)
+      // deliver every stage-completed event before snapshotting
+      org.apache.spark.sql.GraftBridge.drainListeners(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       val snap = listener.synchronized { (stages.toVector, jobs) }
       println(f"\n===== $n  warm=$warmS%.2fs measured=$secs%.2fs jobs=${snap._2} stages=${snap._1.size} =====")

@@ -1,237 +1,75 @@
 package graft.tools
 
 import graft.Sessions
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 
-/** Scratch main for ad-hoc driving (see .claude/skills/verify/SKILL.md).
-  * Default: the driver's smoke — run SparkEntry.entry. With args: micro-
-  * bench the named queries at sf0.1 (3 runs each; min is the number to
-  * trust — full-bench totals carry ±20% machine noise). */
+/** The scale gates of `scripts/scale_gate.sh`, behind one registry, [[legs]]:
+  *  - `runMain graft.tools.Spike` — the driver's smoke: SparkEntry.entry;
+  *  - `runMain graft.tools.Spike --list` — one `name driverMem args…` line
+  *    per leg, in gate order (`-` = the build's default heap); starts no
+  *    Spark session;
+  *  - `runMain graft.tools.Spike <leg> [args…]` — one leg; arguments left
+  *    out take the leg's gate sizes;
+  *  - `runMain graft.tools.Spike explain <query…>` — formatted physical
+  *    plans of declared queries (plan-shape audits).
+  * Every leg fails loudly (`require`) and reports on `[spike]` lines. */
 object Spike {
-  /** `runMain graft.tools.Spike zarr-scale` — write a ~100 MB blosc-lz4
-    * Zarr store, then measure full-scan + aggregate throughput through the
-    * DSv2 source (ordinal-range partitions + executor blosc decode). */
-  private def zarrScale(spark: org.apache.spark.sql.SparkSession): Unit = {
+  /** Dimension of the planted-vector corpora. */
+  private final val Dim = 64
+
+  /** A deterministic `Dim`-element float vector for `key`: element i is
+    * xxhash64(key, i) folded onto a `grid`-step lattice in [-0.5, 0.5). No
+    * RNG, so it is identical at any partitioning. A full-avalanche mix is
+    * REQUIRED — a linear congruential element hash shares structure with
+    * LshBucketBits' linear sign matrix and collapses 100k vectors into ~85
+    * buckets (measured), turning the bucket join quadratic. `grid` is 1000
+    * for x60/bitext and 2^20 for the quantized legs: real embeddings don't
+    * dictionary-compress, and a coarse lattice would flatter the float side
+    * of their storage comparisons. */
+  private def plantedVec(key: Column, grid: Long): Column = {
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("zarrscale").toString
-    val dir = graft.sources.zarr.ZarrStoreWriter.writeGroup(root)
-    // 400 x 250 x 250 = 25M f4 cells (~100 MB raw), 8 x 50 x 50 chunks -> 1250 chunks
-    val t0 = System.nanoTime()
-    graft.sources.zarr.ZarrStoreWriter.writeArray(
-      dir, "v", Vector(400, 250, 250), Vector(8, 50, 50), "<f4",
-      flat => (flat % 9973) * 0.5,
-      dims = Some(Vector("t", "y", "x")),
-      compressor = Some("blosc:lz4")
+    transform(
+      sequence(lit(0L), lit(Dim - 1L)),
+      i => ((pmod(xxhash64(key, i), lit(grid)).cast("double") / lit(grid.toDouble)) - lit(0.5)).cast("float")
     )
-    val tw = (System.nanoTime() - t0) / 1e9
-    val df = new graft.api.ZarrDataReader(spark, root).readArray("v")
-    println("[spike] plan: " + df.queryExecution.executedPlan.toString.linesIterator.take(6).mkString(" | "))
-    // raw decode throughput: all chunks, single thread, no Spark
-    val store = new graft.sources.zarr.ZarrStore(root)
-    val m = store.arrayMeta("v")
-    val tr = System.nanoTime()
-    var cellsRaw = 0L
-    for (c0 <- 0 until 50; c1 <- 0 until 5; c2 <- 0 until 5) {
-      val b = graft.sources.zarr.ZarrChunkIO.readChunk(store.arrayDir("v"), m, Seq(c0, c1, c2))
-      if (b.isDefined) cellsRaw += 20000L
-    }
-    println(f"[spike] raw 1-thread decode of 1250 chunks: ${(System.nanoTime() - tr) / 1e9}%.2fs")
-    def time(label: String)(f: => Unit): Unit = {
-      val t = System.nanoTime(); f
-      println(f"[spike] $label: ${(System.nanoTime() - t) / 1e9}%.2fs")
-    }
-    time("value-only sum (coords pruned, cold)")(df.select("value").agg(sum(col("value").cast("double"))).collect())
-    time("value-only sum (warm)")(df.select("value").agg(sum(col("value").cast("double"))).collect())
-    time("count only (value pruned)")(df.agg(count(lit(1))).collect())
-    val t1 = System.nanoTime()
-    val agg = df.agg(count(lit(1)), sum(col("value").cast("double"))).collect().head
-    val ts = (System.nanoTime() - t1) / 1e9
-    val cells = agg.getLong(0)
-    println(f"[spike] zarr-scale write=$tw%.1fs scan+agg=$ts%.2fs cells=$cells (${cells / ts / 1e6}%.1f Mcells/s)")
-    // selective read: one t-slice -> source must prune to 1/400 of cells
-    val t2 = System.nanoTime()
-    val sel = new graft.api.ZarrDataReader(spark, root)
-      .readArray("v", Map("t" -> graft.model.DimSel.Point(17)))
-      .agg(count(lit(1))).collect().head.getLong(0)
-    val tsel = (System.nanoTime() - t2) / 1e9
-    println(f"[spike] zarr-scale slice scan=$tsel%.2fs cells=$sel")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
-  /** `runMain graft.tools.Spike zarr-1b` — the 25M-cell spike at two more
-    * orders of magnitude: ~1.07B f4 cells (4.3 GB raw) across 32,768
-    * chunks, written IN PARALLEL (each task generates + compresses its own
-    * chunk ordinals — no shuffle, the fixture analog of the sink's
-    * chunk-owner clustering), then scanned through the DSv2 source.
-    * Reports write/scan/slice timings, Mcells/s, partition count, and
-    * driver heap growth across planning (must stay flat: partitions are
-    * two-long ordinal ranges). */
-  private def zarr1b(spark: org.apache.spark.sql.SparkSession): Unit = {
+  /** The planted corpus of the vector legs: `base` holds `nVecs` planted
+    * vectors (`vec_id` = id); the second frame adds a x2-scaled companion
+    * `vec_id + nVecs` of every 100th base vector (exact in float ⇒ same
+    * direction, cosine 1.0), repartitioned and persisted. */
+  private def plantedCorpus(spark: SparkSession, nVecs: Long, grid: Long): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.functions._
-    import graft.sources.zarr.{ZarrCodec, ZarrStoreWriter}
-    val root = "/tmp/graft_zarr1b"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val dir = ZarrStoreWriter.writeGroup(root)
-    val shape = Vector(1024, 1024, 1024) // 1,073,741,824 cells
-    val chunks = Vector(8, 64, 64) // 32,768 cells/chunk -> 32,768 chunks
-    val nC = Vector(128, 16, 16)
-    val arrayDir = java.nio.file.Paths.get(root, "v")
-    java.nio.file.Files.createDirectories(arrayDir)
-    java.nio.file.Files.writeString(
-      arrayDir.resolve(".zarray"),
-      ZarrStoreWriter.zarrayJson(shape, chunks, "<f4", Some("blosc:lz4"), Some(0.0))
-    )
-    java.nio.file.Files.writeString(
-      arrayDir.resolve(".zattrs"),
-      ZarrStoreWriter.zattrsJson(Some(Vector("t", "y", "x")))
-    )
-    val t0 = System.nanoTime()
-    val totalChunks = nC.map(_.toLong).product
-    spark.range(0, totalChunks, 1, 64).foreachPartition { (ords: Iterator[java.lang.Long]) =>
-      val buf = java.nio.ByteBuffer.allocate(chunks.product * 4).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      ords.foreach { ord =>
-        var rem = ord.longValue(); val ci = new Array[Int](3)
-        var d = 2
-        while (d >= 0) { ci(d) = (rem % nC(d)).toInt; rem /= nC(d); d -= 1 }
-        var i = 0
-        for (t <- 0 until chunks(0); y <- 0 until chunks(1); x <- 0 until chunks(2)) {
-          val flat = ((ci(0) * chunks(0) + t).toLong * 1024L + (ci(1) * chunks(1) + y)) * 1024L +
-            (ci(2) * chunks(2) + x)
-          buf.putFloat(i * 4, (flat % 9973L) * 0.5f)
-          i += 1
-        }
-        val bytes = ZarrCodec.compress(Some("blosc:lz4"), buf.array(), typesize = 4)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$root/v", s"${ci(0)}.${ci(1)}.${ci(2)}"),
-          bytes
-        )
-      }
-    }
-    ZarrStoreWriter.consolidate(java.nio.file.Paths.get(root))
-    val tw = (System.nanoTime() - t0) / 1e9
-    val sizeGb = org.apache.commons.io.FileUtils.sizeOfDirectory(new java.io.File(root)) / 1e9
-    println(f"[spike] 1b write: $tw%.1fs, on-disk $sizeGb%.2f GB (raw 4.29 GB)")
-    val rt = Runtime.getRuntime
-    def heapMb: Long = { System.gc(); (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024) }
-    val heapBefore = heapMb
-    val df = new graft.api.ZarrDataReader(spark, root).readArray("v")
-    val tp = System.nanoTime()
-    val nParts = df.rdd.getNumPartitions
-    val tplan = (System.nanoTime() - tp) / 1e9
-    println(f"[spike] 1b planning: $nParts partitions in $tplan%.1fs, driver heap $heapBefore -> $heapMb MB")
-    def time(label: String)(f: => Long): Unit = {
-      val t = System.nanoTime(); val cells = f
-      val s = (System.nanoTime() - t) / 1e9
-      println(f"[spike] 1b $label: $s%.1fs (${cells / s / 1e6}%.1f Mcells/s)")
-    }
-    time("value-only sum") {
-      df.select("value").agg(sum(col("value").cast("double"))).collect()
-      1073741824L // cells scanned (the agg value itself is not a cell count)
-    }
-    time("full scan+agg")(df.agg(count(lit(1)), sum(col("value").cast("double"))).collect().head.getLong(0))
-    time("one t-slice (1/1024 pruned)") {
-      new graft.api.ZarrDataReader(spark, root)
-        .readArray("v", Map("t" -> graft.model.DimSel.Point(17)))
-        .agg(count(lit(1))).collect().head.getLong(0)
-    }
-    println(f"[spike] 1b driver heap after scans: $heapMb MB")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-  }
-
-  /** `runMain graft.tools.Spike zarr-deferred` — the deferred-coordinate
-    * proof: a store whose `time` axis has 100,000,000 coordinate values
-    * (0.8 GB as a driver array — the structure the deferred path exists to
-    * never build). Measures driver heap across reader creation, planning,
-    * and a pushed coordinate-range filter (refineDeferred streams the 100
-    * coordinate chunks one at a time), then scan throughput with executors
-    * decoding coordinate chunks through [[graft.sources.zarr.ZarrScan]]'s
-    * cursor path, and value parity on a spot gather. */
-  private def zarrDeferred(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.sources.zarr.{ZarrCodec, ZarrStoreWriter}
-    val root = "/tmp/graft_zarr_deferred"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val n = 100000000L // 10^8-element time axis
-    val chunkLen = 1000000
-    val nChunks = (n / chunkLen).toInt
-    val dir = java.nio.file.Paths.get(root)
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.writeString(dir.resolve(".zgroup"), """{"zarr_format": 2}""")
-    // data: 1-D f4, value(i) = (i % 9973) * 0.5; coord: i8 time(i) = 3*i
-    for ((name, dt) <- Seq("v" -> "<f4", "time" -> "<i8")) {
-      val ad = dir.resolve(name)
-      java.nio.file.Files.createDirectories(ad)
-      java.nio.file.Files.writeString(
-        ad.resolve(".zarray"),
-        ZarrStoreWriter.zarrayJson(Vector(n.toInt), Vector(chunkLen), dt, Some("blosc:lz4"), Some(0.0))
+    val base = spark
+      .range(nVecs)
+      .select(col("id").as("vec_id"), plantedVec(col("id"), grid).as("embedding"))
+    val planted = base
+      .filter(col("vec_id") % 100 === 0)
+      .select(
+        (col("vec_id") + nVecs).as("vec_id"),
+        transform(col("embedding"), x => x * lit(2.0f)).as("embedding")
       )
-      java.nio.file.Files.writeString(ad.resolve(".zattrs"), ZarrStoreWriter.zattrsJson(Some(Vector("time"))))
+    val df = base.unionByName(planted)
+      .repartition(spark.sparkContext.defaultParallelism)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (base, df)
+  }
+
+  /** Runs `body` and returns its result with the shuffle bytes its stages
+    * wrote — at cluster scale exchange bytes, not in-memory flops, are what
+    * the quantized ANN paths exist to shrink. */
+  private def shuffleWriteBytes[T](spark: SparkSession)(body: => T): (T, Long) = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        bytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
-    val t0 = System.nanoTime()
-    spark.range(0, nChunks, 1, 32).foreachPartition { (ords: Iterator[java.lang.Long]) =>
-      val vbuf = java.nio.ByteBuffer.allocate(chunkLen * 4).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      val cbuf = java.nio.ByteBuffer.allocate(chunkLen * 8).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      ords.foreach { ord =>
-        val base = ord.longValue() * chunkLen
-        var i = 0
-        while (i < chunkLen) {
-          vbuf.putFloat(i * 4, ((base + i) % 9973L) * 0.5f)
-          cbuf.putLong(i * 8, 3L * (base + i))
-          i += 1
-        }
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$root/v", ord.toString),
-          ZarrCodec.compress(Some("blosc:lz4"), vbuf.array(), typesize = 4)
-        )
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$root/time", ord.toString),
-          ZarrCodec.compress(Some("blosc:lz4"), cbuf.array(), typesize = 8)
-        )
-      }
-    }
-    ZarrStoreWriter.consolidate(dir)
-    val tw = (System.nanoTime() - t0) / 1e9
-    val sizeGb = org.apache.commons.io.FileUtils.sizeOfDirectory(new java.io.File(root)) / 1e9
-    println(f"[spike] deferred write: $tw%.1fs, on-disk $sizeGb%.2f GB (raw 1.2 GB incl. 0.8 GB coord)")
-    val rt = Runtime.getRuntime
-    def heapMb: Long = { System.gc(); (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024) }
-    val h0 = heapMb
-    // default threshold (10M) < 10^8 -> time is deferred automatically
-    val df = new graft.api.ZarrDataReader(spark, root).readArray("v")
-    assert(df.schema("time").dataType == org.apache.spark.sql.types.LongType)
-    val tp = System.nanoTime()
-    val nParts = df.rdd.getNumPartitions
-    println(f"[spike] deferred planning: $nParts partitions in ${(System.nanoTime() - tp) / 1e9}%.1fs, " +
-      f"driver heap $h0 -> $heapMb MB (a 10^8 i8 axis eager would be +763 MB)")
-    // pushed coordinate range over 1% of the axis: refineDeferred streams
-    // 100 coord chunks driver-side, never a whole-axis array
-    val tf = System.nanoTime()
-    val sel = df.filter(col("time") >= 3L * 49000000L && col("time") < 3L * 50000000L)
-    assert(!sel.queryExecution.optimizedPlan.toString().contains("Filter"))
-    val cnt = sel.agg(count(lit(1))).collect().head.getLong(0)
-    println(f"[spike] deferred 1%% range pushdown: ${(System.nanoTime() - tf) / 1e9}%.1fs, " +
-      f"rows=$cnt (expect 1000000), driver heap ${heapMb} MB")
-    require(cnt == 1000000L, s"pushdown miscount: $cnt")
-    // warm path: the chunk-stats pass above is cached per axis version, so
-    // a second pushed filter classifies 100 chunks and decodes <= 2
-    val tw2 = System.nanoTime()
-    val sel2 = df.filter(col("time") >= 3L * 12000000L && col("time") < 3L * 13500000L)
-    assert(!sel2.queryExecution.optimizedPlan.toString().contains("Filter"))
-    val cnt2 = sel2.agg(count(lit(1))).collect().head.getLong(0)
-    println(f"[spike] deferred pushdown, warm stats: ${(System.nanoTime() - tw2) / 1e9}%.2fs, " +
-      f"rows=$cnt2 (expect 1500000)")
-    require(cnt2 == 1500000L, s"warm pushdown miscount: $cnt2")
-    // spot value parity on an out-of-order gather through the deferred dim
-    val got = new graft.api.ZarrDataReader(spark, root)
-      .readArray("v", Map("time" -> graft.model.DimSel.Indices(Vector(73000001, 4, 99999999))))
-      .select("time", "value").collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-    val expect = Seq(73000001L, 4L, 99999999L).map(i => (3L * i, (i % 9973L) * 0.5f))
-    require(got == expect, s"gather mismatch: $got vs $expect")
-    val ts = System.nanoTime()
-    val total = df.agg(count(lit(1)), sum(col("value").cast("double"))).collect().head.getLong(0)
-    val scanS = (System.nanoTime() - ts) / 1e9
-    println(f"[spike] deferred full scan+agg: $scanS%.1fs (${total / scanS / 1e6}%.1f Mcells/s), " +
-      f"driver heap after: $heapMb MB")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val result = body
+      GraftBridge.drainListeners(spark.sparkContext)
+      (result, bytes.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** `runMain graft.tools.Spike zarr-sf10` — the Zarr-path scale gate: a
@@ -476,7 +314,7 @@ object Spike {
     val t0 = System.nanoTime()
     graft.SparkEntry.queries("x41_dup_clusters")(spark, sfDir).write.format("noop").mode("overwrite").save()
     val ts = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(2000) // listener delivery is async
+    GraftBridge.drainListeners(spark.sparkContext)
     spark.sparkContext.removeSparkListener(listener)
     // a round spans several jobs (checkpoint materialization + the
     // convergence count) — aggregate per round description
@@ -496,163 +334,6 @@ object Spike {
         f"[spike]   $d%-22s $nj%2d jobs  shuffle read ${r / 1e6}%8.2f MB  write ${w / 1e6}%8.2f MB"
       )
     }
-  }
-
-  /** `runMain graft.tools.Spike sf10` — the sf10 spot gate: run the most
-    * shuffle-heavy queries against a 100x-amplified dataset (~60M lineitem
-    * rows; `scripts/amplify_testdata.py SRC /tmp/testdata_sf10 100`),
-    * dumping each result + a filtered oracle_sql.json so `scripts/check.py
-    * /tmp/testdata_sf10 /tmp/sf10_out` hash-matches them against DuckDB.
-    * Prints per-query seconds for the scaling-ratio table in docs/ROUND6.md.
-    * Excluded by design: the documented bounded-input O(n²) contracts
-    * (x02/x06), x34's amplified-clone probe-join worst case (quadratic
-    * in COPIES by construction — measured separately at sf1,
-    * docs/ROUND4.md), and x41 — whose DuckDB oracle (recursive-CTE
-    * closure) spills past local disk at sf10 (docs/ROUND7.md); x41's 100×
-    * run is hash-checked by the closed-form `x41-planted` gate instead. */
-  private def sf10(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/testdata_sf10")
-    val outDir = "/tmp/sf10_out"
-    val names = Seq(
-      "q07_join3", "q08_selfjoin_suffix", "q09_tpch1", "q10_quantiles", "q17_anomaly",
-      "q18_topk", "x01_dedup_exact", "x03_minhash_lsh", "x12_window_5m", "x13_sessionize",
-      "x17_winfuncs", "x28_rolling", "x36_range_join",
-      "x42_group_quantiles", "x44_topk_per_key", "x46_funnel", "x47_retention"
-    )
-    new java.io.File(outDir).mkdirs()
-    names.foreach { n =>
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(n)(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$n")
-      println(f"[sf10] $n%-24s ${(System.nanoTime() - t0) / 1e9}%.1fs")
-    }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql.view.filterKeys(names.contains)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
-    println(s"[sf10] wrote $outDir — next: python3 scripts/check.py $sfDir $outDir")
-  }
-
-  /** `runMain graft.tools.Spike topk-ab` — A/B of the ObjectHashAggregate
-    * sort-fallback threshold (65536 in Sessions.local vs Spark's default
-    * 128) on the TypedImperativeAggregate-heavy queries, at whatever SF
-    * SPARK_GRAFT_SF_DIR points to (meant for the /tmp/testdata_sf10
-    * amplified set — round-11 set the threshold after the x67 spill hunt
-    * with only an sf0.1 A/B; this is the 100x validation). Each query
-    * runs once per threshold per round, alternating, noop-sunk. */
-  private def topkAb(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/testdata_sf10")
-    val names =
-      Seq("x34_ivf_topk", "x44_topk_per_key", "x59_source_cap", "x67_embed_quant", "x74_inverted_index")
-    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val capS = sys.env.getOrElse("SPARK_GRAFT_AB_CAP", "420").toLong
-    val out = new java.io.PrintWriter(new java.io.FileWriter("/tmp/topk_ab.txt", true), true)
-    def rec(line: String): Unit = { println(line); out.println(line) }
-    // a degenerate configuration (the default threshold turns bounded-heap
-    // aggregation into a full per-partition sort) can run ~unboundedly at
-    // sf10 — each timed run gets a watchdog that cancels its job group and
-    // records the cap as a LOWER bound instead of hanging the harness
-    def timedRun(n: String, tag: String): Unit = {
-      val t0 = System.nanoTime()
-      val fut = scala.concurrent.Future {
-        // job groups are thread-local: set it on the SUBMITTING thread
-        // (this pooled one), or cancelJobGroup cancels nothing
-        spark.sparkContext.setJobGroup(s"ab-$n", tag, interruptOnCancel = true)
-        graft.SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      }(scala.concurrent.ExecutionContext.global)
-      try {
-        scala.concurrent.Await.result(fut, scala.concurrent.duration.Duration(capS, "s"))
-        rec(f"[spike] topk-ab $tag $n%-22s ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          spark.sparkContext.cancelJobGroup(s"ab-$n")
-          try scala.concurrent.Await.result(fut, scala.concurrent.duration.Duration(120, "s"))
-          catch { case _: Throwable => () }
-          rec(f"[spike] topk-ab $tag $n%-22s > ${capS}s (CANCELLED — lower bound)")
-      } finally spark.sparkContext.clearJobGroup()
-    }
-    // warm-up pass (parquet footers, codegen) at the session threshold — not timed
-    names.foreach(n => graft.SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save())
-    // 65536 side first (fast), then the default-128 side under the watchdog
-    for (thr <- Seq("65536", "128"); round <- 1 to 2) {
-      spark.conf.set(key, thr)
-      names.foreach(n => timedRun(n, s"round=$round thr=$thr"))
-    }
-    out.close()
-  }
-
-  /** `runMain graft.tools.Spike ivf-scale` — validates ivfTopK's
-    * documented cell-count contract at the amplified set: nCells = √N
-    * (vs x34's fixed 8, which the topk-ab watchdog caps at sf10 because
-    * total scored pairs are N²/nCells). */
-  private def ivfScale(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.functions._
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/testdata_sf10")
-    val e = graft.queries.Tables.t(spark, sfDir, "embeddings")
-    val n = e.count()
-    val nlist = math.max(8, math.sqrt(n.toDouble).toInt)
-    val t0 = System.nanoTime()
-    val rows = graft.operators.Similarity
-      .ivfTopK(e, e.filter(col("vec_id") < nlist), "vec_id", "embedding", 5)
-      .count()
-    println(f"[spike] ivf-scale n=$n nlist=$nlist out_rows=$rows ${(System.nanoTime() - t0) / 1e9}%.1fs")
-  }
-
-  /** `runMain graft.tools.Spike zarr-aligned` — aligned multi-array scan
-    * vs the long-format self-join it replaces, on a 2×25M-cell store:
-    * both compute sum(a*b) over the shared grid; results must be exact
-    * against the closed-form expectation. */
-  private def zarrAligned(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.functions._
-    val root = "/tmp/graft_spike_aligned/store"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("/tmp/graft_spike_aligned"))
-    import graft.sources.zarr.ZarrStoreWriter
-    val dir = ZarrStoreWriter.writeGroup(root)
-    val (nt, nx) = (5000, 5000) // 25M cells per array
-    ZarrStoreWriter.writeArray(
-      dir, "a", Vector(nt, nx), Vector(512, 512), "<f8", f => ((f * 37) % 1000).toDouble,
-      dims = Some(Vector("t", "x")), compressor = Some("blosc:lz4")
-    )
-    ZarrStoreWriter.writeArray(
-      dir, "b", Vector(nt, nx), Vector(512, 512), "<f8", f => ((f * 13) % 500).toDouble,
-      dims = Some(Vector("t", "x")), compressor = Some("blosc:lz4")
-    )
-    ZarrStoreWriter.writeCoord(dir, "t", graft.sources.Coord.Ints(Array.tabulate(nt)(identity)))
-    ZarrStoreWriter.writeCoord(dir, "x", graft.sources.Coord.Ints(Array.tabulate(nx)(identity)))
-    ZarrStoreWriter.consolidate(dir)
-    // closed-form sum(a*b) over the 37/13 residue cycles (BigInt-safe)
-    var expect = BigInt(0)
-    val total = nt.toLong * nx
-    val cycle = 1000L * 500 // lcm cycle of the two residue patterns divides this
-    var i = 0L
-    var cycleSum = BigInt(0)
-    while (i < cycle) { cycleSum += BigInt(((i * 37) % 1000) * ((i * 13) % 500)); i += 1 }
-    expect = cycleSum * BigInt(total / cycle)
-    i = total / cycle * cycle
-    while (i < total) { expect += BigInt(((i * 37) % 1000) * ((i * 13) % 500)); i += 1 }
-    val r = new graft.api.ZarrDataReader(spark, root)
-    val t1 = System.nanoTime()
-    val aligned = r.readAligned(Seq("a", "b"))
-      .agg(sum(col("a") * col("b")).cast("decimal(38,0)")).head().getDecimal(0)
-    val ta = (System.nanoTime() - t1) / 1e9
-    require(BigInt(aligned.toBigInteger) == expect, s"aligned sum $aligned != $expect")
-    val t2 = System.nanoTime()
-    val joined = r.readArray("a").withColumnRenamed("value", "a")
-      .join(r.readArray("b").withColumnRenamed("value", "b"), Seq("t", "x"))
-      .agg(sum(col("a") * col("b")).cast("decimal(38,0)")).head().getDecimal(0)
-    val tj = (System.nanoTime() - t2) / 1e9
-    require(BigInt(joined.toBigInteger) == expect, s"joined sum $joined != $expect")
-    println(
-      f"[spike] zarr-aligned: sum(a*b) over 2x25M cells — aligned $ta%.1fs vs dim-join $tj%.1fs " +
-        f"(${tj / ta}%.1fx); both exact vs closed form"
-    )
   }
 
   /** `runMain graft.tools.Spike zarr-hier` — the HIERARCHICAL zone-map
@@ -1368,14 +1049,9 @@ object Spike {
     * cell-join candidate volume stays sum(cellQ·cellC), never |src|·|tgt|. */
   private def bitextPlanted(spark: org.apache.spark.sql.SparkSession, nVecs: Long): Unit = {
     import org.apache.spark.sql.functions._
-    val dim = 64
-    def elem(id: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =
-      ((pmod(xxhash64(id, i), lit(1000L)).cast("double") / lit(1000.0)) - lit(0.5))
-        .cast("float")
-    val idxs = sequence(lit(0L), lit(dim - 1L))
     def vecs(from: Long, until: Long) = spark
       .range(from, until)
-      .select(col("id").as("vec_id"), transform(idxs, i => elem(col("id"), i)).as("embedding"))
+      .select(col("id").as("vec_id"), plantedVec(col("id"), 1000L).as("embedding"))
     val src = vecs(0L, nVecs)
       .repartition(spark.sparkContext.defaultParallelism)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1532,34 +1208,11 @@ object Spike {
     * quantity that explodes if bucketing ever degrades toward n². */
   private def x60Planted(spark: org.apache.spark.sql.SparkSession, nVecs: Long): Unit = {
     import org.apache.spark.sql.functions._
-    val dim = 64
-    // v[i] in [-0.5, 0.5) from xxhash64(id, i): a full-avalanche mix is
-    // REQUIRED here — a linear congruential element hash shares structure
-    // with LshBucketBits' linear sign matrix and collapses 100k vectors
-    // into ~85 buckets (measured), turning the bucket join quadratic
-    def elem(id: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =
-      ((pmod(xxhash64(id, i), lit(1000L)).cast("double") / lit(1000.0)) - lit(0.5))
-        .cast("float")
-    val idxs = sequence(lit(0L), lit(dim - 1L))
-    val base = spark
-      .range(nVecs)
-      .select(
-        col("id").as("vec_id"),
-        transform(idxs, i => elem(col("id"), i)).as("embedding")
-      )
-    val planted = base
-      .filter(col("vec_id") % 100 === 0)
-      .select(
-        (col("vec_id") + nVecs).as("vec_id"),
-        transform(col("embedding"), x => x * lit(2.0f)).as("embedding")
-      )
-    val df = base.unionByName(planted)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (base, df) = plantedCorpus(spark, nVecs, 1000L)
     df.count()
     val t0 = System.nanoTime()
     val found = graft.operators.Similarity
-      .embedDupes(df, "vec_id", "embedding", dim, 16, 0.999)
+      .embedDupes(df, "vec_id", "embedding", Dim, 16, 0.999)
       .select("d1", "d2")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nFound = found.count()
@@ -1573,7 +1226,7 @@ object Spike {
     val extra = found.join(expected, Seq("d1", "d2"), "left_anti").count()
     // candidate volume the bucket join actually formed
     val cand = df
-      .select(graft.operators.Similarity.lshBucket(col("embedding"), dim, 16).as("b"))
+      .select(graft.operators.Similarity.lshBucket(col("embedding"), Dim, 16).as("b"))
       .groupBy("b")
       .agg(count(lit(1)).as("n"))
       .agg(
@@ -1610,38 +1263,10 @@ object Spike {
     * payload (~dim+8 B vs ~4dim+8 B per candidate row). */
   private def sq8Planted(spark: org.apache.spark.sql.SparkSession, nVecs: Long): Unit = {
     import org.apache.spark.sql.functions._
-    val dim = 64
-    // full-entropy elements (2^20 distinct values), unlike x60-planted's
-    // 1000-step grid: real embeddings don't dictionary-compress, and the
-    // storage comparison below would otherwise flatter the float side
-    def elem(id: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =
-      ((pmod(xxhash64(id, i), lit(1048576L)).cast("double") / lit(1048576.0)) - lit(0.5))
-        .cast("float")
-    val idxs = sequence(lit(0L), lit(dim - 1L))
-    val base = spark
-      .range(nVecs)
-      .select(col("id").as("vec_id"), transform(idxs, i => elem(col("id"), i)).as("embedding"))
-    val planted = base
-      .filter(col("vec_id") % 100 === 0)
-      .select(
-        (col("vec_id") + nVecs).as("vec_id"),
-        transform(col("embedding"), x => x * lit(2.0f)).as("embedding")
-      )
-    val df = base.unionByName(planted)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (base, df) = plantedCorpus(spark, nVecs, 1048576L)
     val n = df.count()
     val cen = base.filter(col("vec_id") < 512).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     cen.count()
-    // shuffle-write telemetry: the quantity SQ8 exists to shrink — at
-    // cluster scale exchange bytes, not in-memory flops, are the cost
-    val shuffleW = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted
-      ): Unit =
-        shuffleW.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
     // JIT/codegen warmup on a small sample — the SQ variants otherwise pay
     // whole-stage-codegen compilation + interpreter warmup inside their
     // timed region while the float variants (run later) inherit a hot JVM
@@ -1654,22 +1279,17 @@ object Spike {
         .bruteForceTopKSq(warmCen, warm, "vec_id", "embedding", 5, 10),
       () => graft.operators.Similarity.bruteForceTopK(warmCen, warm, "vec_id", "embedding", 5)
     ).foreach(f => f().count())
-    spark.sparkContext.addSparkListener(listener)
-    def drained(): Long = { Thread.sleep(2000); shuffleW.get() } // listener is async
-    val t0 = System.nanoTime()
     val sq = graft.operators.Similarity
       .ivfTopKSq(df, cen, "vec_id", "embedding", k = 10, nProbe = 1, rerank = 20)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nSq = sq.count()
+    val t0 = System.nanoTime()
+    val (nSq, wSq) = shuffleWriteBytes(spark)(sq.count())
     val tSq = (System.nanoTime() - t0) / 1e9
-    val wSq = drained()
     val t1 = System.nanoTime()
-    val nFloat = graft.operators.Similarity
-      .ivfTopK(df, cen, "vec_id", "embedding", k = 10, nProbe = 1)
-      .count()
+    val (nFloat, wFloat) = shuffleWriteBytes(spark) {
+      graft.operators.Similarity.ivfTopK(df, cen, "vec_id", "embedding", k = 10, nProbe = 1).count()
+    }
     val tFloat = (System.nanoTime() - t1) / 1e9
-    val wFloat = drained() - wSq
-    spark.sparkContext.removeSparkListener(listener)
     // the SERVING shape (small query batch vs big corpus) — where SQ8
     // scoring pays in wall time too: the broadcast query side is 4x
     // smaller and every corpus row is scored with the int8 kernel
@@ -1858,87 +1478,6 @@ object Spike {
     // threshold at 500k docs (Poisson spread around k≈30 docs/token)
     require(nnz > 50000, s"sparse-dim-scale DEGENERATE: only $nnz nonzero weights at dim 2^21")
     println("[spike] sparse-dim-scale: bit-identical across implementations at dim 2^21 — gate PASS")
-  }
-
-  /** `runMain graft.tools.Spike mrl-fetch-ab [nVecs]` — A/B harness for
-    * the matryoshka rerank-fetch modes, now BOTH production code paths:
-    * A = `matryoshkaIvfTopK(..., fetch = "pairs")` (default per-pair
-    * fetch: one full vector shuffled per SLIVER row), B = the same call
-    * with `fetch = "cell"` (each vector ships once into its cell's
-    * id→vec map; adopted from the round-16 cogroup prototype, which
-    * measured 3.8× less shuffle but lost wall-clock to typed-row
-    * overhead — the production form is DataFrame-native
-    * `map_from_entries` + the SAME codegen vecDot, so equality is by
-    * construction). Asserts BIT-EQUAL outputs both directions
-    * (exceptAll) and reports wall/shuffle for both. */
-  private def mrlFetchAb(spark: org.apache.spark.sql.SparkSession, nVecs: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val dim = 64
-    val (prefix, rerank, k) = (16, 20, 10)
-    def elem(id: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =
-      ((pmod(xxhash64(id, i), lit(1048576L)).cast("double") / lit(1048576.0)) - lit(0.5))
-        .cast("float")
-    val idxs = sequence(lit(0L), lit(dim - 1L))
-    val base = spark
-      .range(nVecs)
-      .select(col("id").as("vec_id"), transform(idxs, i => elem(col("id"), i)).as("embedding"))
-    val planted = base
-      .filter(col("vec_id") % 100 === 0)
-      .select(
-        (col("vec_id") + nVecs).as("vec_id"),
-        transform(col("embedding"), x => x * lit(2.0f)).as("embedding")
-      )
-    val df = base.unionByName(planted)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = df.count()
-    val nCells = math.max(512L, math.ceil(math.sqrt(n.toDouble)).toLong)
-    val cen = base.filter(col("vec_id") < nCells)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cen.count()
-    val shuffleW = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted
-      ): Unit =
-        shuffleW.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    def drained(): Long = { Thread.sleep(2000); shuffleW.get() }
-    // ---- A: production operator ----
-    val t0 = System.nanoTime()
-    val a = graft.operators.Similarity
-      .matryoshkaIvfTopK(df, cen, "vec_id", "embedding", k, prefix, 1, rerank)
-      .select("qid", "cid", "sim", "rn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nA = a.count()
-    val tA = (System.nanoTime() - t0) / 1e9
-    val wA = drained()
-    // ---- B: the production cell-grouped fetch ----
-    val t1 = System.nanoTime()
-    val b = graft.operators.Similarity
-      .matryoshkaIvfTopK(df, cen, "vec_id", "embedding", k, prefix, 1, rerank, fetch = "cell")
-      .select("qid", "cid", "sim", "rn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nB = b.count()
-    val tB = (System.nanoTime() - t1) / 1e9
-    val wB = drained() - wA
-    spark.sparkContext.removeSparkListener(listener)
-    val extraA = a.exceptAll(b).count()
-    val extraB = b.exceptAll(a).count()
-    println(
-      f"[spike] mrl-fetch-ab: $n vecs, $nCells cells — A(production per-pair fetch) $tA%.1fs / " +
-        f"${wA / 1e6}%.0f MB shuffled ($nA rows) vs B(fetch=cell) $tB%.1fs / " +
-        f"${wB / 1e6}%.0f MB ($nB rows); A\\B=$extraA B\\A=$extraB"
-    )
-    require(
-      extraA == 0 && extraB == 0 && nA == nB,
-      s"mrl-fetch-ab MISMATCH: A\\B=$extraA B\\A=$extraB nA=$nA nB=$nB — the two production " +
-        "fetch modes diverged; fetch=cell is NOT semantics-safe"
-    )
-    println("[spike] mrl-fetch-ab: outputs bit-equal — fetch=cell is semantics-safe")
-    Seq(a, b, df, cen).foreach(_.unpersist(blocking = false))
   }
 
   /** `runMain graft.tools.Spike sgd-planted [nDocs]` — the sharded
@@ -2237,18 +1776,13 @@ object Spike {
   private def curateIncrPlanted(spark: org.apache.spark.sql.SparkSession, nDocs: Long): Unit = {
     import org.apache.spark.sql.functions._
     require(nDocs % 10 == 0, s"curate-incr-planted: nDocs must be a multiple of 10, got $nDocs")
-    val dim = 64
     val h = nDocs / 10 // history size
-    def elem(key: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =
-      ((pmod(xxhash64(key, i), lit(1048576L)).cast("double") / lit(1048576.0)) - lit(0.5))
-        .cast("float")
-    val idxs = sequence(lit(0L), lit(dim - 1L))
     def textOf(key: org.apache.spark.sql.Column) =
       concat_ws(
         " ",
         transform(sequence(lit(0L), lit(11L)), j => concat(lit("t"), xxhash64(key, j).cast("string")))
       )
-    def vecOf(key: org.apache.spark.sql.Column) = transform(idxs, i => elem(key, i))
+    def vecOf(key: Column) = plantedVec(key, 1048576L)
     // key domains: batch-unique text = id; history text = 1e9 + j;
     // batch-unique embedding = id; history embedding = 2e9 + j;
     // centroids = 3e9 + c; batch-2 fresh text/embedding = 5e9/4e9 + id
@@ -2392,23 +1926,7 @@ object Spike {
     * doesn't scale with pair volume. */
   private def mrlPlanted(spark: org.apache.spark.sql.SparkSession, nVecs: Long): Unit = {
     import org.apache.spark.sql.functions._
-    val dim = 64
-    def elem(id: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =
-      ((pmod(xxhash64(id, i), lit(1048576L)).cast("double") / lit(1048576.0)) - lit(0.5))
-        .cast("float")
-    val idxs = sequence(lit(0L), lit(dim - 1L))
-    val base = spark
-      .range(nVecs)
-      .select(col("id").as("vec_id"), transform(idxs, i => elem(col("id"), i)).as("embedding"))
-    val planted = base
-      .filter(col("vec_id") % 100 === 0)
-      .select(
-        (col("vec_id") + nVecs).as("vec_id"),
-        transform(col("embedding"), x => x * lit(2.0f)).as("embedding")
-      )
-    val df = base.unionByName(planted)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (base, df) = plantedCorpus(spark, nVecs, 1048576L)
     val n = df.count()
     // √N cells — the ivfTopK cell contract: a FIXED cell count makes the
     // in-cell pair volume N²/cells blow up quadratically with corpus size
@@ -2417,13 +1935,6 @@ object Spike {
     val cen = base.filter(col("vec_id") < nCells)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     cen.count()
-    val shuffleW = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted
-      ): Unit =
-        shuffleW.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
     // codegen/JIT warmup outside the timed region (both variants)
     val warm = df.filter(col("vec_id") % 10 === 0)
     val warmCen = cen.limit(64)
@@ -2432,23 +1943,18 @@ object Spike {
         .matryoshkaIvfTopK(warm, warmCen, "vec_id", "embedding", 5, 16, 1, 10),
       () => graft.operators.Similarity.ivfTopK(warm, warmCen, "vec_id", "embedding", 5, 1)
     ).foreach(f => f().count())
-    spark.sparkContext.addSparkListener(listener)
-    def drained(): Long = { Thread.sleep(2000); shuffleW.get() } // listener is async
-    val t0 = System.nanoTime()
     val mrl = graft.operators.Similarity
       .matryoshkaIvfTopK(df, cen, "vec_id", "embedding", k = 10, prefixDim = 16, nProbe = 1,
         rerank = 20)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nMrl = mrl.count()
+    val t0 = System.nanoTime()
+    val (nMrl, wMrl) = shuffleWriteBytes(spark)(mrl.count())
     val tMrl = (System.nanoTime() - t0) / 1e9
-    val wMrl = drained()
     val t1 = System.nanoTime()
-    val nFull = graft.operators.Similarity
-      .ivfTopK(df, cen, "vec_id", "embedding", k = 10, nProbe = 1)
-      .count()
+    val (nFull, wFull) = shuffleWriteBytes(spark) {
+      graft.operators.Similarity.ivfTopK(df, cen, "vec_id", "embedding", k = 10, nProbe = 1).count()
+    }
     val tFull = (System.nanoTime() - t1) / 1e9
-    val wFull = drained() - wMrl
-    spark.sparkContext.removeSparkListener(listener)
     // every planted companion must rank its partner #1 at sim 1.0 AFTER
     // the prefix cut + cell routing + full-dim rerank
     val nComp = n - nVecs
@@ -2487,67 +1993,36 @@ object Spike {
     * corpus/centroids. */
   private def pqPlanted(spark: org.apache.spark.sql.SparkSession, nVecs: Long): Unit = {
     import org.apache.spark.sql.functions._
-    val dim = 64
-    def elem(id: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =
-      ((pmod(xxhash64(id, i), lit(1048576L)).cast("double") / lit(1048576.0)) - lit(0.5))
-        .cast("float")
-    val idxs = sequence(lit(0L), lit(dim - 1L))
-    val base = spark
-      .range(nVecs)
-      .select(col("id").as("vec_id"), transform(idxs, i => elem(col("id"), i)).as("embedding"))
-    val planted = base
-      .filter(col("vec_id") % 100 === 0)
-      .select(
-        (col("vec_id") + nVecs).as("vec_id"),
-        transform(col("embedding"), x => x * lit(2.0f)).as("embedding")
-      )
-    val df = base.unionByName(planted)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (base, df) = plantedCorpus(spark, nVecs, 1048576L)
     val n = df.count()
     val cen = base.filter(col("vec_id") < 512).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     cen.count()
     val model =
-      graft.operators.Similarity.pqFit(df, "vec_id", "embedding", dim, m = 8, nCen = 256, iters = 0)
-    val shuffleW = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted
-      ): Unit = {
-        val w = sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-        shuffleW.addAndGet(w)
-        if (sys.env.contains("SPIKE_PQ_STAGES") && w > 20000000L)
-          println(f"[spike]   stage ${sc.stageInfo.stageId}%4d wrote ${w / 1e6}%8.1f MB  (${sc.stageInfo.name})")
-      }
-    }
+      graft.operators.Similarity.pqFit(df, "vec_id", "embedding", Dim, m = 8, nCen = 256, iters = 0)
     val warm = df.filter(col("vec_id") % 10 === 0)
     val warmCen = cen.limit(64)
     Seq(
       () => graft.operators.Similarity.pqTopK(warm, warmCen, "vec_id", "embedding", 5, model, 1, 0),
       () => graft.operators.Similarity.ivfTopK(warm, warmCen, "vec_id", "embedding", 5, 1)
     ).foreach(f => f().count())
-    spark.sparkContext.addSparkListener(listener)
-    def drained(): Long = { Thread.sleep(2000); shuffleW.get() } // listener is async
     val t0 = System.nanoTime()
-    val nAdc = graft.operators.Similarity
-      .pqTopK(df, cen, "vec_id", "embedding", k = 10, model, nProbe = 1, rerank = 0)
-      .count()
+    val (nAdc, wAdc) = shuffleWriteBytes(spark) {
+      graft.operators.Similarity
+        .pqTopK(df, cen, "vec_id", "embedding", k = 10, model, nProbe = 1, rerank = 0)
+        .count()
+    }
     val tAdc = (System.nanoTime() - t0) / 1e9
-    val wAdc = drained()
-    val t1 = System.nanoTime()
     val pqR = graft.operators.Similarity
       .pqTopK(df, cen, "vec_id", "embedding", k = 10, model, nProbe = 1, rerank = 50)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nPqR = pqR.count()
+    val t1 = System.nanoTime()
+    val (nPqR, wPqR) = shuffleWriteBytes(spark)(pqR.count())
     val tPqR = (System.nanoTime() - t1) / 1e9
-    val wPqR = drained() - wAdc
     val t2 = System.nanoTime()
-    val nFloat = graft.operators.Similarity
-      .ivfTopK(df, cen, "vec_id", "embedding", k = 10, nProbe = 1)
-      .count()
+    val (nFloat, wFloat) = shuffleWriteBytes(spark) {
+      graft.operators.Similarity.ivfTopK(df, cen, "vec_id", "embedding", k = 10, nProbe = 1).count()
+    }
     val tFloat = (System.nanoTime() - t2) / 1e9
-    val wFloat = drained() - wAdc - wPqR
-    spark.sparkContext.removeSparkListener(listener)
     // storage: PQ codes parquet vs float parquet — 8 B of codes + one norm
     // against 256 B of floats per vector
     val outF = java.nio.file.Files.createTempDirectory("pqf").toString
@@ -2582,119 +2057,6 @@ object Spike {
     pqR.unpersist(blocking = false)
     cen.unpersist(blocking = false)
     df.unpersist(blocking = false)
-  }
-
-  /** `SPARK_GRAFT_SF_DIR=... runMain graft.tools.Spike skew` — bucket-size
-    * distribution of the two bucketed-join operators whose cost model is
-    * sum(bucket²): minhash LSH band buckets (x03 configuration) and IVF
-    * cells (x34 configuration). One hot bucket is the 100 TB failure mode;
-    * the mitigation path when max/median exceeds ~10x is Scale.saltedAgg /
-    * per-bucket pair caps, both already in the library. */
-  private def skew(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    def report(label: String, sizes: org.apache.spark.sql.DataFrame): Unit = {
-      val s = sizes
-        .agg(
-          count(lit(1)).as("n_buckets"),
-          max("count").as("mx"),
-          expr("percentile(count, 0.5)").as("med"),
-          expr("percentile(count, 0.99)").as("p99"),
-          sum(col("count") * col("count")).as("sum_sq"),
-          sum("count").as("n")
-        )
-        .collect()
-        .head
-      println(
-        f"[skew] $label: buckets=${s.getLong(0)} rows=${s.getLong(5)} max=${s.getLong(1)} " +
-          f"median=${s.getDouble(2)}%.0f p99=${s.getDouble(3)}%.0f pairsUpperBound=${s.getLong(4)} " +
-          f"max/median=${s.getLong(1) / math.max(1.0, s.getDouble(2))}%.1f"
-      )
-    }
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val sig = graft.operators.Dedup.minhashSignatures(docs, "doc_id", "text", 8)
-    // the x03 banding (4 bands x 2 rows, base-100000 injective packing)
-    val bands = sig
-      .select(
-        col("doc_id"),
-        explode(array((0 until 4).map(b =>
-          struct(lit(b).as("band"), (col(s"m${2 * b}") * lit(100000L) + col(s"m${2 * b + 1}")).as("bh"))): _*)).as("p")
-      )
-      .select(col("p.band").as("band"), col("p.bh").as("bh"))
-    report("minhash 4x2 band buckets", bands.groupBy("band", "bh").count())
-    // x53 span buckets: docs per 8-gram span hash (minDocs=1 -> the full
-    // distribution, not just the duplicated tail)
-    val spans = graft.operators.Dedup
-      .duplicatedSpans(docs, "doc_id", "text", n = 8, minDocs = 1)
-      .select(col("n_docs").as("count"))
-    report("x53 span buckets (docs per 8-gram span)", spans)
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val cen = e.filter(col("vec_id") < 8).select(col("vec_id").as("cen_id"), col("embedding").as("cv"))
-    val asg = e
-      .crossJoin(broadcast(cen))
-      .select(col("vec_id"), col("cen_id"),
-        graft.operators.Similarity.cosine(col("embedding"), col("cv")).as("sim"))
-      .withColumn("r", row_number().over(Window.partitionBy("vec_id").orderBy(desc("sim"), col("cen_id"))))
-      .filter(col("r") === 1)
-    report("IVF cells (x34: 8 seed centroids)", asg.groupBy("cen_id").count())
-    // x60 hyperplane-LSH buckets (md5 sign matrix): the candidate cost of
-    // embedDupes is exactly pairsUpperBound here — the number that was
-    // 250x worse under the old correlated linear sign family
-    val lsh = e.select(
-      graft.operators.Similarity.lshBucket(col("embedding"), 64, 8).as("bh")
-    )
-    report("x60 hyperplane buckets (8 bits, md5 signs)", lsh.groupBy("bh").count())
-  }
-
-  /** Stage-level profile of the x56 multimodal pipeline. */
-  private def mmProfile(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id")
-    println(s"[mm] docs rows=${docs.count()} parts=${docs.rdd.getNumPartitions}")
-    def time[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[mm] $label%-28s ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    val withAvi = graft.operators.Multimodal.withSynthAviPayload(docs, "doc_id")
-    println(s"[mm] synth parts=${withAvi.rdd.getNumPartitions}")
-    time("synth only (count)") { withAvi.count() }
-    val feats = graft.operators.Multimodal.extractVideoFeatures(withAvi, "doc_id")
-    time("synth+extract (count)") { feats.count() }
-    time("synth+extract (noop)") {
-      feats.write.format("noop").mode("overwrite").save()
-    }
-    import org.apache.spark.sql.functions._
-    val sel = feats.select(
-      col("doc_id"), col("width"), col("height"), col("n_frames"),
-      round(col("fps"), 6).as("fps"), col("codec")
-    )
-    time("select, no order (noop)") {
-      sel.write.format("noop").mode("overwrite").save()
-    }
-    time("select+orderBy (noop)") {
-      sel.orderBy("doc_id").write.format("noop").mode("overwrite").save()
-    }
-    time("full x56 (noop)") {
-      graft.SparkEntry.queries("x56_video_meta")(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    }
-    time("full x56 again (noop)") {
-      graft.SparkEntry.queries("x56_video_meta")(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    }
-    val withWav = graft.operators.Multimodal.withSynthWavPayload(docs, "doc_id", 200, 8000f)
-    time("wav synth only (count)") { withWav.count() }
-    val af = graft.operators.Multimodal.extractAudioFeatures(withWav, "doc_id")
-    time("wav synth+extract (noop)") { af.write.format("noop").mode("overwrite").save() }
-    time("full x55 (noop)") {
-      graft.SparkEntry.queries("x55_audio_features")(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    }
-    time("full x55 again (noop)") {
-      graft.SparkEntry.queries("x55_audio_features")(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    }
   }
 
   /** PageRank scale gate: a 10M-edge synthetic multigraph (hub-skewed
@@ -2795,7 +2157,7 @@ object Spike {
     * collision across C(n/40, 2) pattern pairs are ~1e-3 at n=1e5, so a
     * nonzero count is a bug, not noise.
     *
-    * maxHamming=8 is MEASURED, not hoped (`media-hamming 100000`): same-
+    * maxHamming=8 is MEASURED, not hoped (ROUND13.md's 100k-doc histogram): same-
     * pattern image pHash distances are even (median-split parity) and
     * fall 1.82M/132k/1.1k at 0/2/4 — a ~100x-per-step tail, so 8 leaves
     * two decades of margin; audio fingerprints are EXACTLY 0 (energy
@@ -2875,202 +2237,96 @@ object Spike {
     docs.unpersist(blocking = false)
   }
 
-  /** `runMain graft.tools.Spike media-hamming [nDocs]` — diagnostic for
-    * the media-planted threshold: the exact hamming histogram over all
-    * same-pattern IMAGE pairs (and video frame-0 pairs) at the bounded
-    * planting, so the gate's maxHamming is chosen from measurement, not
-    * hope. */
-  private def mediaHamming(spark: org.apache.spark.sql.SparkSession, nDocs: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    val n = math.max(40L, nDocs - nDocs % 40)
-    val p = n / 40
-    val docs = spark
-      .range(n)
-      .select(col("id").as("doc_id"), pmod(col("id"), lit(p)).as("pat"))
-      .repartition(spark.sparkContext.defaultParallelism)
-    def histo(name: String, hashes: org.apache.spark.sql.DataFrame): Unit = {
-      // hashes: (doc_id, h). Attach pat, self-join per pattern (40-member
-      // buckets), popcount the xor.
-      val withPat = hashes.withColumn("pat", pmod(col("doc_id"), lit(p)))
-      val a = withPat.select(col("pat"), col("doc_id").as("d1"), col("h").as("h1"))
-      val b = withPat.select(col("pat"), col("doc_id").as("d2"), col("h").as("h2"))
-      val hist = a
-        .join(b, Seq("pat"))
-        .filter(col("d1") < col("d2"))
-        .select(bit_count(col("h1").bitwiseXOR(col("h2"))).as("ham"))
-        .groupBy("ham")
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy("ham")
-        .collect()
-      val total = hist.map(_.getLong(1)).sum
-      println(s"[spike] media-hamming/$name: $total same-pattern pairs at $n docs")
-      hist.foreach(r => println(f"[spike]   ham=${r.getInt(0)}%2d  ${r.getLong(1)}%10d"))
-    }
-    histo(
-      "image",
-      graft.operators.Multimodal
-        .imagePHashes(
-          graft.operators.Multimodal.withSynthJpegPayload(docs, "doc_id", "pat"),
-          "doc_id"
-        )
-        .select(col("doc_id"), col("phash").as("h"))
-    )
-    histo(
-      "audio",
-      graft.operators.Multimodal
-        .audioFingerprints(
-          graft.operators.Multimodal.withSynthWavVariantPayload(docs, "doc_id", "pat"),
-          "doc_id"
-        )
-        .select(col("doc_id"), col("afp").as("h"))
-    )
+  /** One scale-gate leg. `driverMem` is the heap `scale_gate.sh` pins for
+    * it (`-` = the build's default); `defaultArgs` are its gate sizes, which
+    * fill in any argument the command line leaves out. */
+  final case class Leg(
+      name: String,
+      driverMem: String,
+      defaultArgs: Seq[String],
+      run: (SparkSession, Seq[String]) => Unit
+  ) {
+    /** The `--list` line: `name driverMem args…`. */
+    def line: String = (Seq(name, driverMem) ++ defaultArgs).mkString(" ")
   }
 
-  def main(args: Array[String]): Unit = {
-    val spark = Sessions.local("32")
-    if (args.sameElements(Array("mm-profile"))) { mmProfile(spark); spark.stop(); return }
-    if (args.sameElements(Array("zarr-scale"))) { zarrScale(spark); spark.stop(); return }
-    if (args.sameElements(Array("zarr-1b"))) { zarr1b(spark); spark.stop(); return }
-    if (args.sameElements(Array("zarr-deferred"))) { zarrDeferred(spark); spark.stop(); return }
-    if (args.sameElements(Array("zarr-sf10"))) { zarrSf10(spark); spark.stop(); return }
-    if (args.sameElements(Array("zarr-zonemap"))) { zarrZoneMap(spark); spark.stop(); return }
-    if (args.sameElements(Array("zarr-hier"))) { zarrHier(spark); spark.stop(); return }
-    if (args.sameElements(Array("cc-telemetry"))) { ccTelemetry(spark); spark.stop(); return }
-    if (args.sameElements(Array("skew"))) { skew(spark); spark.stop(); return }
-    if (args.sameElements(Array("sf10"))) { sf10(spark); spark.stop(); return }
-    if (args.nonEmpty && args(0) == "pagerank-planted") {
-      pagerankPlanted(
-        spark,
-        if (args.length > 1) args(1).toLong else 2000000L,
-        if (args.length > 2) args(2).toLong else 10000000L
-      )
-      spark.stop(); return
+  /** A leg whose one argument is its size. */
+  private def sized(name: String, driverMem: String, n: Long)(run: (SparkSession, Long) => Unit): Leg =
+    Leg(name, driverMem, Seq(n.toString), (spark, a) => run(spark, a.head.toLong))
+
+  /** Every scale-gate leg, in gate order, at its gate size. */
+  val legs: Seq[Leg] = Seq(
+    Leg("zarr-sf10", "-", Nil, (spark, _) => zarrSf10(spark)),
+    Leg("zarr-zonemap", "-", Nil, (spark, _) => zarrZoneMap(spark)),
+    Leg("zarr-hier", "-", Nil, (spark, _) => zarrHier(spark)),
+    Leg("zarr-deferred-str", "-", Nil,
+      (spark, a) => zarrDeferredStr(spark, a.headOption.fold(10000000L)(_.toLong))),
+    sized("x41-planted", "-", 500000L)(x41Planted),
+    Leg("incr-planted", "-", Seq("2000000", "200000"),
+      (spark, a) => incrPlanted(spark, a(0).toLong, a(1).toLong)),
+    Leg("pagerank-planted", "-", Nil,
+      (spark, a) => pagerankPlanted(spark, a.lift(0).fold(2000000L)(_.toLong), a.lift(1).fold(10000000L)(_.toLong))),
+    Leg("media-planted", "-", Seq("100000"),
+      (spark, a) => mediaPlanted(spark, a.head.toLong, a.lift(1).fold(8)(_.toInt))),
+    sized("x60-planted", "-", 1000000L)(x60Planted),
+    sized("sq8-planted", "-", 200000L)(sq8Planted),
+    sized("pq-planted", "-", 200000L)(pqPlanted),
+    sized("mrl-planted", "24g", 1000000L)(mrlPlanted),
+    // 16g pin, adjudicated r18 (ROUND18.md): NOT a code regression — r16's
+    // code OOMs at 8g in the same stage 110. Measured at OOM (GC log):
+    // 6.4-7.0 GiB live of 8 GiB with ~730 humongous regions (~2.9 GiB of
+    // columnar cache batches for the two persisted indexes + survivors,
+    // plus 64 MiB unsafe shuffle pages), Full-GC storm, final allocations
+    // dying in 32 concurrent tasks' spill read-ahead buffers. Neither
+    // GCLockerRetryAllocationCount=64, halved threads (16), nor 16 MiB G1
+    // regions rescues 8g — the live set is real. A cluster gives each
+    // executor its own heap; local-harness constraint, pin inherent.
+    sized("curate-incr-planted", "16g", 2000000L)(curateIncrPlanted),
+    sized("sgd-planted", "-", 1000000L)(sgdPlanted),
+    sized("sparse-dim-scale", "24g", 500000L)(sparseDimScale),
+    sized("lm-planted", "-", 1000000L)(lmPlanted),
+    sized("curriculum-planted", "-", 20000000L)(curriculumPlanted),
+    sized("epoch-planted", "-", 8000000L)(epochPlanted),
+    sized("overlap-planted", "-", 2000000L)(overlapPlanted),
+    sized("unimax-planted", "-", 2000000L)(unimaxPlanted),
+    sized("bitext-planted", "-", 200000L)(bitextPlanted),
+    sized("keyword-scale", "-", 10000L)((spark, n) => keywordScale(spark, n.toInt)),
+    Leg("cc-telemetry", "-", Nil, (spark, _) => ccTelemetry(spark))
+  )
+
+  def main(args: Array[String]): Unit = run(args.toList, () => Sessions.local())
+
+  /** [[main]] with the session factory as a parameter; the command line is
+    * resolved before it is called, so a bad leg name starts no session. */
+  private[tools] def run(args: List[String], session: () => SparkSession): Unit = {
+    def withSession(body: SparkSession => Unit): Unit = {
+      val spark = session()
+      try body(spark)
+      finally spark.stop()
     }
-    if (args.nonEmpty && args(0) == "media-hamming") {
-      mediaHamming(spark, if (args.length > 1) args(1).toLong else 100000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "media-planted") {
-      mediaPlanted(
-        spark,
-        if (args.length > 1) args(1).toLong else 100000L,
-        if (args.length > 2) args(2).toInt else 8
-      )
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "x41-planted") {
-      x41Planted(spark, if (args.length > 1) args(1).toLong else 500000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "incr-planted") {
-      incrPlanted(
-        spark,
-        if (args.length > 1) args(1).toLong else 2000000L,
-        if (args.length > 2) args(2).toLong else 200000L
-      )
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "x60-planted") {
-      x60Planted(spark, if (args.length > 1) args(1).toLong else 1000000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "curriculum-planted") {
-      curriculumPlanted(spark, if (args.length > 1) args(1).toLong else 20000000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "epoch-planted") {
-      epochPlanted(spark, if (args.length > 1) args(1).toLong else 2000000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "overlap-planted") {
-      overlapPlanted(spark, if (args.length > 1) args(1).toLong else 2000000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "unimax-planted") {
-      unimaxPlanted(spark, if (args.length > 1) args(1).toLong else 2000000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "bitext-planted") {
-      bitextPlanted(spark, if (args.length > 1) args(1).toLong else 100000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "sq8-planted") {
-      sq8Planted(spark, if (args.length > 1) args(1).toLong else 200000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "pq-planted") {
-      pqPlanted(spark, if (args.length > 1) args(1).toLong else 200000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "mrl-planted") {
-      mrlPlanted(spark, if (args.length > 1) args(1).toLong else 200000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "curate-incr-planted") {
-      curateIncrPlanted(spark, if (args.length > 1) args(1).toLong else 200000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "sgd-planted") {
-      sgdPlanted(spark, if (args.length > 1) args(1).toLong else 1000000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "lm-planted") {
-      lmPlanted(spark, if (args.length > 1) args(1).toLong else 1000000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "sparse-dim-scale") {
-      sparseDimScale(spark, if (args.length > 1) args(1).toLong else 500000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "mrl-fetch-ab") {
-      mrlFetchAb(spark, if (args.length > 1) args(1).toLong else 200000L)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "keyword-scale") {
-      keywordScale(spark, if (args.length > 1) args(1).toInt else 10000)
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "pq-explain") {
-      // plan-shape audit of the rerank path (size-independent)
-      import org.apache.spark.sql.functions._
-      val e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-      val model = graft.operators.Similarity.pqFit(e, "vec_id", "embedding", 64, 8, 16, 0)
-      val cen = e.filter(col("vec_id") < 22)
-      graft.operators.Similarity
-        .pqTopK(e, cen, "vec_id", "embedding", 5, model, 1, 50)
-        .explain("formatted")
-      spark.stop(); return
-    }
-    if (args.nonEmpty && args(0) == "zarr-deferred-str") {
-      zarrDeferredStr(spark, if (args.length > 1) args(1).toLong else 10000000L)
-      spark.stop(); return
-    }
-    if (args.sameElements(Array("zarr-aligned"))) { zarrAligned(spark); spark.stop(); return }
-    if (args.sameElements(Array("topk-ab"))) { topkAb(spark); spark.stop(); return }
-    if (args.sameElements(Array("ivf-scale"))) { ivfScale(spark); spark.stop(); return }
-    if (args.isEmpty) {
-      val df = graft.SparkEntry.entry(spark)
-      df.show(10, truncate = false)
-      println("entry rows=" + df.count())
-    } else if (args(0) == "explain") {
-      // formatted physical plan for declared queries (plan-shape audits)
-      val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-      args.drop(1).foreach { n =>
-        println(s"===== $n =====")
-        graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-      }
-    } else {
-      val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-      args.foreach { n =>
-        val fn = graft.SparkEntry.queries(n)
-        val times = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
+    args match {
+      case List("--list") => legs.foreach(l => println(l.line))
+      case Nil =>
+        withSession { spark =>
+          val df = graft.SparkEntry.entry(spark)
+          df.show(10, truncate = false)
+          println("entry rows=" + df.count())
         }
-        println(f"[spike] $n%-24s min=${times.min}%.2f runs=${times.map(t => f"$t%.2f").mkString(",")}")
-      }
+      case "explain" :: names =>
+        val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+        withSession { spark =>
+          names.foreach { n =>
+            println(s"===== $n =====")
+            graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+          }
+        }
+      case name :: given =>
+        val leg = legs.find(_.name == name).getOrElse(
+          throw new IllegalArgumentException(
+            s"unknown Spike leg '$name'; legs: ${legs.map(_.name).mkString(" ")} (or --list, explain)"
+          )
+        )
+        withSession(leg.run(_, given ++ leg.defaultArgs.drop(given.length)))
     }
-    spark.stop()
   }
 }

@@ -24,4 +24,9 @@ object GraftBridge {
     f(ext)
     ext.registerFunctions(spark.sessionState.functionRegistry)
   }
+
+  /** Blocks until every event posted so far has reached every listener
+    * (`private[spark]` LiveListenerBus), so counters read afterwards are
+    * complete without sleeping. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -3,17 +3,17 @@ package graft
 import org.apache.spark.sql.GraftBridge
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The `spark.sql.extensions=graft.GraftExtensions` deploy path: the same
-  * function builders that `Sessions.local` registers imperatively, injected
-  * through SparkSessionExtensions (applied here to the shared session's
-  * registry via the GraftBridge test seam — extensions normally run at
-  * session build). */
+/** GraftExtensions, the one function-registration path: `Sessions.local`
+  * builds the shared session with it, and re-applying it through the
+  * GraftBridge test seam (extensions normally run only at session build)
+  * restores the functions after they are dropped. */
 class ExtensionsSpec extends AnyFunSuite with SparkTester {
 
   test("GraftExtensions injects vec_dot, byte_dot and sorted_intersect_count") {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     val reg = spark.sessionState.functionRegistry
     Seq("vec_dot", "byte_dot", "sorted_intersect_count").foreach { f =>
+      assert(reg.functionExists(FunctionIdentifier(f)), s"Sessions.local did not install $f")
       reg.dropFunction(FunctionIdentifier(f))
       assert(!reg.functionExists(FunctionIdentifier(f)))
     }

@@ -885,6 +885,23 @@ class ZarrSpec extends AnyFunSuite with SparkTester {
     // (stream validation), never return wrong bytes
     val badlz = f3.clone(); badlz(2) = (badlz(2) & 0x1f).toByte // codec bits -> 0
     intercept[IllegalArgumentException](Blosc.decompress(badlz))
+    // header sizes are bounded before anything is allocated: nbytes against
+    // the chunk's known raw length (through both codec entry points), the
+    // memcpy payload and the block-offset table against the frame
+    def withNbytes(f: Array[Byte], n: Int) = {
+      val g = f.clone(); java.nio.ByteBuffer.wrap(g).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(4, n); g
+    }
+    val huge = withNbytes(f1, Int.MaxValue - 64)
+    val e2 = intercept[IllegalArgumentException](Blosc.decompress(huge, compressible.length))
+    assert(e2.getMessage.contains("declares"))
+    intercept[IllegalArgumentException](ZarrCodec.decompress(Some("blosc"), huge, compressible.length))
+    intercept[IllegalArgumentException](
+      ZarrCodecV3.decode("""{"name": "blosc"}""", huge, compressible.length)
+    )
+    val e3 = intercept[IllegalArgumentException](Blosc.decompress(f2.take(16 + 100)))
+    assert(e3.getMessage.contains("truncated"))
+    val e4 = intercept[IllegalArgumentException](Blosc.decompress(huge))
+    assert(e4.getMessage.contains("truncated"))
   }
 
   test("blosclz token stream + bitshuffle transpose: round-trips, far-distance decode, inverses") {
