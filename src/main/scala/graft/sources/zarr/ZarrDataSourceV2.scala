@@ -1908,13 +1908,16 @@ class ZarrScan(
 }
 
 /** ALIGNED multi-array reads: one reader per requested value column walks
-  * the SAME partition in lockstep — cell iteration depends only on the
-  * shared (dims, shape, chunks, keep) state, never on which columns a
-  * reader materializes, so all cursors advance identically and the
-  * combined row is a per-field copy. One chunk read per array per chunk;
-  * unrequested arrays cost nothing (their reader is never built). Shard
-  * layouts may differ between arrays — each reader resolves IO through its
-  * own metadata; only the logical chunk grid must match. */
+  * the SAME partition in lockstep. Cell iteration depends only on the
+  * shared (dims, shape, chunks, keep, pruner) state, never on which columns
+  * a reader materializes, so all cursors advance identically; any
+  * difference in the cells they yield throws. The columnar path hands
+  * Spark one `ColumnarBatch` over the readers' own vectors; only
+  * structured (`V`) values fall back to rows, copied field by field. One
+  * chunk read per array per chunk; unrequested arrays cost nothing (their
+  * reader is never built). Shard layouts may differ between arrays — each
+  * reader resolves IO through its own metadata; only the logical chunk
+  * grid must match. */
 class ZarrMultiReaderFactory(
     valueColumns: Seq[(String, String, ZarrArrayMeta)],
     primaryDir: String,
@@ -1929,40 +1932,44 @@ class ZarrMultiReaderFactory(
     // chunk grid, so leader and followers stay in lockstep
     pruner: Option[ZarrChunkStats.Pruner] = None
 ) extends PartitionReaderFactory {
+  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+
+  // (field, output position) of the dim columns and of the value columns;
+  // the first value column's array leads
+  private val dimIdx: Array[(StructField, Int)] =
+    required.fields.zipWithIndex.filter { case (f, _) => dimNames.contains(f.name) }
+  private val wanted: Array[(StructField, Int)] =
+    required.fields.zipWithIndex.filter { case (f, _) => !dimNames.contains(f.name) }
+  private val byName: Map[String, (String, String, ZarrArrayMeta)] =
+    valueColumns.map(vc => vc._1 -> vc).toMap
+
+  /** Opens one reader per value column: the leader reads the dims plus its
+    * value, each follower only its value (each as the reader's "value"). */
+  private def lockstep[R: scala.reflect.ClassTag](
+      open: (String, ZarrArrayMeta, StructType) => R
+  ): (R, Array[R]) = {
+    def valueField(f: StructField) = StructField("value", f.dataType, nullable = true)
+    def openFor(f: StructField, fields: Seq[StructField]): R = {
+      val (_, dir, m) = byName(f.name)
+      open(dir, m, StructType(fields :+ valueField(f)))
+    }
+    (openFor(wanted.head._1, dimIdx.map(_._1).toSeq), wanted.tail.map(w => openFor(w._1, Nil)))
+  }
+
+  private def diverged(follower: Int, lead: Any, got: Any): IllegalStateException =
+    new IllegalStateException(
+      s"aligned readers diverged (leader=$lead follower=${wanted(follower + 1)._1.name}=$got)"
+    )
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val part = partition.asInstanceOf[ZarrInputPartition]
-    val dimRuns = state.dimRuns
-    val keptCoords = state.keptCoords
-    val dimIdx: Array[(StructField, Int)] =
-      required.fields.zipWithIndex.filter { case (f, _) => dimNames.contains(f.name) }
-    val wanted: Array[(StructField, Int)] =
-      required.fields.zipWithIndex.filter { case (f, _) => !dimNames.contains(f.name) }
-    val byName = valueColumns.map(vc => vc._1 -> vc).toMap
-    if (wanted.isEmpty)
-      // dims-only projection (count over coordinates): one reader, no value
-      return new ZarrRowReader(
-        primaryDir, primaryMeta, outDims, required, part, storageOptions, dimRuns, keptCoords,
-        deferredSpecs, pruner
-      )
-    // leader reads the dims plus its value; followers read value-only
+    def open(dir: String, m: ZarrArrayMeta, req: StructType) = new ZarrRowReader(
+      dir, m, outDims, req, part, storageOptions, state.dimRuns, state.keptCoords, deferredSpecs, pruner
+    )
+    // dims-only projection (count over coordinates): one reader, no value
+    if (wanted.isEmpty) return open(primaryDir, primaryMeta, required)
+    val (leader, followers) = lockstep(open)
     val (leadField, leadOut) = wanted.head
-    val (_, leadDir, leadMeta) = byName(leadField.name)
-    val leadRequired = StructType(
-      dimIdx.map(_._1).toSeq :+ StructField("value", leadField.dataType, nullable = true)
-    )
-    val leader = new ZarrRowReader(
-      leadDir, leadMeta, outDims, leadRequired, part, storageOptions, dimRuns, keptCoords,
-      deferredSpecs, pruner
-    )
-    val followers = wanted.tail.map { case (f, _) =>
-      val (_, dir, m) = byName(f.name)
-      new ZarrRowReader(
-        dir, m, outDims,
-        StructType(Seq(StructField("value", f.dataType, nullable = true))),
-        part, storageOptions, dimRuns, keptCoords, deferredSpecs, pruner
-      )
-    }
     new PartitionReader[InternalRow] {
       private val out = new GenericInternalRow(required.length)
       override def next(): Boolean = {
@@ -1970,10 +1977,7 @@ class ZarrMultiReaderFactory(
         var k = 0
         while (k < followers.length) {
           val fn = followers(k).next()
-          if (fn != n)
-            throw new IllegalStateException(
-              s"aligned readers diverged (leader=$n follower=${wanted(k + 1)._1.name}=$fn)"
-            )
+          if (fn != n) throw diverged(k, n, fn)
           k += 1
         }
         if (n) {
@@ -2001,8 +2005,47 @@ class ZarrMultiReaderFactory(
     }
   }
 
-  // lockstep readers are row-based; the single-array path keeps columnar
-  override def supportColumnarReads(partition: InputPartition): Boolean = false
+  // same rule as ZarrReaderFactory: structured values take the row path
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    !wanted.exists { case (f, _) => byName(f.name)._3.zdtype.code == ZDtype.V }
+
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
+    val part = partition.asInstanceOf[ZarrInputPartition]
+    def open(dir: String, m: ZarrArrayMeta, req: StructType) = new ZarrColumnarReader(
+      dir, m, outDims, req, part, storageOptions, state.dimRuns, state.keptCoords, deferredSpecs,
+      pruner = pruner
+    )
+    if (wanted.isEmpty) return open(primaryDir, primaryMeta, required)
+    val (leader, followers) = lockstep(open)
+    // every reader refills its own vectors in place, so one batch over
+    // them, in `required` order, serves the whole partition
+    val lead = leader.get()
+    val cols = new Array[ColumnVector](required.length)
+    dimIdx.indices.foreach(i => cols(dimIdx(i)._2) = lead.column(i))
+    cols(wanted.head._2) = lead.column(dimIdx.length)
+    followers.indices.foreach(k => cols(wanted(k + 1)._2) = followers(k).get().column(0))
+    val batch = new ColumnarBatch(cols)
+    new PartitionReader[ColumnarBatch] {
+      override def next(): Boolean = {
+        val n = leader.next()
+        val rows = lead.numRows()
+        var k = 0
+        while (k < followers.length) {
+          val fn = followers(k).next()
+          val fr = followers(k).get().numRows()
+          if (fn != n || fr != rows) throw diverged(k, s"$n/$rows rows", s"$fn/$fr rows")
+          k += 1
+        }
+        batch.setNumRows(rows)
+        n
+      }
+      override def get(): ColumnarBatch = batch
+      override def close(): Unit = {
+        leader.close()
+        followers.foreach(_.close())
+      }
+    }
+  }
 }
 
 class ZarrReaderFactory(

@@ -433,6 +433,12 @@ object ZarrBuffer {
   }
 }
 
+/** A stored chunk (or the shard index locating it) that its codec, filter
+  * or index chain could not decode. The message names the array directory
+  * and the chunk key, then the original failure, which is kept as the cause. */
+final class ZarrCorruptChunkException(val arrayDir: String, val chunkKey: String, cause: Throwable)
+    extends RuntimeException(s"corrupt zarr chunk '$chunkKey' in $arrayDir: ${cause.getMessage}", cause)
+
 /** Executor-safe chunk IO: pure functions of (arrayDir, meta, chunkIdx,
   * storageOptions). `arrayDir` is a Hadoop-parseable path/URI string, so the
   * same code reads local dirs in tests and object stores in production. */
@@ -457,47 +463,55 @@ object ZarrChunkIO {
     def decodeV3(raw: Array[Byte]): Array[Byte] =
       // v3 bytes->bytes codecs applied in encode order -> undone in REVERSE
       meta.v3Codecs.foldRight(raw)((cfg, b) => ZarrCodecV3.decode(cfg, b, rawLen))
-    val decoded: Option[Array[Byte]] = meta.shardShape match {
-      case Some(_) => readInnerChunk(arrayDir, meta, chunkIdx, storageOptions).map(decodeV3)
+    def decodeV2(raw: Array[Byte]): Array[Byte] =
+      if (isVlen) {
+        // the vlen-utf8 layout is parsed below. A categorize filter
+        // stores fixed-width codes (known length) whose decode emits
+        // the same vlen stream; plain vlen-utf8 was stripped as
+        // structural, so the fold is a no-op for it.
+        val catLen = meta.filters.collectFirst {
+          case cfg if ZarrFilters.idOf(cfg) == "categorize" =>
+            ZarrFilters.categorizeStoredLen(cfg, nCells)
+        }
+        val dec = ZarrCodec.decompress(meta.compressor, raw, catLen.getOrElse(-1))
+        meta.filters.foldRight(dec)((cfg, b) => ZarrFilters.decode(cfg, meta.zdtype, b))
+      } else {
+        // width-changing filters (fixedscaleoffset, packbits) store fewer
+        // bytes than the decoded chunk — size the decompressor for the
+        // STORED length (fold the filter chain in encode order)
+        val storedLen =
+          meta.filters.foldLeft(rawLen)((l, cfg) => ZarrFilters.storedLen(cfg, meta.zdtype, l))
+        val decompressed = ZarrCodec.decompress(meta.compressor, raw, storedLen)
+        // numcodecs filters applied in encode order -> undone in REVERSE
+        meta.filters.foldRight(decompressed)((cfg, b) => ZarrFilters.decode(cfg, meta.zdtype, b))
+      }
+    def toBuffer(bytes: Array[Byte]): ZarrBuffer =
+      if (isVlen) ZarrBuffer.vlenUtf8(bytes, nCells, meta.zdtype)
+      else {
+        require(bytes.length == rawLen, s"decoded to ${bytes.length} bytes, expected $rawLen")
+        new ZarrBuffer(bytes, meta.zdtype)
+      }
+    meta.shardShape match {
+      case Some(_) =>
+        // the shard index is part of the encoding: its failures are keyed too
+        try readInnerChunk(arrayDir, meta, chunkIdx, storageOptions).map(r => toBuffer(decodeV3(r)))
+        catch { case scala.util.control.NonFatal(e) => throw keyed(arrayDir, meta, chunkIdx, e) }
       case None =>
         val f = new HPath(arrayDir, meta.chunkKey(chunkIdx))
         ZarrFileIO.readBytesIfExists(f, storageOptions, sizeHint = math.max(rawLen, 4096)).map { raw =>
-          if (meta.v3) decodeV3(raw)
-          else if (isVlen) {
-            // the vlen-utf8 layout is parsed below. A categorize filter
-            // stores fixed-width codes (known length) whose decode emits
-            // the same vlen stream; plain vlen-utf8 was stripped as
-            // structural, so the fold is a no-op for it.
-            val catLen = meta.filters.collectFirst {
-              case cfg if ZarrFilters.idOf(cfg) == "categorize" =>
-                ZarrFilters.categorizeStoredLen(cfg, nCells)
-            }
-            val dec = ZarrCodec.decompress(meta.compressor, raw, catLen.getOrElse(-1))
-            meta.filters.foldRight(dec)((cfg, b) => ZarrFilters.decode(cfg, meta.zdtype, b))
-          }
-          else {
-            // width-changing filters (fixedscaleoffset, packbits) store fewer
-            // bytes than the decoded chunk — size the decompressor for the
-            // STORED length (fold the filter chain in encode order)
-            val storedLen =
-              meta.filters.foldLeft(rawLen)((l, cfg) => ZarrFilters.storedLen(cfg, meta.zdtype, l))
-            val decompressed = ZarrCodec.decompress(meta.compressor, raw, storedLen)
-            // numcodecs filters applied in encode order -> undone in REVERSE
-            meta.filters.foldRight(decompressed)((cfg, b) => ZarrFilters.decode(cfg, meta.zdtype, b))
-          }
+          try toBuffer(if (meta.v3) decodeV3(raw) else decodeV2(raw))
+          catch { case scala.util.control.NonFatal(e) => throw keyed(arrayDir, meta, chunkIdx, e) }
         }
     }
-    decoded.map { bytes =>
-      if (isVlen) ZarrBuffer.vlenUtf8(bytes, nCells, meta.zdtype)
-      else {
-        require(
-          bytes.length == rawLen,
-          s"chunk ${meta.chunkKey(chunkIdx)} decoded to ${bytes.length} bytes, expected $rawLen"
-        )
-        new ZarrBuffer(bytes, meta.zdtype)
-      }
-    }
   }
+
+  /** A chunk that fails to decode names its array and key; an unsupported
+    * codec is a metadata problem, not a bad chunk, and stays as it is. */
+  private def keyed(arrayDir: String, meta: ZarrArrayMeta, chunkIdx: Seq[Int], e: Throwable): Throwable =
+    e match {
+      case _: UnsupportedOperationException => e
+      case _ => new ZarrCorruptChunkException(arrayDir, meta.chunkKey(chunkIdx), e)
+    }
 
   /** Per-JVM bounded cache of decoded shard indexes: every inner chunk of a
     * shard shares one index, so tasks reading a shard's inner chunks pay the

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -164,6 +165,18 @@ class PlanContractsSpec extends AnyFunSuite with SparkTester {
     checkContract("q39", planOf("q39_zarr_agg_pushdown"),
       required = Seq("LocalTableScan"), forbidden = Seq("BatchScan"),
       maxHashExchanges = 0)
+  }
+
+  test("q38_zarr_aligned: one columnar aligned scan, no join, no hash shuffle") {
+    val p = planOf("q38_zarr_aligned")
+    checkContract("q38", p,
+      forbidden = Seq("SortMergeJoin", "BroadcastHashJoin"), maxHashExchanges = 0)
+    // the lockstep readers hand Spark batches: ColumnarToRow sits on the scan
+    val overScan = allNodes(p).collect { case c: ColumnarToRowExec => c.child }.exists {
+      case i: InputAdapter => i.child.isInstanceOf[BatchScanExec]
+      case other => other.isInstanceOf[BatchScanExec]
+    }
+    assert(overScan, p.toString)
   }
 
   test("x51_repetition: per-row fold, corpus never shuffles") {

@@ -159,6 +159,18 @@ class ZarrSpec extends AnyFunSuite with SparkTester {
     // is ever read; force a value read to hit the codec
     val e = intercept[org.apache.spark.SparkException](df.agg(sum("value")).collect())
     assert(e.getCause.getMessage.contains("blosc") || e.getMessage.contains("blosc"))
+    // a truncated zstd chunk fails with its array and chunk key named
+    val zroot = mkStore(Some("zstd"))
+    val chunk = java.nio.file.Paths.get(zroot, "temperature", "1.0.1")
+    val stored = Files.readAllBytes(chunk)
+    Files.write(chunk, java.util.Arrays.copyOf(stored, stored.length / 2))
+    val ze = intercept[org.apache.spark.SparkException] {
+      new ZarrDataReader(spark, zroot).readArray("temperature").agg(sum("value")).collect()
+    }
+    val chain = Iterator.iterate[Throwable](ze)(_.getCause).takeWhile(_ != null).toSeq
+    val corrupt = chain.collectFirst { case c: ZarrCorruptChunkException => c }
+    assert(corrupt.exists(_.chunkKey == "1.0.1"), chain.map(_.getMessage).mkString(" | "))
+    assert(corrupt.get.getMessage.contains("temperature") && corrupt.get.getCause != null)
   }
 
   test("pure-SQL surface: CREATE TABLE ... USING zarr") {
@@ -463,6 +475,12 @@ class ZarrSpec extends AnyFunSuite with SparkTester {
       dir, "flag", Vector(12, 10), Vector(4, 5), "|b1", f => if (f % 3 == 0) 1.0 else 0.0,
       dims = Some(Vector("t", "x"))
     )
+    // a structured (V) array on the same grid: the one aligned read that
+    // stays on the row path
+    ZarrStoreWriter.writeStructArray(
+      dir, "rec", Vector(12, 10), Vector(4, 5), """[["id", "<i4"], ["w", "<f8"]]""",
+      f => Seq[Any](f.toInt, f * 0.25), dims = Some(Vector("t", "x")), compressor = Some("zlib")
+    )
     ZarrStoreWriter.writeCoord(dir, "t", Coord.Ints(Array.tabulate(12)(identity)))
     ZarrStoreWriter.writeCoord(dir, "x", Coord.Ints(Array.tabulate(10)(identity)))
     ZarrStoreWriter.consolidate(dir)
@@ -491,6 +509,18 @@ class ZarrSpec extends AnyFunSuite with SparkTester {
     assert(two.filter(col("flag")).count() == 40) // 120 cells, every 3rd true
     // dims-only projection still answers without any value reader
     assert(aligned.select("t").distinct().count() == 12)
+    assert(alignedScan(aligned).supportsColumnar)
+    // a structured array forces the row lockstep for the whole read
+    val withRec = r.readAligned(Seq("rec", "temp"))
+    val recScan = alignedScan(withRec)
+    assert(!recScan.supportsColumnar)
+    assert(recScan.inputPartitions.forall(p => !recScan.readerFactory.supportColumnarReads(p)))
+    val recJoined = r.readArray("rec").withColumnRenamed("value", "rec")
+      .join(r.readArray("temp").withColumnRenamed("value", "temp"), Seq("t", "x"))
+      .select("t", "x", "rec", "temp")
+    val recRows = withRec.orderBy("t", "x").collect().toSeq
+    assert(recRows.length == 120)
+    assert(recRows == recJoined.orderBy("t", "x").collect().toSeq)
     // mismatched grids reject loudly
     ZarrStoreWriter.writeArray(
       dir, "bad", Vector(12, 10), Vector(6, 5), "<f8", f => f.toDouble,
@@ -504,6 +534,56 @@ class ZarrSpec extends AnyFunSuite with SparkTester {
       sb.toString
     }
     assert(msgOf(e).contains("identical dims/shape/chunks"), msgOf(e))
+  }
+
+  /** The (pre-AQE) scan node of a single-scan frame. */
+  private def alignedScan(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.sparkPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.get
+
+  test("aligned columnar lockstep holds across batch and partition boundaries") {
+    val root = Files.createTempDirectory("zarralignedbig").toString
+    val dir = ZarrStoreWriter.writeGroup(root)
+    // (12, 40, 64) cells in (4, 20, 32) chunks: 2560 cells per chunk, 12 chunks
+    val shape = Vector(12, 40, 64)
+    val chunks = Vector(4, 20, 32)
+    val dims = Some(Vector("t", "y", "x"))
+    ZarrStoreWriter.writeArray(
+      dir, "a", shape, chunks, "<f8", f => ((f * 37) % 1000).toDouble * 0.5,
+      dims = dims, compressor = Some("zlib")
+    )
+    ZarrStoreWriter.writeArray(
+      dir, "b", shape, chunks, "<f4", f => ((f * 13) % 500).toDouble,
+      dims = dims, compressor = Some("zstd"), fillValue = Some(-3.5)
+    )
+    ZarrStoreWriter.writeArray(dir, "c", shape, chunks, "<i4", f => (f % 97).toDouble, dims = dims)
+    ZarrStoreWriter.writeCoord(dir, "t", Coord.Ints(Array.tabulate(12)(identity)))
+    ZarrStoreWriter.consolidate(dir)
+    Files.delete(java.nio.file.Paths.get(root, "b", "1.0.1")) // read as fill -3.5
+    val r = new ZarrDataReader(spark, root, chunkTargetCells = 6000)
+    // a contiguous inner range (bulk run fills: 2 chunks of 4400 cells per
+    // partition) and an every-other-index list (per-cell fills: 4 chunks of
+    // 1280 cells per partition)
+    val sels = Seq(
+      DimSel.Range(5, 60) -> 6,
+      DimSel.Indices(Vector.tabulate(32)(_ * 2)) -> 3
+    )
+    sels.foreach { case (xSel, nParts) =>
+      val sel = Map("x" -> xSel)
+      val aligned = r.readAligned(Seq("a", "b", "c"), sel)
+      assert(alignedScan(aligned).supportsColumnar, xSel)
+      val perPart = aligned.rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
+      assert(perPart.length == nParts && perPart.forall(_ > 4096), s"$xSel: $perPart")
+      val joined = r.readArray("a", sel).withColumnRenamed("value", "a")
+        .join(r.readArray("b", sel).withColumnRenamed("value", "b"), Seq("t", "y", "x"))
+        .join(r.readArray("c", sel).withColumnRenamed("value", "c"), Seq("t", "y", "x"))
+        .select("t", "y", "x", "a", "b", "c")
+      val got = aligned.orderBy("t", "y", "x").collect().toSeq
+      assert(got.length == perPart.sum)
+      assert(got == joined.orderBy("t", "y", "x").collect().toSeq, xSel)
+      assert(got.count(_.getFloat(4) == -3.5f) > 0, xSel)
+    }
   }
 
   test("structured (compound) dtype: packed records read as struct; fill + null-fill chunks") {
