@@ -5,8 +5,10 @@ import graft.sources.Coord
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import graft.functions.{AxisTable, BoundedCollectSet}
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
 
 /** APPEND writes along the leading dimension of an EXISTING array —
@@ -34,11 +36,17 @@ import org.apache.spark.sql.functions._
   *  - the current extent sits on a chunk boundary (size batches to the
   *    chunk; partial-chunk read-modify-write is exactly the mutable-object
   *    pattern zarr stores avoid);
-  *  - non-append dims must carry exactly the store's existing axis values;
-  *    eager axes broadcast as ordinal join maps, DEFERRED ones (10M+
-  *    values) become distributed (value, ordinal) maps decoded from the
-  *    coordinate chunks by executors and shuffle-joined — no axis ever
-  *    rides the driver; the APPEND dim itself may also be deferred: the
+  *  - non-append dims must carry exactly the store's existing axis values
+  *    (in any axis order — descending latitude too; an axis holding one
+  *    value twice is refused). Eager axes map rows to ordinals through an
+  *    [[graft.functions.AxisOrdinal]] lookup (Spark's equi-join semantics:
+  *    `-0.0` matches `0.0`, NaN matches NaN), so one pre-write aggregate
+  *    counts the rows no axis maps while it gathers the new append-dim
+  *    values; DEFERRED axes (10M+ values) become distributed (value,
+  *    ordinal) maps decoded from the coordinate chunks by executors and
+  *    shuffle-joined — no such axis ever rides the driver — and only then
+  *    is the joined frame persisted and counted against the input; the
+  *    APPEND dim itself may also be deferred: the
   *    strictly-after check boundary-decodes one coordinate chunk and the
   *    commit appends tail chunks to the coordinate array in place —
   *    O(batch + 1 chunk), never the whole axis;
@@ -50,7 +58,15 @@ import org.apache.spark.sql.functions._
   *    pattern). Metadata commit order is stats, then shape, then the batch
   *    id — the id is recorded only once the slab is VISIBLE, so a crash in
   *    any window makes the replay either a clean rewrite or a loud
-  *    strictly-after violation, never a silently dropped batch.
+  *    strictly-after violation, never a silently dropped batch;
+  *  - a write job that FAILS (an IO error, or an input that is not
+  *    deterministic: a row whose ordinal turns null between the pre-write
+  *    aggregate and the write, or a categorize label outside the set, fails
+  *    its task) commits no metadata, so any objects it left lie only past
+  *    the committed extent, invisible to readers. A later append of the
+  *    same slab overwrites every object it writes; an object it does not
+  *    write (a chunk the failed batch had cells in and the new one has
+  *    none) stays and becomes readable once the extent grows over it.
   *
   * Chunk statistics survive the append in every layout: flat docs merge
   * the new chunks' bounds under the grown grid; a grid growing past the
@@ -178,16 +194,66 @@ object ZarrAppend {
     // (1 chunk read) and the commit appends tail chunks to the coordinate
     // array instead of rewriting it. NON-append dims: executors decode the
     // coordinate chunks into a distributed (value, ordinal) map and the
-    // row->index join shuffles instead of broadcasting — no axis ever
-    // materializes on the driver.
+    // row->index join shuffles — no deferred axis ever materializes on the
+    // driver.
     val deferredThreshold =
       opts.get("coord.deferred.threshold").map(_.toInt).getOrElse(10000000)
     val coords: Vector[Coord] =
       meta.dims.zipWithIndex.map { case (d, i) => store.coordFor(d, meta.shape(i), deferredThreshold) }
 
+    // ---- row -> global index mapping. Eager NON-append axes become
+    // AxisOrdinal lookup tables (one generated-code binary search per row,
+    // null off the axis — no join, no broadcast); DEFERRED ones stay
+    // distributed (value, ordinal) maps decoded by executors and
+    // shuffle-joined. The append dim's table is built below from the
+    // batch's own new values.
+    val rank = meta.rank
+    var mapped = df
+    (1 until rank).foreach { di =>
+      val d = meta.dims(di)
+      val dt = df.schema(d).dataType
+      coords(di) match {
+        case _: Coord.Deferred =>
+          val idxDf = deferredOrdinalMap(spark, store, d, meta.shape(di), dt, di, storageOptions)
+          mapped = mapped.join(idxDf, mapped(d) === idxDf("__v")).drop("__v")
+        case c =>
+          require(c.length == meta.shape(di), s"axis '$d' length ${c.length} != shape ${meta.shape(di)}")
+          require(
+            AxisTable.sameDomain(dt, c.dataType),
+            s"zarr append: dimension column '$d' is ${dt.simpleString} but the store's axis is ${c.dataType.simpleString}"
+          )
+          val table = AxisTable(dt, Array.tabulate[Any](c.length)(c(_)), s"zarr append: axis '$d'")
+          mapped = mapped.withColumn(s"__i$di", ZarrSink.ordinalColumn(d, table, 0L))
+      }
+    }
+    // a deferred join DROPS rows whose value the axis lacks instead of
+    // nulling their ordinal: persist the joined rows so the rows counted
+    // are the rows written, and compare with the input's count
+    val joined = (1 until rank).exists(di => coords(di).isInstanceOf[Coord.Deferred])
+    if (joined) mapped = mapped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+    // ---- ONE pre-write aggregate: the batch's new append-dim values
+    // (bounded at 1e6), the rows no axis maps (a null append-dim value or a
+    // null ordinal on a non-append dim), the mapped row count when a
+    // deferred join may have dropped rows, and for categorize-filtered
+    // strings the greatest value outside the declared labels
+    val offAxis = (col(appendDim).isNull +: (1 until rank).map(di => col(s"__i$di").isNull)).reduce(_ || _)
+    val labels = strCategorize.map(ZarrFilters.categorizeLabels)
+    val aggCols = Seq(
+      GraftBridge.column(
+        BoundedCollectSet(GraftBridge.expression(col(appendDim)), 1000000, failOnOverflow = false)
+          .toAggregateExpression()
+      ),
+      count(when(offAxis, 1))
+    ) ++ (if (joined) Seq(count(lit(1))) else Nil) ++ labels.map { ls =>
+      val v = col("value")
+      max(when(v.isNotNull && v =!= "" && !v.isin(ls.toSeq: _*), v))
+    }
+    val agg = mapped.agg(aggCols.head, aggCols.tail: _*).head()
+
     // ---- new append-dim values: distinct, sorted, strictly after the axis
-    val newValsRaw = df.select(col(appendDim)).distinct().limit(1000001).collect().map(_.get(0))
-    require(newValsRaw.length <= 1000000, "zarr append: > 1e6 new append-dim values in one batch")
+    require(!agg.isNullAt(0), "zarr append: > 1e6 new append-dim values in one batch")
+    val newValsRaw = agg.getSeq[Any](0).toArray
     require(newValsRaw.nonEmpty, "zarr append: empty batch")
     val ord = ZarrSink.externalOrdering(df.schema(appendDim).dataType)
     val newVals = newValsRaw.sorted(ord)
@@ -231,56 +297,31 @@ object ZarrAppend {
     }
     val k = newVals.length
     val newExtent = extent + k
+    // non-append dim values the store's axes lack would be nulled (eager
+    // tables) or dropped (deferred joins): reject before any byte lands
+    val unmapped = agg.getLong(1) + (if (joined) df.count() - agg.getLong(2) else 0L)
+    require(
+      unmapped == 0L,
+      s"zarr append: $unmapped rows carry dimension values the store's axes do not have"
+    )
+    val indexed = mapped.withColumn(
+      "__i0",
+      ZarrSink.ordinalColumn(
+        appendDim,
+        AxisTable(
+          df.schema(appendDim).dataType,
+          newVals.map(CatalystTypeConverters.convertToCatalyst),
+          s"zarr append: axis '$appendDim'"
+        ),
+        extent.toLong
+      )
+    )
 
-    // ---- row -> global index mapping: broadcast ordinal maps
-    val rank = meta.rank
     val newShape = meta.shape.updated(0, newExtent)
     val chunks = meta.chunks
     val nChunksVec = newShape.zip(chunks).map { case (s, c) => (s + c - 1) / c }
     val gridStrides = IndexMath.strides(nChunksVec)
     val chunkStrides = IndexMath.strides(chunks)
-    var indexed = df
-    meta.dims.zipWithIndex.foreach { case (d, di) =>
-      val dt = df.schema(d).dataType
-      coords(di) match {
-        case _: Coord.Deferred if di > 0 =>
-          val idxDf = deferredOrdinalMap(spark, store, d, meta.shape(di), dt, di, storageOptions)
-          indexed = indexed.join(idxDf, indexed(d) === idxDf("__v")).drop("__v")
-        case _ =>
-          val pairs: Seq[Row] =
-            if (di == 0) newVals.zipWithIndex.map { case (v, i) => Row(v, (extent + i).toLong) }.toSeq
-            else {
-              val c = coords(di)
-              require(
-                c.length == meta.shape(di),
-                s"axis '$d' length ${c.length} != shape ${meta.shape(di)}"
-              )
-              (0 until c.length).map(i => Row(externalOf(c, c(i)), i.toLong))
-            }
-          val idxSchema = org.apache.spark.sql.types.StructType(
-            Seq(
-              org.apache.spark.sql.types.StructField("__v", dt, nullable = false),
-              org.apache.spark.sql.types
-                .StructField(s"__i$di", org.apache.spark.sql.types.LongType, nullable = false)
-            )
-          )
-          import scala.jdk.CollectionConverters._
-          val idxDf = spark.createDataFrame(pairs.asJava, idxSchema)
-          indexed = indexed.join(broadcast(idxDf), indexed(d) === idxDf("__v")).drop("__v")
-      }
-    }
-    // non-append dim values not present in the store's axes would silently
-    // drop in the join — count and reject instead. Persist the mapped rows
-    // so the rows VALIDATED here are the rows WRITTEN below even for a
-    // nondeterministic source, and the input is scanned once, not thrice.
-    indexed = indexed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val inputRows = df.count()
-    val mappedRows = indexed.count()
-    require(
-      mappedRows == inputRows,
-      s"zarr append: ${inputRows - mappedRows} rows carry dimension values the store's axes do not have"
-    )
-
     val chunkExpr = (0 until rank)
       .map(di => expr(s"__i$di div ${chunks(di)}") * lit(gridStrides(di)))
       .reduce(_ + _)
@@ -290,30 +331,21 @@ object ZarrAppend {
     val elems = chunks.map(_.toLong).product.toInt
     val fill = meta.fillValue.getOrElse(0.0)
     val fillStr = meta.fillValueStr.getOrElse("")
-    // categorize in-vocabulary precheck: every appended value (and the fill
+    // categorize in-vocabulary check: every appended value (and the fill
     // landing in padded cells) must be a declared label or '' — an unknown
-    // label would encode 0 and decode '', i.e. silent data loss. Scans the
-    // PERSISTED `indexed` frame, not `df`: the persist exists so the rows
-    // validated are the rows written even for a nondeterministic source,
-    // and this check must sit inside that guarantee.
+    // label would encode 0 and decode '', i.e. silent data loss. The write
+    // tasks encode strictly too, so a nondeterministic input that turns up
+    // a new label after this check fails its task instead of losing it.
     strCategorize.foreach { cfg =>
-      val labels = ZarrFilters.categorizeLabels(cfg)
       require(
-        fillStr.isEmpty || labels.contains(fillStr),
+        fillStr.isEmpty || labels.get.contains(fillStr),
         s"zarr append: string fill value '$fillStr' is not in the categorize labels — " +
           "padded cells would decode as ''"
       )
-      val bad = indexed
-        .filter(
-          col("value").isNotNull && col("value") =!= "" &&
-            !col("value").isin(labels.toSeq: _*)
-        )
-        .select(col("value"))
-        .limit(1)
-        .collect()
+      val bad = agg.getAs[String](agg.length - 1)
       require(
-        bad.isEmpty,
-        s"zarr append: value '${bad.headOption.map(_.getString(0)).getOrElse("")}' is not in the " +
+        bad == null,
+        s"zarr append: value '$bad' is not in the " +
           "categorize labels — unknown labels encode 0 and decode '' (silent loss); " +
           "extend the store's label set first"
       )
@@ -415,7 +447,7 @@ object ZarrAppend {
           // v2 fold is skipped for it
           val raw =
             if (isStr) strCatSer match {
-              case Some(cfg) => ZarrFilters.categorizeEncodeCells(cfg, cells)
+              case Some(cfg) => ZarrFilters.categorizeEncodeCells(cfg, cells, strict = true)
               case None => ZarrStoreWriter.vlenEncode(cells)
             }
             else buf.array()
@@ -439,7 +471,7 @@ object ZarrAppend {
         }
         while (rows.hasNext) {
           val r = rows.next()
-          val c = r.getLong(0)
+          val c = ZarrSink.writeOrdinal(r, "zarr append")
           if (c != current) {
             flush()
             current = c
@@ -474,7 +506,7 @@ object ZarrAppend {
         )
       case None => appendChunked()
     }
-    indexed.unpersist(blocking = false)
+    if (joined) mapped.unpersist(blocking = false)
 
     // ---- metadata commit: coord array, then attrs (stats, WITHOUT the
     // batch id), then SHAPE, then attrs again WITH the batch id, then the
@@ -837,7 +869,7 @@ object ZarrAppend {
         }
         while (rows.hasNext) {
           val r = rows.next()
-          val s = r.getLong(0)
+          val s = ZarrSink.writeOrdinal(r, "zarr append")
           val c = r.getLong(1)
           if (s != curShard) {
             flushShard()

@@ -50,13 +50,27 @@ object ZarrCodec {
       val bos = new ByteArrayOutputStream()
       val g = new GZIPOutputStream(bos)
       g.write(bytes); g.close(); bos.toByteArray
-    case Some("zstd") => com.github.luben.zstd.Zstd.compress(bytes, 3)
+    case Some("zstd") => zstd(bytes, 0, bytes.length, 3)
     case Some(b) if b == "blosc" || b.startsWith("blosc:") =>
       val parts = b.split(":")
       val cname = if (parts.length > 1) parts(1) else "lz4"
       Blosc.compressMode(cname, bytes, typesize, shuffleModeOf(parts))
     case Some(other) =>
       throw new UnsupportedOperationException(s"zarr codec '$other' not supported for write")
+  }
+
+  /** One zstd frame of `src[off, off + len)` carrying its content size and
+    * a content checksum (low 32 bits of xxhash64, verified by every zstd
+    * decoder), so a damaged chunk fails to decode instead of decoding to
+    * wrong values; frames written without one still read. */
+  private[zarr] def zstd(src: Array[Byte], off: Int, len: Int, level: Int): Array[Byte] = {
+    val ctx = new com.github.luben.zstd.ZstdCompressCtx()
+    try {
+      ctx.setLevel(level).setChecksum(true).setContentSize(true)
+      val out = new Array[Byte](com.github.luben.zstd.Zstd.compressBound(len.toLong).toInt)
+      val n = ctx.compressByteArray(out, 0, out.length, src, off, len)
+      java.util.Arrays.copyOf(out, n)
+    } finally ctx.close()
   }
 
   /** numcodecs shuffle encoding for a "blosc[:cname[:mode]]" spec string:
@@ -132,7 +146,7 @@ object ZarrCodecV3 {
     case "zstd" =>
       val j = JsonMethods.parse(cfg)
       val level = (j \ "configuration" \ "level").extractOpt[Int].getOrElse(3)
-      com.github.luben.zstd.Zstd.compress(bytes, level)
+      ZarrCodec.zstd(bytes, 0, bytes.length, level)
     case "blosc" =>
       val j = JsonMethods.parse(cfg)
       val cname = (j \ "configuration" \ "cname").extractOpt[String].getOrElse("lz4")
@@ -367,7 +381,7 @@ object Blosc {
         val d = new DeflaterOutputStream(bos, new Deflater(5))
         d.write(src, off, len); d.close(); bos.toByteArray
       case 4 =>
-        com.github.luben.zstd.Zstd.compress(java.util.Arrays.copyOfRange(src, off, off + len), 3)
+        ZarrCodec.zstd(src, off, len, 3)
     }
 
     val payload = new ByteArrayOutputStream()

@@ -249,8 +249,10 @@ object ZarrFilters {
 
   /** Categorize encode over materialized cells (fixture-writer seam; the
     * string analog of [[encode]]'s byte contract). Later duplicate labels
-    * win, mirroring numcodecs' sequential `enc[arr == l] = i + 1` loop. */
-  def categorizeEncodeCells(cfg: String, cells: Array[String]): Array[Byte] = {
+    * win, mirroring numcodecs' sequential `enc[arr == l] = i + 1` loop.
+    * Unknown values encode 0 (numcodecs) unless `strict`, where a non-empty
+    * one throws: appends must never turn a label into ''. */
+  def categorizeEncodeCells(cfg: String, cells: Array[String], strict: Boolean = false): Array[Byte] = {
     val (labels, astype) = categorizeCfg(cfg)
     val codeOf = labels.zipWithIndex.map { case (l, i) => l -> (i + 1L) }.toMap
     val out = ByteBuffer
@@ -258,7 +260,12 @@ object ZarrFilters {
       .order(if (astype.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
     var i = 0
     while (i < cells.length) {
-      ZDtype.putLong(astype, out, i, codeOf.getOrElse(cells(i), 0L))
+      val code = codeOf.getOrElse(cells(i), 0L)
+      if (strict && code == 0L && cells(i) != null && cells(i).nonEmpty)
+        throw new IllegalArgumentException(
+          s"categorize: value '${cells(i)}' is not in the declared labels — it would encode 0 and decode ''"
+        )
+      ZDtype.putLong(astype, out, i, code)
       i += 1
     }
     out.array()

@@ -5,7 +5,7 @@ import graft.model.IndexMath
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,12 +18,17 @@ import org.apache.spark.sql.types._
   *
   * Scale shape (the part that must survive 100 TB):
   *  - coordinate values are the ONLY driver-side data (sorted distinct per
-  *    dim — same bound as the read path's coordFor); cell data never
-  *    touches the driver
-  *  - each row's target chunk ordinal and in-chunk offset are COLUMN
-  *    ARITHMETIC (codegen), so the expensive part of the write plan is one
-  *    hash repartition clustered by chunk ordinal + an in-partition sort —
-  *    after that every chunk's cells are contiguous in exactly one task
+  *    dim, gathered for every dim by ONE bounded aggregate — same bound as
+  *    the read path's coordFor); cell data never touches the driver
+  *  - each row's per-dim ordinal is one generated-code binary search over
+  *    that sorted axis ([[graft.functions.AxisOrdinal]]) — no join, no
+  *    broadcast — and its target chunk ordinal and in-chunk offset are
+  *    COLUMN ARITHMETIC on those ordinals, so the expensive part of the
+  *    write plan is one hash repartition clustered by chunk ordinal + an
+  *    in-partition sort — after that every chunk's cells are contiguous in
+  *    exactly one task. A row whose ordinal is null (its value left the
+  *    axis between the gather and the write: a nondeterministic input)
+  *    fails its write task rather than being dropped
   *  - tasks stream: one dense chunk buffer at a time (fill, set cells,
   *    compress, write via the Hadoop FileSystem), O(1 chunk) memory
   *  - absent cells read back as fill_value; chunks with no rows are never
@@ -353,6 +358,24 @@ object ZarrSink {
     }
   }
 
+  /** `__i<di>` column: the row's ordinal on a driver-side axis plus
+    * `offset`, null when the value is null or off the axis. */
+  private[zarr] def ordinalColumn(dim: String, table: graft.functions.AxisTable, offset: Long): Column =
+    GraftBridge.column(graft.functions.AxisOrdinal(GraftBridge.expression(col(dim)), table, offset))
+
+  /** Column 0 of a prepared write row: its chunk (or shard) ordinal. Null
+    * means a dim value was off the axis when the write job read the row
+    * although the pre-write pass saw it on (a nondeterministic input): the
+    * task fails rather than drop or misplace the cell. */
+  private[zarr] def writeOrdinal(r: Row, what: String): Long = {
+    if (r.isNullAt(0))
+      throw new IllegalStateException(
+        s"$what: a row's dimension value is not on the axis the write was planned with " +
+          "(the input changed between the pre-write pass and the write)"
+      )
+    r.getLong(0)
+  }
+
   /** External timestamp value → epoch micros (both java.sql and java.time
     * spellings, depending on spark.sql.datetime.java8API.enabled). */
   private[zarr] def micros(v: Any): Long = v match {
@@ -492,8 +515,8 @@ object ZarrSink {
     }
 
     // ---- coordinates: sorted distinct values per dim (small, driver-side
-    // like the read path's coordFor); each becomes a broadcast (value ->
-    // ordinal) frame so indexing stays inside codegen.
+    // like the read path's coordFor); each becomes an AxisOrdinal lookup
+    // table shipped in the plan, so indexing stays inside codegen.
     //
     // ONE aggregation job gathers every dim's distinct set AND null count
     // (one input scan with map-side partial merge — not D `distinct()`
@@ -521,12 +544,13 @@ object ZarrSink {
     }
     val aggRow = df.agg(aggCols.head, aggCols.tail: _*).head()
     // Per-dim axis plan. Common case (Left): the bounded one-job gather
-    // returned the axis driver-side — sort locally, broadcast the ordinal
-    // map. Long axis (Right, cardinality past max_coord_values): the values
-    // must NEVER sit on the driver or in a broadcast — distinct + total
-    // sort + zipWithIndex assigns ordinals distributed, the ordinal join
-    // becomes a shuffle join, and the coordinate array is written chunk-by-
-    // chunk from executors. Same store either way.
+    // returned the axis driver-side — sort locally, look ordinals up in an
+    // AxisOrdinal table. Long axis (Right, cardinality past
+    // max_coord_values): the values must NEVER sit on the driver or in the
+    // plan — distinct + total sort + zipWithIndex assigns ordinals
+    // distributed, the ordinal join becomes a shuffle join, and the
+    // coordinate array is written chunk-by-chunk from executors. Same store
+    // either way.
     val axes: Vector[(String, DataType, Either[Array[Any], (org.apache.spark.rdd.RDD[(Any, Long)], Int)])] =
       dims.zipWithIndex.map { case (d, di) =>
         val dt = df.schema(d).dataType
@@ -586,19 +610,20 @@ object ZarrSink {
 
     var indexed = df
     axes.zipWithIndex.foreach { case ((d, dt, plan), di) =>
-      val idxSchema = StructType(
-        Seq(StructField("__v", dt, nullable = false), StructField(s"__i$di", LongType, nullable = false))
-      )
       plan match {
         case Left(vals) =>
-          import scala.jdk.CollectionConverters._
-          val rows: java.util.List[Row] =
-            vals.zipWithIndex.map { case (v, i) => Row(v, i.toLong) }.toList.asJava
-          val idxDf = spark.createDataFrame(rows, idxSchema)
-          indexed = indexed.join(broadcast(idxDf), indexed(d) === idxDf("__v")).drop("__v")
+          val table = graft.functions.AxisTable(
+            dt,
+            vals.map(org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst),
+            s"zarr sink: axis '$d'"
+          )
+          indexed = indexed.withColumn(s"__i$di", ordinalColumn(d, table, 0L))
         case Right((sorted, _)) =>
           // long axis: the ordinal map stays distributed — shuffle join on
-          // the dim value, never a broadcast near the 10M-row ceiling
+          // the dim value, never a driver-side table past the bound
+          val idxSchema = StructType(
+            Seq(StructField("__v", dt, nullable = false), StructField(s"__i$di", LongType, nullable = false))
+          )
           val idxDf = spark.createDataFrame(sorted.map { case (v, i) => Row(v, i) }, idxSchema)
           indexed = indexed.join(idxDf, indexed(d) === idxDf("__v")).drop("__v")
       }
@@ -795,7 +820,7 @@ object ZarrSink {
             }
             while (rows.hasNext) {
               val r = rows.next()
-              val c = r.getLong(0)
+              val c = writeOrdinal(r, "zarr sink")
               if (c != current) {
                 flush()
                 current = c
@@ -847,7 +872,7 @@ object ZarrSink {
             }
             while (rows.hasNext) {
               val r = rows.next()
-              val c = r.getLong(0)
+              val c = writeOrdinal(r, "zarr sink")
               if (c != current) {
                 flush()
                 current = c
@@ -950,7 +975,7 @@ object ZarrSink {
             }
             while (rows.hasNext) {
               val r = rows.next()
-              val s = r.getLong(0)
+              val s = writeOrdinal(r, "zarr sink")
               val c = r.getLong(1)
               if (s != curShard) {
                 flushShard()

@@ -958,4 +958,128 @@ class ZarrAppendSpec extends AnyFunSuite with SparkTester {
     assert(rows.size == 12)
     (8L until 12L).foreach(t => assert(rows(t) == math.rint(16.0 * t * 0.1) / 16.0, s"t=$t"))
   }
+
+  /** Chunk objects of array `v` (metadata and coordinate arrays excluded). */
+  private def chunkObjects(root: String): Set[String] = {
+    val dir = java.nio.file.Paths.get(root, "v")
+    import scala.jdk.CollectionConverters._
+    Files.walk(dir).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => dir.relativize(p).toString).filterNot(_.startsWith(".")).toSet
+  }
+
+  private def msgOf(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
+
+  /** (t, lat) store: 4 time steps on a descending latitude axis 90 -> -90
+    * through 0.0; `v(t, y) = t * 100 + y`. */
+  private def descendingStore(lats: Seq[Double]): String = {
+    val root = Files.createTempDirectory("zarrappdesc").toString
+    val dir = java.nio.file.Paths.get(root)
+    val ny = lats.length
+    ZarrStoreWriter.writeArray(dir, "v", Vector(4, ny), Vector(2, 3), "<f8", i => (i / ny) * 100.0 + i % ny,
+      dims = Some(Vector("t", "lat")))
+    ZarrStoreWriter.writeArray(dir, "t", Vector(4), Vector(4), "<i8", _.toDouble, dims = Some(Vector("t")))
+    ZarrStoreWriter.writeArray(dir, "lat", Vector(ny), Vector(ny), "<f8", i => lats(i.toInt), dims = Some(Vector("lat")))
+    root
+  }
+
+  private def latBatch(t0: Int, t1: Int, lats: Seq[Double]): DataFrame = {
+    import spark.implicits._
+    (for (t <- t0 until t1; (lat, y) <- lats.zipWithIndex) yield (t.toLong, lat, t * 100.0 + y)).toDF("t", "lat", "value")
+  }
+
+  test("append over a DESCENDING non-append axis lands every cell exactly; -0.0 finds 0.0") {
+    val lats = Seq(90.0, 45.0, 0.0, -45.0, -90.0)
+    val root = descendingStore(lats)
+    // the batch spells the equator -0.0: an equi-join matches it to 0.0
+    latBatch(4, 6, lats.map(l => if (l == 0.0) -0.0 else l)).write.format("zarr")
+      .option("path", root).option("array", "v").option("append.dim", "t")
+      .mode("append").save()
+    val rows = read(root).collect().map(r => (r.getLong(0), r.getDouble(1)) -> r.getDouble(2)).toMap
+    assert(rows.size == 30)
+    for (t <- 0 until 6; (lat, y) <- lats.zipWithIndex)
+      assert(rows((t.toLong, lat)) == t * 100.0 + y, s"cell (t=$t, lat=$lat)")
+  }
+
+  test("non-deferred axes: duplicate axis values, NULL and off-axis dims reject before any chunk lands") {
+    // an axis naming one value at two ordinals: the join multiplied rows
+    val dup = descendingStore(Seq(90.0, 45.0, 45.0, -90.0))
+    val before = chunkObjects(dup)
+    val e0 = intercept[IllegalArgumentException] {
+      latBatch(4, 6, Seq(90.0, 45.0, -90.0)).write.format("zarr")
+        .option("path", dup).option("array", "v").option("append.dim", "t").mode("append").save()
+    }
+    assert(e0.getMessage.contains("axis 'lat' has the value 45.0 at ordinals 1 and 2"), e0.getMessage)
+    assert(chunkObjects(dup) == before)
+    val lats = Seq(90.0, 45.0, 0.0, -45.0, -90.0)
+    val root = descendingStore(lats)
+    val chunks0 = chunkObjects(root)
+    val nullLat = latBatch(4, 6, lats).withColumn(
+      "lat", when(col("t") === 5 && col("lat") === 45.0, lit(null).cast("double")).otherwise(col("lat"))
+    )
+    val offLat = latBatch(4, 6, lats).withColumn("lat", when(col("lat") === 0.0, lit(1.0)).otherwise(col("lat")))
+    for ((bad, n) <- Seq(nullLat -> 1, offLat -> 2)) {
+      val e = intercept[IllegalArgumentException] {
+        bad.write.format("zarr").option("path", root).option("array", "v").option("append.dim", "t")
+          .mode("append").save()
+      }
+      assert(e.getMessage.contains(s"$n rows carry dimension values the store's axes do not have"), e.getMessage)
+      assert(chunkObjects(root) == chunks0, "a rejected append landed chunk objects")
+    }
+    assert(read(root).count() == 20)
+  }
+
+  test("a failed append job commits nothing; a later append overwrites the objects it left") {
+    val root = Files.createTempDirectory("zarrappfail").toString
+    writeBatch(root, 0, 8)
+    ZarrAppendSpec.calls.set(0L)
+    // 16 rows: deterministic through the pre-write aggregate, off the s
+    // axis in the write job — the input changed under the append
+    val flaky = udf { (s: Int) => if (ZarrAppendSpec.calls.incrementAndGet() > 16L) s + 10 else s }
+      .asNondeterministic()
+    val e = intercept[Exception] {
+      spark.range(8, 12).selectExpr("cast(id as int) as t")
+        .crossJoin(spark.range(0, 4).selectExpr("cast(id as int) as s0"))
+        .select(col("t"), flaky(col("s0")).as("s"), (col("t") * 4 + col("s0")).cast("long").as("value"))
+        .write.format("zarr").option("path", root).option("array", "v").option("append.dim", "t")
+        .mode("append").save()
+    }
+    assert(msgOf(e).contains("not on the axis the write was planned with"), msgOf(e))
+    val store = new ZarrStore(root, Map.empty, None, Some(false))
+    assert(store.arrayMeta("v").shape == Vector(8, 4) && store.arrayMeta("t").shape == Vector(8))
+    assert(read(root).count() == 32)
+    // whatever the failed tasks wrote lies past the committed extent: plant
+    // garbage there to stand for it; the next append must replace it
+    Files.write(java.nio.file.Paths.get(root, "v", "2.0"), Array.fill[Byte](40)(7))
+    writeBatch(root, 8, 12)
+    val rows = read(root).collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2))).toMap
+    assert(rows.size == 48)
+    for (t <- 0 until 12; s <- 0 until 4) assert(rows((t, s)) == t * 4L + s, s"cell ($t, $s)")
+  }
+
+  test("categorize append tasks reject a label outside the set instead of encoding 0") {
+    val root = Files.createTempDirectory("zarrappcatflaky").toString
+    val dir = java.nio.file.Paths.get(root)
+    ZarrStoreWriter.writeStringArray(
+      dir, "v", Vector(4), Vector(2), "|O", i => s"w$i",
+      dims = Some(Vector("t")),
+      filters = Seq("""{"id": "categorize", "labels": ["w0", "w1", "w2", "w3"], "astype": "|u1"}""")
+    )
+    ZarrStoreWriter.writeArray(dir, "t", Vector(4), Vector(2), "<i8", _.toDouble, dims = Some(Vector("t")))
+    ZarrAppendSpec.calls.set(0L)
+    // in the label set for the pre-write check (2 rows), outside it after
+    val flaky = udf { (s: String) => if (ZarrAppendSpec.calls.incrementAndGet() > 2L) s + "x" else s }
+      .asNondeterministic()
+    val e = intercept[Exception] {
+      spark.range(4, 6).select(col("id").as("t"), flaky(concat(lit("w"), (col("id") - 4).cast("string"))).as("value"))
+        .write.format("zarr").option("path", root).option("array", "v").option("append.dim", "t")
+        .mode("append").save()
+    }
+    assert(msgOf(e).contains("is not in the declared labels"), msgOf(e))
+    assert(read(root).count() == 4)
+  }
+}
+
+object ZarrAppendSpec {
+  val calls = new java.util.concurrent.atomic.AtomicLong(0L)
 }

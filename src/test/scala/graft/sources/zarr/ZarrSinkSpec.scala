@@ -5,7 +5,8 @@ import java.nio.file.Files
 import graft.SparkTester
 import graft.api.{ZarrDataReader, ZarrScan}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.{GraftBridge, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,25 +17,34 @@ import org.scalatest.funsuite.AnyFunSuite
   * the high-cardinality guard, and unsigned write targets. */
 class ZarrSinkSpec extends AnyFunSuite with SparkTester {
 
-  private def countJobs(body: => Unit): Int = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** What the body ran: its Spark job count and the physical plans of the
+    * SQL executions it started (initial and every adaptive re-plan). The
+    * bus is drained before and after, so nothing is missed and nothing
+    * earlier leaks in. */
+  private final case class Observed(jobs: Int, plans: Seq[String])
+
+  private def observe(body: => Unit): Observed = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = counter.incrementAndGet()
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+        case e: SparkListenerSQLExecutionStart => plans.add(e.physicalPlanDescription)
+        case e: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(e.physicalPlanDescription)
+        case _ => ()
+      }
     }
+    GraftBridge.drainListeners(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      // listener delivery is async: wait until the count is stable
-      var last = -1
-      var spins = 0
-      while (counter.get() != last && spins < 50) {
-        last = counter.get()
-        Thread.sleep(100)
-        spins += 1
-      }
+      GraftBridge.drainListeners(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
-    counter.get()
+    import scala.jdk.CollectionConverters._
+    Observed(jobs.get(), plans.asScala.toSeq)
   }
+
+  private def countJobs(body: => Unit): Int = observe(body).jobs
 
   test("sink coordinate collection is single-pass: job count does not grow with rank") {
     import spark.implicits._
@@ -694,4 +704,144 @@ class ZarrSinkSpec extends AnyFunSuite with SparkTester {
       .orderBy("i").collect()
     (0 until 8).foreach(i => assert(back2(i).getLong(1) == 1700000000L + i, s"i=$i"))
   }
+
+  /** `[time, lat, lon, value]` frame shaped like the benchmark's sink
+    * workload: `nt` time steps from `t0` on a 32 x 32 grid. */
+  private def gridFrame(t0: Int, nt: Int) = {
+    val per = 32L * 32L
+    spark
+      .range(t0 * per, (t0 + nt) * per)
+      .select(
+        (col("id") / per).cast("int").as("time"),
+        ((col("id") / 32).cast("long") % 32 * 0.25 - 90.0).as("lat"),
+        (col("id") % 32 * 0.25 - 180.0).as("lon"),
+        (pmod(xxhash64(col("id")), lit(1000L)) - 500).cast("float").as("value")
+      )
+  }
+
+  test("job budget: sink write and sharded v3 append run pinned job counts and broadcast nothing") {
+    val base = Files.createTempDirectory("zarrsinkbudget").toString
+    def write(dir: String): Unit =
+      gridFrame(0, 16).write.format("zarr")
+        .option("path", dir).option("array", "tas")
+        .option("zarr_format", "3").option("chunks", "4,16,16").option("shards", "8,32,32")
+        .option("compressor", "zstd").option("checksum", "true")
+        .mode("overwrite").save()
+    def append(dir: String): Unit =
+      gridFrame(16, 8).write.format("zarr")
+        .option("path", dir).option("array", "tas").option("append.dim", "time")
+        .mode("append").save()
+    write(s"$base/warm"); append(s"$base/warm") // first-use class loading, codegen caches
+    val w = observe(write(s"$base/s"))
+    val a = observe(append(s"$base/s"))
+    // each is one aggregate (the sink's coordinate gather; the append's new
+    // values and unmapped-row count) and one shuffled write, and under AQE
+    // each of those runs its map stage and its result as separate jobs
+    assert(w.jobs == 4, s"sink write ran ${w.jobs} jobs")
+    assert(a.jobs == 4, s"sharded append ran ${a.jobs} jobs")
+    for ((what, o) <- Seq("write" -> w, "append" -> a)) {
+      assert(o.plans.nonEmpty, s"$what started no SQL execution")
+      o.plans.foreach(p => assert(!p.contains("BroadcastExchange"), s"$what plan broadcasts:\n$p"))
+    }
+    val back = new ZarrDataReader(spark, s"$base/s").readArray("tas")
+    val want = gridFrame(0, 24)
+    assert(back.count() == 24L * 32 * 32)
+    assert(back.exceptAll(want).isEmpty && want.exceptAll(back).isEmpty)
+  }
+
+  test("sink writes identical objects at any shuffle parallelism, AQE on or off (v2, v3 sharded)") {
+    val base = Files.createTempDirectory("zarrsinkpar").toString
+    // sparse: every 7th cell absent, so chunks hold fill cells too
+    val df = gridFrame(0, 12).filter(pmod(xxhash64(col("time"), col("lat"), col("lon")), lit(7L)) =!= 0)
+    val layouts = Seq(
+      "v2" -> Map("chunks" -> "4,16,8", "compressor" -> "zstd"),
+      "v3-sharded" -> Map(
+        "zarr_format" -> "3", "chunks" -> "4,16,8", "shards" -> "8,32,16",
+        "compressor" -> "zstd", "checksum" -> "true"
+      )
+    )
+    def objects(root: String): Map[String, Seq[Byte]] = {
+      val r = java.nio.file.Paths.get(root)
+      import scala.jdk.CollectionConverters._
+      Files.walk(r).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => r.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    }
+    for ((layout, opts) <- layouts) {
+      val stores = for (parts <- Seq(1, 7); aqe <- Seq("true", "false")) yield {
+        val dir = s"$base/$layout-$parts-$aqe"
+        val prior = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled").map(k => k -> spark.conf.get(k))
+        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        try df.write.format("zarr").option("path", dir).option("array", "tas").options(opts).mode("overwrite").save()
+        finally prior.foreach { case (k, v) => spark.conf.set(k, v) }
+        s"$parts/$aqe" -> objects(dir)
+      }
+      val (refName, ref) = stores.head
+      assert(ref.keys.exists(_.startsWith("tas/")) && ref.size > 8, s"$layout: ${ref.keys}")
+      stores.tail.foreach { case (name, got) =>
+        assert(got.keySet == ref.keySet, s"$layout $name vs $refName keys")
+        got.foreach { case (k, bytes) => assert(bytes == ref(k), s"$layout $name vs $refName: $k differs") }
+      }
+    }
+  }
+
+  test("zstd chunks carry a content checksum: a flipped byte fails with its key, old frames still read") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("zarrsinkzstd").toString
+    (0 until 64).map(i => (i / 8, i % 8, i * 1.5)).toDF("r", "c", "value")
+      .write.format("zarr").option("path", base).option("array", "v")
+      .option("chunks", "4,8").option("compressor", "zstd").mode("overwrite").save()
+    val meta = new ZarrStore(base, Map.empty, None, None).arrayMeta("v")
+    val dir = java.nio.file.Paths.get(base, "v")
+    val key = dir.resolve("1.0")
+    val good = Files.readAllBytes(key)
+    val raw = ZarrChunkIO.readChunk(dir.toString, meta, Seq(1, 0)).get.raw.clone()
+    // frame header descriptor bit 2 = content checksum flag
+    assert((good(4) & 0x04) != 0, "zstd frame written without a content checksum")
+    val decoded = (4 until good.length).flatMap { pos =>
+      val bad = good.clone()
+      bad(pos) = (bad(pos) ^ 0x10).toByte
+      Files.write(key, bad)
+      try {
+        val got = ZarrChunkIO.readChunk(dir.toString, meta, Seq(1, 0)).get.raw.toSeq
+        Some((pos, got == raw.toSeq))
+      } catch {
+        case e: ZarrCorruptChunkException =>
+          assert(e.chunkKey == "1.0" && e.getMessage.contains("'1.0'"), s"byte $pos: ${e.getMessage}")
+          None
+      }
+    }
+    // the one flip that reads is bit 4 of the frame header descriptor,
+    // which the format leaves unused: it decodes to the right bytes
+    assert(decoded == Seq((4, true)), s"flips that decoded (byte, exact): $decoded")
+    // a frame written without a checksum (older stores, other writers) reads
+    Files.write(key, com.github.luben.zstd.Zstd.compress(raw, 3))
+    assert(ZarrChunkIO.readChunk(dir.toString, meta, Seq(1, 0)).get.raw.toSeq == raw.toSeq)
+    val back = new ZarrDataReader(spark, base).readArray("v").orderBy("r", "c").collect()
+    assert(back.map(_.getDouble(2)).toSeq == (0 until 64).map(_ * 1.5))
+  }
+
+  test("sink write tasks reject a row whose dimension value left the gathered axis") {
+    val base = Files.createTempDirectory("zarrsinkflaky").toString
+    ZarrSinkSpec.calls.set(0L)
+    // deterministic for its first 24 evaluations (the coordinate
+    // aggregate), off-axis afterwards (the write job): the join this
+    // replaced dropped such rows without a word
+    val flaky = udf { (c: Int) =>
+      if (ZarrSinkSpec.calls.incrementAndGet() > 24L) c + 100 else c
+    }.asNondeterministic()
+    val df = spark.range(0, 24).select((col("id") / 4).cast("int").as("r"), (col("id") % 4).cast("int").as("c0"))
+      .select(col("r"), flaky(col("c0")).as("c"), col("r").cast("double").as("value"))
+    val e = intercept[Exception] {
+      df.write.format("zarr").option("path", base).option("array", "v").option("chunks", "2,2")
+        .mode("overwrite").save()
+    }
+    def msgOf(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
+    assert(msgOf(e).contains("not on the axis the write was planned with"), msgOf(e))
+  }
+}
+
+object ZarrSinkSpec {
+  val calls = new java.util.concurrent.atomic.AtomicLong(0L)
 }
