@@ -9,6 +9,7 @@ import graft.functions.{AxisTable, BoundedCollectSet}
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 
 /** APPEND writes along the leading dimension of an EXISTING array —
@@ -64,9 +65,20 @@ import org.apache.spark.sql.functions._
   *    aggregate and the write, or a categorize label outside the set, fails
   *    its task) commits no metadata, so any objects it left lie only past
   *    the committed extent, invisible to readers. A later append of the
-  *    same slab overwrites every object it writes; an object it does not
-  *    write (a chunk the failed batch had cells in and the new one has
-  *    none) stays and becomes readable once the extent grows over it.
+  *    same slab first deletes every object in the slab's leading-dim rows
+  *    (one listing per row for '/'-separated keys; for dot-separated ones
+  *    a delete by key of every object slot in those rows), and under
+  *    `append.realign` rewrites every
+  *    existing tail-row object, copying only the chunks before the old
+  *    extent — so nothing a failed batch wrote becomes readable, also where
+  *    the new batch has no cells.
+  *
+  * The cells cross the write job's one shuffle as packed per-chunk
+  * fragments keyed by shard (the chunk when unsharded), exactly as in
+  * [[ZarrSink]] ([[ZarrFragments]]): the per-row checks (null ordinal,
+  * value put) run in the map tasks, and each reduce task prefills one chunk
+  * at a time, overlays its fragments and encodes it through the store's
+  * chain.
   *
   * Chunk statistics survive the append in every layout: flat docs merge
   * the new chunks' bounds under the grown grid; a grid growing past the
@@ -427,84 +439,67 @@ object ZarrAppend {
       1L,
       math.min(spark.sessionState.conf.numShufflePartitions.toLong, totalNewChunks)
     ).toInt
-    def appendChunked(): Array[ZarrSink.ChunkBounds] = indexed
-      .select(chunkExpr.as("__chunk"), localExpr.as("__local"), col("value").as("__value"))
-      .repartition(parts, col("__chunk"))
-      .sortWithinPartitions("__chunk")
-      .rdd
-      .mapPartitions { (rows: Iterator[Row]) =>
-        val order = if (dt.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
-        var current = -1L
-        var buf: ByteBuffer = null
-        var cells: Array[String] = null
-        val stats = Array.newBuilder[ZarrSink.ChunkBounds]
-        def flush(): Unit = if (current >= 0L) {
-          if (statsOnSer)
-            stats += (if (isStr) ZarrSink.stringBoundsRecord(current, cells, geom)
-                      else ZarrSink.chunkBoundsRecord(current, dt, buf, geom, intDomain))
-          // categorize IS the string filter chain: codes replace the vlen
-          // stream entirely (the fixture writer's exact encode), so the
-          // v2 fold is skipped for it
-          val raw =
-            if (isStr) strCatSer match {
-              case Some(cfg) => ZarrFilters.categorizeEncodeCells(cfg, cells, strict = true)
-              case None => ZarrStoreWriter.vlenEncode(cells)
-            }
-            else buf.array()
-          val bytes =
-            if (isV3) v3Cfgs.foldLeft(raw)((b, cfg) => ZarrCodecV3.encode(cfg, b, math.max(dt.itemSize, 1)))
-            else {
-              val filtered =
-                if (strCatSer.isDefined) raw
-                else v2Filters.foldLeft(raw)((b, cfg) => ZarrFilters.encode(cfg, dt, b))
-              ZarrCodec.compress(comp, filtered, typesize = math.max(dt.itemSize, 1))
-            }
-          val idx = new Array[Int](nChunksArr.length)
-          var rem = current
-          var d = nChunksArr.length - 1
-          while (d >= 0) { idx(d) = (rem % nChunksArr(d)).toInt; rem /= nChunksArr(d); d -= 1 }
-          ZarrFileIO.writeBytes(
-            new HPath(arrayDirStr, chunkKeyOf(idx.toSeq)),
-            executorOpts,
-            bytes
-          )
-        }
-        while (rows.hasNext) {
-          val r = rows.next()
-          val c = ZarrSink.writeOrdinal(r, "zarr append")
-          if (c != current) {
-            flush()
-            current = c
-            if (isStr) {
-              if (cells == null) cells = new Array[String](elems)
-              java.util.Arrays.fill(cells.asInstanceOf[Array[AnyRef]], fillStr)
-            } else {
-              if (buf == null) buf = ByteBuffer.allocate(elems * dt.itemSize).order(order)
-              if (fill == 0.0) java.util.Arrays.fill(buf.array(), 0.toByte)
-              else { var i = 0; while (i < elems) { ZDtype.put(dt, buf, i, fill); i += 1 } }
-            }
+    // ---- the data job: cells travel as packed per-chunk fragments
+    // (ZarrFragments), one shuffle keyed by shard (by chunk when unsharded)
+    val prepared = indexed.select(chunkExpr.as("__chunk"), localExpr.as("__local"), col("value").as("__value"))
+    val cellPut = new ZarrSink.CellPut(df.schema("value").dataType, dt, rCheck = false, 0L, 0L, meta.dtype)
+    def appendChunked(): Array[ZarrSink.ChunkBounds] = {
+      val layout = new ZarrFragments.Layout(dt, elems, isStr, fill, fillStr, null, nChunksArr, null)
+      ZarrFragments
+        .shuffle(prepared, layout, cellPut, parts, "zarr append")
+        .mapPartitions { frags =>
+          val stats = Array.newBuilder[ZarrSink.ChunkBounds]
+          ZarrFragments.foreachChunk(frags, layout) { (_, chunk, cells) =>
+            if (statsOnSer)
+              stats += (if (isStr) ZarrSink.stringBoundsRecord(chunk, cells.strs, geom)
+                        else ZarrSink.chunkBoundsRecord(chunk, dt, cells.buf, geom, intDomain))
+            // categorize IS the string filter chain: codes replace the vlen
+            // stream entirely (the fixture writer's exact encode), so the
+            // v2 fold is skipped for it
+            val raw =
+              if (isStr) strCatSer match {
+                case Some(cfg) => ZarrFilters.categorizeEncodeCells(cfg, cells.strs, strict = true)
+                case None => ZarrStoreWriter.vlenEncode(cells.strs)
+              }
+              else cells.buf.array()
+            val bytes =
+              if (isV3) v3Cfgs.foldLeft(raw)((b, cfg) => ZarrCodecV3.encode(cfg, b, math.max(dt.itemSize, 1)))
+              else {
+                val filtered =
+                  if (strCatSer.isDefined) raw
+                  else v2Filters.foldLeft(raw)((b, cfg) => ZarrFilters.encode(cfg, dt, b))
+                ZarrCodec.compress(comp, filtered, typesize = math.max(dt.itemSize, 1))
+              }
+            val idx = new Array[Int](nChunksArr.length)
+            var rem = chunk
+            var d = nChunksArr.length - 1
+            while (d >= 0) { idx(d) = (rem % nChunksArr(d)).toInt; rem /= nChunksArr(d); d -= 1 }
+            ZarrFileIO.writeBytes(
+              new HPath(arrayDirStr, chunkKeyOf(idx.toSeq)),
+              executorOpts,
+              bytes
+            )
           }
-          if (isStr) {
-            val v = r.getString(2)
-            cells(r.getLong(1).toInt) = if (v == null) fillStr else v
-          } else ZarrSink.putCell(dt, buf, r.getLong(1).toInt, r.get(2), rCheck = false, 0L, 0L, meta.dtype)
+          stats.result().iterator
         }
-        flush()
-        stats.result().iterator
-      }
-      .collect()
+        .collect()
+    }
     val statsRows: Array[ZarrSink.ChunkBounds] = meta.shardShape match {
       case Some(shards) =>
         // realign: the shard ROW (dim-0 shard index) holding the old
         // extent already has objects on disk; their live inner chunks are
         // copied byte-for-byte into the rewritten tail objects
         val tailShardRow = if (extent % shards.head == 0) -1L else (extent / shards.head).toLong
+        val shardGrid = newShape.zip(shards).map { case (s, c) => (s + c - 1) / c }
+        clearRows(meta, arrayDirStr, (extent + shards.head - 1) / shards.head, newExtent, shards.head, shardGrid, storageOptions)
         appendSharded(
-          indexed, meta, shards, newShape, nChunksVec, chunkExpr, localExpr,
+          prepared, cellPut, meta, shards, newShape, nChunksVec,
           geom, elems, fill, fillStr, statsOnSer, intDomain, arrayDirStr, executorOpts, parts,
-          tailShardRow
+          tailShardRow, storageOptions
         )
-      case None => appendChunked()
+      case None =>
+        clearRows(meta, arrayDirStr, extent / chunk0, newExtent, chunk0, nChunksVec, storageOptions)
+        appendChunked()
     }
     if (joined) mapped.unpersist(blocking = false)
 
@@ -697,25 +692,79 @@ object ZarrAppend {
     }
   }
 
-  /** SHARDED (v3) append: cluster the batch's rows by SHARD ordinal over
-    * the grown grid so each task streams one complete shard object (inner
-    * chunks + byte-range index in the STORE's declared layout: location
-    * end|start, crc32c or bare, either endianness) — one PUT per NEW
-    * shard, existing objects untouched (extent shard-aligned by contract;
-    * `append.realign=true` absorbs a mid-shard tail by rewriting the
-    * tail-row objects merged with the batch — see `tailShardRow`). Emits the
-    * same per-INNER-chunk bounds records the chunked path does, so zone-map
-    * maintenance downstream is layout-blind. Mirrors the sink's sharded
-    * writer (ZarrSink.scala `case Some(shards)`), restricted to the append
-    * contract (no range re-check: dtype already validated). */
+  /** Deletes every chunk (or shard) object in the leading-dim rows that
+    * cover `[fromRow × rowLen, newExtent)`: all of it lies past the
+    * committed extent, so only a failed earlier append can have left
+    * objects there. The batch rewrites the objects it has cells for; an
+    * object it has no cells in would otherwise stay and become readable,
+    * with the failed batch's values, once the shape grows over it.
+    * `grid` counts objects per dim (chunks, or shards of a sharded array).
+    * '/'-separated keys give each row its own prefix: one listing per row.
+    * Dot-separated keys put every row's objects in the array directory
+    * itself, whose listing grows with the whole store; there every object
+    * slot of the rows is deleted by key (a missing one is a no-op), a
+    * count bounded by the batch's slab. */
+  private def clearRows(
+      meta: ZarrArrayMeta,
+      arrayDirStr: String,
+      fromRow: Int,
+      newExtent: Int,
+      rowLen: Int,
+      grid: Vector[Int],
+      storageOptions: Map[String, String]
+  ): Unit = {
+    val dir = new HPath(arrayDirStr)
+    val rows = fromRow until (newExtent + rowLen - 1) / rowLen
+    val keys =
+      if (meta.keySeparator == "/") rowKeys(meta, dir, rows, grid, storageOptions) else slotKeys(meta, rows, grid)
+    keys.foreach(k => ZarrFileIO.delete(new HPath(dir, k), storageOptions))
+  }
+
+  /** Keys, relative to the array directory, of every object in leading-dim
+    * rows `rows` of `grid`: listed per row for '/'-separated keys, each
+    * slot probed for dot-separated ones (see [[clearRows]]). */
+  private def rowKeys(
+      meta: ZarrArrayMeta,
+      dir: HPath,
+      rows: Range,
+      grid: Vector[Int],
+      storageOptions: Map[String, String]
+  ): Seq[String] =
+    if (meta.keySeparator == "/") rows.flatMap(r => ZarrFileIO.listFileKeys(dir, meta.chunkKey(Seq(r)), storageOptions))
+    else slotKeys(meta, rows, grid).filter(k => ZarrFileIO.exists(new HPath(dir, k), storageOptions)).toSeq
+
+  /** Every object key of leading-dim rows `rows` of `grid`, C order. */
+  private def slotKeys(meta: ZarrArrayMeta, rows: Range, grid: Vector[Int]): Iterator[String] = {
+    val inner = grid.drop(1)
+    rows.iterator.flatMap { r =>
+      (0L until inner.map(_.toLong).product).iterator.map { k =>
+        val idx = new Array[Int](inner.length)
+        var rem = k
+        var d = inner.length - 1
+        while (d >= 0) { idx(d) = (rem % inner(d)).toInt; rem /= inner(d); d -= 1 }
+        meta.chunkKey(r +: idx.toSeq)
+      }
+    }
+  }
+
+  /** SHARDED (v3) append: the batch's fragments are keyed by SHARD ordinal
+    * over the grown grid so each task streams one complete shard object
+    * (inner chunks + byte-range index in the STORE's declared layout:
+    * location end|start, crc32c or bare, either endianness) — one PUT per
+    * NEW shard, existing objects untouched (extent shard-aligned by
+    * contract; `append.realign=true` absorbs a mid-shard tail by rewriting
+    * every tail-row object merged with the batch — see `tailShardRow`).
+    * Emits the same per-INNER-chunk bounds records the chunked path does,
+    * so zone-map maintenance downstream is layout-blind. Mirrors the sink's
+    * sharded writer (ZarrSink.scala `case Some(shards)`), restricted to the
+    * append contract (no range re-check: dtype already validated). */
   private def appendSharded(
-      indexed: DataFrame,
+      prepared: DataFrame,
+      cellPut: ZarrSink.CellPut,
       meta: ZarrArrayMeta,
       shards: Vector[Int],
       newShape: Vector[Int],
       nChunksVec: Vector[Int],
-      chunkExpr: org.apache.spark.sql.Column,
-      localExpr: org.apache.spark.sql.Column,
       geom: ZarrSink.ChunkGeom,
       elems: Int,
       fill: Double,
@@ -725,7 +774,8 @@ object ZarrAppend {
       arrayDirStr: String,
       executorOpts: Map[String, String],
       parts: Int,
-      tailShardRow: Long
+      tailShardRow: Long,
+      storageOptions: Map[String, String]
   ): Array[ZarrSink.ChunkBounds] = {
     val dt = meta.zdtype
     val isStr = ZDtype.isString(dt.code)
@@ -736,9 +786,6 @@ object ZarrAppend {
     val nShardsVec = newShape.zip(shards).map { case (s, c) => (s + c - 1) / c }
     val shardStrides = IndexMath.strides(nShardsVec)
     val innerPerVec = shards.zip(chunks).map { case (s, c) => s / c }
-    val shardExpr = meta.dims.indices
-      .map(di => expr(s"__i$di div ${shards(di)}") * lit(shardStrides(di)))
-      .reduce(_ + _)
     val nChunksArr = nChunksVec.toArray
     val nShardsArr = nShardsVec.toArray
     val innerPerArr = innerPerVec.toArray
@@ -747,7 +794,6 @@ object ZarrAppend {
     val v3Cfgs = meta.v3Codecs
     val keyEnc = meta.keyEncoding
     val keySep = meta.keySeparator
-    val dtypeStr = meta.dtype
     // Honor the STORE's declared shard-index layout (index_location,
     // index_codecs crc32c-or-not, endianness) — ZarrStoreWriter can itself
     // produce index_location=start stores, and appending a hardcoded
@@ -761,23 +807,25 @@ object ZarrAppend {
     // chunk count along dim 0 under the OLD shape: the realign preload's
     // boundary between chunks to copy and chunks the batch rewrites
     val oldChunk0Count = (meta.shape.head / chunks.head).toLong
-    indexed
-      .select(
-        shardExpr.as("__shard"),
-        chunkExpr.as("__chunk"),
-        localExpr.as("__local"),
-        col("value").as("__value")
-      )
-      .repartition(parts, col("__shard"))
-      .sortWithinPartitions("__shard", "__chunk")
-      .rdd
-      .mapPartitions { (rows: Iterator[Row]) =>
-        val order = if (dt.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
+    // realign: EVERY existing tail-row object is rewritten, also those the
+    // batch has no cells in, so chunks a failed attempt left in them past
+    // the old extent are dropped, never made readable
+    val tailShards: Seq[Long] =
+      if (tailShardRow < 0L) Nil
+      else
+        rowKeys(meta, new HPath(arrayDirStr), tailShardRow.toInt to tailShardRow.toInt, nShardsVec, storageOptions).flatMap { k =>
+          val idx = (if (keyEnc == "default") k.stripPrefix("c" + keySep) else k)
+            .split(java.util.regex.Pattern.quote(keySep))
+            .flatMap(_.toIntOption)
+          if (idx.length != nShardsArr.length || idx.indices.exists(d => idx(d) >= nShardsArr(d))) None
+          else Some(idx.indices.map(d => idx(d).toLong * shardStrides(d)).sum)
+        }
+    val layout = new ZarrFragments.Layout(dt, elems, isStr, fill, fillStr, null, nChunksArr, innerPerArr)
+    ZarrFragments
+      .shuffle(prepared, layout, cellPut, parts, "zarr append", touch = tailShards)
+      .mapPartitions { frags =>
         val rank = nShardsArr.length
         var curShard = -1L
-        var curChunk = -1L
-        var buf: ByteBuffer = null
-        var cells: Array[String] = null
         val shardData = new java.io.ByteArrayOutputStream()
         val index = new Array[Long](nInner * 2)
         val stats = Array.newBuilder[ZarrSink.ChunkBounds]
@@ -832,14 +880,14 @@ object ZarrAppend {
                 w += 1
               }
             }
-        def flushChunk(): Unit = if (curChunk >= 0L) {
+        def addChunk(chunk: Long, cells: ZarrFragments.ChunkCells): Unit = {
           if (statsOn)
-            stats += (if (isStr) ZarrSink.stringBoundsRecord(curChunk, cells, geom)
-                      else ZarrSink.chunkBoundsRecord(curChunk, dt, buf, geom, intDomain))
-          val raw = if (isStr) ZarrStoreWriter.vlenEncode(cells) else buf.array()
+            stats += (if (isStr) ZarrSink.stringBoundsRecord(chunk, cells.strs, geom)
+                      else ZarrSink.chunkBoundsRecord(chunk, dt, cells.buf, geom, intDomain))
+          val raw = if (isStr) ZarrStoreWriter.vlenEncode(cells.strs) else cells.buf.array()
           val enc = v3Cfgs.foldLeft(raw)((b, cfg) => ZarrCodecV3.encode(cfg, b, math.max(dt.itemSize, 1)))
           val cIdx = new Array[Int](rank)
-          var rem = curChunk
+          var rem = chunk
           var d = rank - 1
           while (d >= 0) { cIdx(d) = (rem % nChunksArr(d)).toInt; rem /= nChunksArr(d); d -= 1 }
           var w = 0L
@@ -850,8 +898,6 @@ object ZarrAppend {
           shardData.write(enc)
         }
         def flushShard(): Unit = if (curShard >= 0L) {
-          flushChunk()
-          curChunk = -1L
           val ib = ByteBuffer
             .allocate(nInner * 16)
             .order(if (idxBig) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
@@ -867,32 +913,14 @@ object ZarrAppend {
           )
           shardData.reset()
         }
-        while (rows.hasNext) {
-          val r = rows.next()
-          val s = ZarrSink.writeOrdinal(r, "zarr append")
-          val c = r.getLong(1)
+        ZarrFragments.foreachChunk(frags, layout) { (s, c, cells) =>
           if (s != curShard) {
             flushShard()
             curShard = s
             java.util.Arrays.fill(index, -1L) // 2^64-1: missing inner chunk
             if (tailShardRow >= 0L && s / stride0 == tailShardRow) preloadTail(s)
           }
-          if (c != curChunk) {
-            flushChunk()
-            curChunk = c
-            if (isStr) {
-              if (cells == null) cells = new Array[String](elems)
-              java.util.Arrays.fill(cells.asInstanceOf[Array[AnyRef]], fillStr)
-            } else {
-              if (buf == null) buf = ByteBuffer.allocate(elems * dt.itemSize).order(order)
-              if (fill == 0.0) java.util.Arrays.fill(buf.array(), 0.toByte)
-              else { var i = 0; while (i < elems) { ZDtype.put(dt, buf, i, fill); i += 1 } }
-            }
-          }
-          if (isStr) {
-            val v = r.getString(3)
-            cells(r.getLong(2).toInt) = if (v == null) fillStr else v
-          } else ZarrSink.putCell(dt, buf, r.getLong(2).toInt, r.get(3), rCheck = false, 0L, 0L, dtypeStr)
+          if (c >= 0L) addChunk(c, cells) // c < 0: a touched tail shard, no cells of its own
         }
         flushShard()
         stats.result().iterator
@@ -1010,7 +1038,7 @@ object ZarrAppend {
     case ZDtype.M8 =>
       b.getM8(local) match {
         case null => null
-        case us: Long => java.sql.Timestamp.from(java.time.Instant.EPOCH.plusNanos(us * 1000L))
+        case us: Long => DateTimeUtils.toJavaTimestamp(us)
       }
     case ZDtype.TD =>
       b.getM8(local) match {
@@ -1265,7 +1293,7 @@ object ZarrAppend {
 
   /** Internal coord cell -> the external (Row-compatible) value. */
   private def externalOf(c: Coord, v: Any): Any = c match {
-    case _: Coord.Timestamps => java.sql.Timestamp.from(java.time.Instant.EPOCH.plusNanos(v.asInstanceOf[Long] * 1000L))
+    case _: Coord.Timestamps => DateTimeUtils.toJavaTimestamp(v.asInstanceOf[Long])
     case _: Coord.Strings => v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString
     case _: Coord.Intervals => java.time.Duration.ofNanos(v.asInstanceOf[Long] * 1000L)
     case _ => v

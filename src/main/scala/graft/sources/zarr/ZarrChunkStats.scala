@@ -506,8 +506,7 @@ object ZarrChunkStats {
     case s: Short => Some(s.toLong)
     case b: Byte => Some(b.toLong)
     case b: Boolean => Some(if (b) 1L else 0L)
-    case t: java.sql.Timestamp => Some(t.getTime * 1000L + (t.getNanos % 1000000) / 1000L)
-    case t: java.time.Instant => Some(t.getEpochSecond * 1000000L + t.getNano / 1000L)
+    case t @ (_: java.sql.Timestamp | _: java.time.Instant) => Some(ZarrSink.micros(t))
     case d: java.time.Duration => Some(d.getSeconds * 1000000L + d.getNano / 1000L)
     case _ => None
   }

@@ -80,14 +80,27 @@ object ZarrCodec {
     else if (parts.length > 2 && parts(2) == "bitshuffle") 2
     else 1
 
-  private def readAll(in: java.io.InputStream, expect: Int): Array[Byte] = {
-    val out = new ByteArrayOutputStream(math.max(64, expect))
-    val buf = new Array[Byte](64 * 1024)
-    var n = in.read(buf)
-    while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-    in.close()
-    out.toByteArray
-  }
+  /** Inflates `in` to its end. With `expect > 0` (the chunk's decoded
+    * length) it never holds more than `expect` bytes: a stream that still
+    * has a byte past them is refused, so a small chunk inflating to
+    * gigabytes fails before the allocation, not after. */
+  private def readAll(in: java.io.InputStream, expect: Int): Array[Byte] =
+    try {
+      if (expect > 0) {
+        val out = new Array[Byte](expect)
+        var n = 0
+        var r = 0
+        while (n < expect && { r = in.read(out, n, expect - n); r >= 0 }) n += r
+        require(n < expect || in.read() < 0, s"compressed stream inflates past the chunk's $expect bytes")
+        if (n == expect) out else java.util.Arrays.copyOf(out, n)
+      } else {
+        val out = new ByteArrayOutputStream(64)
+        val buf = new Array[Byte](64 * 1024)
+        var n = in.read(buf)
+        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
+        out.toByteArray
+      }
+    } finally in.close()
 
   private[zarr] def readAllOf(in: java.io.InputStream, expect: Int): Array[Byte] =
     readAll(in, expect)
@@ -295,8 +308,11 @@ object Blosc {
             case 0 => BloscLz.decompress(frame, pos, csize, out, dstOff, neblock)
             case 1 => lz4.safeDecompressor().decompress(frame, pos, csize, out, dstOff, neblock)
             case 2 =>
-              val dec = org.xerial.snappy.Snappy.uncompress(java.util.Arrays.copyOfRange(frame, pos, pos + csize))
-              System.arraycopy(dec, 0, out, dstOff, dec.length); dec.length
+              // the split declares its own decoded length: check it against
+              // the split before snappy allocates or writes anything
+              val declared = org.xerial.snappy.Snappy.uncompressedLength(frame, pos, csize)
+              if (declared != neblock) return false
+              org.xerial.snappy.Snappy.uncompress(frame, pos, csize, out, dstOff)
             case 3 =>
               val inf = new java.util.zip.Inflater()
               inf.setInput(frame, pos, csize)

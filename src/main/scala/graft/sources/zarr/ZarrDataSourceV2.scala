@@ -414,8 +414,7 @@ class ZarrScanBuilder(
     case b: Byte => Some(b.toDouble)
     // timestamp filter literals arrive as java.sql/java.time values;
     // compare in epoch micros like Coord.Timestamps
-    case t: java.sql.Timestamp => Some(t.getTime * 1000.0 + (t.getNanos % 1000000) / 1000.0)
-    case t: java.time.Instant => Some(t.getEpochSecond * 1e6 + t.getNano / 1000.0)
+    case t @ (_: java.sql.Timestamp | _: java.time.Instant) => Some(ZarrSink.micros(t).toDouble)
     case d: java.time.Duration => Some(d.getSeconds * 1e6 + d.getNano / 1000.0)
     case _ => None
   }
@@ -1769,10 +1768,7 @@ class ZarrScan(
     case (_: Coord.Strings, s: String) =>
       Some(org.apache.spark.unsafe.types.UTF8String.fromString(s))
     case (_: Coord.Strings, u: org.apache.spark.unsafe.types.UTF8String) => Some(u)
-    case (_: Coord.Timestamps, t: java.sql.Timestamp) =>
-      Some(t.getTime * 1000L + (t.getNanos % 1000000) / 1000L)
-    case (_: Coord.Timestamps, t: java.time.Instant) =>
-      Some(t.getEpochSecond * 1000000L + t.getNano / 1000L)
+    case (_: Coord.Timestamps, t @ (_: java.sql.Timestamp | _: java.time.Instant)) => Some(ZarrSink.micros(t))
     case (_: Coord.Intervals, d: java.time.Duration) =>
       Some(d.getSeconds * 1000000L + d.getNano / 1000L)
     case _ => None

@@ -82,20 +82,42 @@ object ZarrFileIO {
     new HPath(s)
   }
 
-  /** Effective I/O options for EXECUTOR-side reads: the driver's full
-    * Hadoop configuration (spark.hadoop.* settings, cluster defaults —
-    * i.e. where s3a/HDFS credentials normally live) snapshotted to a plain
-    * map and overlaid with the store's translated options. Must be called
-    * ON THE DRIVER (scan build time); the result rides to executors in the
-    * reader factory, where `SparkSession.getActiveSession` is None and a
-    * bare `new Configuration()` would silently drop cluster credentials.
-    * Unknown keys pass through [[hadoopKeys]] verbatim, so the snapshot
-    * replays onto a fresh Configuration unchanged. */
+  /** The values Hadoop's own jars set (raw): every `*-default.xml` resource
+    * on the classpath, and no site file. Parsed once per JVM. */
+  private lazy val defaults: Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    val c = new Configuration(false)
+    Seq("core-default.xml", "hdfs-default.xml", "hdfs-rbf-default.xml", "mapred-default.xml", "yarn-default.xml")
+      .filter(r => c.getClassLoader.getResource(r) != null)
+      .foreach(c.addResource)
+    c.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+  }
+
+  /** Effective I/O options for EXECUTOR-side reads and writes: the entries
+    * of the driver's Hadoop configuration (spark.hadoop.* settings, cluster
+    * site files — i.e. where s3a/HDFS credentials normally live) whose raw
+    * value differs from the Hadoop jars' own defaults, overlaid with the
+    * store's translated options. Must be called ON THE DRIVER (scan or
+    * write build time); the result rides to executors in the reader or
+    * sink closure, where `SparkSession.getActiveSession` is None and
+    * [[conf]] rebuilds on a fresh Configuration. Site-file values
+    * (core-site.xml and the like) always ship, since an executor's
+    * classpath may lack those files; leaving out the jar defaults assumes
+    * an executor runs the same Hadoop jars as the driver, as in any Spark
+    * deployment that ships one application classpath. The full snapshot
+    * (over a thousand entries) cost every task its deserialization and
+    * every [[conf]] lookup a hash of the whole map. Unknown keys pass
+    * through [[hadoopKeys]] verbatim, so the map replays onto a fresh
+    * Configuration unchanged. */
   def executorOptions(storageOptions: Map[String, String]): Map[String, String] = {
     import scala.jdk.CollectionConverters._
     val base = org.apache.spark.sql.SparkSession.getActiveSession match {
       case Some(s) =>
-        s.sparkContext.hadoopConfiguration.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+        s.sparkContext.hadoopConfiguration
+          .iterator()
+          .asScala
+          .collect { case e if !defaults.get(e.getKey).contains(e.getValue) => e.getKey -> e.getValue }
+          .toMap
       case None => Map.empty[String, String]
     }
     base ++ hadoopKeys(storageOptions)
@@ -200,4 +222,26 @@ object ZarrFileIO {
 
   def deleteRecursive(p: HPath, storageOptions: Map[String, String]): Unit =
     fileSystem(p, storageOptions).delete(p, true)
+
+  def delete(p: HPath, storageOptions: Map[String, String]): Unit =
+    fileSystem(p, storageOptions).delete(p, false)
+
+  /** Paths, relative to `dir`, of every file at or under `dir/sub` (`dir`
+    * itself when `sub` is empty) — one listing; only the files directly in
+    * it unless `recursive`. Empty when nothing is there. */
+  def listFileKeys(
+      dir: HPath,
+      sub: String,
+      storageOptions: Map[String, String],
+      recursive: Boolean = true
+  ): Seq[String] = {
+    val fs = fileSystem(dir, storageOptions)
+    val base = fs.makeQualified(dir).toUri.getPath.stripSuffix("/") + "/"
+    val out = Seq.newBuilder[String]
+    try {
+      val it = fs.listFiles(if (sub.isEmpty) dir else new HPath(dir, sub), recursive)
+      while (it.hasNext) out += it.next().getPath.toUri.getPath.stripPrefix(base)
+    } catch { case _: FileNotFoundException => () }
+    out.result()
+  }
 }

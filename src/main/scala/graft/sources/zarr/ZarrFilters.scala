@@ -194,7 +194,10 @@ object ZarrFilters {
     case "packbits" =>
       val n = len // b1 cells are 1 byte each
       1 + (n + 7) / 8
-    case "categorize" => categorizeStoredLen(cfg, len / math.max(dt.itemSize, 1))
+    case "categorize" =>
+      // codes only stand for string cells: refuse before sizing a decode
+      require(ZDtype.isString(dt.code), s"categorize filter requires a string dtype (got ${dt.tag})")
+      categorizeStoredLen(cfg, len / math.max(dt.itemSize, 1))
     case _ => len
   }
 

@@ -6,6 +6,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -23,14 +25,20 @@ import org.apache.spark.sql.types._
   *  - each row's per-dim ordinal is one generated-code binary search over
   *    that sorted axis ([[graft.functions.AxisOrdinal]]) — no join, no
   *    broadcast — and its target chunk ordinal and in-chunk offset are
-  *    COLUMN ARITHMETIC on those ordinals, so the expensive part of the
-  *    write plan is one hash repartition clustered by chunk ordinal + an
-  *    in-partition sort — after that every chunk's cells are contiguous in
-  *    exactly one task. A row whose ordinal is null (its value left the
-  *    axis between the gather and the write: a nondeterministic input)
-  *    fails its write task rather than being dropped
-  *  - tasks stream: one dense chunk buffer at a time (fill, set cells,
-  *    compress, write via the Hadoop FileSystem), O(1 chunk) memory
+  *    COLUMN ARITHMETIC on those ordinals
+  *  - cells cross the one shuffle as packed per-chunk FRAGMENTS, not one
+  *    row per cell ([[ZarrFragments]]): each map task packs its cells into
+  *    a presence bitmap plus values (or offset/value pairs when fewer),
+  *    at most [[ZarrFragments.MaxOpenBytes]] open at once, keyed by shard
+  *    (the chunk when unsharded) and sorted by chunk within each reduce
+  *    task, so every chunk's cells meet in exactly one task. A row whose
+  *    ordinal is null (its value left the axis between the gather and the
+  *    write: a nondeterministic input) fails its map task rather than
+  *    being dropped
+  *  - reduce tasks stream: one dense chunk buffer at a time (fill, overlay
+  *    the chunk's fragments, compress, write via the Hadoop FileSystem),
+  *    O(1 chunk) memory; the bytes written do not depend on how the cells
+  *    were grouped into fragments
   *  - absent cells read back as fill_value; chunks with no rows are never
   *    written (Zarr's native sparse representation)
   *
@@ -299,62 +307,78 @@ object ZarrSink {
       ChunkBounds(ordinal, any, loD = mn, hiD = mx)
     }
 
-  /** Encode one row's value into a chunk buffer — shared by the per-chunk
-    * and per-shard executor loops. Unsigned range validation fails loudly
-    * instead of masking. */
-  private[zarr] def putCell(
+  /** The value put of one write, bound once to the value column's type
+    * and the store dtype: writes a row's non-null internal value at element
+    * `i` of a buffer in the chunk's byte order — the map side of
+    * [[ZarrFragments]]. Unsigned targets are range-checked and fail loudly
+    * instead of masking; a structured value packs field by field (zarr has
+    * no per-field null, so a null field fails). */
+  private[zarr] final class CellPut(
+      valueType: DataType,
       dt: ZDtype,
-      buf: ByteBuffer,
-      local: Int,
-      v: Any,
       rCheck: Boolean,
       rMin: Long,
       rMax: Long,
       dtypeStr: String
-  ): Unit = {
-    def checkedLong(x: Long): Long = {
+  ) extends Serializable {
+    private val kind: Int = valueType match {
+      case BooleanType => 0
+      case ByteType => 1
+      case ShortType => 2
+      case IntegerType => 3
+      case LongType => 4
+      case FloatType => 5
+      case DoubleType => 6
+      case TimestampType => 7
+      case _: StructType if dt.code == ZDtype.V => 8
+      case _ => 9
+    }
+    @transient private lazy val toExternal: Any => Any =
+      org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(valueType)
+
+    private def checkedLong(x: Long): Long = {
       if (rCheck && (x < rMin || x > rMax))
         throw new IllegalArgumentException(
           s"zarr sink: value $x out of range for unsigned dtype '$dtypeStr' [$rMin, $rMax]"
         )
       x
     }
-    def checkedDouble(x: Double): Double = {
+    private def checkedDouble(x: Double): Double = {
       if (rCheck && (x.isNaN || x < rMin || x > rMax))
         throw new IllegalArgumentException(
           s"zarr sink: value $x out of range for unsigned dtype '$dtypeStr' [$rMin, $rMax]"
         )
       x
     }
-    v match {
-      case null => () // absent value -> fill
-      case row: org.apache.spark.sql.Row if dt.code == ZDtype.V =>
-        // structured cell: pack each field at its offset (zarr has no
-        // per-field null — a null field fails loudly, never writes garbage)
+
+    def apply(row: InternalRow, ordinal: Int, buf: ByteBuffer, i: Int): Unit = (kind: @annotation.switch) match {
+      case 0 => ZDtype.putLong(dt, buf, i, if (row.getBoolean(ordinal)) 1L else 0L)
+      case 1 => ZDtype.putLong(dt, buf, i, checkedLong(row.getByte(ordinal).toLong))
+      case 2 => ZDtype.putLong(dt, buf, i, checkedLong(row.getShort(ordinal).toLong))
+      case 3 => ZDtype.putLong(dt, buf, i, checkedLong(row.getInt(ordinal).toLong))
+      case 4 => ZDtype.putLong(dt, buf, i, checkedLong(row.getLong(ordinal)))
+      case 5 => ZDtype.put(dt, buf, i, checkedDouble(row.getFloat(ordinal).toDouble))
+      case 6 => ZDtype.put(dt, buf, i, checkedDouble(row.getDouble(ordinal)))
+      case 7 => ZDtype.putLong(dt, buf, i, row.getLong(ordinal)) // M8[us] stores internal micros (see micros)
+      case 8 =>
+        val st = valueType.asInstanceOf[StructType]
+        val rec = toExternal(row.getStruct(ordinal, st.length)).asInstanceOf[Row]
         require(
-          row.length == dt.fields.length,
-          s"zarr sink: struct value has ${row.length} fields, dtype '$dtypeStr' has ${dt.fields.length}"
+          rec.length == dt.fields.length,
+          s"zarr sink: struct value has ${rec.length} fields, dtype '$dtypeStr' has ${dt.fields.length}"
         )
-        val base = local * dt.itemSize
+        val base = i * dt.itemSize
         var f = 0
         while (f < dt.fields.length) {
-          val fv = row.get(f)
+          val fv = rec.get(f)
           require(fv != null, s"zarr sink: struct field '${dt.fields(f)._1}' is NULL — zarr cells have no per-field null")
           ZarrStoreWriter.packStructField(buf, base + dt.fieldOffsets(f), dt.fields(f)._2, fv)
           f += 1
         }
-      case b: java.lang.Boolean => ZDtype.putLong(dt, buf, local, if (b) 1L else 0L)
-      case b: java.lang.Byte => ZDtype.putLong(dt, buf, local, checkedLong(b.longValue()))
-      case s: java.lang.Short => ZDtype.putLong(dt, buf, local, checkedLong(s.longValue()))
-      case x: java.lang.Integer => ZDtype.putLong(dt, buf, local, checkedLong(x.longValue()))
-      case l: java.lang.Long => ZDtype.putLong(dt, buf, local, checkedLong(l.longValue()))
-      case f: java.lang.Float => ZDtype.put(dt, buf, local, checkedDouble(f.doubleValue()))
-      case d0: java.lang.Double => ZDtype.put(dt, buf, local, checkedDouble(d0.doubleValue()))
-      case t @ (_: java.sql.Timestamp | _: java.time.Instant) =>
-        // M8[us] stores epoch micros raw
-        ZDtype.putLong(dt, buf, local, micros(t))
-      case other =>
-        throw new IllegalArgumentException(s"zarr sink: unsupported value ${other.getClass}")
+      case _ =>
+        throw new IllegalArgumentException(
+          s"zarr sink: unsupported value ${toExternal(row.get(ordinal, valueType)).getClass}"
+        )
     }
   }
 
@@ -367,7 +391,7 @@ object ZarrSink {
     * means a dim value was off the axis when the write job read the row
     * although the pre-write pass saw it on (a nondeterministic input): the
     * task fails rather than drop or misplace the cell. */
-  private[zarr] def writeOrdinal(r: Row, what: String): Long = {
+  private[zarr] def writeOrdinal(r: InternalRow, what: String): Long = {
     if (r.isNullAt(0))
       throw new IllegalStateException(
         s"$what: a row's dimension value is not on the axis the write was planned with " +
@@ -376,11 +400,15 @@ object ZarrSink {
     r.getLong(0)
   }
 
-  /** External timestamp value → epoch micros (both java.sql and java.time
-    * spellings, depending on spark.sql.datetime.java8API.enabled). */
+  /** External timestamp value → Spark's internal epoch micros, the value an
+    * `M8[us]` cell stores and reads back (both java.sql and java.time
+    * spellings, depending on spark.sql.datetime.java8API.enabled). A
+    * `java.sql.Timestamp` goes through Spark's own conversion, which undoes
+    * the Julian rebase Spark gives pre-1582 instants on the way out, so a
+    * value cell, a coordinate and a struct field of one instant agree. */
   private[zarr] def micros(v: Any): Long = v match {
-    case t: java.sql.Timestamp => t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
-    case t: java.time.Instant => t.getEpochSecond * 1000000L + t.getNano / 1000L
+    case t: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(t)
+    case t: java.time.Instant => DateTimeUtils.instantToMicros(t)
     case other => throw new IllegalArgumentException(s"zarr sink: bad timestamp value $other")
   }
 
@@ -651,10 +679,6 @@ object ZarrSink {
     val fill = fillValue
     val elems = chunkElems.toInt
     val nChunksArr = nChunksVec.toArray
-    val rMin = rangeMin
-    val rMax = rangeMax
-    val rCheck = rangeChecked
-    val dtypeStr = dtype
     val isV3 = v3
     val v3CfgsSer = v3Cfgs
     val fillStrSer = fillStr
@@ -787,221 +811,117 @@ object ZarrSink {
         )
       }
 
+    // ---- the data job: cells travel as packed per-chunk fragments
+    // (ZarrFragments) through one shuffle keyed by shard (by chunk when
+    // unsharded), so each chunk's cells — and each shard's chunks — meet in
+    // exactly one task, which prefills one chunk buffer at a time, overlays
+    // the chunk's fragments and flushes it. Unset cells keep the fill, so
+    // written-chunk and absent-chunk reads agree. With stats on, each task
+    // also emits one [min, max] record per chunk it flushed (byte-
+    // lexicographic for strings), rolled up via finishStats and written into
+    // the array attributes as chunk zone maps.
+    val prepared =
+      indexed.select(chunkExpr.as("__chunk"), localExpr.as("__local"), col("value").as("__value"))
+    val cellPut = new CellPut(df.schema("value").dataType, zdt, rangeChecked, rangeMin, rangeMax, dtype)
+    val statsOnSer = statsOn
+    val statsIntSer = statsDomain.contains("int")
     shardsOpt match {
-      case None if isStrValue =>
-        // ---- string (vlen-utf8) chunks: one cells array at a time; unset
-        // cells become the fill string so written-chunk and absent-chunk
-        // reads agree. Stats: byte-lexicographic [min, max] per chunk.
-        val prepared =
-          indexed.select(chunkExpr.as("__chunk"), localExpr.as("__local"), col("value").as("__value"))
-        val parts = math.max(1L, math.min(shufflePartitions.toLong, totalChunks)).toInt
-        val statsOnSerStr = statsOn
-        val strStatsRdd = prepared
-          .repartition(parts, col("__chunk"))
-          .sortWithinPartitions("__chunk")
-          .rdd
-          .mapPartitions { (rows: Iterator[Row]) =>
-            var current = -1L
-            var cells: Array[String] = null
-            val stats = Array.newBuilder[ChunkBounds]
-            def flush(): Unit = if (current >= 0L) {
-              if (statsOnSerStr) stats += stringBoundsRecord(current, cells, geomSer)
-              val raw = ZarrStoreWriter.vlenEncode(cells)
-              val bytes =
-                if (isV3) v3CfgsSer.foldLeft(raw)((b, cfg) => ZarrCodecV3.encode(cfg, b, 1))
-                else ZarrCodec.compress(comp, raw, typesize = 1)
-              val idx = new Array[Int](nChunksArr.length)
-              var rem = current
-              var d = nChunksArr.length - 1
-              while (d >= 0) { idx(d) = (rem % nChunksArr(d)).toInt; rem /= nChunksArr(d); d -= 1 }
-              val key =
-                if (isV3) "c/" + idx.mkString("/") else ZarrChunkIO.chunkFileName(idx.toSeq)
-              ZarrFileIO.writeBytes(new HPath(arrayDirStr, key), executorOpts, bytes)
-            }
-            while (rows.hasNext) {
-              val r = rows.next()
-              val c = writeOrdinal(r, "zarr sink")
-              if (c != current) {
-                flush()
-                current = c
-                if (cells == null) cells = new Array[String](elems)
-                java.util.Arrays.fill(cells.asInstanceOf[Array[AnyRef]], fillStrSer)
-              }
-              val v = r.getString(2)
-              cells(r.getLong(1).toInt) = if (v == null) fillStrSer else v
-            }
-            flush()
-            stats.result().iterator
-          }
-        finishStats(strStatsRdd)
-
       case None =>
-        // ---- one task-streamed chunk buffer at a time; each chunk is one
-        // on-store object. When stats are on (numeric dtype, bounded grid),
-        // each task ALSO emits one [min, max] record per chunk it flushed —
-        // rolled up via finishStats (driver-collected under the flat cap,
-        // block side docs + rollups past it) and written into the array
-        // attributes as chunk zone maps.
-        val prepared =
-          indexed.select(chunkExpr.as("__chunk"), localExpr.as("__local"), col("value").as("__value"))
+        // ---- one on-store object per chunk
+        val layout = new ZarrFragments.Layout(dt, elems, isStrValue, fill, fillStrSer, structFillSer, nChunksArr, null)
         val parts = math.max(1L, math.min(shufflePartitions.toLong, totalChunks)).toInt
-        val statsOnSer = statsOn
-        val statsIntSer = statsDomain.contains("int")
-        val statsRdd = prepared
-          .repartition(parts, col("__chunk"))
-          .sortWithinPartitions("__chunk")
-          .rdd
-          .mapPartitions { (rows: Iterator[Row]) =>
-            val order = if (dt.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
-            var current = -1L
-            var buf: ByteBuffer = null
-            val stats = Array.newBuilder[ChunkBounds]
-            def flush(): Unit = if (current >= 0L) {
-              if (statsOnSer) stats += chunkBoundsRecord(current, dt, buf, geomSer, statsIntSer)
-              val bytes =
-                if (isV3) v3CfgsSer.foldLeft(buf.array())((b, cfg) => ZarrCodecV3.encode(cfg, b, dt.itemSize))
-                else ZarrCodec.compress(comp, buf.array(), typesize = dt.itemSize)
-              // decompose the chunk ordinal over the chunk grid (C-order)
-              val idx = new Array[Int](nChunksArr.length)
-              var rem = current
-              var d = nChunksArr.length - 1
-              while (d >= 0) { idx(d) = (rem % nChunksArr(d)).toInt; rem /= nChunksArr(d); d -= 1 }
-              val key =
-                if (isV3) "c/" + idx.mkString("/") else ZarrChunkIO.chunkFileName(idx.toSeq)
-              ZarrFileIO.writeBytes(new HPath(arrayDirStr, key), executorOpts, bytes)
-            }
-            while (rows.hasNext) {
-              val r = rows.next()
-              val c = writeOrdinal(r, "zarr sink")
-              if (c != current) {
-                flush()
-                current = c
-                if (buf == null) buf = ByteBuffer.allocate(elems * dt.itemSize).order(order)
-                // zero bytes already decode as 0/false in every supported dtype;
-                // only a nonzero fill needs an explicit prefill pass
-                if (structFillSer != null) {
-                  var i = 0
-                  while (i < elems) {
-                    System.arraycopy(structFillSer, 0, buf.array(), i * dt.itemSize, dt.itemSize)
-                    i += 1
-                  }
-                } else if (fill == 0.0) java.util.Arrays.fill(buf.array(), 0.toByte)
-                else { var i = 0; while (i < elems) { ZDtype.put(dt, buf, i, fill); i += 1 } }
-              }
-              putCell(dt, buf, r.getLong(1).toInt, r.get(2), rCheck, rMin, rMax, dtypeStr)
-            }
-            flush()
-            stats.result().iterator
+        val statsRdd = ZarrFragments.shuffle(prepared, layout, cellPut, parts, "zarr sink").mapPartitions { frags =>
+          val stats = Array.newBuilder[ChunkBounds]
+          ZarrFragments.foreachChunk(frags, layout) { (_, chunk, cells) =>
+            if (statsOnSer)
+              stats += (if (isStrValue) stringBoundsRecord(chunk, cells.strs, geomSer)
+                        else chunkBoundsRecord(chunk, dt, cells.buf, geomSer, statsIntSer))
+            val (raw, typesize) =
+              if (isStrValue) (ZarrStoreWriter.vlenEncode(cells.strs), 1) else (cells.buf.array(), dt.itemSize)
+            val bytes =
+              if (isV3) v3CfgsSer.foldLeft(raw)((b, cfg) => ZarrCodecV3.encode(cfg, b, typesize))
+              else ZarrCodec.compress(comp, raw, typesize = typesize)
+            // decompose the chunk ordinal over the chunk grid (C-order)
+            val idx = new Array[Int](nChunksArr.length)
+            var rem = chunk
+            var d = nChunksArr.length - 1
+            while (d >= 0) { idx(d) = (rem % nChunksArr(d)).toInt; rem /= nChunksArr(d); d -= 1 }
+            val key =
+              if (isV3) "c/" + idx.mkString("/") else ZarrChunkIO.chunkFileName(idx.toSeq)
+            ZarrFileIO.writeBytes(new HPath(arrayDirStr, key), executorOpts, bytes)
           }
+          stats.result().iterator
+        }
         finishStats(statsRdd)
 
       case Some(shards) =>
-        // ---- sharded write: cluster rows by SHARD ordinal so each shard
-        // object (inner chunks + crc32c'd byte-range index) is produced by
-        // exactly one task in one streaming pass — one PUT per shard, the
-        // object-store-friendly shape at scale. Memory: one inner-chunk
-        // buffer + one shard's encoded bytes.
+        // ---- sharded write: each shard object (inner chunks + crc32c'd
+        // byte-range index) is produced by exactly one task in one streaming
+        // pass — one PUT per shard, the object-store-friendly shape at
+        // scale. Memory: one inner-chunk buffer + one shard's encoded bytes.
         val nShardsVec = shape.zip(shards).map { case (s, c) => (s + c - 1) / c }
-        val shardStrides = IndexMath.strides(nShardsVec)
         val innerPerVec = shards.zip(chunks).map { case (s, c) => s / c }
-        val shardExpr = dims.indices
-          .map(di => expr(s"__i$di div ${shards(di)}") * lit(shardStrides(di)))
-          .reduce(_ + _)
-        val prepared = indexed.select(
-          shardExpr.as("__shard"),
-          chunkExpr.as("__chunk"),
-          localExpr.as("__local"),
-          col("value").as("__value")
-        )
         val totalShards = nShardsVec.map(_.toLong).product
         val parts = math.max(1L, math.min(shufflePartitions.toLong, totalShards)).toInt
         val nShardsArr = nShardsVec.toArray
         val innerPerArr = innerPerVec.toArray
         val innerStrides = IndexMath.strides(innerPerVec).toArray
         val nInner = innerPerVec.map(_.toLong).product.toInt
-        val statsOnSerSh = statsOn
-        val statsIntSerSh = statsDomain.contains("int")
-        val shardStatsRdd = prepared
-          .repartition(parts, col("__shard"))
-          .sortWithinPartitions("__shard", "__chunk")
-          .rdd
-          .mapPartitions { (rows: Iterator[Row]) =>
-            val order = if (dt.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
-            val rank = nShardsArr.length
-            var curShard = -1L
-            var curChunk = -1L
-            var buf: ByteBuffer = null
-            var cells: Array[String] = null // string values: vlen inner chunks
-            val shardData = new java.io.ByteArrayOutputStream()
-            val index = new Array[Long](nInner * 2)
-            val stats = Array.newBuilder[ChunkBounds]
-            def flushChunk(): Unit = if (curChunk >= 0L) {
-              // bounds per INNER chunk — the scan's pruning granularity
-              if (statsOnSerSh)
-                stats += (if (isStrValue) stringBoundsRecord(curChunk, cells, geomSer)
-                          else chunkBoundsRecord(curChunk, dt, buf, geomSer, statsIntSerSh))
-              val raw =
-                if (isStrValue) ZarrStoreWriter.vlenEncode(cells) else buf.array()
-              val enc = v3CfgsSer.foldLeft(raw)((b, cfg) => ZarrCodecV3.encode(cfg, b, math.max(dt.itemSize, 1)))
-              // within-shard inner ordinal from the GLOBAL chunk ordinal
-              val cIdx = new Array[Int](rank)
-              var rem = curChunk
-              var d = rank - 1
-              while (d >= 0) { cIdx(d) = (rem % nChunksArr(d)).toInt; rem /= nChunksArr(d); d -= 1 }
-              var w = 0L
-              var k = 0
-              while (k < rank) { w += (cIdx(k) % innerPerArr(k)).toLong * innerStrides(k); k += 1 }
-              index(2 * w.toInt) = shardData.size().toLong
-              index(2 * w.toInt + 1) = enc.length.toLong
-              shardData.write(enc)
-            }
-            def flushShard(): Unit = if (curShard >= 0L) {
-              flushChunk()
-              curChunk = -1L
-              val ib = ByteBuffer.allocate(nInner * 16).order(ByteOrder.LITTLE_ENDIAN)
-              var i = 0
-              while (i < nInner * 2) { ib.putLong(i * 8, index(i)); i += 1 }
-              val idxBytes = ZarrCodecV3.encode("""{"name": "crc32c"}""", ib.array(), math.max(dt.itemSize, 1))
-              val sIdx = new Array[Int](rank)
-              var rem = curShard
-              var d = rank - 1
-              while (d >= 0) { sIdx(d) = (rem % nShardsArr(d)).toInt; rem /= nShardsArr(d); d -= 1 }
-              ZarrFileIO.writeBytes(
-                new HPath(arrayDirStr, "c/" + sIdx.mkString("/")),
-                executorOpts,
-                shardData.toByteArray ++ idxBytes
-              )
-              shardData.reset()
-            }
-            while (rows.hasNext) {
-              val r = rows.next()
-              val s = writeOrdinal(r, "zarr sink")
-              val c = r.getLong(1)
-              if (s != curShard) {
-                flushShard()
-                curShard = s
-                java.util.Arrays.fill(index, -1L) // 2^64-1: missing inner chunk
-              }
-              if (c != curChunk) {
-                flushChunk()
-                curChunk = c
-                if (isStrValue) {
-                  if (cells == null) cells = new Array[String](elems)
-                  java.util.Arrays.fill(cells.asInstanceOf[Array[AnyRef]], fillStrSer)
-                } else {
-                  if (buf == null) buf = ByteBuffer.allocate(elems * dt.itemSize).order(order)
-                  if (fill == 0.0) java.util.Arrays.fill(buf.array(), 0.toByte)
-                  else { var i = 0; while (i < elems) { ZDtype.put(dt, buf, i, fill); i += 1 } }
-                }
-              }
-              if (isStrValue) {
-                val v = r.getString(3)
-                cells(r.getLong(2).toInt) = if (v == null) fillStrSer else v
-              } else putCell(dt, buf, r.getLong(2).toInt, r.get(3), rCheck, rMin, rMax, dtypeStr)
-            }
-            flushShard()
-            stats.result().iterator
+        val layout =
+          new ZarrFragments.Layout(dt, elems, isStrValue, fill, fillStrSer, structFillSer, nChunksArr, innerPerArr)
+        val shardStatsRdd = ZarrFragments.shuffle(prepared, layout, cellPut, parts, "zarr sink").mapPartitions { frags =>
+          val rank = nShardsArr.length
+          var curShard = -1L
+          val shardData = new java.io.ByteArrayOutputStream()
+          val index = new Array[Long](nInner * 2)
+          val stats = Array.newBuilder[ChunkBounds]
+          def addChunk(chunk: Long, cells: ZarrFragments.ChunkCells): Unit = {
+            // bounds per INNER chunk — the scan's pruning granularity
+            if (statsOnSer)
+              stats += (if (isStrValue) stringBoundsRecord(chunk, cells.strs, geomSer)
+                        else chunkBoundsRecord(chunk, dt, cells.buf, geomSer, statsIntSer))
+            val raw =
+              if (isStrValue) ZarrStoreWriter.vlenEncode(cells.strs) else cells.buf.array()
+            val enc = v3CfgsSer.foldLeft(raw)((b, cfg) => ZarrCodecV3.encode(cfg, b, math.max(dt.itemSize, 1)))
+            // within-shard inner ordinal from the GLOBAL chunk ordinal
+            val cIdx = new Array[Int](rank)
+            var rem = chunk
+            var d = rank - 1
+            while (d >= 0) { cIdx(d) = (rem % nChunksArr(d)).toInt; rem /= nChunksArr(d); d -= 1 }
+            var w = 0L
+            var k = 0
+            while (k < rank) { w += (cIdx(k) % innerPerArr(k)).toLong * innerStrides(k); k += 1 }
+            index(2 * w.toInt) = shardData.size().toLong
+            index(2 * w.toInt + 1) = enc.length.toLong
+            shardData.write(enc)
           }
+          def flushShard(): Unit = if (curShard >= 0L) {
+            val ib = ByteBuffer.allocate(nInner * 16).order(ByteOrder.LITTLE_ENDIAN)
+            var i = 0
+            while (i < nInner * 2) { ib.putLong(i * 8, index(i)); i += 1 }
+            val idxBytes = ZarrCodecV3.encode("""{"name": "crc32c"}""", ib.array(), math.max(dt.itemSize, 1))
+            val sIdx = new Array[Int](rank)
+            var rem = curShard
+            var d = rank - 1
+            while (d >= 0) { sIdx(d) = (rem % nShardsArr(d)).toInt; rem /= nShardsArr(d); d -= 1 }
+            ZarrFileIO.writeBytes(
+              new HPath(arrayDirStr, "c/" + sIdx.mkString("/")),
+              executorOpts,
+              shardData.toByteArray ++ idxBytes
+            )
+            shardData.reset()
+          }
+          ZarrFragments.foreachChunk(frags, layout) { (s, c, cells) =>
+            if (s != curShard) {
+              flushShard()
+              curShard = s
+              java.util.Arrays.fill(index, -1L) // 2^64-1: missing inner chunk
+            }
+            addChunk(c, cells)
+          }
+          flushShard()
+          stats.result().iterator
+        }
         finishStats(shardStatsRdd)
     }
 

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into `private[sql]` Column/Expression conversions (the supported
   * pattern for third-party Catalyst expressions on Spark 4's split Column). */
@@ -29,4 +30,8 @@ object GraftBridge {
     * (`private[spark]` LiveListenerBus), so counters read afterwards are
     * complete without sleeping. */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** A DataFrame over `plan` in `df`'s session (`private[sql]` ofRows). */
+  def ofRows(df: DataFrame, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession], plan)
 }

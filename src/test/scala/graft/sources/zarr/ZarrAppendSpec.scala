@@ -2,7 +2,7 @@ package graft.sources.zarr
 
 import graft.SparkTester
 import graft.sources.Coord
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1077,6 +1077,84 @@ class ZarrAppendSpec extends AnyFunSuite with SparkTester {
     }
     assert(msgOf(e).contains("is not in the declared labels"), msgOf(e))
     assert(read(root).count() == 4)
+  }
+
+  test("an append deletes objects a failed batch left in its slab, chunked and sharded (realign too)") {
+    // a batch over s 0-3 only of an 8-wide s axis: the cells t >= 8, s >= 4
+    // have no rows and must read the fill 0, whatever an earlier failed
+    // batch left there. The left objects are copied from a store of the
+    // same layout holding 999 everywhere past the committed extent.
+    def frame(t0: Int, t1: Int, s1: Int, value: Column) =
+      spark.range(t0, t1).selectExpr("cast(id as int) as t")
+        .crossJoin(spark.range(0, s1).selectExpr("cast(id as int) as s"))
+        .withColumn("value", value)
+    val truth = (col("t") * 8 + col("s")).cast("long")
+    def store(root: String, opts: Map[String, String], extent: Int, ghostFrom: Int): Unit = {
+      frame(0, extent, 8, truth).write.format("zarr").option("path", root).option("array", "v").options(opts)
+        .mode("overwrite").save()
+      frame(0, 12, 8, when(col("t") >= ghostFrom, lit(999L)).otherwise(truth)).write.format("zarr")
+        .option("path", s"$root-ghost").option("array", "v").options(opts).mode("overwrite").save()
+    }
+    def plant(root: String, key: String): Unit =
+      Files.copy(
+        java.nio.file.Paths.get(s"$root-ghost", "v", key),
+        Files.createDirectories(java.nio.file.Paths.get(root, "v", key).getParent).resolve(key.split('/').last)
+      )
+    def check(root: String, extent: Int, opts: Map[String, String]): Unit = {
+      var w = frame(extent, 12, 4, truth).write.format("zarr").option("path", root).option("array", "v")
+        .option("append.dim", "t")
+      opts.foreach { case (k, v) => w = w.option(k, v) }
+      w.mode("append").save()
+      val rows = read(root).collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2))).toMap
+      assert(rows.size == 96, root)
+      for (t <- 0 until 12; s <- 0 until 8) {
+        val want = if (t >= extent && s >= 4) 0L else t * 8L + s
+        assert(rows((t, s)) == want, s"$root cell ($t, $s)")
+      }
+    }
+    val base = Files.createTempDirectory("zarrappslab").toString
+    // chunked v2: chunk 2.1 covers t 8-11, s 4-7
+    store(s"$base/v2", Map("chunks" -> "4,4"), 8, 8)
+    plant(s"$base/v2", "2.1")
+    check(s"$base/v2", 8, Map.empty)
+    // sharded v3: shard c/2/1 holds the same cells in 2x2 inner chunks
+    val sharded = Map("zarr_format" -> "3", "chunks" -> "2,2", "shards" -> "4,4")
+    store(s"$base/v3", sharded, 8, 8)
+    plant(s"$base/v3", "c/2/1")
+    check(s"$base/v3", 8, Map.empty)
+    // realign: the extent (6) is mid-shard, so the tail shard c/1/1 holds
+    // committed cells (t 4-5) beside the failed batch's (t 6-7); it is
+    // rewritten with the committed ones only
+    store(s"$base/realign", sharded, 6, 6)
+    Files.delete(java.nio.file.Paths.get(s"$base/realign", "v", "c", "1", "1"))
+    plant(s"$base/realign", "c/1/1")
+    plant(s"$base/realign", "c/2/1")
+    check(s"$base/realign", 6, Map("append.realign" -> "true"))
+    // the same with dot-separated v3 keys (c.2.1): the slab's slots are
+    // deleted, and the tail row's objects probed, by key
+    def dotted(root: String): Unit = {
+      val top = java.nio.file.Paths.get(root)
+      Files.list(top).toArray.map(_.asInstanceOf[java.nio.file.Path]).filter(a => Files.isDirectory(a.resolve("c"))).foreach { arr =>
+        val objs = Files.walk(arr.resolve("c")).toArray.map(_.asInstanceOf[java.nio.file.Path]).filter(Files.isRegularFile(_))
+        objs.foreach(o => Files.move(o, arr.resolve(arr.relativize(o).toString.replace('/', '.'))))
+      }
+      Files.walk(top).toArray.map(_.asInstanceOf[java.nio.file.Path]).filter(_.getFileName.toString == "zarr.json")
+        .foreach(j => Files.writeString(j, Files.readString(j).replaceAll("\"separator\"\\s*:\\s*\"/\"", "\"separator\": \".\"")))
+    }
+    Seq("dot" -> 8, "dotrealign" -> 6).foreach { case (name, extent) =>
+      val root = s"$base/$name"
+      store(root, sharded, extent, extent)
+      dotted(root)
+      dotted(s"$root-ghost")
+      if (extent == 6) {
+        Files.delete(java.nio.file.Paths.get(root, "v", "c.1.1"))
+        plant(root, "c.1.1")
+      }
+      plant(root, "c.2.1")
+      assert(new ZarrStore(root, Map.empty, None, None).arrayMeta("v").keySeparator == ".")
+      check(root, extent, if (extent == 6) Map("append.realign" -> "true") else Map.empty)
+      assert(Files.exists(java.nio.file.Paths.get(root, "v", "c.2.0")), name)
+    }
   }
 }
 

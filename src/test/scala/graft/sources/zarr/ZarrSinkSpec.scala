@@ -5,7 +5,7 @@ import java.nio.file.Files
 import graft.SparkTester
 import graft.api.{ZarrDataReader, ZarrScan}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.{GraftBridge, Row}
 import org.apache.spark.sql.functions._
@@ -17,17 +17,24 @@ import org.scalatest.funsuite.AnyFunSuite
   * the high-cardinality guard, and unsigned write targets. */
 class ZarrSinkSpec extends AnyFunSuite with SparkTester {
 
-  /** What the body ran: its Spark job count and the physical plans of the
-    * SQL executions it started (initial and every adaptive re-plan). The
-    * bus is drained before and after, so nothing is missed and nothing
-    * earlier leaks in. */
-  private final case class Observed(jobs: Int, plans: Seq[String])
+  /** What the body ran: its Spark job count, the shuffle bytes and
+    * records its tasks wrote, and the physical plans of the SQL executions
+    * it started (initial and every adaptive re-plan). The bus is drained
+    * before and after, so nothing is missed and nothing earlier leaks in. */
+  private final case class Observed(jobs: Int, shuffleBytes: Long, shuffleRecords: Long, plans: Seq[String])
 
   private def observe(body: => Unit): Observed = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val shuffleRecords = new java.util.concurrent.atomic.AtomicLong(0L)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(jobStart: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit =
+        Option(taskEnd.taskMetrics).foreach { m =>
+          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+        }
       override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
         case e: SparkListenerSQLExecutionStart => plans.add(e.physicalPlanDescription)
         case e: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(e.physicalPlanDescription)
@@ -41,7 +48,7 @@ class ZarrSinkSpec extends AnyFunSuite with SparkTester {
       GraftBridge.drainListeners(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
-    Observed(jobs.get(), plans.asScala.toSeq)
+    Observed(jobs.get(), shuffleBytes.get(), shuffleRecords.get(), plans.asScala.toSeq)
   }
 
   private def countJobs(body: => Unit): Int = observe(body).jobs
@@ -705,6 +712,40 @@ class ZarrSinkSpec extends AnyFunSuite with SparkTester {
     (0 until 8).foreach(i => assert(back2(i).getLong(1) == 1700000000L + i, s"i=$i"))
   }
 
+  test("pre-1582 timestamps: value cells, struct fields and the time axis store internal micros and read back exact") {
+    val base = Files.createTempDirectory("zarrsinkjulian").toString
+    // instants before the 1582 Gregorian cutover, where java.sql.Timestamp
+    // and Spark's proleptic calendar disagree, beside later ones
+    def frame(days: Seq[String]) =
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(days.map(Row(_)), 1),
+        StructType(Seq(StructField("d", StringType)))
+      ).select(to_timestamp(col("d")).as("t"))
+    def micros(df: org.apache.spark.sql.DataFrame, cols: String*): Set[Seq[Long]] =
+      df.select(cols.map(c => unix_micros(col(c))): _*).collect().map(r => cols.indices.map(r.getLong)).toSet
+    val days = Seq("1000-01-01 00:00:00", "1500-03-01 06:30:00", "1582-10-01 12:00:00", "1900-01-01 00:00:00")
+    val moreDays = Seq("1950-06-01 00:00:00", "2000-01-01 00:00:00")
+    val first = frame(days)
+    val more = frame(moreDays)
+    first.withColumn("value", col("t")).write.format("zarr")
+      .option("path", s"$base/cell").option("array", "v").option("chunks", "2").mode("append").save()
+    more.withColumn("value", col("t")).write.format("zarr")
+      .option("path", s"$base/cell").option("array", "v").option("append.dim", "t").mode("append").save()
+    val cells = new ZarrDataReader(spark, s"$base/cell").readArray("v")
+    assert(micros(cells, "t", "value") == micros(first.union(more), "t", "t"))
+    // filter literals pushed down on the axis and on the cells' stats use
+    // the same encoding: each instant finds its one row
+    (days ++ moreDays).foreach { d =>
+      assert(cells.filter(col("t") === to_timestamp(lit(d))).count() == 1, s"t = $d")
+      assert(cells.filter(col("value") === to_timestamp(lit(d))).count() == 1, s"value = $d")
+    }
+    assert(cells.filter(col("t") >= to_timestamp(lit(days.head))).count() == 6)
+    first.withColumn("value", struct(col("t").as("at"))).write.format("zarr")
+      .option("path", s"$base/rec").option("array", "v").option("chunks", "3").mode("append").save()
+    val recs = new ZarrDataReader(spark, s"$base/rec").readArray("v").select(col("t"), col("value.at").as("at"))
+    assert(micros(recs, "t", "at") == micros(first, "t", "t"))
+  }
+
   /** `[time, lat, lon, value]` frame shaped like the benchmark's sink
     * workload: `nt` time steps from `t0` on a 32 x 32 grid. */
   private def gridFrame(t0: Int, nt: Int) = {
@@ -735,10 +776,11 @@ class ZarrSinkSpec extends AnyFunSuite with SparkTester {
     val w = observe(write(s"$base/s"))
     val a = observe(append(s"$base/s"))
     // each is one aggregate (the sink's coordinate gather; the append's new
-    // values and unmapped-row count) and one shuffled write, and under AQE
-    // each of those runs its map stage and its result as separate jobs
-    assert(w.jobs == 4, s"sink write ran ${w.jobs} jobs")
-    assert(a.jobs == 4, s"sharded append ran ${a.jobs} jobs")
+    // values and unmapped-row count), which AQE runs as a map-stage job and
+    // a result job, and one write job whose fragment shuffle is a stage of
+    // it (the row path this replaced ran 4 jobs each)
+    assert(w.jobs == 3, s"sink write ran ${w.jobs} jobs")
+    assert(a.jobs == 3, s"sharded append ran ${a.jobs} jobs")
     for ((what, o) <- Seq("write" -> w, "append" -> a)) {
       assert(o.plans.nonEmpty, s"$what started no SQL execution")
       o.plans.foreach(p => assert(!p.contains("BroadcastExchange"), s"$what plan broadcasts:\n$p"))
@@ -749,24 +791,30 @@ class ZarrSinkSpec extends AnyFunSuite with SparkTester {
     assert(back.exceptAll(want).isEmpty && want.exceptAll(back).isEmpty)
   }
 
+  /** `gridFrame(0, 12)` with every 7th cell absent, so chunks hold fill
+    * cells too, and the two layouts it is written in. */
+  private def sparseFrame =
+    gridFrame(0, 12).filter(pmod(xxhash64(col("time"), col("lat"), col("lon")), lit(7L)) =!= 0)
+  private val sparseLayouts = Seq(
+    "v2" -> Map("chunks" -> "4,16,8", "compressor" -> "zstd"),
+    "v3-sharded" -> Map(
+      "zarr_format" -> "3", "chunks" -> "4,16,8", "shards" -> "8,32,16",
+      "compressor" -> "zstd", "checksum" -> "true"
+    )
+  )
+
+  /** Every file under `root`, keyed by its path relative to it. */
+  private def objects(root: String): Map[String, Seq[Byte]] = {
+    val r = java.nio.file.Paths.get(root)
+    import scala.jdk.CollectionConverters._
+    Files.walk(r).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => r.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+  }
+
   test("sink writes identical objects at any shuffle parallelism, AQE on or off (v2, v3 sharded)") {
     val base = Files.createTempDirectory("zarrsinkpar").toString
-    // sparse: every 7th cell absent, so chunks hold fill cells too
-    val df = gridFrame(0, 12).filter(pmod(xxhash64(col("time"), col("lat"), col("lon")), lit(7L)) =!= 0)
-    val layouts = Seq(
-      "v2" -> Map("chunks" -> "4,16,8", "compressor" -> "zstd"),
-      "v3-sharded" -> Map(
-        "zarr_format" -> "3", "chunks" -> "4,16,8", "shards" -> "8,32,16",
-        "compressor" -> "zstd", "checksum" -> "true"
-      )
-    )
-    def objects(root: String): Map[String, Seq[Byte]] = {
-      val r = java.nio.file.Paths.get(root)
-      import scala.jdk.CollectionConverters._
-      Files.walk(r).iterator().asScala.filter(Files.isRegularFile(_))
-        .map(p => r.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
-    }
-    for ((layout, opts) <- layouts) {
+    val df = sparseFrame
+    for ((layout, opts) <- sparseLayouts) {
       val stores = for (parts <- Seq(1, 7); aqe <- Seq("true", "false")) yield {
         val dir = s"$base/$layout-$parts-$aqe"
         val prior = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled").map(k => k -> spark.conf.get(k))
@@ -781,6 +829,94 @@ class ZarrSinkSpec extends AnyFunSuite with SparkTester {
       stores.tail.foreach { case (name, got) =>
         assert(got.keySet == ref.keySet, s"$layout $name vs $refName keys")
         got.foreach { case (k, bytes) => assert(bytes == ref(k), s"$layout $name vs $refName: $k differs") }
+      }
+    }
+  }
+
+  test("fragment shuffle: fewer bytes than one row per cell on the sparse frame, <= 4.5 B per dense f4 cell") {
+    val base = Files.createTempDirectory("zarrsinkshuffle").toString
+    // shuffle write bytes of the same writes on the row path this replaced
+    // (one [chunk, local, value] row, or [shard, chunk, local, value], per
+    // cell; 10561 rows each), measured in this suite's session
+    val rowPath = Map("v2" -> 109205L, "v3-sharded" -> 114191L)
+    for ((layout, opts) <- sparseLayouts) {
+      val o = observe(
+        sparseFrame.write.format("zarr").option("path", s"$base/$layout").option("array", "tas").options(opts)
+          .mode("overwrite").save()
+      )
+      assert(o.shuffleBytes <= rowPath(layout), s"$layout: ${o.shuffleBytes} shuffle bytes")
+    }
+    // dense f4: each cell's 4 value bytes plus its presence bit, little else
+    val dense = gridFrame(0, 64)
+    val cells = 64L * 32 * 32
+    val o = observe(
+      dense.write.format("zarr").option("path", s"$base/dense").option("array", "tas")
+        .option("chunks", "16,16,16").option("compressor", "zstd").mode("overwrite").save()
+    )
+    // the row path moved 9.31 B per cell of this frame
+    assert(o.shuffleBytes <= 4.5 * cells, s"dense f4: ${o.shuffleBytes.toDouble / cells} shuffle bytes per cell")
+  }
+
+  test("fragments past the open-fragment bound write the objects sorted input does (v2, v3 sharded, vlen, struct)") {
+    val base = Files.createTempDirectory("zarrsinkbound").toString
+    // 96^3 cells in (8, 32, 32) chunks: 108 chunks, every one touched by
+    // the one map task from its first rows on when the rows are scattered
+    val n = 96L
+    def cells(ids: org.apache.spark.sql.DataFrame) = ids.select(
+      (col("id") / (n * n)).cast("int").as("t"),
+      (col("id") / n % n).cast("int").as("y"),
+      (col("id") % n).cast("int").as("x"),
+      col("id")
+    )
+    val ids = spark.range(0, n * n * n, 1, 1).toDF()
+    val grid = cells(ids)
+    // the same cells, scattered: id -> id * 2654435761 mod 96^3 is a
+    // bijection (the factor is odd and not a multiple of 3), and a
+    // projection, not a sort the write could drop
+    val scattered = cells(ids.select(pmod(col("id") * 2654435761L, lit(n * n * n)).as("id")))
+    val values = Seq(
+      ("v2-f8", (col("id") * 0.5 - 7).as("value"), 8, Map("chunks" -> "8,32,32", "compressor" -> "zstd")),
+      (
+        "v3-sharded-f8",
+        (col("id") * 0.5 - 7).as("value"),
+        8,
+        Map("zarr_format" -> "3", "chunks" -> "8,32,32", "shards" -> "16,64,64", "compressor" -> "zstd")
+      ),
+      ("v2-vlen", concat(lit("s"), (col("id") % 100003).cast("string")).as("value"), 14, Map("chunks" -> "8,32,32")),
+      (
+        "v2-struct",
+        struct((col("id") * 0.25).as("a"), (col("id") % 1000).cast("int").as("b")).as("value"),
+        12,
+        Map("chunks" -> "8,32,32")
+      )
+    )
+    for ((name, value, bytesPerCell, opts) <- values) {
+      // every chunk open at once would take more than the bound allows
+      assert(n * n * n * bytesPerCell > ZarrFragments.MaxOpenBytes, name)
+      def frame(cells: org.apache.spark.sql.DataFrame) = cells.select(col("t"), col("y"), col("x"), value)
+      def write(dir: String, df: org.apache.spark.sql.DataFrame): Observed =
+        observe(df.write.format("zarr").option("path", dir).option("array", "v").options(opts).mode("overwrite").save())
+      def same(x: String, y: String): Unit = {
+        val (a, b) = (objects(s"$base/$name-$x"), objects(s"$base/$name-$y"))
+        assert(a.size > 8 && a.keySet == b.keySet, s"$name $x vs $y: ${a.keySet} vs ${b.keySet}")
+        a.foreach { case (k, bytes) => assert(bytes == b(k), s"$name $x vs $y: $k differs") }
+      }
+      val sorted = write(s"$base/$name-sorted", frame(grid))
+      val shuffled = write(s"$base/$name-shuffled", frame(scattered))
+      // sorted rows fill one chunk row at a time: one fragment per chunk;
+      // scattered rows outgrow the bound and emit fragments early
+      assert(
+        sorted.shuffleRecords < shuffled.shuffleRecords,
+        s"$name: ${sorted.shuffleRecords} vs ${shuffled.shuffleRecords} shuffle records"
+      )
+      same("sorted", "shuffled")
+      if (name == "v2-f8") {
+        // a sort on top of the frame is dropped, not run for the write:
+        // the scattered rows reach the packer as they are, with no extra job
+        val resorted = write(s"$base/$name-resorted", frame(scattered).sort("t", "y", "x"))
+        assert(resorted.jobs == shuffled.jobs, s"${resorted.jobs} vs ${shuffled.jobs} jobs")
+        assert(resorted.shuffleRecords == shuffled.shuffleRecords)
+        same("sorted", "resorted")
       }
     }
   }

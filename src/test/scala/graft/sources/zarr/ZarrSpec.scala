@@ -1307,4 +1307,98 @@ class ZarrSpec extends AnyFunSuite with SparkTester {
     // the reference's s3:// spelling maps onto Hadoop's s3a connector
     assert(ZarrFileIO.toPath("s3://bucket/store.zarr").toString == "s3a://bucket/store.zarr")
   }
+
+  test("executor options ship only the driver's non-default Hadoop settings") {
+    val key = "graft.test.executor.option"
+    val hc = spark.sparkContext.hadoopConfiguration
+    val default = new org.apache.hadoop.conf.Configuration()
+    // a key whose default is set: left as is, it is not shipped
+    val unchanged = "fs.permissions.umask-mode"
+    val site = "graft.test.site.option"
+    assert(hc.getRaw(unchanged) == default.getRaw(unchanged))
+    hc.set(key, "driver-value")
+    try {
+      val opts = ZarrFileIO.executorOptions(Map("region" -> "eu-west-1"))
+      assert(opts(key) == "driver-value")
+      assert(opts("fs.s3a.endpoint.region") == "eu-west-1")
+      // a value from a site file (the test classpath's core-site.xml) ships:
+      // an executor's classpath need not hold that file
+      assert(default.get(site) == "from-site")
+      assert(opts.get(site).contains("from-site"))
+      assert(!opts.contains(unchanged), opts.keys.toSeq.sorted.mkString(", "))
+      assert(opts.size < 64, s"${opts.size} entries shipped")
+      // an executor thread has no active session: conf rebuilds from the map
+      var seen: Option[String] = None
+      val t = new Thread(() => {
+        org.apache.spark.sql.SparkSession.clearActiveSession()
+        assert(org.apache.spark.sql.SparkSession.getActiveSession.isEmpty)
+        seen = Option(ZarrFileIO.conf(opts).get(key))
+      })
+      t.start(); t.join()
+      assert(seen.contains("driver-value"))
+    } finally hc.unset(key)
+  }
+
+  test("decoders bound their output: a zlib bomb or an oversized snappy split fails keyed, small") {
+    val bean = java.lang.management.ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+    def allocated(): Long = bean.getThreadAllocatedBytes(Thread.currentThread().getId)
+    /** Writes `stored` as chunk `0.0`/`c/0/0` of a 64 KiB-chunk f8 array and
+      * reads it back: it must fail as a corrupt chunk with its key, having
+      * allocated far less than what the bytes claim to decode to. */
+    def refused(codec: String, v3: Boolean, stored: Array[Byte]): String = {
+      val root = Files.createTempDirectory("zarrbomb").toString
+      val dir =
+        if (v3) {
+          val d = ZarrStoreWriterV3.writeGroup(root)
+          ZarrStoreWriterV3.writeArray(d, "a", Vector(64, 128), Vector(64, 128), "float64", _.toDouble, codecs = Seq(codec))
+          ZarrStoreWriterV3.consolidate(d)
+          d
+        } else {
+          val d = ZarrStoreWriter.writeGroup(root)
+          ZarrStoreWriter.writeArray(d, "a", Vector(64, 128), Vector(64, 128), "<f8", _.toDouble, compressor = Some(codec))
+          ZarrStoreWriter.consolidate(d)
+          d
+        }
+      val meta = new ZarrStore(root, Map.empty, None, None).arrayMeta("a")
+      val key = meta.chunkKey(Seq(0, 0))
+      Files.write(dir.resolve("a").resolve(key), stored)
+      val before = allocated()
+      val e = intercept[ZarrCorruptChunkException] {
+        ZarrChunkIO.readChunk(dir.resolve("a").toString, meta, Seq(0, 0))
+      }
+      val used = allocated() - before
+      assert(e.chunkKey == key && e.getMessage.contains(s"'$key'"), e.getMessage)
+      assert(used < (8L << 20), s"$codec v3=$v3: decoding allocated $used B")
+      e.getMessage
+    }
+    // 64 MiB of zeros deflate to about 64 KiB; the chunk holds 64 KiB
+    val zeros = new Array[Byte](1 << 20)
+    def deflated(gzip: Boolean): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val out =
+        if (gzip) new java.util.zip.GZIPOutputStream(bos)
+        else new java.util.zip.DeflaterOutputStream(bos, new java.util.zip.Deflater(9))
+      (0 until 64).foreach(_ => out.write(zeros))
+      out.close()
+      bos.toByteArray
+    }
+    val zlib = deflated(gzip = false)
+    assert(zlib.length < (256 << 10), s"zlib bomb is ${zlib.length} B")
+    assert(refused("zlib", v3 = false, zlib).contains("inflates past the chunk's 65536 bytes"))
+    assert(refused("gzip", v3 = false, deflated(gzip = true)).contains("inflates past"))
+    assert(refused("gzip", v3 = true, deflated(gzip = true)).contains("inflates past"))
+    // blosc frame, one block, one snappy split whose header declares 1 GiB
+    val snappy = {
+      val bos = new java.io.ByteArrayOutputStream()
+      var n = 1L << 30
+      while (n >= 0x80) { bos.write(((n & 0x7f) | 0x80).toInt); n >>>= 7 }
+      bos.write(n.toInt)
+      bos.write(Array[Byte](0x0c, 1, 2, 3, 4)) // a 4-byte literal
+      bos.toByteArray
+    }
+    val frame = java.nio.ByteBuffer.allocate(16 + 4 + 4 + snappy.length).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    frame.put(2.toByte).put(1.toByte).put((2 << 5).toByte).put(1.toByte) // snappy, no shuffle, typesize 1
+    frame.putInt(65536).putInt(65536).putInt(frame.capacity()).putInt(20).putInt(snappy.length).put(snappy)
+    assert(refused("blosc", v3 = false, frame.array()).contains("blosc block 0 failed to decode"))
+  }
 }
