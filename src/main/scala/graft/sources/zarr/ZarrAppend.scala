@@ -94,7 +94,8 @@ object ZarrAppend {
 
   val BatchAttrKey = "graft:append_batch"
 
-  def append(df: DataFrame, rawOptions: Map[String, String]): Unit = {
+  def append(input: DataFrame, rawOptions: Map[String, String]): Unit = {
+    val df = ZarrSink.unsorted(input)
     val opts = rawOptions.map { case (k, v) => k.toLowerCase -> v }
     val path = opts("path")
     val array = opts("array")

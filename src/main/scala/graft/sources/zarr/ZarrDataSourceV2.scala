@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Avg, Count, CountStar, Max, Min, Sum}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.{write => cw}
 import org.apache.spark.sql.sources._
@@ -249,6 +250,11 @@ class ZarrWriteBuilder(info: cw.LogicalWriteInfo) extends cw.WriteBuilder
   }
 }
 
+/** Pushdown for one Zarr scan: dim predicates, columns, LIMIT, top-N and
+  * aggregates. Aggregates follow one rule: complete from metadata (a
+  * [[ZarrLocalAggScan]]), partial in the reader (a [[ZarrScan]] whose
+  * [[ZarrAggReader]] emits one row per partition and group); casts to
+  * integral types only under ANSI; float sums stay with Spark. */
 class ZarrScanBuilder(
     store: ZarrStore,
     meta: ZarrArrayMeta,
@@ -272,6 +278,10 @@ class ZarrScanBuilder(
   private var required: StructType = fullSchema
   private var pushedLimit: Option[Int] = None
   private var plannedAgg: Option[(StructType, Array[InternalRow])] = None
+  private var partialAgg: Option[PartialAgg] = None
+  // the session's ANSI mode at planning: a pushed integral sum raises on
+  // overflow under it and wraps without it, as Spark's own sum does
+  private val ansi = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled
 
   // ---- chunk-statistics (zone-map) pruning state. The stats doc is only
   // honored when its chunk-grid size and value domain match the array as
@@ -926,13 +936,19 @@ class ZarrScanBuilder(
 
   override def pushedFilters(): Array[Filter] = accepted
 
-  // ---- aggregate pushdown: COUNT/MIN/MAX over dimension columns are pure
-  // metadata — the grid geometry (kept-index sets) and the driver-resident
-  // coordinate values answer them without opening a single chunk. Spark only
-  // offers an Aggregation when every filter was absorbed (no residuals), so
-  // the kept sets already reflect all predicates and the answer is exact.
-  // The result ships as a [[LocalScan]]: zero tasks, zero chunk reads — the
-  // zarr analog of answering count(*) from parquet footer row counts.
+  // ---- aggregate pushdown, one rule: complete from metadata, partial in
+  // the reader; casts only under ANSI; float sums stay with Spark. Spark
+  // only offers an Aggregation when every filter was absorbed (no
+  // residuals), so the kept sets already reflect all predicates.
+  //  - Complete: COUNT/MIN/MAX over dimension columns are pure metadata —
+  //    the grid geometry (kept-index sets) and the driver-resident
+  //    coordinate values answer them without opening a single chunk, as
+  //    chunk stats answer value extremes and counts on full selections. The
+  //    result ships as a [[LocalScan]]: zero tasks, zero chunk reads — the
+  //    zarr analog of answering count(*) from parquet footer row counts.
+  //  - Partial ([[planPartial]]): COUNT, MIN/MAX and integral SUM over cell
+  //    values, grouped by eager dims; [[ZarrAggReader]] folds each decoded
+  //    run into one row per (partition, group) and Spark merges them.
 
   /** Iterate the kept global indices of dim d in kept order. */
   private def keptForeach(d: Int)(f: Int => Unit): Unit = {
@@ -1392,15 +1408,74 @@ class ZarrScanBuilder(
     try planAggregate(agg)
     catch { case _: ArithmeticException => None }
 
+  /** Plan a partial aggregate the reader computes per (partition, group):
+    * COUNT(*), COUNT/MIN/MAX of a value column or an eager dim, and SUM of
+    * an integral value or of a value cast to an integral type, grouped by
+    * eager dims. None when anything else is asked: a float sum depends on
+    * the order of its additions, so it stays with Spark, as does a cast
+    * that could fail without ANSI mode. */
+  private def planPartial(agg: Aggregation): Option[PartialAgg] = {
+    import org.apache.spark.sql.connector.expressions.{Cast => V2Cast, Expression => V2Expr}
+    if (pushedLimit.isDefined || topNPushed) return None
+    val groupDims = agg.groupByExpressions.toVector.map(e => singleField(e).flatMap(eagerDim).getOrElse(return None))
+    // group slots are keyed by a long over the group dims' kept positions
+    if (groupDims.map(d => BigInt(keep(d).length)).product > Long.MaxValue) return None
+    val cols = effValueCols
+    def column(e: V2Expr): Option[Int] =
+      singleField(e).map(n => cols.indexWhere(_._1 == n)).filter(k => k >= 0 && ZarrPartialAgg.foldable(cols(k)._2.zdtype.code))
+    def operand(e: V2Expr): Option[AggOperand] = e match {
+      case c: V2Cast =>
+        column(c.expression()).filter { k =>
+          val from = cols(k)._2.valueType
+          ZarrPartialAgg.integralType(c.dataType()) && (ansi || ZarrPartialAgg.widening(from, c.dataType()))
+        }.map(AggOperand.Value(_, Some(c.dataType())))
+      case _ =>
+        singleField(e).flatMap(eagerDim).map(AggOperand.Dim(_)).orElse(column(e).map(AggOperand.Value(_, None)))
+    }
+    def typeOf(o: AggOperand): DataType = o match {
+      case AggOperand.Dim(d) => fullSchema(meta.dims(d)).dataType
+      case AggOperand.Value(k, cast) => cast.getOrElse(cols(k)._2.valueType)
+    }
+    val fns: Vector[PartialFn] = agg.aggregateExpressions.toVector.map {
+      case f: CountStar => PartialFn.CountAll(StructField(f.toString, LongType, nullable = false))
+      case f: Count if !f.isDistinct =>
+        operand(f.column) match {
+          // a label axis may carry null labels; its count stays with Spark
+          case Some(AggOperand.Dim(d)) if dimNullable(d) => return None
+          case Some(o) => PartialFn.Count(o, StructField(f.toString, LongType, nullable = false))
+          case None => return None
+        }
+      case f: Sum if !f.isDistinct =>
+        operand(f.column) match {
+          case Some(v: AggOperand.Value) if ZarrPartialAgg.integralType(typeOf(v)) =>
+            PartialFn.Sum(v, StructField(f.toString, LongType, nullable = true))
+          case _ => return None
+        }
+      case f: Min =>
+        val o = operand(f.column).getOrElse(return None)
+        PartialFn.Extreme(o, min = true, StructField(f.toString, typeOf(o), nullable = true))
+      case f: Max =>
+        val o = operand(f.column).getOrElse(return None)
+        PartialFn.Extreme(o, min = false, StructField(f.toString, typeOf(o), nullable = true))
+      case _ => return None
+    }
+    val schema = StructType(groupDims.map(d => fullSchema(meta.dims(d))) ++ fns.map(_.out))
+    val by = if (groupDims.isEmpty) "" else groupDims.map(meta.dims(_)).mkString(" by [", ", ", "]")
+    Some(PartialAgg(groupDims, fns, ansi, schema, fns.map(_.out.name).mkString("[", ", ", "]") + by))
+  }
+
   override def supportCompletePushDown(agg: Aggregation): Boolean = {
     if (plannedAgg.isEmpty) plannedAgg = planAggregateSafe(agg)
     plannedAgg.isDefined
   }
 
-  override def pushAggregation(agg: Aggregation): Boolean = {
-    if (plannedAgg.isEmpty) plannedAgg = planAggregateSafe(agg)
-    plannedAgg.isDefined
-  }
+  /** Spark asks [[supportCompletePushDown]] first: what it answers from
+    * metadata ships complete, anything else is tried as a partial aggregate. */
+  override def pushAggregation(agg: Aggregation): Boolean =
+    plannedAgg.isDefined || {
+      partialAgg = planPartial(agg)
+      partialAgg.isDefined
+    }
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
@@ -1432,7 +1507,8 @@ class ZarrScanBuilder(
         (if (valueCols.isEmpty) Seq("value" -> meta) else valueCols)
           .map { case (n, m) => (n, store.arrayDir(m.name), m) },
       pruner = buildStatsPruner(),
-      streaming = streamDim.map(sd => (store, sd))
+      streaming = streamDim.map(sd => (store, sd)),
+      partialAgg = partialAgg
     )
   }
 }
@@ -1608,7 +1684,9 @@ class ZarrScan(
     // ranges may safely cover pruned ordinals
     pruner: Option[ZarrChunkStats.Pruner] = None,
     // readStream: (driver-side store handle, growing append dim)
-    streaming: Option[(ZarrStore, String)] = None
+    streaming: Option[(ZarrStore, String)] = None,
+    // a partially pushed aggregate: the scan emits its partial rows
+    partialAgg: Option[PartialAgg] = None
 ) extends Scan
     with Batch
     with SupportsRuntimeFiltering
@@ -1643,7 +1721,10 @@ class ZarrScan(
     )
   }
 
-  override def readSchema(): StructType = required
+  override def readSchema(): StructType = partialAgg.fold(required)(_.schema)
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    ZarrScanMetrics.supported
 
   /** Exact row count and a byte estimate from plan-time geometry: rows are
     * the kept-set cross product (pushdown already applied), bytes are rows
@@ -1652,10 +1733,18 @@ class ZarrScan(
     * 100 TB store correctly reports as broadcast-able instead of inheriting
     * the conservative "huge relation" default. */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val rows: Long = curKeep.map(_.length.toLong).product
-    private val bytesPerRow: Long =
-      valueColumns.map { case (_, _, m) => math.max(m.zdtype.itemSize, 1).toLong }.sum +
-        8L * sel.outDims.length
+    // a partial aggregate emits at most one row per group and partition;
+    // its group count is the estimate
+    private val rows: Long = partialAgg match {
+      case Some(a) => a.groupDims.map(d => curKeep(d).length.toLong).product
+      case None => curKeep.map(_.length.toLong).product
+    }
+    private val bytesPerRow: Long = partialAgg match {
+      case Some(a) => 8L * a.schema.length
+      case None =>
+        valueColumns.map { case (_, _, m) => math.max(m.zdtype.itemSize, 1).toLong }.sum +
+          8L * sel.outDims.length
+    }
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(rows)
     override def sizeInBytes(): java.util.OptionalLong =
       java.util.OptionalLong.of(math.max(1L, rows * bytesPerRow))
@@ -1668,7 +1757,8 @@ class ZarrScan(
       s"cells=${curKeep.map(_.length.toLong).product}" +
       limitCells.map(n => s", limit=$n").getOrElse("") +
       pruner.map(p => s", statsPruned=${p.describe}").getOrElse("") +
-      s", schema=${required.fieldNames.mkString(",")})"
+      partialAgg.map(a => s", partialAgg=${a.describe}").getOrElse("") +
+      s", schema=${readSchema().fieldNames.mkString(",")})"
 
   override def toBatch: Batch = this
 
@@ -1688,8 +1778,10 @@ class ZarrScan(
     * pushdown cap; past it the refinement is skipped, not wrong. */
   private val maxRuntimeKept = 1 << 22
 
+  // a partial aggregate's output holds no dim column to filter on
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    sel.outDims.collect {
+    if (partialAgg.isDefined) Array.empty
+    else sel.outDims.collect {
       case d if !coords(d).isInstanceOf[Coord.Deferred] =>
         org.apache.spark.sql.connector.expressions.Expressions.column(meta.dims(d))
     }.toArray
@@ -1815,6 +1907,14 @@ class ZarrScan(
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
+    val parts = chunkPartitions()
+    // a global partial aggregate over no cells still owes Spark its one
+    // identity row (count 0, the rest null)
+    if (parts.isEmpty && partialAgg.exists(_.groupDims.isEmpty)) Array(ZarrInputPartition(0L, 0L))
+    else parts
+  }
+
+  private def chunkPartitions(): Array[InputPartition] = {
     val rank = meta.rank
     if (rank == 0) return Array(ZarrInputPartition(0L, 1L))
     if (dimRuns.exists(_.nRuns == 0)) return Array.empty
@@ -1877,7 +1977,15 @@ class ZarrScan(
     // None inside tasks, so credentials set via spark.hadoop.* would
     // otherwise never reach executor-side chunk reads (cluster mode; local
     // mode masks it by sharing the JVM)
-    if (multi)
+    if (partialAgg.isDefined)
+      new ZarrAggReaderFactory(
+        valueColumns,
+        ZarrFileIO.executorOptions(storageOptions),
+        syncedState(),
+        pruner,
+        partialAgg.get
+      )
+    else if (multi)
       new ZarrMultiReaderFactory(
         valueColumns,
         arrayDir,
@@ -1994,6 +2102,8 @@ class ZarrMultiReaderFactory(
         n
       }
       override def get(): InternalRow = out
+      override def currentMetricsValues(): Array[CustomTaskMetric] =
+        ZarrScanMetrics.values(leader.chunksRead + followers.map(_.chunksRead).sum)
       override def close(): Unit = {
         leader.close()
         followers.foreach(_.close())
@@ -2036,6 +2146,8 @@ class ZarrMultiReaderFactory(
         n
       }
       override def get(): ColumnarBatch = batch
+      override def currentMetricsValues(): Array[CustomTaskMetric] =
+        ZarrScanMetrics.values(leader.chunksRead + followers.map(_.chunksRead).sum)
       override def close(): Unit = {
         leader.close()
         followers.foreach(_.close())
@@ -2108,6 +2220,9 @@ abstract class ZarrCursor(
     * per-chunk derived state (e.g. inner-run contiguity). */
   protected var chunkGen: Long = 0L
 
+  /** Value chunks this cursor has read (the `chunksRead` scan metric). */
+  private[zarr] var chunksRead: Long = 0L
+
   private def advanceChunk(): Boolean = {
     val prunerLocal = pruner.orNull
     while (ordinal < partition.end) {
@@ -2115,6 +2230,7 @@ abstract class ZarrCursor(
       if (rank == 0) {
         if (emittedScalar) return false
         buf = if (needValue) ZarrChunkIO.readChunk(arrayDir, meta, Seq.empty, storageOptions) else None
+        if (needValue) chunksRead += 1
         havePos = true
         emittedScalar = true
         ordinal += 1
@@ -2139,6 +2255,7 @@ abstract class ZarrCursor(
       if (prunerLocal == null || !prunerLocal.skip(chunkIdx)) {
         buf =
           if (needValue) ZarrChunkIO.readChunk(arrayDir, meta, chunkIdx.toSeq, storageOptions) else None
+        if (needValue) chunksRead += 1
         java.util.Arrays.fill(pos, 0)
         havePos = true
         return true
@@ -2290,6 +2407,9 @@ class ZarrRowReader(
   }
 
   override def get(): InternalRow = row
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    ZarrScanMetrics.values(chunksRead)
 
   override def close(): Unit = ()
 }
@@ -2626,6 +2746,9 @@ class ZarrColumnarReader(
   }
 
   override def get(): ColumnarBatch = batch
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    ZarrScanMetrics.values(chunksRead)
 
   override def close(): Unit = batch.close()
 }

@@ -4,9 +4,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sort}
 import org.apache.spark.unsafe.Platform
 
 /** The shuffle every Zarr write loop ([[ZarrSink]]'s chunked, vlen-string
@@ -203,27 +202,11 @@ private[zarr] object ZarrFragments {
       what: String,
       touch: Seq[Long] = Nil
   ): RDD[Fragment] = {
-    val packed = unsorted(prepared).queryExecution.toRdd.mapPartitions(rows => new Packer(rows, layout, put, what))
+    val packed = prepared.queryExecution.toRdd.mapPartitions(rows => new Packer(rows, layout, put, what))
     val all =
       if (touch.isEmpty) packed
       else packed.union(packed.sparkContext.parallelize(touch.map(s => ((s, -1L), Array.emptyByteArray)), 1))
     all.repartitionAndSortWithinPartitions(new ShardPartitioner(parts))
-  }
-
-  /** `df` without the sorts under its deterministic projections and
-    * filters: the objects written do not depend on row order, so a frame
-    * sorted before the write is not sorted for it (the optimizer drops a
-    * sort under a repartition the same way). */
-  private def unsorted(df: DataFrame): DataFrame = {
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case s: Sort => strip(s.child)
-      case q: Project if q.projectList.forall(_.deterministic) => q.copy(child = strip(q.child))
-      case f: Filter if f.condition.deterministic => f.copy(child = strip(f.child))
-      case other => other
-    }
-    val plan = df.queryExecution.analyzed
-    val bare = strip(plan)
-    if (bare.fastEquals(plan)) df else GraftBridge.ofRows(df, bare)
   }
 
   /** Sends each shard (the key's first half) to one reduce task. */

@@ -412,7 +412,26 @@ object ZarrSink {
     case other => throw new IllegalArgumentException(s"zarr sink: bad timestamp value $other")
   }
 
-  def write(df: DataFrame, rawOptions: Map[String, String], overwrite: Boolean): Unit = {
+  /** `df` without the sorts under its deterministic projections and
+    * filters: the objects written do not depend on row order, so a frame
+    * sorted before the write is not sorted for it (the optimizer drops a
+    * sort under a repartition the same way, but not under the write's own
+    * passes: the coordinate gather's aggregate would still run it). */
+  private[zarr] def unsorted(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sort}
+    def strip(p: LogicalPlan): LogicalPlan = p match {
+      case s: Sort => strip(s.child)
+      case q: Project if q.projectList.forall(_.deterministic) => q.copy(child = strip(q.child))
+      case f: Filter if f.condition.deterministic => f.copy(child = strip(f.child))
+      case other => other
+    }
+    val plan = df.queryExecution.analyzed
+    val bare = strip(plan)
+    if (bare.fastEquals(plan)) df else GraftBridge.ofRows(df, bare)
+  }
+
+  def write(input: DataFrame, rawOptions: Map[String, String], overwrite: Boolean): Unit = {
+    val df = unsorted(input)
     val opts = rawOptions.map { case (k, v) => k.toLowerCase -> v }
     def required(k: String): String =
       opts.getOrElse(k, throw new IllegalArgumentException(s"zarr sink requires option '$k'"))

@@ -111,6 +111,8 @@ class PlanContractsSpec extends AnyFunSuite with SparkTester {
   private def planOf(name: String): SparkPlan =
     finalPhysical(SparkEntry.queries(name)(spark, sfTiny))
 
+  private def planOf(df: DataFrame): SparkPlan = finalPhysical(df)
+
   test("checker meta-test: deliberately broken contracts fail") {
     // a real cartesian: force it by disabling broadcast thresholds
     val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -177,6 +179,23 @@ class PlanContractsSpec extends AnyFunSuite with SparkTester {
       case other => other.isInstanceOf[BatchScanExec]
     }
     assert(overScan, p.toString)
+  }
+
+  test("scan-full shapes: a final HashAggregate over a partial-aggregate BatchScan, no ColumnarToRow") {
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.functions.{count, max, min}
+    val root = graft.sources.zarr.ScanFullStore.write(spark)
+    val reader = new graft.api.ZarrDataReader(spark, root)
+    for ((name, shape) <- graft.sources.zarr.ScanFullStore.shapes) {
+      val p = planOf(shape(reader))
+      checkContract(name, p, required = Seq("HashAggregate"), forbidden = Seq("ColumnarToRow"))
+      val finals = allNodes(p).collect { case h: HashAggregateExec if h.aggregateExpressions.forall(_.mode == org.apache.spark.sql.catalyst.expressions.aggregate.Final) => h }
+      val scans = finals.flatMap(allNodes).collect { case b: BatchScanExec => b.scan.description() }
+      assert(finals.nonEmpty && scans.nonEmpty && scans.forall(_.contains("partialAgg=[")), s"$name:\n$p")
+    }
+    // select-interactive's "meta" query: value extremes and count from stats
+    checkContract("meta", planOf(reader.readArray("tas").agg(min("value"), max("value"), count("value"))),
+      required = Seq("LocalTableScan"), forbidden = Seq("BatchScan"), maxHashExchanges = 0)
   }
 
   test("x51_repetition: per-row fold, corpus never shuffles") {

@@ -9,10 +9,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
-/** Aggregate pushdown: COUNT/MIN/MAX over dimension columns must resolve to
-  * a metadata-only LocalScan (zero tasks, zero chunk reads), and anything
-  * touching the value column or unsupported functions must fall back to the
-  * chunk scan — with identical results either way. */
+/** Aggregate pushdown. What metadata answers (COUNT/MIN/MAX over dimension
+  * columns, value counts and extremes from chunk stats) resolves to a
+  * metadata-only LocalScan (zero tasks, zero chunk reads). COUNT, MIN/MAX
+  * and integral SUM over cell values push partially: the scan emits one
+  * row per (partition, group) and Spark merges them. Float sums, and
+  * anything else, stay with Spark. Each pushed answer is checked against
+  * the same aggregate under a residual value predicate that holds for every
+  * cell, which keeps the aggregate in Spark (the oracle): same rows, or the
+  * same error condition. */
 class ZarrAggPushdownSpec extends AnyFunSuite with SparkTester {
 
   private lazy val root: String = {
@@ -33,6 +38,38 @@ class ZarrAggPushdownSpec extends AnyFunSuite with SparkTester {
   private def df: DataFrame = new ZarrDataReader(spark, root).readArray("temperature")
 
   private def planOf(d: DataFrame): String = d.queryExecution.executedPlan.toString
+
+  private def assertPartial(d: DataFrame): Unit = {
+    val p = planOf(d)
+    assert(p.contains("BatchScan") && p.contains("partialAgg="), s"expected a partial aggregate scan, got:\n$p")
+  }
+
+  /** The deepest Spark error condition in `t`'s cause chain. */
+  private def conditionOf(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq.collect {
+      case s: org.apache.spark.SparkThrowable if s.getCondition != null => s.getCondition
+    }.lastOption.getOrElse(t.toString)
+
+  /** Rows as strings (so -0.0 differs from 0.0), sorted; or the error. */
+  private def outcome(d: DataFrame): Either[String, Seq[String]] =
+    try Right(d.collect().map(_.toString).toSeq.sorted)
+    catch { case e: Exception => Left(conditionOf(e)) }
+
+  /** `agg` over `d` pushes partially and answers exactly what the oracle
+    * answers: the same aggregate under a residual predicate on `valueCol`
+    * that holds for every cell (-Inf, NaN and null too, which a bound such
+    * as `value > -1e9f` would drop) and that no rule can push or fold. */
+  private def assertPushedMatches(d: DataFrame, valueCol: String = "value")(
+      agg: DataFrame => DataFrame
+  ): Either[String, Seq[String]] = {
+    val pushed = agg(d)
+    val oracle = agg(d.filter(coalesce(length(col(valueCol).cast("string")) > 0, lit(true))))
+    assertPartial(pushed)
+    assert(!planOf(oracle).contains("partialAgg="), planOf(oracle))
+    val got = outcome(pushed)
+    assert(got == outcome(oracle), planOf(pushed))
+    got
+  }
 
   private def assertMetadataOnly(d: DataFrame): Unit = {
     val p = planOf(d)
@@ -83,10 +120,21 @@ class ZarrAggPushdownSpec extends AnyFunSuite with SparkTester {
   }
 
   test("aggregates over the value column fall back to the chunk scan") {
+    // a float sum depends on the order of its additions, and stddev has no
+    // partial form here: both stay with Spark over the plain chunk scan
+    for (q <- Seq(df.agg(sum("value"), count("*")), df.agg(stddev("value"), count("*")))) {
+      assert(planOf(q).contains("BatchScan") && !planOf(q).contains("partialAgg="), planOf(q))
+      assert(q.collect().head.getLong(1) == 1800L)
+    }
+  }
+
+  test("value-column COUNT/MIN/MAX/integral SUM push partially") {
     val q = df.agg(min("value"), count("*"))
-    assert(planOf(q).contains("BatchScan"))
+    assertPartial(q)
     val r = q.collect().head
-    assert(r.getLong(1) == 1800L)
+    assert(r.getFloat(0) == 280.0f && r.getLong(1) == 1800L)
+    assertPushedMatches(df)(_.agg(min("value"), count("*")))
+    assertPushedMatches(df)(_.groupBy("time").agg(max("value"), sum(col("value").cast("long")), max("lat")))
   }
 
   test("empty pushed selection: count 0, min/max null, grouped empty") {
@@ -307,5 +355,174 @@ class ZarrAggPushdownSpec extends AnyFunSuite with SparkTester {
     val degraded = rd().agg(count("value"))
     assert(planOf(degraded).contains("BatchScan"))
     assert(degraded.collect().head.getLong(0) == 175L)
+  }
+
+  /** A `v` of `dtype` over (t, y, x) = (6, 5, 7) in ragged (4, 2, 3)
+    * chunks, chunk 1.1.1 deleted (it reads as the fill, or as null when
+    * `fill` is None). `t` repeats values, `y` holds 0.0, -0.0 and NaN (group
+    * keys Spark normalizes), `x` has no coordinate array (positional). */
+  private def dtypeStore(dtype: String, fill: Option[Double])(value: Long => Double): DataFrame = {
+    val r = Files.createTempDirectory("zarraggdt").toString
+    val dir = ZarrStoreWriter.writeGroup(r)
+    ZarrStoreWriter.writeArray(
+      dir, "v", Vector(6, 5, 7), Vector(4, 2, 3), dtype, value,
+      dims = Some(Vector("t", "y", "x")), fillValue = fill
+    )
+    ZarrStoreWriter.writeCoord(dir, "t", Coord.Ints(Array(0, 0, 1, 2, 2, 3)))
+    ZarrStoreWriter.writeCoord(dir, "y", Coord.Floats(Array(0f, -0f, Float.NaN, 1.5f, 0f)))
+    Files.delete(dir.resolve("v").resolve("1.1.1"))
+    new ZarrDataReader(spark, r).readArray("v")
+  }
+
+  private val groupings = Seq(Nil, Seq("t"), Seq("x"), Seq("t", "y"), Seq("y", "x"))
+
+  test("partial pushdown matches Spark on every numeric dtype, fill and missing chunks") {
+    val integral = Seq(
+      ("|i1", (f: Long) => (f % 200 - 100).toDouble),
+      ("|u1", (f: Long) => (f * 7 % 256).toDouble),
+      ("<i2", (f: Long) => (f * 37 % 60000 - 30000).toDouble),
+      ("<u2", (f: Long) => (f * 37 % 65536).toDouble),
+      ("<i4", (f: Long) => (f * 7919 % 2000000000L - 1000000000L).toDouble),
+      ("<u4", (f: Long) => (f * 7919 % 4000000000L).toDouble),
+      ("<i8", (f: Long) => (f * 1000000007L - 100000000000L).toDouble),
+      (">i2", (f: Long) => (f * 37 % 60000 - 30000).toDouble),
+      (">u4", (f: Long) => (f * 7919 % 4000000000L).toDouble),
+      (">i8", (f: Long) => (f * 1000000007L - 100000000000L).toDouble)
+    )
+    for ((dtype, gen) <- integral; fill <- Seq(Some(3.0), None)) {
+      val d = dtypeStore(dtype, fill)(gen)
+      for (g <- groupings)
+        withClue(s"$dtype fill=$fill by $g: ") {
+          assertPushedMatches(d)(_.groupBy(g.map(col): _*).agg(
+            count(lit(1)), count("value"), sum("value"), min("value"), max("value"), avg("value"),
+            max("y"), min("x"), sum(col("value").cast("long"))
+          ))
+        }
+    }
+    // floats carry -0.0 next to 0.0, so MIN/MAX must keep Spark's first-seen
+    // choice between equal values; casts truncate toward zero
+    val floats = Seq(
+      ("<f2", (f: Long) => if (f % 11 == 5) -0.0 else ((f % 50) - 25) * 0.5),
+      ("<f4", (f: Long) => if (f % 11 == 5) -0.0 else ((f % 997) - 500) * 0.25),
+      ("<f8", (f: Long) => if (f % 11 == 5) -0.0 else ((f % 997) - 500) * 0.375),
+      (">f4", (f: Long) => if (f % 11 == 5) -0.0 else ((f % 997) - 500) * 0.25),
+      (">f8", (f: Long) => if (f % 11 == 5) -0.0 else ((f % 997) - 500) * 0.375)
+    )
+    for ((dtype, gen) <- floats; fill <- Seq(Some(1.5), None)) {
+      val d = dtypeStore(dtype, fill)(gen)
+      for (g <- groupings)
+        withClue(s"$dtype fill=$fill by $g: ") {
+          assertPushedMatches(d)(_.groupBy(g.map(col): _*).agg(
+            count(lit(1)), count("value"), min("value"), max("value"),
+            sum(col("value").cast("long")), sum(col("value").cast("int")), avg(col("value").cast("short")),
+            max(col("value").cast("byte")), min("t"), max("y")
+          ))
+        }
+    }
+  }
+
+  test("NaN and infinities: MIN/MAX order them like Spark, casts fail alike") {
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 1e30)) {
+      val d = dtypeStore("<f4", Some(0.0))(f => if (f == 17L) bad else f.toDouble)
+      withClue(s"$bad: ") {
+        val extremes = assertPushedMatches(d)(_.groupBy("t").agg(min("value"), max("value"), count("value")))
+        assert(extremes.isRight)
+        val cast = assertPushedMatches(d)(_.agg(count(lit(1)), sum(col("value").cast("long"))))
+        assert(cast == Left("CAST_OVERFLOW"), cast)
+        // a cell the aggregate does not read raises nothing
+        assert(assertPushedMatches(d)(_.filter(col("t") > 0).agg(sum(col("value").cast("long")))).isRight)
+      }
+    }
+    // a value inside the range of long but not of int fails only the int cast
+    val big = dtypeStore("<f8", Some(0.0))(f => if (f == 17L) 3e9 else f.toDouble)
+    assert(assertPushedMatches(big)(_.agg(sum(col("value").cast("long")))).isRight)
+    assert(assertPushedMatches(big)(_.agg(sum(col("value").cast("int")))) == Left("CAST_OVERFLOW"))
+  }
+
+  test("integral SUM overflow fails alike under ANSI, wraps alike without it") {
+    // every cell is 2^62: any two of them overflow a long, in any order
+    val d = dtypeStore("<i8", Some(4.611686018427387904e18))(_ => 4.611686018427387904e18)
+    assert(assertPushedMatches(d)(_.agg(sum("value"))) == Left("ARITHMETIC_OVERFLOW"))
+    assert(assertPushedMatches(d)(_.groupBy("x").agg(sum("value"))) == Left("ARITHMETIC_OVERFLOW"))
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val wrapped = assertPushedMatches(d)(_.groupBy("t").agg(sum("value"), count(lit(1))))
+      assert(wrapped.isRight && wrapped.toOption.get.nonEmpty)
+      assert(assertPushedMatches(d)(_.agg(sum("value"))).isRight)
+    } finally spark.conf.set("spark.sql.ansi.enabled", "true")
+  }
+
+  test("without ANSI, Spark offers no narrowing cast and the plan stays the chunk scan") {
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val q = df.agg(count(lit(1)), sum(col("value").cast("long")))
+      q.collect()
+      val p = planOf(q)
+      assert(p.contains("BatchScan") && !p.contains("partialAgg="), p)
+      assert(p.contains("ColumnarToRow"), p)
+      // a cast that cannot fail is still offered, and pushes
+      val ints = dtypeStore("<i4", Some(0.0))(f => f.toDouble)
+      assertPushedMatches(ints)(_.agg(sum(col("value").cast("long")), max(col("value").cast("long"))))
+    } finally spark.conf.set("spark.sql.ansi.enabled", "true")
+  }
+
+  test("aligned arrays fold in lockstep, each with its own missing chunks and fill") {
+    val r = Files.createTempDirectory("zarraggaligned").toString
+    val dir = ZarrStoreWriter.writeGroup(r)
+    ZarrStoreWriter.writeArray(
+      dir, "a", Vector(6, 5, 7), Vector(4, 2, 3), "<f4", f => ((f % 97) - 40) * 0.5,
+      dims = Some(Vector("t", "y", "x")), fillValue = Some(2.0)
+    )
+    ZarrStoreWriter.writeArray(
+      dir, "b", Vector(6, 5, 7), Vector(4, 2, 3), ">i2", f => (f * 13 % 500 - 250).toDouble,
+      dims = Some(Vector("t", "y", "x")), fillValue = None
+    )
+    ZarrStoreWriter.writeCoord(dir, "t", Coord.Ints(Array(0, 0, 1, 2, 2, 3)))
+    Files.delete(dir.resolve("a").resolve("0.1.2"))
+    Files.delete(dir.resolve("b").resolve("1.0.0"))
+    val d = new ZarrDataReader(spark, r).readAligned(Seq("a", "b"))
+    for (g <- Seq(Nil, Seq("t"), Seq("x")))
+      withClue(s"by $g: ") {
+        assertPushedMatches(d, "a")(_.groupBy(g.map(col): _*).agg(
+          count(lit(1)), sum(col("a").cast("long")), max("a"), count("b"), sum("b"), min("b"), max("y")
+        ))
+        assertPushedMatches(d, "b")(_.groupBy(g.map(col): _*).agg(count("b"), sum("b"), count(lit(1))))
+      }
+    // pushed index sets with gaps: inner runs are not contiguous, so their
+    // cells are gathered one by one
+    val picked = d.filter(col("x").isin(0, 2, 3, 6) && col("y").isin(1, 4))
+    for (g <- Seq(Nil, Seq("x")))
+      assertPushedMatches(picked, "a")(_.groupBy(g.map(col): _*).agg(
+        count(lit(1)), sum(col("a").cast("long")), min("b"), max("x"), max("a")
+      ))
+  }
+
+  test("an empty selection still answers a global partial aggregate") {
+    val q = df.filter(col("time") > 100).agg(count(lit(1)), sum(col("value").cast("long")), max("value"))
+    assertPartial(q)
+    val r = q.collect().head
+    assert(r.getLong(0) == 0L && r.isNullAt(1) && r.isNullAt(2))
+    assertPushedMatches(df.filter(col("time") > 100))(_.agg(count(lit(1)), sum(col("value").cast("long"))))
+    assert(df.filter(col("time") > 100).groupBy("time").agg(sum(col("value").cast("long"))).collect().isEmpty)
+  }
+
+  test("scan metrics: chunks read, cells aggregated and partial rows reach the executed plan") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val helper = new AdaptiveSparkPlanHelper {}
+    def scanMetrics(q: DataFrame): Map[String, Long] = {
+      q.collect()
+      helper.collect(q.queryExecution.executedPlan) { case b: BatchScanExec => b }
+        .head.metrics.map { case (k, v) => k -> v.value }
+    }
+    // 2 x 2 x 2 chunks of 6 x 5 x 8 cells
+    val pushed = scanMetrics(df.groupBy("time").agg(sum(col("value").cast("long"))))
+    assert(pushed("chunksRead") == 8L && pushed("cellsAggregated") == 1800L, pushed)
+    assert(pushed("partialRows") == pushed("numOutputRows") && pushed("partialRows") >= 12L, pushed)
+    val rows = scanMetrics(df.filter(col("value") > 0f).select("value"))
+    assert(rows("chunksRead") == 8L && rows("cellsAggregated") == 0L && rows("partialRows") == 0L, rows)
+    val fmt = df.groupBy("time").agg(sum(col("value").cast("long"))).queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(fmt.contains("partialAgg=[SUM(CAST(value AS long))] by [time]"), fmt)
   }
 }

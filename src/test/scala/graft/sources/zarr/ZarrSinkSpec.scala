@@ -791,6 +791,37 @@ class ZarrSinkSpec extends AnyFunSuite with SparkTester {
     assert(back.exceptAll(want).isEmpty && want.exceptAll(back).isEmpty)
   }
 
+  test("a globally sorted frame writes and appends in the unsorted frame's jobs and objects") {
+    val base = Files.createTempDirectory("zarrsinksorted").toString
+    val order = Seq(col("value").desc, col("lon"), col("lat"), col("time"))
+    def write(dir: String, df: org.apache.spark.sql.DataFrame): Observed =
+      observe(
+        df.write.format("zarr")
+          .option("path", dir).option("array", "tas")
+          .option("zarr_format", "3").option("chunks", "4,16,16").option("shards", "8,32,32")
+          .option("compressor", "zstd").option("checksum", "true")
+          .mode("overwrite").save()
+      )
+    def append(dir: String, df: org.apache.spark.sql.DataFrame): Observed =
+      observe(
+        df.write.format("zarr")
+          .option("path", dir).option("array", "tas").option("append.dim", "time")
+          .mode("append").save()
+      )
+    write(s"$base/warm", gridFrame(0, 16).orderBy(order: _*))
+    append(s"$base/warm", gridFrame(16, 8).orderBy(order: _*))
+    val plain = (write(s"$base/plain", gridFrame(0, 16)), append(s"$base/plain", gridFrame(16, 8)))
+    val sorted = (
+      write(s"$base/sorted", gridFrame(0, 16).orderBy(order: _*)),
+      append(s"$base/sorted", gridFrame(16, 8).orderBy(order: _*))
+    )
+    assert(plain._1.jobs == 3 && sorted._1.jobs == 3, s"write jobs: ${plain._1.jobs} plain, ${sorted._1.jobs} sorted")
+    assert(plain._2.jobs == 3 && sorted._2.jobs == 3, s"append jobs: ${plain._2.jobs} plain, ${sorted._2.jobs} sorted")
+    val (a, b) = (objects(s"$base/plain"), objects(s"$base/sorted"))
+    assert(a.size > 8 && a.keySet == b.keySet, s"${a.keySet} vs ${b.keySet}")
+    a.foreach { case (k, bytes) => assert(bytes == b(k), s"$k differs") }
+  }
+
   /** `gridFrame(0, 12)` with every 7th cell absent, so chunks hold fill
     * cells too, and the two layouts it is written in. */
   private def sparseFrame =
