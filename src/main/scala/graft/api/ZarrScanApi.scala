@@ -19,7 +19,16 @@ import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
   * until the next JVM. Zarr stores are conventionally written
   * immutably-by-key (write new keys, then flip metadata) — under that
   * convention, and for every store this library's own sink produces, the
-  * caches are always coherent. */
+  * caches are always coherent.
+  *
+  * Partitioning: with `chunkTargetCells` unset (the default), a scan walks
+  * its chunks in ranges of 2^18 live cells and merges consecutive ranges
+  * into partitions of up to max(2^18, ⌈live cells / P⌉) cells, where P is
+  * `spark.sql.leafNodeDefaultParallelism` (else the context's default
+  * parallelism), and of at most `spark.sql.files.maxPartitionBytes`
+  * decoded row bytes — about one partition per core, as Spark sizes file
+  * splits. An explicit `chunkTargetCells` still wins: one partition per
+  * that many live cells (the `partition.target.cells` option). */
 object ZarrScan {
 
   private[api] def selToOption(s: DimSel): String = s match {
@@ -37,13 +46,13 @@ object ZarrScan {
       group: Option[String],
       consolidated: Option[Boolean],
       selectDims: Map[String, DimSel],
-      chunkTargetCells: Long
+      chunkTargetCells: Option[Long]
   ): DataFrameReader = {
     var r = spark.read
       .format("zarr")
       .option("path", storePath)
       .option("array", arrayName)
-      .option("partition.target.cells", chunkTargetCells)
+    chunkTargetCells.foreach(t => r = r.option("partition.target.cells", t))
     group.foreach(g => r = r.option("group", g))
     consolidated.foreach(c => r = r.option("consolidated", c))
     storageOptions.foreach { case (k, v) => r = r.option(s"storage.$k", v) }
@@ -61,7 +70,7 @@ object ZarrScan {
       group: Option[String] = None,
       consolidated: Option[Boolean] = None,
       selectDims: Map[String, DimSel] = Map.empty,
-      chunkTargetCells: Long = 1L << 18
+      chunkTargetCells: Option[Long] = None
   ): Either[DataFrame, Map[String, DataFrame]] =
     arrayName match {
       case Some(a) =>
@@ -115,7 +124,7 @@ final class ZarrDataReader(
     storageOptions: Map[String, String] = Map.empty,
     group: Option[String] = None,
     consolidated: Option[Boolean] = None,
-    chunkTargetCells: Long = 1L << 18
+    chunkTargetCells: Option[Long] = None
 ) {
   private val store = new ZarrStore(storePath, storageOptions, group, consolidated)
 
@@ -145,7 +154,7 @@ final class ZarrDataReader(
       .format("zarr")
       .option("path", storePath)
       .option("arrays", names.mkString(","))
-      .option("partition.target.cells", chunkTargetCells)
+    chunkTargetCells.foreach(t => r = r.option("partition.target.cells", t))
     group.foreach(g => r = r.option("group", g))
     consolidated.foreach(c => r = r.option("consolidated", c))
     storageOptions.foreach { case (k, v) => r = r.option(s"storage.$k", v) }

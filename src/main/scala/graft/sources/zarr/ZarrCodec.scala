@@ -1,6 +1,7 @@
 package graft.sources.zarr
 
 import java.io.ByteArrayOutputStream
+import java.lang.invoke.MethodHandles
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.{Deflater, DeflaterOutputStream, GZIPInputStream, GZIPOutputStream, InflaterInputStream}
 
@@ -480,14 +481,40 @@ object Blosc {
     while (t < len) { dst(t) = src(t); t += 1 }
   }
 
-  /** Inverse of [[shuffleBytes]] over one block. */
+  // bounds-checked little-endian word views of a byte array
+  private val IntLE = MethodHandles.byteArrayViewVarHandle(classOf[Array[Int]], ByteOrder.LITTLE_ENDIAN)
+  private val LongLE = MethodHandles.byteArrayViewVarHandle(classOf[Array[Long]], ByteOrder.LITTLE_ENDIAN)
+
+  /** Inverse of [[shuffleBytes]] over one block. Typesizes 4 and 8 go
+    * element-major: each byte plane is read once, in order, and each
+    * element is written as one word. */
   private[zarr] def unshuffle(typesize: Int, src: Array[Byte], bsize: Int, dst: Array[Byte], dstOff: Int): Unit = {
     val nel = bsize / typesize
-    var j = 0
-    while (j < typesize) {
+    if (typesize == 4) {
       var i = 0
-      while (i < nel) { dst(dstOff + i * typesize + j) = src(j * nel + i); i += 1 }
-      j += 1
+      while (i < nel) {
+        val w = (src(i) & 0xff) | (src(nel + i) & 0xff) << 8 | (src(2 * nel + i) & 0xff) << 16 |
+          src(3 * nel + i) << 24
+        IntLE.set(dst, dstOff + 4 * i, w)
+        i += 1
+      }
+    } else if (typesize == 8) {
+      var i = 0
+      while (i < nel) {
+        val lo = (src(i) & 0xff) | (src(nel + i) & 0xff) << 8 | (src(2 * nel + i) & 0xff) << 16 |
+          src(3 * nel + i) << 24
+        val hi = (src(4 * nel + i) & 0xff) | (src(5 * nel + i) & 0xff) << 8 | (src(6 * nel + i) & 0xff) << 16 |
+          src(7 * nel + i) << 24
+        LongLE.set(dst, dstOff + 8 * i, (lo & 0xffffffffL) | hi.toLong << 32)
+        i += 1
+      }
+    } else {
+      var j = 0
+      while (j < typesize) {
+        var i = 0
+        while (i < nel) { dst(dstOff + i * typesize + j) = src(j * nel + i); i += 1 }
+        j += 1
+      }
     }
     var t = nel * typesize
     while (t < bsize) { dst(dstOff + t) = src(t); t += 1 }

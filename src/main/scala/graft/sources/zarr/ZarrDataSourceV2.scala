@@ -153,7 +153,8 @@ object ZarrTable {
     val sel: Map[String, DimSel] = meta.dims.flatMap { d =>
       Option(options.get(s"select.$d")).map(v => d -> parseDimSel(v))
     }.toMap
-    val targetCells = Option(options.get("partition.target.cells")).map(_.toLong).getOrElse(1L << 18)
+    // unset: partitions are sized to the session's parallelism at planning
+    val targetCells = Option(options.get("partition.target.cells")).map(_.toLong)
     // dims longer than this never materialize coordinate values on the
     // driver — executors decode coordinate chunks per ordinal range
     val coordThreshold =
@@ -171,7 +172,7 @@ class ZarrTable(
     store: ZarrStore,
     meta: ZarrArrayMeta,
     baseSel: Map[String, DimSel],
-    targetCells: Long,
+    targetCells: Option[Long],
     coordThreshold: Int = Int.MaxValue,
     extras: Seq[ZarrArrayMeta] = Nil,
     streamDim: Option[String] = None,
@@ -261,7 +262,7 @@ class ZarrScanBuilder(
     base: ResolvedSelection,
     coords: Vector[Coord],
     fullSchema: StructType,
-    targetCells: Long,
+    targetCells: Option[Long],
     valueCols: Seq[(String, ZarrArrayMeta)] = Nil,
     streamDim: Option[String] = None,
     useStats: Boolean = true
@@ -1499,7 +1500,7 @@ class ZarrScanBuilder(
       base.copy(keep = keep),
       coords,
       required,
-      targetCells,
+      targetCells.getOrElse(ZarrInputPartition.BaseTargetCells),
       store.storageOptions,
       pushedLimit,
       deferredSpecs,
@@ -1508,7 +1509,8 @@ class ZarrScanBuilder(
           .map { case (n, m) => (n, store.arrayDir(m.name), m) },
       pruner = buildStatsPruner(),
       streaming = streamDim.map(sd => (store, sd)),
-      partialAgg = partialAgg
+      partialAgg = partialAgg,
+      fitToParallelism = targetCells.isEmpty
     )
   }
 }
@@ -1651,6 +1653,49 @@ final class CoordChunkCursor(spec: DeferredCoordSpec, storageOptions: Map[String
   * (last dim fastest) — two longs, independent of chunk count. */
 final case class ZarrInputPartition(start: Long, end: Long) extends InputPartition
 
+/** Partition sizing. The planner walks the chunk grid at a fixed grain of
+  * live cells per range; with no explicit `partition.target.cells` it then
+  * merges consecutive ranges toward one partition per core, the way Spark's
+  * file sources size splits (`FilePartition.maxSplitBytes`). Merging
+  * `[s,e)` with `[e,f)` is exact: readers re-run the same per-ordinal skip
+  * over whatever range they are given. */
+object ZarrInputPartition {
+  /** The walk's grain: 2^18 live cells, one 4x256x256 chunk. */
+  val BaseTargetCells: Long = 1L << 18
+
+  /** Spark's leaf-node parallelism: `spark.sql.leafNodeDefaultParallelism`,
+    * else the context's default parallelism. */
+  def sessionParallelism: Int =
+    org.apache.spark.sql.internal.SQLConf.get
+      .getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+      .getOrElse(org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism)
+
+  /** Cells per merged partition: at least the walk's grain, else an equal
+    * share of the live cells per core, and never more decoded bytes than
+    * `spark.sql.files.maxPartitionBytes`. */
+  def mergeTarget(liveCells: Long, parallelism: Int, grain: Long, cellBytes: Long): Long = {
+    val maxBytes = org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
+    val perCore = (liveCells + parallelism - 1) / parallelism
+    math.min(math.max(grain, perCore), math.max(1L, maxBytes / cellBytes))
+  }
+
+  /** Greedily merges consecutive ranges (`cells(i)` live cells in range i)
+    * into groups of at most `target` cells; a range larger than the target
+    * stays a group of its own, so no scan gets more partitions. */
+  def merge(ranges: Array[ZarrInputPartition], cells: Array[Long], target: Long): Array[InputPartition] = {
+    val out = scala.collection.mutable.ArrayBuffer[InputPartition]()
+    var i = 0
+    while (i < ranges.length) {
+      var j = i
+      var acc = cells(i)
+      while (j + 1 < ranges.length && acc + cells(j + 1) <= target) { j += 1; acc += cells(j) }
+      out += ZarrInputPartition(ranges(i).start, ranges(j).end)
+      i = j + 1
+    }
+    out.toArray
+  }
+}
+
 /** Mutable snapshot of the scan's run tables, shared between the scan and
   * its reader factory. BatchScanExec creates the reader factory at PHYSICAL
   * PLANNING time (its columnar-support probe forces it) — BEFORE runtime
@@ -1686,7 +1731,10 @@ class ZarrScan(
     // readStream: (driver-side store handle, growing append dim)
     streaming: Option[(ZarrStore, String)] = None,
     // a partially pushed aggregate: the scan emits its partial rows
-    partialAgg: Option[PartialAgg] = None
+    partialAgg: Option[PartialAgg] = None,
+    // no explicit `partition.target.cells`: ranges of `targetCells` merge
+    // toward one partition per core (see [[ZarrInputPartition]])
+    fitToParallelism: Boolean = false
 ) extends Scan
     with Batch
     with SupportsRuntimeFiltering
@@ -1752,9 +1800,19 @@ class ZarrScan(
 
   private def multi: Boolean = valueColumns.size > 1
 
+  // a streaming read plans its own slabs; the batch plan would only cost a
+  // walk of the whole grid per micro-batch
+  private def describePlan: String =
+    if (streaming.isDefined) ""
+    else {
+      val plan = partitionPlan
+      s", partitions=${plan.parts.length}, partitionCells=${plan.target} (" +
+        plan.parallelism.fold("partition.target.cells")(p => s"parallelism $p") + ")"
+    }
+
   override def description(): String =
     s"ZarrScan(${if (multi) valueColumns.map(_._1).mkString("+") else meta.name}, " +
-      s"cells=${curKeep.map(_.length.toLong).product}" +
+      s"cells=${curKeep.map(_.length.toLong).product}" + describePlan +
       limitCells.map(n => s", limit=$n").getOrElse("") +
       pruner.map(p => s", statsPruned=${p.describe}").getOrElse("") +
       partialAgg.map(a => s", partialAgg=${a.describe}").getOrElse("") +
@@ -1848,6 +1906,7 @@ class ZarrScan(
       curKeep = curKeep.updated(d, KeptSet.fromIndices(idx))
       dimRunsCache = null
       keptCoordsCache = null
+      planCache = null
     }
   }
 
@@ -1906,18 +1965,44 @@ class ZarrScan(
     keptCoordsCache
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val parts = chunkPartitions()
-    // a global partial aggregate over no cells still owes Spark its one
-    // identity row (count 0, the rest null)
-    if (parts.isEmpty && partialAgg.exists(_.groupDims.isEmpty)) Array(ZarrInputPartition(0L, 0L))
-    else parts
+  override def planInputPartitions(): Array[InputPartition] = partitionPlan.parts
+
+  /** The planned partitions and the cell target they were filled to;
+    * `parallelism` is the P the target came from, None when it is the
+    * scan's own `targetCells`. */
+  private final case class PartitionPlan(parts: Array[InputPartition], target: Long, parallelism: Option[Int])
+
+  // shared by description() and planInputPartitions(); runtime refinement
+  // clears it, since it re-plans
+  private var planCache: PartitionPlan = null
+
+  private def partitionPlan: PartitionPlan = {
+    if (planCache == null) {
+      val (ranges, cells) = chunkRanges()
+      val plan =
+        if (!fitToParallelism) PartitionPlan(ranges.toArray, targetCells, None)
+        else {
+          val p = ZarrInputPartition.sessionParallelism
+          val cellBytes = math.max(1L, required.defaultSize.toLong)
+          val target = ZarrInputPartition.mergeTarget(cells.sum, p, targetCells, cellBytes)
+          PartitionPlan(ZarrInputPartition.merge(ranges, cells, target), target, Some(p))
+        }
+      // a global partial aggregate over no cells still owes Spark its one
+      // identity row (count 0, the rest null)
+      planCache =
+        if (plan.parts.isEmpty && partialAgg.exists(_.groupDims.isEmpty))
+          plan.copy(parts = Array(ZarrInputPartition(0L, 0L)))
+        else plan
+    }
+    planCache
   }
 
-  private def chunkPartitions(): Array[InputPartition] = {
+  /** Ordinal ranges of about `targetCells` live cells each, with the live
+    * cells of each. */
+  private def chunkRanges(): (Array[ZarrInputPartition], Array[Long]) = {
     val rank = meta.rank
-    if (rank == 0) return Array(ZarrInputPartition(0L, 1L))
-    if (dimRuns.exists(_.nRuns == 0)) return Array.empty
+    if (rank == 0) return (Array(ZarrInputPartition(0L, 1L)), Array(1L))
+    if (dimRuns.exists(_.nRuns == 0)) return (Array.empty, Array.empty)
     val counts = dimRuns.map(_.nRuns)
     val total = counts.map(_.toLong).product
     // lazy C-order walk over run indices with an incremental cell product —
@@ -1926,7 +2011,8 @@ class ZarrScan(
     // re-runs in the readers, so ranges may cover pruned ordinals) and a
     // range that would contain ONLY pruned chunks is never emitted: `acc`
     // only grows on live chunks, and partitions only close with acc > 0.
-    val parts = scala.collection.mutable.ArrayBuffer[InputPartition]()
+    val parts = scala.collection.mutable.ArrayBuffer[ZarrInputPartition]()
+    val partCells = scala.collection.mutable.ArrayBuffer[Long]()
     val runIdx = new Array[Int](rank)
     // cells(chunk) = prod_d runLen(d, runIdx(d)); maintain per-dim factors
     val factors = Array.tabulate(rank)(d => dimRuns(d).runLen(0).toLong)
@@ -1942,6 +2028,7 @@ class ZarrScan(
         val c = cellsNow
         if (acc > 0 && acc + c > targetCells) {
           parts += ZarrInputPartition(start, ord)
+          partCells += acc
           start = ord; acc = 0L
         }
         acc += c
@@ -1952,7 +2039,8 @@ class ZarrScan(
       // limit-only query over a million-chunk store plans O(limit) work
       if (limitCells.exists(covered >= _)) {
         parts += ZarrInputPartition(start, ord)
-        return parts.toArray
+        partCells += acc
+        return (parts.toArray, partCells.toArray)
       }
       // odometer over run indices, last dim fastest; update factors in place
       var k = rank - 1
@@ -1968,8 +2056,8 @@ class ZarrScan(
     }
     // acc > 0 iff any live chunk since the last emitted range (every run has
     // >= 1 kept index, so an unpruned ordinal always contributes cells)
-    if (acc > 0) parts += ZarrInputPartition(start, total)
-    parts.toArray
+    if (acc > 0) { parts += ZarrInputPartition(start, total); partCells += acc }
+    (parts.toArray, partCells.toArray)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

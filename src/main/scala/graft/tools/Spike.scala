@@ -242,7 +242,9 @@ object Spike {
     )
     val tw = (System.nanoTime() - t0) / 1e9
     println(f"[spike] zarr-zonemap write+stats: $tw%.1fs, $total cells, ${nChunks} chunks")
-    val df = new graft.api.ZarrDataReader(spark, root).readArray("v")
+    // one partition per 2^18-cell chunk, so gate 3's partition count is the
+    // number of chunks the zone maps keep
+    val df = new graft.api.ZarrDataReader(spark, root, chunkTargetCells = Some(1L << 18)).readArray("v")
     // value*4 = c0*10000 + i%100 — integral, so long sums are exact
     val perChunkMod = 2621L * 4950 + (0 until 44).sum // sum of (i%100) over 262144 cells
     // gate 1: baseline full aggregate (sum is not pushable)

@@ -10,24 +10,25 @@ import java.nio.file.Files
 
 /** A small group shaped like the benchmark's scan-full store: f4 arrays
   * `tas` and `pr` over (time, lat, lon) with int and double coordinates,
-  * 2 x 2 x 2 chunks of 4 x 8 x 8 cells, written by the sink (so each array
-  * carries chunk stats). */
+  * by default 2 x 2 x 2 chunks of 4 x 8 x 8 cells, written by the sink (so
+  * each array carries chunk stats). Values grow with the cell's C-order
+  * index, so a value band prunes whole chunks. */
 object ScanFullStore {
   val Cells: Long = 8L * 16 * 16
 
-  def write(spark: SparkSession): String = {
+  def write(spark: SparkSession, nt: Int = 8, ny: Int = 16, nx: Int = 16, chunks: String = "4,8,8"): String = {
     val root = Files.createTempDirectory("scanfull").toString
     for ((name, salt) <- Seq("tas" -> 1L, "pr" -> 2L))
-      spark.range(0, Cells)
+      spark.range(0, nt.toLong * ny * nx)
         .select(
-          (col("id") / 256).cast("int").as("time"),
-          ((col("id") / 16).cast("long") % 16 * 0.25 - 90.0).as("lat"),
-          (col("id") % 16 * 0.25 - 180.0).as("lon"),
+          (col("id") / (ny * nx)).cast("int").as("time"),
+          ((col("id") / nx).cast("long") % ny * 0.25 - 90.0).as("lat"),
+          (col("id") % nx * 0.25 - 180.0).as("lon"),
           ((col("id") / 1024).cast("long") * 1000 + pmod(xxhash64(col("id"), lit(salt)), lit(1000L)))
             .cast("float").as("value")
         )
         .write.format("zarr")
-        .option("path", root).option("array", name).option("chunks", "4,8,8")
+        .option("path", root).option("array", name).option("chunks", chunks)
         .mode("append").save()
     root
   }
@@ -71,7 +72,7 @@ class ZarrAggParallelismSpec extends AnyFunSuite with SparkTester {
     for ((name, shape) <- ScanFullStore.shapes) {
       val answers = for ((parts, aqe) <- settings; target <- Seq(1L << 20, 256L)) yield {
         withConf("spark.sql.shuffle.partitions" -> parts, "spark.sql.adaptive.enabled" -> aqe) {
-          val q = shape(new ZarrDataReader(spark, root, chunkTargetCells = target))
+          val q = shape(new ZarrDataReader(spark, root, chunkTargetCells = Some(target)))
           val plan = q.queryExecution.executedPlan.toString
           assert(plan.contains("partialAgg="), s"$name: $plan")
           (parts, aqe, target) -> rows(q)

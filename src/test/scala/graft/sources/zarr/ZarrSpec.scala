@@ -561,7 +561,7 @@ class ZarrSpec extends AnyFunSuite with SparkTester {
     ZarrStoreWriter.writeCoord(dir, "t", Coord.Ints(Array.tabulate(12)(identity)))
     ZarrStoreWriter.consolidate(dir)
     Files.delete(java.nio.file.Paths.get(root, "b", "1.0.1")) // read as fill -3.5
-    val r = new ZarrDataReader(spark, root, chunkTargetCells = 6000)
+    val r = new ZarrDataReader(spark, root, chunkTargetCells = Some(6000L))
     // a contiguous inner range (bulk run fills: 2 chunks of 4400 cells per
     // partition) and an every-other-index list (per-cell fills: 4 chunks of
     // 1280 cells per partition)
@@ -923,6 +923,28 @@ class ZarrSpec extends AnyFunSuite with SparkTester {
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), prop)
     assert(res.passed, res.status.toString)
+  }
+
+  test("blosc unshuffle: the word kernels match the byte loop at every typesize") {
+    val rnd = new scala.util.Random(11)
+    // the reference: byte lane j of element i comes from src(j * nel + i)
+    def byteLoop(ts: Int, src: Array[Byte], bsize: Int, dst: Array[Byte], off: Int): Unit = {
+      val nel = bsize / ts
+      for (j <- 0 until ts; i <- 0 until nel) dst(off + i * ts + j) = src(j * nel + i)
+      for (t <- nel * ts until bsize) dst(off + t) = src(t)
+    }
+    for (ts <- 1 to 16; bsize <- Seq(0, ts, 7 * ts + ts / 2, 1003, 4096)) {
+      val src = Array.fill[Byte](bsize)(rnd.nextInt().toByte)
+      val off = 5 + rnd.nextInt(8)
+      val want = Array.fill[Byte](bsize + off + 3)(-1)
+      val got = want.clone()
+      byteLoop(ts, src, bsize, want, off)
+      Blosc.unshuffle(ts, src, bsize, got, off)
+      assert(got.sameElements(want), s"typesize=$ts bsize=$bsize dstOff=$off")
+    }
+    // a destination too short for the block fails instead of writing past it
+    for (ts <- Seq(3, 4, 8))
+      assertThrows[IndexOutOfBoundsException](Blosc.unshuffle(ts, new Array[Byte](64), 64, new Array[Byte](70), 8))
   }
 
   test("blosc frame internals: splits, multi-block, memcpy, shuffle inverse, rejects") {
