@@ -11,6 +11,21 @@ sealed trait Coord extends Serializable {
   def dataType: DataType
   def apply(i: Int): Any
   def length: Int
+
+  /** The values at positions `at(0) … at(n - 1)` as a coord of the same
+    * kind — the kept-aligned typed array the zarr readers index by kept
+    * position. None for Index (served arithmetically) and Deferred
+    * (decoded executor-side), which hold no driver-side values. */
+  def gather(n: Int, at: Int => Int): Option[Coord] = this match {
+    case Coord.Ints(a) => Some(Coord.Ints(Array.tabulate(n)(i => a(at(i)))))
+    case Coord.Longs(a) => Some(Coord.Longs(Array.tabulate(n)(i => a(at(i)))))
+    case Coord.Floats(a) => Some(Coord.Floats(Array.tabulate(n)(i => a(at(i)))))
+    case Coord.Doubles(a) => Some(Coord.Doubles(Array.tabulate(n)(i => a(at(i)))))
+    case Coord.Timestamps(a) => Some(Coord.Timestamps(Array.tabulate(n)(i => a(at(i)))))
+    case Coord.Strings(a) => Some(Coord.Strings(Array.tabulate(n)(i => a(at(i)))))
+    case Coord.Intervals(a) => Some(Coord.Intervals(Array.tabulate(n)(i => a(at(i)))))
+    case Coord.Index(_) | Coord.Deferred(_, _) => None
+  }
 }
 object Coord {
   final case class Ints(a: Array[Int]) extends Coord {

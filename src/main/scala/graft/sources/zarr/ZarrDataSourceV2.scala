@@ -6,6 +6,7 @@ import graft.sources.Coord
 import java.util
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.execution.GraftExecutionBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
@@ -1478,8 +1479,13 @@ class ZarrScanBuilder(
       partialAgg.isDefined
     }
 
+  // whole columns only: the readers fill whole records, so a nested
+  // projection (`value.temp`) keeps the full value type, and Spark binds
+  // the field access against the type the scan reports
   override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+    required = StructType(requiredSchema.fields.map { f =>
+      fullSchema.find(_.name == f.name).getOrElse(f)
+    })
 
   override def build(): Scan = plannedAgg match {
     case Some((aggSchema, aggRows)) =>
@@ -1948,19 +1954,7 @@ class ZarrScan(
     if (keptCoordsCache == null)
       keptCoordsCache = sel.outDims.flatMap { d =>
         val dr = dimRuns(d)
-        val n = dr.nKept
-        val aligned: Option[Coord] = coords(d) match {
-          case Coord.Ints(a) => Some(Coord.Ints(Array.tabulate(n)(i => a(dr.keptAt(i)))))
-          case Coord.Longs(a) => Some(Coord.Longs(Array.tabulate(n)(i => a(dr.keptAt(i)))))
-          case Coord.Floats(a) => Some(Coord.Floats(Array.tabulate(n)(i => a(dr.keptAt(i)))))
-          case Coord.Doubles(a) => Some(Coord.Doubles(Array.tabulate(n)(i => a(dr.keptAt(i)))))
-          case Coord.Timestamps(a) => Some(Coord.Timestamps(Array.tabulate(n)(i => a(dr.keptAt(i)))))
-          case Coord.Strings(a) => Some(Coord.Strings(Array.tabulate(n)(i => a(dr.keptAt(i)))))
-          case Coord.Intervals(a) => Some(Coord.Intervals(Array.tabulate(n)(i => a(dr.keptAt(i)))))
-          case Coord.Index(_) => None
-          case Coord.Deferred(_, _) => None
-        }
-        aligned.map(d -> _)
+        coords(d).gather(dr.nKept, dr.keptAt).map(d -> _)
       }.toMap
     keptCoordsCache
   }
@@ -2099,17 +2093,15 @@ class ZarrScan(
       )
 }
 
-/** ALIGNED multi-array reads: one reader per requested value column walks
-  * the SAME partition in lockstep. Cell iteration depends only on the
-  * shared (dims, shape, chunks, keep, pruner) state, never on which columns
-  * a reader materializes, so all cursors advance identically; any
-  * difference in the cells they yield throws. The columnar path hands
-  * Spark one `ColumnarBatch` over the readers' own vectors; only
-  * structured (`V`) values fall back to rows, copied field by field. One
-  * chunk read per array per chunk; unrequested arrays cost nothing (their
-  * reader is never built). Shard layouts may differ between arrays — each
-  * reader resolves IO through its own metadata; only the logical chunk
-  * grid must match. */
+/** ALIGNED multi-array reads: one columnar reader per requested value
+  * column walks the SAME partition in lockstep. Cell iteration depends only
+  * on the shared (dims, shape, chunks, keep, pruner) state, never on which
+  * columns a reader materializes, so all cursors advance identically; any
+  * difference in the rows they yield throws. Spark gets one `ColumnarBatch`
+  * over the readers' own vectors. One chunk read per array per chunk;
+  * unrequested arrays cost nothing (their reader is never built). Shard
+  * layouts may differ between arrays — each reader resolves IO through its
+  * own metadata; only the logical chunk grid must match. */
 class ZarrMultiReaderFactory(
     valueColumns: Seq[(String, String, ZarrArrayMeta)],
     primaryDir: String,
@@ -2135,73 +2127,10 @@ class ZarrMultiReaderFactory(
   private val byName: Map[String, (String, String, ZarrArrayMeta)] =
     valueColumns.map(vc => vc._1 -> vc).toMap
 
-  /** Opens one reader per value column: the leader reads the dims plus its
-    * value, each follower only its value (each as the reader's "value"). */
-  private def lockstep[R: scala.reflect.ClassTag](
-      open: (String, ZarrArrayMeta, StructType) => R
-  ): (R, Array[R]) = {
-    def valueField(f: StructField) = StructField("value", f.dataType, nullable = true)
-    def openFor(f: StructField, fields: Seq[StructField]): R = {
-      val (_, dir, m) = byName(f.name)
-      open(dir, m, StructType(fields :+ valueField(f)))
-    }
-    (openFor(wanted.head._1, dimIdx.map(_._1).toSeq), wanted.tail.map(w => openFor(w._1, Nil)))
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("zarr cell reads are columnar only")
 
-  private def diverged(follower: Int, lead: Any, got: Any): IllegalStateException =
-    new IllegalStateException(
-      s"aligned readers diverged (leader=$lead follower=${wanted(follower + 1)._1.name}=$got)"
-    )
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val part = partition.asInstanceOf[ZarrInputPartition]
-    def open(dir: String, m: ZarrArrayMeta, req: StructType) = new ZarrRowReader(
-      dir, m, outDims, req, part, storageOptions, state.dimRuns, state.keptCoords, deferredSpecs, pruner
-    )
-    // dims-only projection (count over coordinates): one reader, no value
-    if (wanted.isEmpty) return open(primaryDir, primaryMeta, required)
-    val (leader, followers) = lockstep(open)
-    val (leadField, leadOut) = wanted.head
-    new PartitionReader[InternalRow] {
-      private val out = new GenericInternalRow(required.length)
-      override def next(): Boolean = {
-        val n = leader.next()
-        var k = 0
-        while (k < followers.length) {
-          val fn = followers(k).next()
-          if (fn != n) throw diverged(k, n, fn)
-          k += 1
-        }
-        if (n) {
-          val lr = leader.get()
-          var i = 0
-          while (i < dimIdx.length) {
-            out.update(dimIdx(i)._2, lr.get(i, dimIdx(i)._1.dataType))
-            i += 1
-          }
-          out.update(leadOut, lr.get(dimIdx.length, leadField.dataType))
-          k = 0
-          while (k < followers.length) {
-            val (f, pos) = wanted(k + 1)
-            out.update(pos, followers(k).get().get(0, f.dataType))
-            k += 1
-          }
-        }
-        n
-      }
-      override def get(): InternalRow = out
-      override def currentMetricsValues(): Array[CustomTaskMetric] =
-        ZarrScanMetrics.values(leader.chunksRead + followers.map(_.chunksRead).sum)
-      override def close(): Unit = {
-        leader.close()
-        followers.foreach(_.close())
-      }
-    }
-  }
-
-  // same rule as ZarrReaderFactory: structured values take the row path
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    !wanted.exists { case (f, _) => byName(f.name)._3.zdtype.code == ZDtype.V }
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
     val part = partition.asInstanceOf[ZarrInputPartition]
@@ -2209,8 +2138,16 @@ class ZarrMultiReaderFactory(
       dir, m, outDims, req, part, storageOptions, state.dimRuns, state.keptCoords, deferredSpecs,
       pruner = pruner
     )
+    // dims-only projection (count over coordinates): one reader, no value
     if (wanted.isEmpty) return open(primaryDir, primaryMeta, required)
-    val (leader, followers) = lockstep(open)
+    // the leader reads the dims plus its value, each follower only its
+    // value (each as the reader's "value")
+    def openFor(f: StructField, fields: Seq[StructField]): ZarrColumnarReader = {
+      val (_, dir, m) = byName(f.name)
+      open(dir, m, StructType(fields :+ StructField("value", f.dataType, nullable = true)))
+    }
+    val leader = openFor(wanted.head._1, dimIdx.map(_._1).toSeq)
+    val followers = wanted.tail.map(w => openFor(w._1, Nil))
     // every reader refills its own vectors in place, so one batch over
     // them, in `required` order, serves the whole partition
     val lead = leader.get()
@@ -2227,7 +2164,11 @@ class ZarrMultiReaderFactory(
         while (k < followers.length) {
           val fn = followers(k).next()
           val fr = followers(k).get().numRows()
-          if (fn != n || fr != rows) throw diverged(k, s"$n/$rows rows", s"$fn/$fr rows")
+          if (fn != n || fr != rows)
+            throw new IllegalStateException(
+              s"aligned readers diverged (leader=$n/$rows rows " +
+                s"follower=${wanted(k + 1)._1.name}=$fn/$fr rows)"
+            )
           k += 1
         }
         batch.setNumRows(rows)
@@ -2244,6 +2185,8 @@ class ZarrMultiReaderFactory(
   }
 }
 
+/** Single-array cell reads: every partition is columnar (primitive vector
+  * fills; Spark appends a codegen'd ColumnarToRow). */
 class ZarrReaderFactory(
     arrayDir: String,
     meta: ZarrArrayMeta,
@@ -2255,18 +2198,9 @@ class ZarrReaderFactory(
     pruner: Option[ZarrChunkStats.Pruner] = None
 ) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ZarrRowReader(
-      arrayDir, meta, outDims, required,
-      partition.asInstanceOf[ZarrInputPartition], storageOptions, state.dimRuns, state.keptCoords,
-      deferredSpecs, pruner
-    )
+    throw new UnsupportedOperationException("zarr cell reads are columnar only")
 
-  // Columnar is the scan's fast path: primitive vector fills, no per-cell
-  // boxing or row materialization; Spark appends a codegen'd ColumnarToRow.
-  // Structured (compound) cells take the row path — per-field child-vector
-  // fills aren't worth the code for the rarest dtype family.
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    meta.zdtype.code != ZDtype.V
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(
       partition: InputPartition
@@ -2280,8 +2214,9 @@ class ZarrReaderFactory(
 
 /** Shared cell-iteration state machine: walks the partition's ordinal
   * range, loads one chunk at a time, and advances a C-order odometer over
-  * the kept positions of the current chunk. Subclasses consume cells
-  * either one row or one vector batch at a time. */
+  * the kept positions of the current chunk. [[ZarrColumnarReader]] fills
+  * vector batches from it; [[RunCursor]] steps it run by run for the
+  * partial aggregates of [[ZarrAggReader]]. */
 abstract class ZarrCursor(
     arrayDir: String,
     meta: ZarrArrayMeta,
@@ -2407,104 +2342,10 @@ abstract class ZarrCursor(
   }
 }
 
-class ZarrRowReader(
-    arrayDir: String,
-    meta: ZarrArrayMeta,
-    outDims: Vector[Int],
-    required: StructType,
-    partition: ZarrInputPartition,
-    storageOptions: Map[String, String],
-    dimRuns: Vector[DimRuns],
-    keptCoords: Map[Int, Coord],
-    deferredSpecs: Map[Int, DeferredCoordSpec] = Map.empty,
-    pruner: Option[ZarrChunkStats.Pruner] = None
-) extends ZarrCursor(
-      arrayDir, meta, partition, storageOptions, dimRuns,
-      required.fieldNames.contains("value"),
-      pruner
-    )
-    with PartitionReader[InternalRow] {
-
-  // field plan: for each required field, either a coord dim or the value
-  private val fieldPlan: Array[Either[Int, Unit]] = required.fields.map { f =>
-    if (f.name == "value") Right(())
-    else Left(outDims.find(d => meta.dims(d) == f.name).getOrElse(
-      throw new IllegalArgumentException(s"unknown field ${f.name}")
-    ))
-  }
-
-  // per-dim coordinate accessor (kept-position → Spark-internal value),
-  // bound once: eager dims index the kept-aligned array, Index dims are
-  // arithmetic, deferred dims decode coordinate chunks through a cursor
-  private val coordAt: Map[Int, Int => Any] = fieldPlan.collect { case Left(d) =>
-    val f: Int => Any = keptCoords.get(d) match {
-      case Some(c) => pos => c(pos)
-      case None =>
-        deferredSpecs.get(d) match {
-          case Some(spec) =>
-            val cur = new CoordChunkCursor(spec, storageOptions)
-            pos => cur.value(dimRuns(d).keptAt(pos))
-          case None => pos => dimRuns(d).keptAt(pos).toLong
-        }
-    }
-    d -> f
-  }.toMap
-  private val needValue = required.fieldNames.contains("value")
-  // fill value boxed ONCE as the dtype's Spark-internal value (null when the
-  // store declares no fill) — the per-cell loop never re-dispatches on dtype
-  private val fillAny: Any =
-    if (ZDtype.isString(meta.zdtype.code))
-      meta.fillValueStr.map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull
-    else if (ZDtype.isComplex(meta.zdtype.code))
-      meta.fillValue.map { re =>
-        val im = meta.fillValueIm.getOrElse(0.0)
-        if (meta.zdtype.code == ZDtype.C8)
-          new GenericInternalRow(Array[Any](re.toFloat, im.toFloat))
-        else new GenericInternalRow(Array[Any](re, im))
-      }.orNull
-    else if (meta.zdtype.code == ZDtype.V)
-      // structured fill: fillValueStr carries the base64-packed cell
-      meta.fillValueStr.map { b64 =>
-        new ZarrBuffer(java.util.Base64.getDecoder.decode(b64), meta.zdtype).getStruct(0)
-      }.orNull
-    else meta.fillValue.map(f => ZDtype.box(meta.zdtype, f)).orNull
-  private val row = new GenericInternalRow(required.length)
-
-  override def next(): Boolean = {
-    if (!nextCell()) return false
-    fillRow()
-    consumeCell()
-    true
-  }
-
-  private def fillRow(): Unit = {
-    val localFlat = if (needValue && rank > 0) currentLocalFlat else 0
-    var fi = 0
-    while (fi < fieldPlan.length) {
-      fieldPlan(fi) match {
-        case Left(d) => row.update(fi, coordAt(d)(keptPos(d)))
-        case Right(_) =>
-          val v: Any = buf match {
-            case Some(b) => b.getValue(localFlat)
-            case None => fillAny
-          }
-          row.update(fi, v)
-      }
-      fi += 1
-    }
-  }
-
-  override def get(): InternalRow = row
-
-  override def currentMetricsValues(): Array[CustomTaskMetric] =
-    ZarrScanMetrics.values(chunksRead)
-
-  override def close(): Unit = ()
-}
-
-/** Columnar fast path: fills primitive OnHeapColumnVectors batch-by-batch —
-  * no boxing, no per-cell row objects; the scan feeds whole-stage codegen
-  * through Spark's vectorized ColumnarToRow. */
+/** The cell reader of every Zarr scan and stream: fills OnHeapColumnVectors
+  * batch-by-batch — primitive puts without boxing for every dtype but
+  * structured records (one boxed record per cell); the scan feeds
+  * whole-stage codegen through Spark's vectorized ColumnarToRow. */
 class ZarrColumnarReader(
     arrayDir: String,
     meta: ZarrArrayMeta,
@@ -2564,7 +2405,24 @@ class ZarrColumnarReader(
     case ZDtype.C16 =>
       val re = vec.getChild(0); val im = vec.getChild(1)
       (b, n, flat) => { re.putDouble(n, b.getC16Re(flat)); im.putDouble(n, b.getC16Im(flat)) }
+    case ZDtype.V =>
+      val append = bindStructAppend(vec)
+      (b, _, flat) => append(b.getStruct(flat))
     case other => throw new IllegalStateException(s"bad dtype code $other")
+  }
+
+  /** Structured cells APPEND, one per row, through Spark's row-to-column
+    * converter, which fills the struct vector's field children (nested
+    * arrays for shaped fields, nulls for NaT). Rows arrive in rowId order
+    * and the batch's reset() rewinds the children too, so appends line up
+    * with the rowIds the other columns put at. */
+  private def bindStructAppend(vec: OnHeapColumnVector): Any => Unit = {
+    val append = GraftExecutionBridge.rowAppender(
+      StructType(Seq(StructField("value", vec.dataType))),
+      Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector](vec)
+    )
+    val cell = new GenericInternalRow(1)
+    v => { cell.update(0, v); append(cell) }
   }
 
   /** Missing-chunk fill: (rowId, count) constant put, bound once. */
@@ -2576,6 +2434,13 @@ class ZarrColumnarReader(
           val bts = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
           (n, c) => { var i = 0; while (i < c) { vec.putByteArray(n + i, bts); i += 1 } }
       }
+    } else if (dtCode == ZDtype.V) {
+      // the base64-packed fill record, decoded once; no fill = null cells
+      val fill = meta.fillValueStr.map { b64 =>
+        new ZarrBuffer(java.util.Base64.getDecoder.decode(b64), meta.zdtype).getStruct(0)
+      }.orNull
+      val append = bindStructAppend(vec)
+      (_, c) => { var i = 0; while (i < c) { append(fill); i += 1 } }
     } else bindFillPutNumeric(vec)
 
   private def bindFillPutNumeric(vec: OnHeapColumnVector): (Int, Int) => Unit = fillValue match {
@@ -2645,10 +2510,10 @@ class ZarrColumnarReader(
     }
 
   // one typed filler per field, bound once — the per-cell loop below is
-  // monomorphic primitive puts. Coordinate dispatch mirrors ZarrRowReader
-  // .coordAt: eager dims index the kept-aligned typed array, deferred dims
-  // decode coordinate chunks through a cursor, index dims are arithmetic
-  // (keptCoords deliberately omits the latter two — see ZarrScan.keptCoords).
+  // monomorphic primitive puts. Coordinates: eager dims index the
+  // kept-aligned typed array, deferred dims decode coordinate chunks
+  // through a cursor, index dims are arithmetic (keptCoords deliberately
+  // omits the latter two — see Coord.gather).
   private val fillers: Array[Int => Unit] = required.fields.zipWithIndex.map { case (f, fi) =>
     val vec = vectors(fi)
     if (f.name == "value") {

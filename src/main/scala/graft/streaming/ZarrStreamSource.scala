@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** Structured-Streaming zarr source: micro-batch reads over a GROWING
   * append dimension (`option("stream.dim", "time")`) — the sensor/forecast
@@ -27,9 +28,14 @@ import org.apache.spark.sql.types.StructType
   * store keeps growing".
   */
 object ZarrStreamOffset {
+  /** A checkpointed offset back to its extent; an offset without one (a
+    * damaged or foreign checkpoint) throws rather than replaying the whole
+    * array from extent 0. */
   def parse(json: String): ZarrStreamOffset = {
-    val m = """"extent"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-    ZarrStreamOffset(m.map(_.group(1).toLong).getOrElse(0L))
+    val m = """"extent"\s*:\s*(\d+)""".r.findFirstMatchIn(json).getOrElse(
+      throw new IllegalArgumentException(s"not a zarr stream offset (no \"extent\"): $json")
+    )
+    ZarrStreamOffset(m.group(1).toLong)
   }
 }
 final case class ZarrStreamOffset(extent: Long) extends Offset {
@@ -128,30 +134,15 @@ final class ZarrMicroBatchStream(
       // the batch scan); stream dim and deferred dims served elsewhere
       otherKeep.indices.flatMap { d =>
         if (d == streamDimIdx) None
-        else {
-          val ks = otherKeep(d)
-          val n = ks.length
-          val aligned: Option[Coord] = coords(d) match {
-            case Coord.Ints(a) => Some(Coord.Ints(Array.tabulate(n)(i => a(ks(i)))))
-            case Coord.Longs(a) => Some(Coord.Longs(Array.tabulate(n)(i => a(ks(i)))))
-            case Coord.Floats(a) => Some(Coord.Floats(Array.tabulate(n)(i => a(ks(i)))))
-            case Coord.Doubles(a) => Some(Coord.Doubles(Array.tabulate(n)(i => a(ks(i)))))
-            case Coord.Timestamps(a) => Some(Coord.Timestamps(Array.tabulate(n)(i => a(ks(i)))))
-            case Coord.Strings(a) => Some(Coord.Strings(Array.tabulate(n)(i => a(ks(i)))))
-            case Coord.Intervals(a) => Some(Coord.Intervals(Array.tabulate(n)(i => a(ks(i)))))
-            case Coord.Index(_) => None
-            case Coord.Deferred(_, _) => None
-          }
-          aligned.map(d -> _)
-        }
+        else coords(d).gather(otherKeep(d).length, otherKeep(d).apply).map(d -> _)
       }.toMap,
       staticDeferred
     )
 }
 
 /** Builds a per-partition run table (stream-dim slab x fixed kept sets)
-  * and delegates to the batch [[ZarrRowReader]] — coordinate serving,
-  * chunk IO, fills, and dtypes are exactly the batch path. */
+  * and reads it through the batch [[ZarrColumnarReader]] — coordinate
+  * serving, chunk IO, fills, and dtypes are exactly the batch path. */
 final class ZarrStreamReaderFactory(
     arrayDir: String,
     required: StructType,
@@ -162,7 +153,12 @@ final class ZarrStreamReaderFactory(
     staticDeferred: Map[Int, DeferredCoordSpec]
 ) extends PartitionReaderFactory {
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("zarr stream reads are columnar only")
+
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[ZarrStreamPartition]
     val meta = p.meta
     val dimRuns: Vector[DimRuns] = meta.shape.indices.map { d =>
@@ -173,7 +169,7 @@ final class ZarrStreamReaderFactory(
     }.toVector
     val total = dimRuns.map(_.nRuns.toLong).product
     val deferred = staticDeferred ++ p.streamCoord.map(streamDimIdx -> _)
-    new ZarrRowReader(
+    new ZarrColumnarReader(
       arrayDir,
       meta,
       meta.shape.indices.toVector, // streaming keeps every dim in the row

@@ -39,8 +39,9 @@ object DumpPlans {
       "shard byte-range index as numeric - one ranged GET per inner chunk, index cached per shard version."),
     "q34_zarr_categorize" -> ("Categorize-filtered labels: the scan decodes u1 CODE bytes (1 B/cell on " +
       "store) to strings inside the source - no join against a label table, nothing but the scan in the plan."),
-    "q35_zarr_struct" -> ("Structured cells surface as struct<...> from the row reader; subfield " +
-      "projections are codegen GetStructField - fields never become separate scans or joins."),
+    "q35_zarr_struct" -> ("Structured cells surface as struct<...> from the columnar Zarr reader " +
+      "through ColumnarToRow; subfield projections are codegen GetStructField - fields never " +
+      "become separate scans or joins."),
     "q37_zarr_label_range" -> ("Lexicographic >=/< on a string label axis consumed by the source " +
       "(chunk-stats pruning) - the ZarrScan cell count reflects the slice, no post-scan Filter."),
     "x57_decontam_bloom" -> ("Bloom decontamination: the definitely-clean branch is scan + " +
@@ -117,9 +118,9 @@ object DumpPlans {
       "Generate chain over the scan — no join against a vocab table, no broadcast, no " +
       "shuffle before the verification sort."),
     "q35b_zarr_struct_shaped" -> ("Per-field-SHAPED structured cells: numpy subarray fields " +
-      "surface as nested arrays from the row reader; element projections are codegen " +
-      "GetArrayItem/GetStructField — no explode, no join, the scan is still the only data " +
-      "operator."),
+      "surface as nested arrays from the columnar Zarr reader through ColumnarToRow; element " +
+      "projections are codegen GetArrayItem/GetStructField — no explode, no join, the scan " +
+      "is still the only data operator."),
     "x99_bpe_train" -> ("BPE training: the plan below is the LEARNED MERGE TABLE (training " +
       "runs at build time, so the result is a local relation — 6 rows). The distributed " +
       "work is bpeWordCounts' single explode(bpe_words) -> partial->final HashAggregate " +

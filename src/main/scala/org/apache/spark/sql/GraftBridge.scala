@@ -35,3 +35,20 @@ object GraftBridge {
   def ofRows(df: DataFrame, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession], plan)
 }
+
+package execution {
+
+  /** Bridge into `private[execution]` members, like [[GraftBridge]]. */
+  object GraftExecutionBridge {
+
+    /** Appends each row of `schema` to `vectors`, one vector per field
+      * (RowToColumnConverter: nested structs, arrays and nulls included). */
+    def rowAppender(
+        schema: types.StructType,
+        vectors: Array[vectorized.WritableColumnVector]
+    ): catalyst.InternalRow => Unit = {
+      val converter = new RowToColumnConverter(schema)
+      row => converter.convert(row, vectors)
+    }
+  }
+}

@@ -94,26 +94,10 @@ class ZarrDeferredSpec extends AnyFunSuite with SparkTester {
         val factory = scan.createReaderFactory().asInstanceOf[ZarrReaderFactory]
         val parts = scan.planInputPartitions()
         assert(parts.length > 1, s"$array sel=$selMap parts=${parts.length}")
-        def viaRows: Seq[Seq[Any]] = parts.toSeq.flatMap { p =>
-          val r = factory.createReader(p)
-          val out = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
-          while (r.next()) out += (0 until schema.length).map(i => r.get().get(i, schema(i).dataType))
-          out.toSeq
-        }
-        def viaBatches: Seq[Seq[Any]] = parts.toSeq.flatMap { p =>
-          val r = factory.createColumnarReader(p)
-          val out = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
-          while (r.next()) {
-            val it = r.get().rowIterator()
-            while (it.hasNext) {
-              val row = it.next()
-              out += (0 until schema.length).map(i => row.get(i, schema(i).dataType))
-            }
-          }
-          out.toSeq
-        }
-        val rows = viaRows
-        assert(rows == viaBatches, s"$array sel=$selMap")
+        // the oracle reads the time coordinate EAGERLY; the scan defers it
+        val rows = CellOracle.expectedRows(store, meta, sel)
+        val viaBatches = CellOracle.columnarRows(factory, parts.toSeq, schema)
+        assert(CellOracle.sameCells(rows, viaBatches), s"$array sel=$selMap")
         assert(rows.nonEmpty)
         // time column carries COORDINATE values (1000+3i), not indices
         val ti = schema.fieldIndex("time")

@@ -57,11 +57,14 @@ class ZarrRuntimeFilterSpec extends AnyFunSuite with SparkTester {
     scan.filter(Array[org.apache.spark.sql.sources.Filter](org.apache.spark.sql.sources.In("site", Array(3L, 5L))))
     val parts = scan.planInputPartitions()
     val rows = parts.flatMap { p =>
-      val rd = scan.createReaderFactory().createReader(p)
+      val rd = scan.createReaderFactory().createColumnarReader(p)
       val b = Array.newBuilder[(Int, Long, Double)]
       while (rd.next()) {
-        val r = rd.get()
-        b += ((r.getInt(0), r.getLong(1), r.getDouble(2)))
+        val it = rd.get().rowIterator()
+        while (it.hasNext) {
+          val r = it.next()
+          b += ((r.getInt(0), r.getLong(1), r.getDouble(2)))
+        }
       }
       b.result()
     }

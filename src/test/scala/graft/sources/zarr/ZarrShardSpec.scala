@@ -149,25 +149,10 @@ class ZarrShardSpec extends AnyFunSuite with SparkTester {
     val factory = scan.createReaderFactory().asInstanceOf[ZarrReaderFactory]
     val parts = scan.planInputPartitions()
     assert(parts.length > 1)
-    val viaRows = parts.toSeq.flatMap { p =>
-      val r = factory.createReader(p)
-      val out = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
-      while (r.next()) out += (0 until schema.length).map(i => r.get().get(i, schema(i).dataType))
-      out.toSeq
-    }
-    val viaBatches = parts.toSeq.flatMap { p =>
-      val r = factory.createColumnarReader(p)
-      val out = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
-      while (r.next()) {
-        val it = r.get().rowIterator()
-        while (it.hasNext) {
-          val row = it.next()
-          out += (0 until schema.length).map(i => row.get(i, schema(i).dataType))
-        }
-      }
-      out.toSeq
-    }
-    assert(viaRows == viaBatches)
+    // the columnar reader against a cell-by-cell decode of the same store
+    val viaRows = CellOracle.expectedRows(store, meta, sel)
+    val viaBatches = CellOracle.columnarRows(factory, parts.toSeq, schema)
+    assert(CellOracle.sameCells(viaRows, viaBatches))
     assert(viaRows.nonEmpty)
   }
 

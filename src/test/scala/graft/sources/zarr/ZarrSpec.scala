@@ -283,7 +283,8 @@ class ZarrSpec extends AnyFunSuite with SparkTester {
       assert(df.schema("value").dataType == st, n)
       val got = df.orderBy("r", "c").select("value").collect().map(_.get(0)).toSeq
       assert(got == (0L until 60L).map(expect), n)
-      // row == columnar parity, full scan AND non-contiguous gather
+      // columnar reader == cell-by-cell decode, full scan AND
+      // non-contiguous gather
       val meta = store.arrayMeta(n)
       val coords = meta.dims.zip(meta.shape).map { case (d, sz) => store.coordFor(d, sz) }.toVector
       Seq(Map.empty[String, DimSel], Map("c" -> DimSel.Indices(Vector(9, 1, 4)))).foreach { selMap =>
@@ -294,26 +295,9 @@ class ZarrSpec extends AnyFunSuite with SparkTester {
         )
         val scan = new ZarrScan(store.arrayDir(n), meta, sel, coords, schema, 16L)
         val factory = scan.createReaderFactory().asInstanceOf[ZarrReaderFactory]
-        val parts = scan.planInputPartitions()
-        val viaRows = parts.toSeq.flatMap { p =>
-          val r = factory.createReader(p)
-          val out = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
-          while (r.next()) out += (0 until schema.length).map(i => r.get().get(i, schema(i).dataType))
-          out.toSeq
-        }
-        val viaBatches = parts.toSeq.flatMap { p =>
-          val r = factory.createColumnarReader(p)
-          val out = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
-          while (r.next()) {
-            val it = r.get().rowIterator()
-            while (it.hasNext) {
-              val row = it.next()
-              out += (0 until schema.length).map(i => row.get(i, schema(i).dataType))
-            }
-          }
-          out.toSeq
-        }
-        assert(viaRows == viaBatches, s"$n sel=$selMap")
+        val viaRows = CellOracle.expectedRows(store, meta, sel)
+        val viaBatches = CellOracle.columnarRows(factory, scan.planInputPartitions().toSeq, schema)
+        assert(CellOracle.sameCells(viaRows, viaBatches), s"$n sel=$selMap")
         assert(viaRows.nonEmpty, s"$n sel=$selMap")
       }
     }
@@ -475,8 +459,8 @@ class ZarrSpec extends AnyFunSuite with SparkTester {
       dir, "flag", Vector(12, 10), Vector(4, 5), "|b1", f => if (f % 3 == 0) 1.0 else 0.0,
       dims = Some(Vector("t", "x"))
     )
-    // a structured (V) array on the same grid: the one aligned read that
-    // stays on the row path
+    // a structured (V) array on the same grid: struct vectors in the
+    // aligned batch
     ZarrStoreWriter.writeStructArray(
       dir, "rec", Vector(12, 10), Vector(4, 5), """[["id", "<i4"], ["w", "<f8"]]""",
       f => Seq[Any](f.toInt, f * 0.25), dims = Some(Vector("t", "x")), compressor = Some("zlib")
@@ -510,11 +494,11 @@ class ZarrSpec extends AnyFunSuite with SparkTester {
     // dims-only projection still answers without any value reader
     assert(aligned.select("t").distinct().count() == 12)
     assert(alignedScan(aligned).supportsColumnar)
-    // a structured array forces the row lockstep for the whole read
+    // a structured array reads through the same columnar lockstep
     val withRec = r.readAligned(Seq("rec", "temp"))
     val recScan = alignedScan(withRec)
-    assert(!recScan.supportsColumnar)
-    assert(recScan.inputPartitions.forall(p => !recScan.readerFactory.supportColumnarReads(p)))
+    assert(recScan.supportsColumnar)
+    assert(recScan.inputPartitions.forall(p => recScan.readerFactory.supportColumnarReads(p)))
     val recJoined = r.readArray("rec").withColumnRenamed("value", "rec")
       .join(r.readArray("temp").withColumnRenamed("value", "temp"), Seq("t", "x"))
       .select("t", "x", "rec", "temp")
@@ -637,6 +621,27 @@ class ZarrSpec extends AnyFunSuite with SparkTester {
       ZDtype.parse("""[["a", [["b", "<i4"]]]]""")
     }
     assert(e.getMessage.contains("nested compounds"), e.getMessage)
+  }
+
+  test("one field of a structured or complex value projects by name") {
+    val root = Files.createTempDirectory("zarrnested").toString
+    val dir = ZarrStoreWriter.writeGroup(root)
+    ZarrStoreWriter.writeStructArray(
+      dir, "rec", Vector(30), Vector(8), """[["sensor", "<i4"], ["temp", ">f8"], ["tag", "|S4"]]""",
+      i => Seq((i * 3 - 7).toInt, i * 0.25 - 2.0, s"T${i % 5}"),
+      dims = Some(Vector("i"))
+    )
+    ZarrStoreWriter.writeComplexArray(
+      dir, "c", Vector(30), Vector(8), "<c8", i => (i.toDouble, -2.0 * i), dims = Some(Vector("i"))
+    )
+    ZarrStoreWriter.consolidate(dir)
+    val r = new ZarrDataReader(spark, root)
+    val temp = r.readArray("rec").select(col("i"), col("value.temp")).orderBy("i").collect()
+    assert(temp.map(_.getDouble(1)).toSeq == (0 until 30).map(i => i * 0.25 - 2.0))
+    val tag = r.readArray("rec").filter(col("value.sensor") > 50).select(col("value.tag")).collect()
+    assert(tag.map(_.getString(0)).toSet == (20 until 30).map(i => s"T${i % 5}").toSet)
+    val im = r.readArray("c").select(col("i"), col("value.im")).orderBy("i").collect()
+    assert(im.map(_.getFloat(1)).toSeq == (0 until 30).map(i => -2.0f * i))
   }
 
   test("structured per-field SHAPES: numpy subarray fields decode as nested arrays; write round-trip") {
@@ -1141,7 +1146,8 @@ class ZarrSpec extends AnyFunSuite with SparkTester {
     val meta = store.arrayMeta("temperature")
     val coords = meta.dims.zip(meta.shape).map { case (d, n) => store.coordFor(d, n) }.toVector
     // contiguous selection (bulk path) and a non-contiguous gather (per-cell
-    // fallback) — both must agree between the two readers
+    // fallback) — the columnar reader must emit exactly the cells a
+    // cell-by-cell decode of the same selection yields
     val selections = Seq(
       Map.empty[String, DimSel],
       Map("time" -> DimSel.Range(2, 9), "lon" -> DimSel.Indices(Vector(11, 2, 7)))
@@ -1158,25 +1164,9 @@ class ZarrSpec extends AnyFunSuite with SparkTester {
       val factory = scan.createReaderFactory().asInstanceOf[ZarrReaderFactory]
       val parts = scan.planInputPartitions()
       assert(parts.length > 1, s"sel=$selMap parts=${parts.length}")
-      def viaRows: Seq[Seq[Any]] = parts.toSeq.flatMap { p =>
-        val r = factory.createReader(p)
-        val out = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
-        while (r.next()) out += (0 until schema.length).map(i => r.get().get(i, schema(i).dataType))
-        out.toSeq
-      }
-      def viaBatches: Seq[Seq[Any]] = parts.toSeq.flatMap { p =>
-        val r = factory.createColumnarReader(p)
-        val out = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
-        while (r.next()) {
-          val it = r.get().rowIterator()
-          while (it.hasNext) {
-            val row = it.next()
-            out += (0 until schema.length).map(i => row.get(i, schema(i).dataType))
-          }
-        }
-        out.toSeq
-      }
-      assert(viaRows == viaBatches, s"sel=$selMap")
+      val viaRows = CellOracle.expectedRows(store, meta, sel)
+      val viaBatches = CellOracle.columnarRows(factory, parts.toSeq, schema)
+      assert(CellOracle.sameCells(viaRows, viaBatches), s"sel=$selMap")
       assert(viaRows.nonEmpty)
     }
   }

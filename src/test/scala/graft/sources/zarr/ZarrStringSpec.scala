@@ -235,28 +235,11 @@ class ZarrStringSpec extends AnyFunSuite with SparkTester {
     val factory = scan.createReaderFactory().asInstanceOf[ZarrReaderFactory]
     val parts = scan.planInputPartitions()
     assert(parts.length > 1)
-    val viaRows = parts.toSeq.flatMap { p =>
-      val r = factory.createReader(p)
-      val out = scala.collection.mutable.ArrayBuffer[(Int, Int, String)]()
-      while (r.next()) {
-        val row = r.get()
-        out += ((row.getInt(0), row.getInt(1), row.getUTF8String(2).toString))
-      }
-      out
-    }.sorted
-    val viaCols = parts.toSeq.flatMap { p =>
-      val r = factory.createColumnarReader(p)
-      val out = scala.collection.mutable.ArrayBuffer[(Int, Int, String)]()
-      while (r.next()) {
-        val b = r.get()
-        val it = b.rowIterator()
-        while (it.hasNext) {
-          val row = it.next()
-          out += ((row.getInt(0), row.getInt(1), row.getUTF8String(2).toString))
-        }
-      }
-      out
-    }.sorted
+    // the columnar reader against a cell-by-cell decode of the same store
+    def triples(rows: Seq[Seq[Any]]) =
+      rows.map(r => (r(0).asInstanceOf[Int], r(1).asInstanceOf[Int], r(2).toString)).sorted
+    val viaRows = triples(CellOracle.expectedRows(store, meta, sel))
+    val viaCols = triples(CellOracle.columnarRows(factory, parts.toSeq, schema))
     assert(viaRows.nonEmpty && viaRows == viaCols)
     assert(viaRows.map(_._3).toSet == (0 until 35).map(i => s"v${i}_α").toSet)
   }

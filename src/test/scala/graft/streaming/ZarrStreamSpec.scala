@@ -1,8 +1,10 @@
 package graft.streaming
 
 import graft.SparkTester
+import graft.model.KeptSet
 import graft.sources.Coord
-import graft.sources.zarr.ZarrStoreWriter
+import graft.sources.zarr.{ZarrStore, ZarrStoreWriter}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.ByteBuffer
@@ -91,6 +93,65 @@ class ZarrStreamSpec extends AnyFunSuite with SparkTester {
       finally q.stop()
     }
     assert(ex.getMessage != null)
+  }
+
+  test("offsets: a well-formed offset round-trips; one without an extent throws") {
+    val root = Files.createTempDirectory("zarrstreamoffset").toString
+    val dir = ZarrStoreWriter.writeGroup(root)
+    ZarrStoreWriter.writeArray(
+      dir, "v", Vector(4, 2), Vector(2, 2), "<f8", f => f.toDouble,
+      dims = Some(Vector("time", "lat"))
+    )
+    ZarrStoreWriter.consolidate(dir)
+    val stream = new ZarrMicroBatchStream(
+      new ZarrStore(root), "v", "time", new StructType(),
+      Vector(KeptSet.Range(0, 4), KeptSet.Range(0, 2)), Vector(Coord.Index(4), Coord.Index(2)),
+      Map.empty, 1024L
+    )
+    val off = ZarrStreamOffset(12L)
+    assert(stream.deserializeOffset(off.json()) == off)
+    val e = intercept[IllegalArgumentException](stream.deserializeOffset("{}"))
+    assert(e.getMessage.contains("{}"), e.getMessage)
+  }
+
+  test("structured values stream through the columnar reader, fill records and batch resets included") {
+    // 24 x 400 = 9,600 cells in ONE micro-batch partition: the struct
+    // vector crosses two 4,096-row batch resets
+    val root = Files.createTempDirectory("zarrstreamrec").toString
+    val dir = ZarrStoreWriter.writeGroup(root)
+    ZarrStoreWriter.writeStructArray(
+      dir, "rec", Vector(24, 400), Vector(8, 100),
+      """[["id", "<i4"], ["pos", ">f4", [2]], ["tag", "|S3"]]""",
+      f => Seq(f.toInt, Seq(f * 0.5f, -f.toFloat), s"t${f % 7}"),
+      dims = Some(Vector("time", "x")), compressor = Some("zlib"),
+      fillBase64 = Some(java.util.Base64.getEncoder.encodeToString(
+        Array[Byte](7, 0, 0, 0) ++ new Array[Byte](8) ++ "fil".getBytes("UTF-8")
+      ))
+    )
+    ZarrStoreWriter.consolidate(dir)
+    Files.delete(java.nio.file.Paths.get(root, "rec", "1.2")) // time 8..15, x 200..299
+    val stream = spark.readStream.format("zarr")
+      .option("path", root).option("array", "rec").option("stream.dim", "time")
+      .load()
+    val q = stream.writeStream.format("memory").queryName("zrec").start()
+    try {
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan
+      val scan = plan.collectFirst {
+        case m: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec => m
+      }.get
+      assert(scan.supportsColumnar)
+      val streamed = spark.table("zrec").orderBy("time", "x").collect().toSeq
+      val batch = new graft.api.ZarrDataReader(spark, root)
+        .readArray("rec").orderBy("time", "x").collect().toSeq
+      assert(streamed.length == 9600)
+      assert(streamed == batch)
+      val fill = streamed(10 * 400 + 250).getStruct(2)
+      assert(fill.getInt(0) == 7 && fill.getSeq[Float](1) == Seq(0f, 0f) && fill.getString(2) == "fil")
+      val cell = streamed(3 * 400 + 5).getStruct(2)
+      assert(cell.getInt(0) == 1205 && cell.getSeq[Float](1) == Seq(602.5f, -1205f) && cell.getString(2) == "t1")
+    } finally q.stop()
   }
 
   test("end-to-end: windowed aggregate with watermark over a live ZarrAppend loop") {
