@@ -77,8 +77,10 @@ import org.apache.spark.sql.functions._
   * fragments keyed by shard (the chunk when unsharded), exactly as in
   * [[ZarrSink]] ([[ZarrFragments]]): the per-row checks (null ordinal,
   * value put) run in the map tasks, and each reduce task prefills one chunk
-  * at a time, overlays its fragments and encodes it through the store's
-  * chain.
+  * at a time, overlays its fragments and hands it to the [[ZarrChunkWriter]]
+  * built from the grown array's meta — the sink's writer, so an appended
+  * object is encoded, keyed and (for shards) indexed as the store declares.
+  * The in-place coordinate tail goes through the same writer.
   *
   * Chunk statistics survive the append in every layout: flat docs merge
   * the new chunks' bounds under the grown grid; a grid growing past the
@@ -94,7 +96,9 @@ object ZarrAppend {
 
   val BatchAttrKey = "graft:append_batch"
 
-  def append(input: DataFrame, rawOptions: Map[String, String]): Unit = {
+  /** Appends `input`'s slab and returns the grown meta its objects were
+    * written under (the store's meta unchanged, for a replayed batch). */
+  def append(input: DataFrame, rawOptions: Map[String, String]): ZarrArrayMeta = {
     val df = ZarrSink.unsorted(input)
     val opts = rawOptions.map { case (k, v) => k.toLowerCase -> v }
     val path = opts("path")
@@ -152,7 +156,7 @@ object ZarrAppend {
       s"append.dim '$appendDim' must be the FIRST dimension of '${array}' (dims ${meta.dims.mkString(",")}) — " +
         "outer-slab appends keep every existing chunk object and stats ordinal valid"
     )
-    val strValue = ZDtype.isString(meta.zdtype.code)
+    val strValue = meta.zdtype.code == ZDtype.VSTR
     require(
       strValue || ZarrChunkStats.domainOf(meta.zdtype).exists(d => d == "int" || d == "float") ||
         meta.zdtype.code == ZDtype.F2,
@@ -162,7 +166,7 @@ object ZarrAppend {
     // idempotent replay
     val priorBatch: Option[Long] =
       meta.attrs.get(BatchAttrKey).flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-    if (batchId.exists(id => priorBatch.exists(id <= _))) return
+    if (batchId.exists(id => priorBatch.exists(id <= _))) return meta
 
     val extent = meta.shape.head
     val chunk0 = meta.chunks.head
@@ -341,8 +345,6 @@ object ZarrAppend {
     val localExpr = (0 until rank)
       .map(di => (col(s"__i$di") % lit(chunks(di))) * lit(chunkStrides(di)))
       .reduce(_ + _)
-    val elems = chunks.map(_.toLong).product.toInt
-    val fill = meta.fillValue.getOrElse(0.0)
     val fillStr = meta.fillValueStr.getOrElse("")
     // categorize in-vocabulary check: every appended value (and the fill
     // landing in padded cells) must be a declared label or '' — an unknown
@@ -363,24 +365,8 @@ object ZarrAppend {
           "extend the store's label set first"
       )
     }
-    val strCatSer = strCategorize
     val dt = meta.zdtype
-    val comp = meta.compressor
-    val v2Filters = meta.filters // encode fold before the compressor (v2 only)
-    // v3 encodes through the parsed bytes→bytes codec chain; v2 through the
-    // numcodecs compressor id. Chunk keys follow the store's key encoding
-    // (v2 dotted / v3 "c"-prefixed with the configured separator).
-    val isV3 = meta.v3
-    val v3Cfgs = meta.v3Codecs
-    val keyEnc = meta.keyEncoding
-    val keySep = meta.keySeparator
-    def chunkKeyOf(idx: Seq[Int]): String = keyEnc match {
-      case "default" => if (idx.isEmpty) "c" else "c" + keySep + idx.mkString(keySep)
-      case _ => if (idx.isEmpty) "0" else idx.mkString(keySep)
-    }
     val arrayDirStr = store.arrayDir(array)
-    val executorOpts = ZarrFileIO.executorOptions(storageOptions)
-    val nChunksArr = nChunksVec.toArray
     val statsDomain = ZarrChunkStats.domainOf(dt)
     val rawStatsAttr = meta.attrs.get(ZarrChunkStats.AttrKey)
     val existingFlatStats =
@@ -407,12 +393,11 @@ object ZarrAppend {
     // values, so a zonemap-pruned scan would silently drop matching rows
     // — the sink never writes stats+lossy together, but an
     // externally-authored store with graft stats attrs can arrive here
-    val lossyFiltered = !isV3 && meta.filters.exists(ZarrFilters.isLossy)
+    val lossyFiltered = !meta.v3 && meta.filters.exists(ZarrFilters.isLossy)
     val statsOn = (existingFlatStats.isDefined || existingHierStats.isDefined) &&
       !lossyFiltered &&
       grownTotalChunks <= statsFlatCap * statsBlockLen &&
       grownTotalChunks - oldTotalChunks <= statsFlatCap
-    val statsOnSer = statsOn
     // a store that HAD stats loses them here: record why in the attrs so
     // the scan can warn instead of silently losing pruning. A marker left
     // by an earlier drop carries forward (later appends see no stats and
@@ -429,79 +414,46 @@ object ZarrAppend {
             ZarrChunkStats.droppedJson(grownTotalChunks - oldTotalChunks, statsFlatCap, "batch_flat_cap")
         )
       else meta.attrs.get(ZarrChunkStats.DroppedAttrKey)
-    val isStr = strValue
-    val intDomain = statsDomain.contains("int")
-    // in-shape-only stats geometry over the GROWN grid: appended boundary
-    // chunks may be ragged on any dim; padding cells must not widen bounds
-    val geom = ZarrSink.ChunkGeom(newShape.map(_.toLong).toArray, chunks.toArray, nChunksVec.toArray)
-
-    val totalNewChunks = nChunksVec.map(_.toLong).product
+    // ---- the data job: cells travel as packed per-chunk fragments
+    // (ZarrFragments), one shuffle keyed by shard (by chunk when unsharded),
+    // to the grown array's ZarrChunkWriter. A sharded array's objects are
+    // whole shards: the extent sits on a shard boundary, or under realign
+    // the shard row holding it is rewritten, its objects' chunks before the
+    // old extent copied byte for byte (their bounds records are already in
+    // the stats doc).
+    val target = meta.copy(shape = newShape)
+    val objectRow = meta.shardShape.fold(chunk0)(_.head)
+    val objectGrid = meta.shardShape.fold(nChunksVec)(_.zip(newShape).map { case (c, s) => (s + c - 1) / c })
+    val writer = new ZarrChunkWriter(
+      target, arrayDirStr, ZarrFileIO.executorOptions(storageOptions), stats = statsOn, keptRows = extent / chunk0
+    )
+    clearRows(meta, arrayDirStr, (extent + objectRow - 1) / objectRow, newExtent, objectRow, objectGrid, storageOptions)
+    // realign: EVERY existing object of the tail row is rewritten, also one
+    // the batch has no cells in, so chunks a failed attempt left in it past
+    // the old extent are dropped, never made readable
+    val tailRow = extent / objectRow
+    val tailObjects: Seq[Long] =
+      if (extent % objectRow == 0) Nil
+      else {
+        val strides = IndexMath.strides(objectGrid)
+        rowKeys(meta, new HPath(arrayDirStr), tailRow to tailRow, objectGrid, storageOptions).flatMap { k =>
+          val idx = (if (meta.keyEncoding == "default") k.stripPrefix("c" + meta.keySeparator) else k)
+            .split(java.util.regex.Pattern.quote(meta.keySeparator))
+            .flatMap(_.toIntOption)
+          if (idx.length != rank || idx.indices.exists(d => idx(d) >= objectGrid(d))) None
+          else Some(IndexMath.flatten(idx, strides))
+        }
+      }
     val parts = math.max(
       1L,
-      math.min(spark.sessionState.conf.numShufflePartitions.toLong, totalNewChunks)
+      math.min(spark.sessionState.conf.numShufflePartitions.toLong, nChunksVec.map(_.toLong).product)
     ).toInt
-    // ---- the data job: cells travel as packed per-chunk fragments
-    // (ZarrFragments), one shuffle keyed by shard (by chunk when unsharded)
     val prepared = indexed.select(chunkExpr.as("__chunk"), localExpr.as("__local"), col("value").as("__value"))
     val cellPut = new ZarrSink.CellPut(df.schema("value").dataType, dt, rCheck = false, 0L, 0L, meta.dtype)
-    def appendChunked(): Array[ZarrSink.ChunkBounds] = {
-      val layout = new ZarrFragments.Layout(dt, elems, isStr, fill, fillStr, null, nChunksArr, null)
-      ZarrFragments
-        .shuffle(prepared, layout, cellPut, parts, "zarr append")
-        .mapPartitions { frags =>
-          val stats = Array.newBuilder[ZarrSink.ChunkBounds]
-          ZarrFragments.foreachChunk(frags, layout) { (_, chunk, cells) =>
-            if (statsOnSer)
-              stats += (if (isStr) ZarrSink.stringBoundsRecord(chunk, cells.strs, geom)
-                        else ZarrSink.chunkBoundsRecord(chunk, dt, cells.buf, geom, intDomain))
-            // categorize IS the string filter chain: codes replace the vlen
-            // stream entirely (the fixture writer's exact encode), so the
-            // v2 fold is skipped for it
-            val raw =
-              if (isStr) strCatSer match {
-                case Some(cfg) => ZarrFilters.categorizeEncodeCells(cfg, cells.strs, strict = true)
-                case None => ZarrStoreWriter.vlenEncode(cells.strs)
-              }
-              else cells.buf.array()
-            val bytes =
-              if (isV3) v3Cfgs.foldLeft(raw)((b, cfg) => ZarrCodecV3.encode(cfg, b, math.max(dt.itemSize, 1)))
-              else {
-                val filtered =
-                  if (strCatSer.isDefined) raw
-                  else v2Filters.foldLeft(raw)((b, cfg) => ZarrFilters.encode(cfg, dt, b))
-                ZarrCodec.compress(comp, filtered, typesize = math.max(dt.itemSize, 1))
-              }
-            val idx = new Array[Int](nChunksArr.length)
-            var rem = chunk
-            var d = nChunksArr.length - 1
-            while (d >= 0) { idx(d) = (rem % nChunksArr(d)).toInt; rem /= nChunksArr(d); d -= 1 }
-            ZarrFileIO.writeBytes(
-              new HPath(arrayDirStr, chunkKeyOf(idx.toSeq)),
-              executorOpts,
-              bytes
-            )
-          }
-          stats.result().iterator
-        }
-        .collect()
-    }
-    val statsRows: Array[ZarrSink.ChunkBounds] = meta.shardShape match {
-      case Some(shards) =>
-        // realign: the shard ROW (dim-0 shard index) holding the old
-        // extent already has objects on disk; their live inner chunks are
-        // copied byte-for-byte into the rewritten tail objects
-        val tailShardRow = if (extent % shards.head == 0) -1L else (extent / shards.head).toLong
-        val shardGrid = newShape.zip(shards).map { case (s, c) => (s + c - 1) / c }
-        clearRows(meta, arrayDirStr, (extent + shards.head - 1) / shards.head, newExtent, shards.head, shardGrid, storageOptions)
-        appendSharded(
-          prepared, cellPut, meta, shards, newShape, nChunksVec,
-          geom, elems, fill, fillStr, statsOnSer, intDomain, arrayDirStr, executorOpts, parts,
-          tailShardRow, storageOptions
-        )
-      case None =>
-        clearRows(meta, arrayDirStr, extent / chunk0, newExtent, chunk0, nChunksVec, storageOptions)
-        appendChunked()
-    }
+    val statsRows: Array[ZarrSink.ChunkBounds] = ZarrFragments
+      .shuffle(prepared, writer.layout, cellPut, parts, "zarr append", touch = tailObjects)
+      .mapPartitions(writer.writeFragments)
+      .collect()
     if (joined) mapped.unpersist(blocking = false)
 
     // ---- metadata commit: coord array, then attrs (stats, WITHOUT the
@@ -521,24 +473,17 @@ object ZarrAppend {
         appendCoordTail(store, appendDim, extent, newVals, storageOptions)
       case c =>
         val existingExternal = Array.tabulate[Any](extent)(i => externalOf(c, c(i)))
-        if (meta.v3)
-          ZarrSink.writeCoordArrayV3(
-            store.groupDir,
-            appendDim,
-            existingExternal ++ newVals,
-            df.schema(appendDim).dataType,
-            store.arrayMeta(appendDim).v3Codecs,
-            storageOptions
-          )
-        else
-          ZarrSink.writeCoordArray(
-            store.groupDir,
-            appendDim,
-            existingExternal ++ newVals,
-            df.schema(appendDim).dataType,
-            meta.compressor,
-            storageOptions
-          )
+        // v3: the coordinate array's own codec chain; v2: the value array's compressor
+        ZarrSink.writeCoordArray(
+          store.groupDir,
+          appendDim,
+          existingExternal ++ newVals,
+          df.schema(appendDim).dataType,
+          meta.v3,
+          meta.compressor,
+          if (meta.v3) store.arrayMeta(appendDim).v3Codecs else Nil,
+          storageOptions
+        )
     }
     // ---- stats maintenance across the append. Side docs land BEFORE the
     // attrs that reference them (a missing side doc only degrades fine
@@ -691,6 +636,7 @@ object ZarrAppend {
       }
       ZarrSink.consolidate(store.groupDir, storageOptions)
     }
+    target
   }
 
   /** Deletes every chunk (or shard) object in the leading-dim rows that
@@ -740,193 +686,10 @@ object ZarrAppend {
     rows.iterator.flatMap { r =>
       (0L until inner.map(_.toLong).product).iterator.map { k =>
         val idx = new Array[Int](inner.length)
-        var rem = k
-        var d = inner.length - 1
-        while (d >= 0) { idx(d) = (rem % inner(d)).toInt; rem /= inner(d); d -= 1 }
+        IndexMath.unflatten(k, inner, idx)
         meta.chunkKey(r +: idx.toSeq)
       }
     }
-  }
-
-  /** SHARDED (v3) append: the batch's fragments are keyed by SHARD ordinal
-    * over the grown grid so each task streams one complete shard object
-    * (inner chunks + byte-range index in the STORE's declared layout:
-    * location end|start, crc32c or bare, either endianness) — one PUT per
-    * NEW shard, existing objects untouched (extent shard-aligned by
-    * contract; `append.realign=true` absorbs a mid-shard tail by rewriting
-    * every tail-row object merged with the batch — see `tailShardRow`).
-    * Emits the same per-INNER-chunk bounds records the chunked path does,
-    * so zone-map maintenance downstream is layout-blind. Mirrors the sink's
-    * sharded writer (ZarrSink.scala `case Some(shards)`), restricted to the
-    * append contract (no range re-check: dtype already validated). */
-  private def appendSharded(
-      prepared: DataFrame,
-      cellPut: ZarrSink.CellPut,
-      meta: ZarrArrayMeta,
-      shards: Vector[Int],
-      newShape: Vector[Int],
-      nChunksVec: Vector[Int],
-      geom: ZarrSink.ChunkGeom,
-      elems: Int,
-      fill: Double,
-      fillStr: String,
-      statsOn: Boolean,
-      intDomain: Boolean,
-      arrayDirStr: String,
-      executorOpts: Map[String, String],
-      parts: Int,
-      tailShardRow: Long,
-      storageOptions: Map[String, String]
-  ): Array[ZarrSink.ChunkBounds] = {
-    val dt = meta.zdtype
-    val isStr = ZDtype.isString(dt.code)
-    val chunks = meta.chunks
-    shards.zip(chunks).foreach { case (s, c) =>
-      require(s % c == 0, s"shard shape $shards must be a multiple of inner chunks $chunks")
-    }
-    val nShardsVec = newShape.zip(shards).map { case (s, c) => (s + c - 1) / c }
-    val shardStrides = IndexMath.strides(nShardsVec)
-    val innerPerVec = shards.zip(chunks).map { case (s, c) => s / c }
-    val nChunksArr = nChunksVec.toArray
-    val nShardsArr = nShardsVec.toArray
-    val innerPerArr = innerPerVec.toArray
-    val innerStrides = IndexMath.strides(innerPerVec).toArray
-    val nInner = innerPerVec.map(_.toLong).product.toInt
-    val v3Cfgs = meta.v3Codecs
-    val keyEnc = meta.keyEncoding
-    val keySep = meta.keySeparator
-    // Honor the STORE's declared shard-index layout (index_location,
-    // index_codecs crc32c-or-not, endianness) — ZarrStoreWriter can itself
-    // produce index_location=start stores, and appending a hardcoded
-    // end/crc/LE index to one would corrupt every shard object we write.
-    val idxAtEnd = meta.shardIndexAtEnd
-    val idxCrc = meta.shardIndexCrc
-    val idxBig = meta.shardIndexBigEndian
-    // Spec: index offsets are absolute within the shard object, so a
-    // leading index shifts the data region by its own stored length.
-    val dataBase = if (idxAtEnd) 0L else nInner * 16L + (if (idxCrc) 4L else 0L)
-    // chunk count along dim 0 under the OLD shape: the realign preload's
-    // boundary between chunks to copy and chunks the batch rewrites
-    val oldChunk0Count = (meta.shape.head / chunks.head).toLong
-    // realign: EVERY existing tail-row object is rewritten, also those the
-    // batch has no cells in, so chunks a failed attempt left in them past
-    // the old extent are dropped, never made readable
-    val tailShards: Seq[Long] =
-      if (tailShardRow < 0L) Nil
-      else
-        rowKeys(meta, new HPath(arrayDirStr), tailShardRow.toInt to tailShardRow.toInt, nShardsVec, storageOptions).flatMap { k =>
-          val idx = (if (keyEnc == "default") k.stripPrefix("c" + keySep) else k)
-            .split(java.util.regex.Pattern.quote(keySep))
-            .flatMap(_.toIntOption)
-          if (idx.length != nShardsArr.length || idx.indices.exists(d => idx(d) >= nShardsArr(d))) None
-          else Some(idx.indices.map(d => idx(d).toLong * shardStrides(d)).sum)
-        }
-    val layout = new ZarrFragments.Layout(dt, elems, isStr, fill, fillStr, null, nChunksArr, innerPerArr)
-    ZarrFragments
-      .shuffle(prepared, layout, cellPut, parts, "zarr append", touch = tailShards)
-      .mapPartitions { frags =>
-        val rank = nShardsArr.length
-        var curShard = -1L
-        val shardData = new java.io.ByteArrayOutputStream()
-        val index = new Array[Long](nInner * 2)
-        val stats = Array.newBuilder[ZarrSink.ChunkBounds]
-        val stride0 = shardStrides.head
-        def keyOf(shardOrd: Long): String = {
-          val sIdx = new Array[Int](rank)
-          var rem = shardOrd
-          var d = rank - 1
-          while (d >= 0) { sIdx(d) = (rem % nShardsArr(d)).toInt; rem /= nShardsArr(d); d -= 1 }
-          keyEnc match {
-            case "default" => "c" + keySep + sIdx.mkString(keySep)
-            case _ => sIdx.mkString(keySep)
-          }
-        }
-        // REALIGN: this shard sits on the row holding the old (mid-shard)
-        // extent — copy the existing object's live inner chunks into the
-        // rewritten object byte-for-byte (no decode; their ChunkBounds
-        // records are already in the stats doc). New-batch chunk positions
-        // are disjoint: old chunks end before the chunk-aligned extent.
-        // Chunks AT or past the old extent (left by a crashed realign
-        // attempt whose metadata commit never landed) are skipped — the
-        // replay rewrites them from the batch, keeping the rewritten
-        // object byte-identical run over run.
-        def preloadTail(shardOrd: Long): Unit =
-          ZarrFileIO
-            .readBytesIfExists(new HPath(arrayDirStr, keyOf(shardOrd)), executorOpts)
-            .foreach { raw =>
-              val storedLen = ZarrChunkIO.shardIndexStoredLen(nInner, idxCrc)
-              require(
-                raw.length >= storedLen,
-                s"zarr realign append: tail shard object ${keyOf(shardOrd)} (${raw.length} B) is " +
-                  s"smaller than its $storedLen B index — refusing to rewrite a corrupt object"
-              )
-              val idxOff = if (idxAtEnd) raw.length - storedLen else 0
-              // shared parse (crc VERIFIED): a corrupt tail object rejects
-              // loudly here instead of being copied byte-for-byte into the
-              // rewritten shard
-              val idx = ZarrChunkIO.parseShardIndexBytes(
-                java.util.Arrays.copyOfRange(raw, idxOff, idxOff + storedLen),
-                nInner, idxCrc, idxBig
-              )
-              var w = 0
-              while (w < nInner) {
-                val off = idx(2 * w)
-                val len = idx(2 * w + 1)
-                val chunk0 = tailShardRow * innerPerArr(0) + w / innerStrides(0)
-                if (off != -1L && chunk0 < oldChunk0Count) {
-                  index(2 * w) = dataBase + shardData.size().toLong
-                  index(2 * w + 1) = len
-                  shardData.write(raw, off.toInt, len.toInt)
-                }
-                w += 1
-              }
-            }
-        def addChunk(chunk: Long, cells: ZarrFragments.ChunkCells): Unit = {
-          if (statsOn)
-            stats += (if (isStr) ZarrSink.stringBoundsRecord(chunk, cells.strs, geom)
-                      else ZarrSink.chunkBoundsRecord(chunk, dt, cells.buf, geom, intDomain))
-          val raw = if (isStr) ZarrStoreWriter.vlenEncode(cells.strs) else cells.buf.array()
-          val enc = v3Cfgs.foldLeft(raw)((b, cfg) => ZarrCodecV3.encode(cfg, b, math.max(dt.itemSize, 1)))
-          val cIdx = new Array[Int](rank)
-          var rem = chunk
-          var d = rank - 1
-          while (d >= 0) { cIdx(d) = (rem % nChunksArr(d)).toInt; rem /= nChunksArr(d); d -= 1 }
-          var w = 0L
-          var k = 0
-          while (k < rank) { w += (cIdx(k) % innerPerArr(k)).toLong * innerStrides(k); k += 1 }
-          index(2 * w.toInt) = dataBase + shardData.size().toLong
-          index(2 * w.toInt + 1) = enc.length.toLong
-          shardData.write(enc)
-        }
-        def flushShard(): Unit = if (curShard >= 0L) {
-          val ib = ByteBuffer
-            .allocate(nInner * 16)
-            .order(if (idxBig) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
-          var i = 0
-          while (i < nInner * 2) { ib.putLong(i * 8, index(i)); i += 1 }
-          val idxBytes =
-            if (idxCrc) ZarrCodecV3.encode("""{"name": "crc32c"}""", ib.array(), math.max(dt.itemSize, 1))
-            else ib.array()
-          ZarrFileIO.writeBytes(
-            new HPath(arrayDirStr, keyOf(curShard)),
-            executorOpts,
-            if (idxAtEnd) shardData.toByteArray ++ idxBytes else idxBytes ++ shardData.toByteArray
-          )
-          shardData.reset()
-        }
-        ZarrFragments.foreachChunk(frags, layout) { (s, c, cells) =>
-          if (s != curShard) {
-            flushShard()
-            curShard = s
-            java.util.Arrays.fill(index, -1L) // 2^64-1: missing inner chunk
-            if (tailShardRow >= 0L && s / stride0 == tailShardRow) preloadTail(s)
-          }
-          if (c >= 0L) addChunk(c, cells) // c < 0: a touched tail shard, no cells of its own
-        }
-        flushShard()
-        stats.result().iterator
-      }
-      .collect()
   }
 
   /** Rewrite a v3 array's zarr.json with a grown shape and replaced
@@ -1106,8 +869,10 @@ object ZarrAppend {
   /** Append `newVals` to a DEFERRED coordinate axis in place: rewrite the
     * one partial tail chunk if the extent is mid-chunk (read-modify-write,
     * byte-exact copy of the existing prefix), write whole new chunks, then
-    * bump the coord `.zarray` shape. Work is O(newVals + 1 chunk), driver-
-    * side (newVals is already bounded at 1e6). */
+    * bump the coord `.zarray` shape. A SHARDED axis rewrites each affected
+    * shard as one whole object, the tail shard's chunks before the old
+    * extent copied byte for byte. Work is O(newVals + 1 chunk), driver-side
+    * (newVals is already bounded at 1e6). */
   private def appendCoordTail(
       store: ZarrStore,
       dim: String,
@@ -1121,23 +886,8 @@ object ZarrAppend {
     val dirStr = store.arrayDir(dim)
     val chunkLen = cm.chunks.head
     val dt = cm.zdtype
-    val isStr = dt.code == ZDtype.VSTR
     val newTotal = extent + newVals.length
     val startChunk = extent / chunkLen
-    val lastChunk = (newTotal - 1) / chunkLen
-    val order = if (dt.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
-    // v3 coords encode through their parsed codec chain + key encoding;
-    // v2 applies the numcodecs filter chain forward (same fold as
-    // ZarrStoreWriter) before the compressor — the reader decodes in
-    // reverse, so a rebuilt tail chunk round-trips through any filter the
-    // precheck admitted
-    def encodeCoord(raw: Array[Byte], typesize: Int): Array[Byte] =
-      if (cm.v3) cm.v3Codecs.foldLeft(raw)((b, cfg) => ZarrCodecV3.encode(cfg, b, typesize))
-      else {
-        val filtered = cm.filters.foldLeft(raw)((b, cfg) => ZarrFilters.encode(cfg, dt, b))
-        ZarrCodec.compress(cm.compressor, filtered, typesize)
-      }
-    def coordKey(c: Int): String = cm.chunkKey(Seq(c))
     // the partial tail chunk's existing cells (byte-exact for numerics)
     val nKeep = extent - startChunk * chunkLen
     val existing: Option[ZarrBuffer] =
@@ -1150,124 +900,29 @@ object ZarrAppend {
             )
         )
       else None
-    // ENCODED bytes of rebuilt chunk c (>= startChunk): ""-/zero-padded
-    // past the axis end, existing partial prefix merged at the boundary
-    def encodedChunk(c: Int): Array[Byte] =
-      if (isStr) {
-        val arr = Array.fill(chunkLen)("") // ""-padded past the axis end
+    val out = new ZarrChunkWriter(cm.copy(shape = Vector(newTotal)), dirStr, storageOptions, keptRows = startChunk).output()
+    // chunks from the one holding the extent on: ""-/zero-padded past the
+    // axis end, the existing partial prefix merged at the boundary
+    (startChunk to (newTotal - 1) / chunkLen).foreach { c =>
+      val base = c.toLong * chunkLen
+      val cells = math.max(base, extent.toLong) until math.min(base + chunkLen, newTotal.toLong)
+      if (dt.code == ZDtype.VSTR) {
+        val arr = Array.fill(chunkLen)("")
         if (c == startChunk) existing.foreach { b =>
-          var i = 0
-          while (i < nKeep) { arr(i) = Option(b.getUTF8(i)).map(_.toString).getOrElse(""); i += 1 }
+          (0 until nKeep).foreach(i => arr(i) = Option(b.getUTF8(i)).map(_.toString).getOrElse(""))
         }
-        var g = math.max(c.toLong * chunkLen, extent.toLong)
-        val end = math.min((c.toLong + 1) * chunkLen, newTotal.toLong)
-        while (g < end) {
-          arr((g - c.toLong * chunkLen).toInt) = newVals((g - extent).toInt).asInstanceOf[String]
-          g += 1
-        }
-        encodeCoord(ZarrStoreWriter.vlenEncode(arr), typesize = 1)
+        cells.foreach(g => arr((g - base).toInt) = newVals((g - extent).toInt).asInstanceOf[String])
+        out.chunk(c.toLong, arr)
       } else {
-        val buf = ByteBuffer.allocate(chunkLen * dt.itemSize).order(order) // zero pad past the end
+        val buf = ByteBuffer
+          .allocate(chunkLen * dt.itemSize)
+          .order(if (dt.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
         if (c == startChunk) existing.foreach(b => System.arraycopy(b.raw, 0, buf.array(), 0, nKeep * dt.itemSize))
-        var g = math.max(c.toLong * chunkLen, extent.toLong)
-        val end = math.min((c.toLong + 1) * chunkLen, newTotal.toLong)
-        while (g < end) {
-          ZarrSink.putCoordCell(dt, buf, (g - c.toLong * chunkLen).toInt, newVals((g - extent).toInt))
-          g += 1
-        }
-        encodeCoord(buf.array(), typesize = dt.itemSize)
+        cells.foreach(g => ZarrSink.putCoordCell(dt, buf, (g - base).toInt, newVals((g - extent).toInt)))
+        out.chunk(c.toLong, buf)
       }
-    cm.shardShape match {
-      case None =>
-        var c = startChunk
-        while (c <= lastChunk) {
-          ZarrFileIO.writeBytes(new HPath(dirStr, coordKey(c)), storageOptions, encodedChunk(c))
-          c += 1
-        }
-      case Some(ss) =>
-        // SHARDED coordinate axis (v3): same object-store shape as the
-        // value-array append — existing inner chunks of the tail shard copy
-        // byte-for-byte (no decode), chunks >= startChunk rebuild from the
-        // batch, each affected shard is ONE whole-object PUT, and the index
-        // follows the store's declared layout. Chunks at/past startChunk in
-        // a pre-existing tail object (a crashed attempt whose metadata
-        // commit never landed) are skipped, so replay rewrites the object
-        // byte-identically.
-        val shardLen = ss.head
-        val innerPer = shardLen / chunkLen
-        val idxAtEnd = cm.shardIndexAtEnd
-        val idxCrc = cm.shardIndexCrc
-        val idxBig = cm.shardIndexBigEndian
-        val storedLen = ZarrChunkIO.shardIndexStoredLen(innerPer, idxCrc)
-        val dataBase = if (idxAtEnd) 0L else storedLen.toLong
-        val startShard = extent / shardLen
-        val lastShard = (newTotal - 1) / shardLen
-        val oldTail: Option[(Array[Byte], Array[Long])] =
-          if (extent > startShard * shardLen)
-            ZarrFileIO
-              .readBytesIfExists(new HPath(dirStr, cm.chunkKey(Seq(startShard))), storageOptions)
-              .map { raw =>
-                require(
-                  raw.length >= storedLen,
-                  s"deferred append dim '$dim': tail coordinate shard object (${raw.length} B) is " +
-                    s"smaller than its $storedLen B index — refusing to rewrite a corrupt object"
-                )
-                val idxOff = if (idxAtEnd) raw.length - storedLen else 0
-                (
-                  raw,
-                  ZarrChunkIO.parseShardIndexBytes(
-                    java.util.Arrays.copyOfRange(raw, idxOff, idxOff + storedLen),
-                    innerPer,
-                    idxCrc,
-                    idxBig
-                  )
-                )
-              }
-          else None
-        var s = startShard
-        while (s <= lastShard) {
-          val data = new java.io.ByteArrayOutputStream()
-          val index = Array.fill(innerPer * 2)(-1L) // 2^64-1: missing inner chunk
-          var w = 0
-          while (w < innerPer) {
-            val c = s * innerPer + w
-            if (c.toLong * chunkLen < newTotal) {
-              if (c < startChunk) {
-                oldTail.foreach { case (raw, idx) =>
-                  val off = idx(2 * w)
-                  val len = idx(2 * w + 1)
-                  if (off != -1L) {
-                    index(2 * w) = dataBase + data.size().toLong
-                    index(2 * w + 1) = len
-                    data.write(raw, off.toInt, len.toInt)
-                  }
-                }
-              } else {
-                val enc = encodedChunk(c)
-                index(2 * w) = dataBase + data.size().toLong
-                index(2 * w + 1) = enc.length.toLong
-                data.write(enc)
-              }
-            }
-            w += 1
-          }
-          val ib = ByteBuffer
-            .allocate(innerPer * 16)
-            .order(if (idxBig) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
-          var i = 0
-          while (i < innerPer * 2) { ib.putLong(i * 8, index(i)); i += 1 }
-          val idxBytes =
-            if (idxCrc)
-              ZarrCodecV3.encode("""{"name": "crc32c"}""", ib.array(), math.max(dt.itemSize, 1))
-            else ib.array()
-          ZarrFileIO.writeBytes(
-            new HPath(dirStr, cm.chunkKey(Seq(s))),
-            storageOptions,
-            if (idxAtEnd) data.toByteArray ++ idxBytes else idxBytes ++ data.toByteArray
-          )
-          s += 1
-        }
     }
+    out.close()
     // bump the coordinate array's shape LAST (the tail chunks above are
     // invisible until this lands; a crash before it leaves the old axis)
     if (cm.v3) {

@@ -8,9 +8,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.Platform
 
-/** The shuffle every Zarr write loop ([[ZarrSink]]'s chunked, vlen-string
-  * and sharded writes, [[ZarrAppend]]'s chunked and sharded appends) moves
-  * its cells through: packed per-chunk FRAGMENTS, not one row per cell.
+/** The shuffle every Zarr cell write ([[ZarrSink]]'s and [[ZarrAppend]]'s,
+  * chunked or sharded, fixed-width, vlen-string or structured) moves its
+  * cells through on the way to [[ZarrChunkWriter]]: packed per-chunk
+  * FRAGMENTS, not one row per cell.
   *
   * Map side ([[shuffle]]): each task reads the prepared `[chunk ordinal,
   * in-chunk offset, value]` rows as `InternalRow`s (any sort on top of the
@@ -27,7 +28,7 @@ import org.apache.spark.unsafe.Platform
   *
   * Reduce side ([[foreachChunk]]): a task prefills one chunk buffer with
   * the fill, overlays every fragment of that chunk, and hands the buffer to
-  * the loop's own flush (stats, encode, key, shard index).
+  * [[ZarrChunkWriter]] (stats, encode, key, shard index).
   * Cells land at the same offsets with the same bytes, so the objects
   * written do not depend on how the cells were grouped into fragments.
   *
@@ -58,23 +59,25 @@ private[zarr] object ZarrFragments {
   private final val Dense: Byte = 1
   private final val Strings: Byte = 2
 
-  /** What both sides need to know about one write's chunks: the store
-    * dtype, cells per chunk, the fill a chunk starts from, and the chunk
-    * and shard grids (`innerPer` = inner chunks per shard per dim; null for
-    * an unsharded layout). */
-  final class Layout(
-      val dt: ZDtype,
-      val elems: Int,
-      val strings: Boolean,
-      fill: Double,
-      fillStr: String,
-      structFill: Array[Byte],
-      nChunks: Array[Int],
-      innerPer: Array[Int]
-  ) extends Serializable {
+  /** What both sides need to know about one write's chunks, read off the
+    * target array's meta: the store dtype, cells per chunk, the fill a chunk
+    * starts from (numeric, string, or the base64 structured record), and
+    * the chunk and shard grids. */
+  final class Layout(meta: ZarrArrayMeta) extends Serializable {
+    val dt: ZDtype = meta.zdtype
+    val elems: Int = meta.chunks.map(_.toLong).product.toInt
+    val strings: Boolean = dt.code == ZDtype.VSTR
     val itemSize: Int = dt.itemSize
+    private val fill = meta.fillValue.getOrElse(0.0)
+    private val fillStr = meta.fillValueStr.getOrElse("")
+    private val structFill: Array[Byte] =
+      if (dt.code != ZDtype.V) null
+      else meta.fillValueStr.fold(new Array[Byte](itemSize))(java.util.Base64.getDecoder.decode(_))
     def order: ByteOrder = if (dt.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
     private[ZarrFragments] val bitmapWords: Int = (elems + 63) / 64
+    private val nChunks: Array[Int] = meta.nChunks.toArray
+    // inner chunks per shard per dim; null for an unsharded layout
+    private val innerPer: Array[Int] = meta.shardShape.map(_.zip(meta.chunks).map(p => p._1 / p._2).toArray).orNull
     private val nShards: Array[Int] =
       if (innerPer == null) null else nChunks.indices.map(d => (nChunks(d) + innerPer(d) - 1) / innerPer(d)).toArray
 

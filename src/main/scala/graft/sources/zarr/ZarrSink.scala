@@ -36,9 +36,13 @@ import org.apache.spark.sql.types._
   *    write: a nondeterministic input) fails its map task rather than
   *    being dropped
   *  - reduce tasks stream: one dense chunk buffer at a time (fill, overlay
-  *    the chunk's fragments, compress, write via the Hadoop FileSystem),
-  *    O(1 chunk) memory; the bytes written do not depend on how the cells
-  *    were grouped into fragments
+  *    the chunk's fragments), handed to the array's [[ZarrChunkWriter]] —
+  *    built from the meta this write commits, and the one writer of every
+  *    object the sink and the append put on a store — which records its
+  *    stats, encodes it, keys it and writes it via the Hadoop FileSystem (or
+  *    adds it to the task's one open shard); O(1 chunk) memory, plus one
+  *    shard's encoded bytes. The bytes written do not depend on how the
+  *    cells were grouped into fragments
   *  - absent cells read back as fill_value; chunks with no rows are never
   *    written (Zarr's native sparse representation)
   *
@@ -153,67 +157,6 @@ object ZarrSink {
     case other => throw new IllegalArgumentException(s"zarr sink: unsupported dimension type $other")
   }
 
-  /** Chunk-grid geometry for stats recording: decomposes a chunk ordinal
-    * into its grid position and visits the chunk-local linear index of
-    * every IN-SHAPE cell, skipping ragged-edge padding (cells past the
-    * array shape in a boundary chunk). Padding cells hold the fill value
-    * but are never readable, so including them would widen bounds with a
-    * value no query can observe — sound for pruning but WRONG for the
-    * scan's stats-only min/max aggregate (it would answer the fill from a
-    * store that never contains it). In-shape-only bounds are exact over
-    * readable cells, serving both. */
-  private[zarr] final case class ChunkGeom(
-      shape: Array[Long],
-      chunks: Array[Int],
-      nChunks: Array[Int]
-  ) extends Serializable {
-    private val strides: Array[Int] = {
-      val r = chunks.length
-      val s = new Array[Int](r)
-      var acc = 1
-      var d = r - 1
-      while (d >= 0) { s(d) = acc; acc *= chunks(d); d -= 1 }
-      s
-    }
-    val elems: Int = chunks.product
-
-    def foreachInShape(ordinal: Long)(f: Int => Unit): Unit = {
-      val r = chunks.length
-      val valid = new Array[Int](r)
-      var full = true
-      var rem = ordinal
-      var d = r - 1
-      while (d >= 0) {
-        val g = (rem % nChunks(d)).toInt
-        rem /= nChunks(d)
-        val v = math.min(chunks(d).toLong, shape(d) - g.toLong * chunks(d)).toInt
-        valid(d) = v
-        if (v != chunks(d)) full = false
-        d -= 1
-      }
-      if (full) {
-        var i = 0
-        while (i < elems) { f(i); i += 1 }
-      } else {
-        // odometer over the valid hyper-rectangle, linear index incremental
-        val idx = new Array[Int](r)
-        var lin = 0
-        var done = false
-        while (!done) {
-          f(lin)
-          var d2 = r - 1
-          var carry = true
-          while (carry && d2 >= 0) {
-            idx(d2) += 1
-            if (idx(d2) < valid(d2)) { lin += strides(d2); carry = false }
-            else { lin -= (valid(d2) - 1) * strides(d2); idx(d2) = 0; d2 -= 1 }
-          }
-          if (carry) done = true
-        }
-      }
-    }
-  }
-
   /** One flushed chunk's bounds in whichever stats domain applies; unused
     * fields stay at their defaults. */
   private[zarr] final case class ChunkBounds(
@@ -226,86 +169,6 @@ object ZarrSink {
       loS: String = null,
       hiS: String = null
   )
-
-  /** Byte-lexicographic [min, max] over a string chunk's IN-SHAPE cells
-    * (fill-prefilled, so never null) — the same binary UTF-8 order Spark
-    * strings compare in. */
-  private[zarr] def stringBoundsRecord(
-      ordinal: Long,
-      cells: Array[String],
-      geom: ChunkGeom
-  ): ChunkBounds = {
-    var lo: String = null
-    var hi: String = null
-    var loB: Array[Byte] = null
-    var hiB: Array[Byte] = null
-    geom.foreachInShape(ordinal) { i =>
-      val s = cells(i)
-      if (s != null) {
-        val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        if (lo == null || java.util.Arrays.compareUnsigned(b, loB) < 0) { lo = s; loB = b }
-        if (hi == null || java.util.Arrays.compareUnsigned(b, hiB) > 0) { hi = s; hiB = b }
-      }
-    }
-    ChunkBounds(ordinal, has = lo != null, loS = lo, hiS = hi)
-  }
-
-  /** [min, max] over every IN-SHAPE cell of a flushed chunk buffer (fill-
-    * prefilled sparse cells included — they are readable; ragged-edge
-    * padding excluded — it is not, and including it would poison the
-    * stats-only min/max aggregate with the fill value, see [[ChunkGeom]]).
-    * Long domain converts M8/TD raw units to micros exactly like the read
-    * path (NaT cells are null and excluded); double domain orders NaN
-    * greatest and normalizes -0.0, matching Spark comparisons. */
-  private[zarr] def chunkBoundsRecord(
-      ordinal: Long,
-      dt: ZDtype,
-      buf: ByteBuffer,
-      geom: ChunkGeom,
-      intDomain: Boolean
-  ): ChunkBounds =
-    if (intDomain) {
-      var mn = Long.MaxValue
-      var mx = Long.MinValue
-      var any = false
-      geom.foreachInShape(ordinal) { i =>
-        var skip = false
-        val v: Long = dt.code match {
-          case ZDtype.BOOL | ZDtype.I1 => buf.get(i).toLong
-          case ZDtype.U1 => (buf.get(i) & 0xff).toLong
-          case ZDtype.I2 => buf.getShort(i * 2).toLong
-          case ZDtype.U2 => (buf.getShort(i * 2) & 0xffff).toLong
-          case ZDtype.I4 => buf.getInt(i * 4).toLong
-          case ZDtype.U4 => buf.getInt(i * 4) & 0xffffffffL
-          case ZDtype.I8 => buf.getLong(i * 8)
-          case ZDtype.M8 | ZDtype.TD =>
-            val raw = buf.getLong(i * 8)
-            if (raw == ZDtype.NaT) { skip = true; 0L }
-            else raw * dt.m8Num / dt.m8Den
-          case other => throw new IllegalStateException(s"stats domain int for dtype code $other")
-        }
-        if (!skip) { any = true; if (v < mn) mn = v; if (v > mx) mx = v }
-      }
-      ChunkBounds(ordinal, any, loL = mn, hiL = mx)
-    } else {
-      var mn = Double.NaN
-      var mx = Double.NaN
-      var any = false
-      geom.foreachInShape(ordinal) { i =>
-        val v: Double = ZarrChunkStats.norm(dt.code match {
-          case ZDtype.F2 => ZDtype.halfToFloat(buf.getShort(i * 2)).toDouble
-          case ZDtype.F4 => buf.getFloat(i * 4).toDouble
-          case ZDtype.F8 => buf.getDouble(i * 8)
-          case other => throw new IllegalStateException(s"stats domain float for dtype code $other")
-        })
-        if (!any) { mn = v; mx = v; any = true }
-        else {
-          if (java.lang.Double.compare(v, mn) < 0) mn = v
-          if (java.lang.Double.compare(v, mx) > 0) mx = v
-        }
-      }
-      ChunkBounds(ordinal, any, loD = mn, hiD = mx)
-    }
 
   /** The value put of one write, bound once to the value column's type
     * and the store dtype: writes a row's non-null internal value at element
@@ -430,7 +293,10 @@ object ZarrSink {
     if (bare.fastEquals(plan)) df else GraftBridge.ofRows(df, bare)
   }
 
-  def write(input: DataFrame, rawOptions: Map[String, String], overwrite: Boolean): Unit = {
+  /** Writes `input` as a Zarr array (or appends it, see `append.dim`) and
+    * returns the meta its chunk objects were written under: the array's
+    * metadata as committed, bar the attributes. */
+  def write(input: DataFrame, rawOptions: Map[String, String], overwrite: Boolean): ZarrArrayMeta = {
     val df = unsorted(input)
     val opts = rawOptions.map { case (k, v) => k.toLowerCase -> v }
     def required(k: String): String =
@@ -449,10 +315,7 @@ object ZarrSink {
       )
       val exists = try probe.listArrays().contains(array)
       catch { case scala.util.control.NonFatal(_) => false }
-      if (exists) {
-        ZarrAppend.append(df, opts)
-        return
-      }
+      if (exists) return ZarrAppend.append(df, opts)
     }
     val group = opts.get("group")
     val storageOptions = opts.collect { case (k, v) if k.startsWith("storage.") => k.drop("storage.".length) -> v }
@@ -693,19 +556,6 @@ object ZarrSink {
 
     val executorOpts = ZarrFileIO.executorOptions(storageOptions)
     val arrayDirStr = arrayDir.toString
-    val comp = compressor
-    val dt = zdt
-    val fill = fillValue
-    val elems = chunkElems.toInt
-    val nChunksArr = nChunksVec.toArray
-    val isV3 = v3
-    val v3CfgsSer = v3Cfgs
-    val fillStrSer = fillStr
-    val isStrValue = strValue
-    val structFillSer = structFill
-    // in-shape-only stats geometry: bounds must skip ragged-edge padding
-    // cells or the stats-only min/max aggregate answers the fill value
-    val geomSer = ChunkGeom(shape.map(_.toLong).toArray, chunks.toArray, nChunksVec.toArray)
 
     // ---- per-chunk value statistics (zone maps): on by default for
     // numeric/datetime dtypes on bounded grids; `chunk_stats=false` opts
@@ -742,27 +592,6 @@ object ZarrSink {
       statsAttrJson.map(j => ZarrChunkStats.AttrKey -> j).toMap ++
         statsDroppedJson.map(j => ZarrChunkStats.DroppedAttrKey -> j).toMap
 
-    def docOf(domain: String, rows: Iterable[ChunkBounds]): ZarrChunkStats.Doc = domain match {
-      case "int" =>
-        ZarrChunkStats.Doc(
-          "int",
-          totalChunks,
-          boundsI = rows.map(r => r.ord -> (if (r.has) Some((r.loL, r.hiL)) else None)).toMap
-        )
-      case "float" =>
-        ZarrChunkStats.Doc(
-          "float",
-          totalChunks,
-          boundsF = rows.map(r => r.ord -> (if (r.has) Some((r.loD, r.hiD)) else None)).toMap
-        )
-      case _ =>
-        ZarrChunkStats.Doc(
-          "string",
-          totalChunks,
-          boundsS = rows.map(r => r.ord -> (if (r.has) Some((r.loS, r.hiS)) else None)).toMap
-        )
-    }
-
     /** Runs the write job carried by `rdd` and records its stats. Flat
       * grids collect the per-chunk bounds driver-side (bounded by the flat
       * cap); hierarchical grids shuffle the bounds by block (tiny — ~40 B
@@ -771,52 +600,25 @@ object ZarrSink {
     def finishStats(rdd: org.apache.spark.rdd.RDD[ChunkBounds]): Unit =
       if (!statsOn || !statsHier) {
         val rows = rdd.collect()
-        if (statsOn) statsAttrJson = Some(ZarrChunkStats.toJson(docOf(statsDomain.get, rows)))
+        if (statsOn) statsAttrJson = Some(ZarrChunkStats.toJson(ZarrChunkStats.docOfBounds(statsDomain.get, totalChunks, rows)))
       } else {
         val domain = statsDomain.get
         val blockLen = statsBlockLen
         val dirStr = arrayDirStr
         val eOpts = executorOpts
         val totC = totalChunks
-        val docOfSer = docOf _
         val nBlocks = (totC + blockLen - 1) / blockLen
         val rollParts = math.max(1L, math.min(shufflePartitions.toLong, nBlocks)).toInt
         val rollups: Array[(Long, Long, ChunkBounds)] = rdd
           .map(b => (b.ord / blockLen, b))
           .groupByKey(rollParts)
-          .map { case (blk, bsIter) =>
-            val bs = bsIter.toArray
-            ZarrFileIO.writeString(
-              new HPath(dirStr, s"${ZarrChunkStats.SideDir}/$blk"),
-              eOpts,
-              ZarrChunkStats.toJson(docOfSer(domain, bs))
-            )
-            val has = bs.filter(_.has)
-            val roll: ChunkBounds =
-              if (has.isEmpty) ChunkBounds(blk, has = false)
-              else
-                domain match {
-                  case "int" =>
-                    ChunkBounds(blk, has = true, loL = has.map(_.loL).min, hiL = has.map(_.hiL).max)
-                  case "float" =>
-                    ChunkBounds(
-                      blk,
-                      has = true,
-                      loD = has.map(_.loD).min(Ordering.Double.TotalOrdering),
-                      hiD = has.map(_.hiD).max(Ordering.Double.TotalOrdering)
-                    )
-                  case _ =>
-                    ChunkBounds(
-                      blk,
-                      has = true,
-                      loS = has.map(_.loS).reduce(ZarrChunkStats.byteLexMin),
-                      hiS = has.map(_.hiS).reduce(ZarrChunkStats.byteLexMax)
-                    )
-                }
-            (blk, bs.length.toLong, roll)
+          .map { case (blk, bs) =>
+            val doc = ZarrChunkStats.docOfBounds(domain, totC, bs)
+            ZarrFileIO.writeString(new HPath(dirStr, s"${ZarrChunkStats.SideDir}/$blk"), eOpts, ZarrChunkStats.toJson(doc))
+            (blk, bs.size.toLong, ZarrChunkStats.rollupRecord(blk, doc))
           }
           .collect()
-        val rollDoc = docOf(domain, rollups.map(_._3)).copy(nChunks = nBlocks)
+        val rollDoc = ZarrChunkStats.docOfBounds(domain, nBlocks, rollups.map(_._3))
         statsAttrJson = Some(
           ZarrChunkStats.toJsonHier(
             ZarrChunkStats.Hier(
@@ -834,115 +636,29 @@ object ZarrSink {
     // (ZarrFragments) through one shuffle keyed by shard (by chunk when
     // unsharded), so each chunk's cells — and each shard's chunks — meet in
     // exactly one task, which prefills one chunk buffer at a time, overlays
-    // the chunk's fragments and flushes it. Unset cells keep the fill, so
-    // written-chunk and absent-chunk reads agree. With stats on, each task
-    // also emits one [min, max] record per chunk it flushed (byte-
-    // lexicographic for strings), rolled up via finishStats and written into
-    // the array attributes as chunk zone maps.
+    // the chunk's fragments and hands it to the ZarrChunkWriter of the meta
+    // committed below. Unset cells keep the fill, so written-chunk and
+    // absent-chunk reads agree. With stats on, each task also emits one
+    // [min, max] record per chunk it wrote (byte-lexicographic for strings),
+    // rolled up via finishStats and written into the array attributes as
+    // chunk zone maps.
+    val target = storeMeta(array, shape, chunks, dtype, v3, compressor, v3Cfgs).copy(
+      dims = dims,
+      fillValue = if (strValue || structValue) None else Some(fillValue),
+      fillValueStr =
+        if (strValue) Some(fillStr)
+        else Option(structFill).map(java.util.Base64.getEncoder.encodeToString),
+      shardShape = shardsOpt
+    )
+    val writer = new ZarrChunkWriter(target, arrayDirStr, executorOpts, stats = statsOn)
+    // one reduce task per object at most: a shard (a chunk when unsharded)
+    // is written by exactly one task
+    val objects = shardsOpt.fold(totalChunks)(_.zip(shape).map { case (c, s) => ((s + c - 1) / c).toLong }.product)
+    val parts = math.max(1L, math.min(shufflePartitions.toLong, objects)).toInt
     val prepared =
       indexed.select(chunkExpr.as("__chunk"), localExpr.as("__local"), col("value").as("__value"))
     val cellPut = new CellPut(df.schema("value").dataType, zdt, rangeChecked, rangeMin, rangeMax, dtype)
-    val statsOnSer = statsOn
-    val statsIntSer = statsDomain.contains("int")
-    shardsOpt match {
-      case None =>
-        // ---- one on-store object per chunk
-        val layout = new ZarrFragments.Layout(dt, elems, isStrValue, fill, fillStrSer, structFillSer, nChunksArr, null)
-        val parts = math.max(1L, math.min(shufflePartitions.toLong, totalChunks)).toInt
-        val statsRdd = ZarrFragments.shuffle(prepared, layout, cellPut, parts, "zarr sink").mapPartitions { frags =>
-          val stats = Array.newBuilder[ChunkBounds]
-          ZarrFragments.foreachChunk(frags, layout) { (_, chunk, cells) =>
-            if (statsOnSer)
-              stats += (if (isStrValue) stringBoundsRecord(chunk, cells.strs, geomSer)
-                        else chunkBoundsRecord(chunk, dt, cells.buf, geomSer, statsIntSer))
-            val (raw, typesize) =
-              if (isStrValue) (ZarrStoreWriter.vlenEncode(cells.strs), 1) else (cells.buf.array(), dt.itemSize)
-            val bytes =
-              if (isV3) v3CfgsSer.foldLeft(raw)((b, cfg) => ZarrCodecV3.encode(cfg, b, typesize))
-              else ZarrCodec.compress(comp, raw, typesize = typesize)
-            // decompose the chunk ordinal over the chunk grid (C-order)
-            val idx = new Array[Int](nChunksArr.length)
-            var rem = chunk
-            var d = nChunksArr.length - 1
-            while (d >= 0) { idx(d) = (rem % nChunksArr(d)).toInt; rem /= nChunksArr(d); d -= 1 }
-            val key =
-              if (isV3) "c/" + idx.mkString("/") else ZarrChunkIO.chunkFileName(idx.toSeq)
-            ZarrFileIO.writeBytes(new HPath(arrayDirStr, key), executorOpts, bytes)
-          }
-          stats.result().iterator
-        }
-        finishStats(statsRdd)
-
-      case Some(shards) =>
-        // ---- sharded write: each shard object (inner chunks + crc32c'd
-        // byte-range index) is produced by exactly one task in one streaming
-        // pass — one PUT per shard, the object-store-friendly shape at
-        // scale. Memory: one inner-chunk buffer + one shard's encoded bytes.
-        val nShardsVec = shape.zip(shards).map { case (s, c) => (s + c - 1) / c }
-        val innerPerVec = shards.zip(chunks).map { case (s, c) => s / c }
-        val totalShards = nShardsVec.map(_.toLong).product
-        val parts = math.max(1L, math.min(shufflePartitions.toLong, totalShards)).toInt
-        val nShardsArr = nShardsVec.toArray
-        val innerPerArr = innerPerVec.toArray
-        val innerStrides = IndexMath.strides(innerPerVec).toArray
-        val nInner = innerPerVec.map(_.toLong).product.toInt
-        val layout =
-          new ZarrFragments.Layout(dt, elems, isStrValue, fill, fillStrSer, structFillSer, nChunksArr, innerPerArr)
-        val shardStatsRdd = ZarrFragments.shuffle(prepared, layout, cellPut, parts, "zarr sink").mapPartitions { frags =>
-          val rank = nShardsArr.length
-          var curShard = -1L
-          val shardData = new java.io.ByteArrayOutputStream()
-          val index = new Array[Long](nInner * 2)
-          val stats = Array.newBuilder[ChunkBounds]
-          def addChunk(chunk: Long, cells: ZarrFragments.ChunkCells): Unit = {
-            // bounds per INNER chunk — the scan's pruning granularity
-            if (statsOnSer)
-              stats += (if (isStrValue) stringBoundsRecord(chunk, cells.strs, geomSer)
-                        else chunkBoundsRecord(chunk, dt, cells.buf, geomSer, statsIntSer))
-            val raw =
-              if (isStrValue) ZarrStoreWriter.vlenEncode(cells.strs) else cells.buf.array()
-            val enc = v3CfgsSer.foldLeft(raw)((b, cfg) => ZarrCodecV3.encode(cfg, b, math.max(dt.itemSize, 1)))
-            // within-shard inner ordinal from the GLOBAL chunk ordinal
-            val cIdx = new Array[Int](rank)
-            var rem = chunk
-            var d = rank - 1
-            while (d >= 0) { cIdx(d) = (rem % nChunksArr(d)).toInt; rem /= nChunksArr(d); d -= 1 }
-            var w = 0L
-            var k = 0
-            while (k < rank) { w += (cIdx(k) % innerPerArr(k)).toLong * innerStrides(k); k += 1 }
-            index(2 * w.toInt) = shardData.size().toLong
-            index(2 * w.toInt + 1) = enc.length.toLong
-            shardData.write(enc)
-          }
-          def flushShard(): Unit = if (curShard >= 0L) {
-            val ib = ByteBuffer.allocate(nInner * 16).order(ByteOrder.LITTLE_ENDIAN)
-            var i = 0
-            while (i < nInner * 2) { ib.putLong(i * 8, index(i)); i += 1 }
-            val idxBytes = ZarrCodecV3.encode("""{"name": "crc32c"}""", ib.array(), math.max(dt.itemSize, 1))
-            val sIdx = new Array[Int](rank)
-            var rem = curShard
-            var d = rank - 1
-            while (d >= 0) { sIdx(d) = (rem % nShardsArr(d)).toInt; rem /= nShardsArr(d); d -= 1 }
-            ZarrFileIO.writeBytes(
-              new HPath(arrayDirStr, "c/" + sIdx.mkString("/")),
-              executorOpts,
-              shardData.toByteArray ++ idxBytes
-            )
-            shardData.reset()
-          }
-          ZarrFragments.foreachChunk(frags, layout) { (s, c, cells) =>
-            if (s != curShard) {
-              flushShard()
-              curShard = s
-              java.util.Arrays.fill(index, -1L) // 2^64-1: missing inner chunk
-            }
-            addChunk(c, cells)
-          }
-          flushShard()
-          stats.result().iterator
-        }
-        finishStats(shardStatsRdd)
-    }
+    finishStats(ZarrFragments.shuffle(prepared, writer.layout, cellPut, parts, "zarr sink").mapPartitions(writer.writeFragments))
 
     // ---- metadata (driver-side, after the data job): group marker, array
     // metadata, coordinate arrays, consolidated metadata
@@ -1020,14 +736,6 @@ object ZarrSink {
           doc
       }
       ZarrFileIO.writeString(new HPath(arrayDir, "zarr.json"), storageOptions, arrayDoc)
-      axes.foreach {
-        case (d, cdt, Left(vals)) => writeCoordArrayV3(groupDir, d, vals, cdt, v3Cfgs, storageOptions)
-        case (d, cdt, Right((sorted, n))) =>
-          writeCoordArrayDistributed(
-            groupDir, d, sorted, n, cdt, v3 = true, compressor, v3Cfgs, storageOptions, coordChunkValues
-          )
-      }
-      consolidateV3(groupDir, storageOptions)
     } else {
       val zgroup = new HPath(groupDir, ".zgroup")
       if (!ZarrFileIO.exists(zgroup, storageOptions))
@@ -1056,15 +764,14 @@ object ZarrSink {
           statsAttrMap
         )
       )
-      axes.foreach {
-        case (d, cdt, Left(vals)) => writeCoordArray(groupDir, d, vals, cdt, compressor, storageOptions)
-        case (d, cdt, Right((sorted, n))) =>
-          writeCoordArrayDistributed(
-            groupDir, d, sorted, n, cdt, v3 = false, compressor, Nil, storageOptions, coordChunkValues
-          )
-      }
-      consolidate(groupDir, storageOptions)
     }
+    axes.foreach {
+      case (d, cdt, Left(vals)) => writeCoordArray(groupDir, d, vals, cdt, v3, compressor, v3Cfgs, storageOptions)
+      case (d, cdt, Right((sorted, n))) =>
+        writeCoordArrayDistributed(groupDir, d, sorted, n, cdt, v3, compressor, v3Cfgs, storageOptions, coordChunkValues)
+    }
+    if (v3) consolidateV3(groupDir, storageOptions) else consolidate(groupDir, storageOptions)
+    target
   }
 
   /** numpy dtype spelling → v3 core data_type name. */
@@ -1095,12 +802,121 @@ object ZarrSink {
     case other => throw new IllegalArgumentException(s"zarr sink: bad coord value $other")
   }
 
+  /** The layout the sink gives an array it writes: v3 `c/`-keys and a
+    * bytes-to-bytes codec chain, or v2 dotted keys and a compressor. */
+  private[zarr] def storeMeta(
+      name: String,
+      shape: Vector[Int],
+      chunks: Vector[Int],
+      dtype: String,
+      v3: Boolean,
+      compressor: Option[String],
+      v3Cfgs: Seq[String]
+  ): ZarrArrayMeta =
+    ZarrArrayMeta(
+      name, shape, chunks, dtype, "C", if (v3) None else compressor, None, Vector(name), Map.empty,
+      v3 = v3, keyEncoding = if (v3) "default" else "v2", keySeparator = if (v3) "/" else ".",
+      v3Codecs = if (v3) v3Cfgs.toVector else Vector.empty
+    )
+
+  /** Writes the metadata of 1-D coordinate array `dim` — `n` cells in
+    * `chunkLen`-cell chunks, numeric (fill 0) or vlen-utf8 (fill null) —
+    * and returns the meta its chunks are written under. */
+  private def writeCoordMeta(
+      groupDir: HPath,
+      dim: String,
+      n: Int,
+      chunkLen: Int,
+      sparkType: DataType,
+      v3: Boolean,
+      compressor: Option[String],
+      v3Cfgs: Seq[String],
+      storageOptions: Map[String, String]
+  ): ZarrArrayMeta = {
+    val dir = new HPath(groupDir, dim)
+    val dtype = coordDtype(sparkType)
+    val str = sparkType == StringType
+    if (v3) {
+      require(
+        !dtype.contains("M8"),
+        s"zarr sink: zarr_format=3 has no core datetime64 data_type for dimension '$dim' — use an int64 epoch column"
+      )
+      ZarrFileIO.writeString(
+        new HPath(dir, "zarr.json"),
+        storageOptions,
+        if (str)
+          s"""{"zarr_format": 3, "node_type": "array",
+             |"shape": [$n],
+             |"data_type": "string",
+             |"chunk_grid": {"name": "regular", "configuration": {"chunk_shape": [$chunkLen]}},
+             |"chunk_key_encoding": {"name": "default", "configuration": {"separator": "/"}},
+             |"fill_value": null,
+             |"codecs": ${("""{"name": "vlen-utf8"}""" +: v3Cfgs).mkString("[", ", ", "]")},
+             |"attributes": {},
+             |"dimension_names": ["$dim"]}""".stripMargin
+        else
+          ZarrStoreWriterV3.arrayJson(
+            Vector(n), Vector(chunkLen), v3DataTypeName(dtype), v3Cfgs, Some(0.0),
+            Some(Vector(dim)), separator = "/", endian = "little"
+          )
+      )
+    } else {
+      ZarrFileIO.writeString(
+        new HPath(dir, ".zarray"),
+        storageOptions,
+        if (str)
+          s"""{"zarr_format": 2, "shape": [$n], "chunks": [$chunkLen],
+             |"dtype": "|O", "order": "C", "compressor": ${ZarrStoreWriter.compressorJson(compressor)},
+             |"fill_value": null, "filters": [{"id": "vlen-utf8"}]}""".stripMargin
+        else ZarrStoreWriter.zarrayJson(Vector(n), Vector(chunkLen), dtype, compressor, Some(0.0))
+      )
+      ZarrFileIO.writeString(new HPath(dir, ".zattrs"), storageOptions, ZarrStoreWriter.zattrsJson(Some(Vector(dim))))
+    }
+    storeMeta(dim, Vector(n), Vector(chunkLen), dtype, v3, compressor, v3Cfgs)
+  }
+
+  /** Writes coordinate chunk `c` from its `(offset, value)` cells: a full
+    * chunk, zero- or ""-padded past the axis end (the zarr and numcodecs
+    * VLenUTF8 conventions). */
+  private def writeCoordChunk(writer: ZarrChunkWriter, c: Long, cells: Iterable[(Long, Any)]): Unit = {
+    val dt = writer.meta.zdtype
+    val len = writer.meta.chunks.head
+    val out = writer.output()
+    if (dt.code == ZDtype.VSTR) {
+      val strs = Array.fill(len)("")
+      cells.foreach { case (off, v) => strs(off.toInt) = v.asInstanceOf[String] }
+      out.chunk(c, strs)
+    } else {
+      val buf = ByteBuffer.allocate(len * dt.itemSize).order(ByteOrder.LITTLE_ENDIAN)
+      cells.foreach { case (off, v) => putCoordCell(dt, buf, off.toInt, v) }
+      out.chunk(c, buf)
+    }
+    out.close()
+  }
+
+  /** Driver-side 1-D coordinate array: the whole axis in one chunk. */
+  private[zarr] def writeCoordArray(
+      groupDir: HPath,
+      dim: String,
+      vals: Array[Any],
+      sparkType: DataType,
+      v3: Boolean,
+      compressor: Option[String],
+      v3Cfgs: Seq[String],
+      storageOptions: Map[String, String]
+  ): Unit = {
+    val cm = writeCoordMeta(groupDir, dim, vals.length, vals.length, sparkType, v3, compressor, v3Cfgs, storageOptions)
+    val writer = new ZarrChunkWriter(cm, new HPath(groupDir, dim).toString, storageOptions)
+    writeCoordChunk(writer, 0L, vals.indices.map(i => (i.toLong, vals(i))))
+  }
+
   /** LONG-axis 1-D coordinate array: metadata driver-side, chunk objects
     * written FROM EXECUTORS out of the sorted (value, ordinal) RDD — the
     * axis values never materialize on the driver. 1M-cell chunks: a 10^9-
     * value axis is ~1000 objects, and the read path's deferred-coordinate
-    * machinery (threshold, chunk cursors, stats pruning) picks it up
-    * symmetrically. */
+    * machinery (threshold, chunk cursors, stats pruning — lexicographic for
+    * a label axis, whose binary UTF-8 sort order Spark's own matches)
+    * picks it up symmetrically. */
   private def writeCoordArrayDistributed(
       groupDir: HPath,
       dim: String,
@@ -1111,200 +927,17 @@ object ZarrSink {
       compressor: Option[String],
       v3Cfgs: Seq[String],
       storageOptions: Map[String, String],
-      coordChunkValues: Int = 1000000
-  ): Unit = {
-    if (sparkType == StringType) {
-      // LONG STRING axis: vlen-utf8 coordinate chunks written from
-      // executors — the label-axis analog of the numeric path below. The
-      // read side's deferred string machinery (threshold, chunk cursors,
-      // lexicographic chunk-stats pruning) picks these up symmetrically;
-      // Spark's StringType sort is binary UTF-8 order, matching the
-      // UTF8String comparisons the pruner uses.
-      writeStringCoordDistributed(
-        groupDir, dim, sorted, n, v3, compressor, v3Cfgs, storageOptions, coordChunkValues
-      )
-      return
-    }
-    val dtype = coordDtype(sparkType)
-    val dt = ZDtype.parse(dtype)
-    val dir = new HPath(groupDir, dim)
-    val chunkLen = math.min(n.toLong, coordChunkValues.toLong).toInt
-    val nChunks = ((n.toLong + chunkLen - 1) / chunkLen).toInt
-    if (v3) {
-      require(
-        !dtype.contains("M8"),
-        s"zarr sink: zarr_format=3 has no core datetime64 data_type for dimension '$dim' — use an int64 epoch column"
-      )
-      ZarrFileIO.writeString(
-        new HPath(dir, "zarr.json"),
-        storageOptions,
-        ZarrStoreWriterV3.arrayJson(
-          Vector(n), Vector(chunkLen), v3DataTypeName(dtype), v3Cfgs, Some(0.0),
-          Some(Vector(dim)), separator = "/", endian = "little"
-        )
-      )
-    } else {
-      ZarrFileIO.writeString(
-        new HPath(dir, ".zarray"),
-        storageOptions,
-        ZarrStoreWriter.zarrayJson(Vector(n), Vector(chunkLen), dtype, compressor, Some(0.0))
-      )
-      ZarrFileIO.writeString(
-        new HPath(dir, ".zattrs"),
-        storageOptions,
-        ZarrStoreWriter.zattrsJson(Some(Vector(dim)))
-      )
-    }
-    val execOpts = ZarrFileIO.executorOptions(storageOptions)
-    val dirStr = dir.toString
-    val cl = chunkLen
-    val isV3 = v3
-    val comp = compressor
-    val cfgs = v3Cfgs
-    val dtSer = dt
-    sorted
-      .map { case (v, i) => (i / cl, (i % cl, v)) }
-      .groupByKey(math.max(1, math.min(nChunks, sorted.sparkContext.defaultParallelism)))
-      .foreach { case (c, cells) =>
-        // full-size chunk, zero-padded past the axis end (zarr convention)
-        val buf = ByteBuffer.allocate(cl * dtSer.itemSize).order(ByteOrder.LITTLE_ENDIAN)
-        cells.foreach { case (off, v) => ZarrSink.putCoordCell(dtSer, buf, off.toInt, v) }
-        val bytes =
-          if (isV3) cfgs.foldLeft(buf.array())((b, cfg) => ZarrCodecV3.encode(cfg, b, dtSer.itemSize))
-          else ZarrCodec.compress(comp, buf.array(), typesize = dtSer.itemSize)
-        val key = if (isV3) s"c/$c" else c.toString
-        ZarrFileIO.writeBytes(new HPath(dirStr, key), execOpts, bytes)
-      }
-    sorted.unpersist(blocking = false)
-  }
-
-  /** LONG-axis STRING (vlen-utf8) coordinate array: metadata driver-side,
-    * chunk objects written FROM EXECUTORS out of the sorted (value,
-    * ordinal) RDD. Each chunk is a full-size vlen frame, ""-padded past
-    * the axis end (numcodecs VLenUTF8 convention, matching
-    * [[ZarrStoreWriter.foreachStringChunk]]). */
-  private def writeStringCoordDistributed(
-      groupDir: HPath,
-      dim: String,
-      sorted: org.apache.spark.rdd.RDD[(Any, Long)],
-      n: Int,
-      v3: Boolean,
-      compressor: Option[String],
-      v3Cfgs: Seq[String],
-      storageOptions: Map[String, String],
       coordChunkValues: Int
   ): Unit = {
-    val dir = new HPath(groupDir, dim)
     val chunkLen = math.min(n.toLong, coordChunkValues.toLong).toInt
     val nChunks = ((n.toLong + chunkLen - 1) / chunkLen).toInt
-    if (v3) {
-      val allCodecs = ("""{"name": "vlen-utf8"}""" +: v3Cfgs).mkString("[", ", ", "]")
-      ZarrFileIO.writeString(
-        new HPath(dir, "zarr.json"),
-        storageOptions,
-        s"""{"zarr_format": 3, "node_type": "array",
-           |"shape": [$n],
-           |"data_type": "string",
-           |"chunk_grid": {"name": "regular", "configuration": {"chunk_shape": [$chunkLen]}},
-           |"chunk_key_encoding": {"name": "default", "configuration": {"separator": "/"}},
-           |"fill_value": null,
-           |"codecs": $allCodecs,
-           |"attributes": {},
-           |"dimension_names": ["$dim"]}""".stripMargin
-      )
-    } else {
-      ZarrFileIO.writeString(
-        new HPath(dir, ".zarray"),
-        storageOptions,
-        s"""{"zarr_format": 2, "shape": [$n], "chunks": [$chunkLen],
-           |"dtype": "|O", "order": "C", "compressor": ${ZarrStoreWriter.compressorJson(compressor)},
-           |"fill_value": null, "filters": [{"id": "vlen-utf8"}]}""".stripMargin
-      )
-      ZarrFileIO.writeString(
-        new HPath(dir, ".zattrs"),
-        storageOptions,
-        ZarrStoreWriter.zattrsJson(Some(Vector(dim)))
-      )
-    }
-    val execOpts = ZarrFileIO.executorOptions(storageOptions)
-    val dirStr = dir.toString
-    val cl = chunkLen
-    val isV3 = v3
-    val comp = compressor
-    val cfgs = v3Cfgs
+    val cm = writeCoordMeta(groupDir, dim, n, chunkLen, sparkType, v3, compressor, v3Cfgs, storageOptions)
+    val writer = new ZarrChunkWriter(cm, new HPath(groupDir, dim).toString, ZarrFileIO.executorOptions(storageOptions))
     sorted
-      .map { case (v, i) => (i / cl, (i % cl, v)) }
+      .map { case (v, i) => (i / chunkLen, (i % chunkLen, v)) }
       .groupByKey(math.max(1, math.min(nChunks, sorted.sparkContext.defaultParallelism)))
-      .foreach { case (c, cells) =>
-        val arr = Array.fill(cl)("") // full-size chunk, ""-padded past the axis end
-        cells.foreach { case (off, v) => arr(off.toInt) = v.asInstanceOf[String] }
-        val raw = ZarrStoreWriter.vlenEncode(arr)
-        val bytes =
-          if (isV3) cfgs.foldLeft(raw)((b, cfg) => ZarrCodecV3.encode(cfg, b, 1))
-          else ZarrCodec.compress(comp, raw, typesize = 1)
-        val key = if (isV3) s"c/$c" else c.toString
-        ZarrFileIO.writeBytes(new HPath(dirStr, key), execOpts, bytes)
-      }
+      .foreach { case (c, cells) => writeCoordChunk(writer, c, cells) }
     sorted.unpersist(blocking = false)
-  }
-
-  /** Single-chunk 1-D v3 coordinate array written through the Hadoop FS. */
-  private[zarr] def writeCoordArrayV3(
-      groupDir: HPath,
-      dim: String,
-      vals: Array[Any],
-      sparkType: DataType,
-      cfgs: Seq[String],
-      storageOptions: Map[String, String]
-  ): Unit = {
-    if (sparkType == StringType) {
-      val dir = new HPath(groupDir, dim)
-      val allCodecs = ("""{"name": "vlen-utf8"}""" +: cfgs).mkString("[", ", ", "]")
-      ZarrFileIO.writeString(
-        new HPath(dir, "zarr.json"),
-        storageOptions,
-        s"""{"zarr_format": 3, "node_type": "array",
-           |"shape": [${vals.length}],
-           |"data_type": "string",
-           |"chunk_grid": {"name": "regular", "configuration": {"chunk_shape": [${vals.length}]}},
-           |"chunk_key_encoding": {"name": "default", "configuration": {"separator": "/"}},
-           |"fill_value": null,
-           |"codecs": $allCodecs,
-           |"attributes": {},
-           |"dimension_names": ["$dim"]}""".stripMargin
-      )
-      val raw = ZarrStoreWriter.vlenEncode(vals.map(_.asInstanceOf[String]))
-      val bytes = cfgs.foldLeft(raw)((b, cfg) => ZarrCodecV3.encode(cfg, b, 1))
-      ZarrFileIO.writeBytes(new HPath(new HPath(dir, "c"), "0"), storageOptions, bytes)
-      return
-    }
-    val dtype = coordDtype(sparkType)
-    require(
-      !dtype.contains("M8"),
-      s"zarr sink: zarr_format=3 has no core datetime64 data_type for dimension '$dim' — use an int64 epoch column"
-    )
-    val dt = ZDtype.parse(dtype)
-    val dir = new HPath(groupDir, dim)
-    val buf = ByteBuffer.allocate(vals.length * dt.itemSize).order(ByteOrder.LITTLE_ENDIAN)
-    vals.zipWithIndex.foreach { case (v, i) =>
-      v match {
-        case x: java.lang.Integer => ZDtype.putLong(dt, buf, i, x.longValue())
-        case l: java.lang.Long => ZDtype.putLong(dt, buf, i, l.longValue())
-        case f: java.lang.Float => ZDtype.put(dt, buf, i, f.doubleValue())
-        case d: java.lang.Double => ZDtype.put(dt, buf, i, d.doubleValue())
-        case other => throw new IllegalArgumentException(s"zarr sink: bad coord value $other")
-      }
-    }
-    ZarrFileIO.writeString(
-      new HPath(dir, "zarr.json"),
-      storageOptions,
-      ZarrStoreWriterV3.arrayJson(
-        Vector(vals.length), Vector(vals.length), v3DataTypeName(dtype), cfgs, Some(0.0),
-        Some(Vector(dim)), separator = "/", endian = "little"
-      )
-    )
-    val bytes = cfgs.foldLeft(buf.array())((b, cfg) => ZarrCodecV3.encode(cfg, b, dt.itemSize))
-    ZarrFileIO.writeBytes(new HPath(dir, "c/0"), storageOptions, bytes)
   }
 
   /** Rebuild the root `zarr.json` consolidated metadata from the on-store
@@ -1322,61 +955,6 @@ object ZarrSink {
       s"""{"zarr_format": 3, "node_type": "group",
          |"consolidated_metadata": {"kind": "inline", "must_understand": false,
          |"metadata": {${entries.mkString(",\n")}}}}""".stripMargin
-    )
-  }
-
-  /** Single-chunk 1-D coordinate array written through the Hadoop FS. */
-  private[zarr] def writeCoordArray(
-      groupDir: HPath,
-      dim: String,
-      vals: Array[Any],
-      sparkType: DataType,
-      compressor: Option[String],
-      storageOptions: Map[String, String]
-  ): Unit = {
-    if (sparkType == StringType) {
-      // label axis: single-chunk vlen-utf8 object array
-      val dir = new HPath(groupDir, dim)
-      val raw = ZarrStoreWriter.vlenEncode(vals.map(_.asInstanceOf[String]))
-      ZarrFileIO.writeString(
-        new HPath(dir, ".zarray"),
-        storageOptions,
-        s"""{"zarr_format": 2, "shape": [${vals.length}], "chunks": [${vals.length}],
-           |"dtype": "|O", "order": "C", "compressor": ${ZarrStoreWriter.compressorJson(compressor)},
-           |"fill_value": null, "filters": [{"id": "vlen-utf8"}]}""".stripMargin
-      )
-      ZarrFileIO.writeString(new HPath(dir, ".zattrs"), storageOptions, ZarrStoreWriter.zattrsJson(Some(Vector(dim))))
-      ZarrFileIO.writeBytes(
-        new HPath(dir, "0"),
-        storageOptions,
-        ZarrCodec.compress(compressor, raw, typesize = 1)
-      )
-      return
-    }
-    val dtype = coordDtype(sparkType)
-    val dt = ZDtype.parse(dtype)
-    val dir = new HPath(groupDir, dim)
-    val buf = ByteBuffer.allocate(vals.length * dt.itemSize).order(ByteOrder.LITTLE_ENDIAN)
-    vals.zipWithIndex.foreach { case (v, i) =>
-      v match {
-        case x: java.lang.Integer => ZDtype.putLong(dt, buf, i, x.longValue())
-        case l: java.lang.Long => ZDtype.putLong(dt, buf, i, l.longValue())
-        case f: java.lang.Float => ZDtype.put(dt, buf, i, f.doubleValue())
-        case d: java.lang.Double => ZDtype.put(dt, buf, i, d.doubleValue())
-        case t @ (_: java.sql.Timestamp | _: java.time.Instant) => ZDtype.putLong(dt, buf, i, micros(t))
-        case other => throw new IllegalArgumentException(s"zarr sink: bad coord value $other")
-      }
-    }
-    ZarrFileIO.writeString(
-      new HPath(dir, ".zarray"),
-      storageOptions,
-      ZarrStoreWriter.zarrayJson(Vector(vals.length), Vector(vals.length), dtype, compressor, Some(0.0))
-    )
-    ZarrFileIO.writeString(new HPath(dir, ".zattrs"), storageOptions, ZarrStoreWriter.zattrsJson(Some(Vector(dim))))
-    ZarrFileIO.writeBytes(
-      new HPath(dir, "0"),
-      storageOptions,
-      ZarrCodec.compress(compressor, buf.array(), typesize = dt.itemSize)
     )
   }
 

@@ -299,6 +299,11 @@ object DumpPlans {
     sb ++= "# Physical plans of scale-critical queries\n\n"
     sb ++= "Generated by `graft.tools.DumpPlans` (sf0.01 inputs; plan shapes are\n"
     sb ++= "size-independent except where AQE swaps join strategies at runtime).\n"
+    sb ++= "Each plan is AQE's initial plan (`isFinalPlan=false`): the plan is printed\n"
+    sb ++= "before it runs, so it shows no final join choices, codegen stages or\n"
+    sb ++= "`ColumnarToRow`. A Zarr scan's partition plan names the parallelism of\n"
+    sb ++= "the generating session (`local[8]` here), so its partition counts differ\n"
+    sb ++= "on other sessions.\n"
     cases.foreach { case (q, why) =>
       sb ++= s"\n## $q\n\n$why\n\n```\n"
       sb ++= graft.SparkEntry.queries(q)(spark, d).queryExecution.explainString(FormattedMode).trim

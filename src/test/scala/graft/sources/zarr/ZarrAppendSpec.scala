@@ -1156,6 +1156,21 @@ class ZarrAppendSpec extends AnyFunSuite with SparkTester {
       assert(Files.exists(java.nio.file.Paths.get(root, "v", "c.2.0")), name)
     }
   }
+
+  test("an append to a fixed-width string value array is refused before any object lands") {
+    val root = Files.createTempDirectory("zarrappfixedstr").toString
+    val dir = java.nio.file.Paths.get(root)
+    ZarrStoreWriter.writeStringArray(dir, "v", Vector(4), Vector(2), "|S4", i => s"w$i", dims = Some(Vector("t")))
+    ZarrStoreWriter.writeArray(dir, "t", Vector(4), Vector(2), "<i8", _.toDouble, dims = Some(Vector("t")))
+    val e = intercept[IllegalArgumentException] {
+      spark.range(4, 6).selectExpr("id as t", "concat('w', cast(id as string)) as value")
+        .write.format("zarr").option("path", root).option("array", "v").option("append.dim", "t")
+        .mode("append").save()
+    }
+    assert(e.getMessage.contains("vlen-utf8 string values"), e.getMessage)
+    assert(!Files.exists(dir.resolve("v").resolve("2")))
+    assert(read(root).collect().map(r => r.getLong(0) -> r.getString(1)).toMap == (0 until 4).map(i => i.toLong -> s"w$i").toMap)
+  }
 }
 
 object ZarrAppendSpec {
