@@ -97,7 +97,8 @@ object ZarrAppend {
   val BatchAttrKey = "graft:append_batch"
 
   /** Appends `input`'s slab and returns the grown meta its objects were
-    * written under (the store's meta unchanged, for a replayed batch). */
+    * written under, bar the attributes (the store's meta unchanged, for a
+    * replayed batch). */
   def append(input: DataFrame, rawOptions: Map[String, String]): ZarrArrayMeta = {
     val df = ZarrSink.unsorted(input)
     val opts = rawOptions.map { case (k, v) => k.toLowerCase -> v }
@@ -421,7 +422,9 @@ object ZarrAppend {
     // the shard row holding it is rewritten, its objects' chunks before the
     // old extent copied byte for byte (their bounds records are already in
     // the stats doc).
-    val target = meta.copy(shape = newShape)
+    // attributes (a flat stats doc can run to megabytes) stay off the
+    // writer every task deserializes
+    val target = meta.copy(shape = newShape, attrs = Map.empty)
     val objectRow = meta.shardShape.fold(chunk0)(_.head)
     val objectGrid = meta.shardShape.fold(nChunksVec)(_.zip(newShape).map { case (c, s) => (s + c - 1) / c })
     val writer = new ZarrChunkWriter(

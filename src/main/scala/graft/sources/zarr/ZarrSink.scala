@@ -355,9 +355,9 @@ object ZarrSink {
         zdt.code != ZDtype.V,
         "zarr sink: zarr_format=3 has no structured data_type — write compound records as zarr_format=2"
       )
-      // dims too, and BEFORE the distributed data job: writeCoordArrayV3
-      // runs after all chunks are written, so a late failure would leave a
-      // partially-written store after a fully wasted job
+      // dims too, and BEFORE the distributed data job: the coordinate
+      // arrays are written after all chunks are, so a late failure would
+      // leave a partially-written store after a fully wasted job
       dims.foreach { d =>
         require(
           !coordDtype(df.schema(d).dataType).contains("M8"),

@@ -606,9 +606,8 @@ object ZarrChunkIO {
   /** Decode a shard index's STORED bytes into `nInner` (offset, nbytes)
     * u64 pairs — the ONE place the index byte layout (crc verification
     * included; a mismatch throws loudly) is interpreted. Shared by the
-    * chunk reader above and the realign append preload
-    * (ZarrAppend.preloadTail), so a layout change can't drift between
-    * read and append. */
+    * chunk reader above and [[ZarrChunkWriter]]'s copy of an existing
+    * tail shard, so a layout change can't drift between read and append. */
   def parseShardIndexBytes(
       stored: Array[Byte],
       nInner: Int,
